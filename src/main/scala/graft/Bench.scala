@@ -1,8 +1,6 @@
 package graft
 
 import graft.app.ExtractJob
-import graft.extract.Processor
-import graft.model.KernelPage
 import graft.synth.PageGen
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -67,30 +65,17 @@ object Bench {
     path
   }
 
-  private def warmup(s: SparkSession, path: String): Unit = {
-    import s.implicits._
-    s.read.parquet(path).limit(2000)
-      .select("url", "html", "lang").as[KernelPage]
-      .mapPartitions { it =>
-        val proc = Processor.default
-        it.map(p => proc.extract(p, "balanced"))
-      }.agg(count(lit(1))).collect()
-  }
+  private def warmup(s: SparkSession, path: String): Unit =
+    ExtractJob.extractKernel(s.read.parquet(path).limit(2000), "balanced")
+      .agg(count(lit(1))).collect()
 
-  /** scan → kernel → aggregate sink (pure extraction throughput). The
-    * scan projects to the kernel's input columns (model.KernelPage) —
-    * the production shape; the unused golden `text` column never leaves
-    * the parquet reader.
+  /** scan → kernel → aggregate sink (pure extraction throughput), through
+    * the production kernel stage: the unused golden `text` column never
+    * leaves the parquet reader.
     */
   private def kernelSecs(s: SparkSession, path: String): Double = {
-    import s.implicits._
     val t0 = System.nanoTime()
-    s.read.parquet(path)
-      .select("url", "html", "lang").as[KernelPage]
-      .mapPartitions { it =>
-        val proc = Processor.default
-        it.map(p => proc.extract(p, "balanced"))
-      }
+    ExtractJob.extractKernel(s.read.parquet(path), "balanced")
       .agg(count(lit(1)), sum(col("word_count").cast("long")))
       .collect()
     (System.nanoTime() - t0) / 1e9

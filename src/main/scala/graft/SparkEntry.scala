@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.Processor
+import graft.app.ExtractJob
 import graft.queries.{CorpusOps, PipelineOps, Relational, TextOps, TrainOps, VectorOps, WebOps}
 import graft.synth.PageGen
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -22,14 +22,10 @@ object SparkEntry {
   /** Flagship: the extraction pipeline end-to-end on a small
     * deterministic page table (driver smoke-checks rows > 0).
     */
-  def entry(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    PageGen.generate(spark, 300).mapPartitions { it =>
-      val proc = Processor.default
-      it.map(p => proc.extract(p, "balanced"))
-    }.select("url", "pdf_type", "word_count", "extraction_method", "success")
+  def entry(spark: SparkSession): DataFrame =
+    ExtractJob.extractKernel(PageGen.generate(spark, 300), "balanced")
+      .select("url", "pdf_type", "word_count", "extraction_method", "success")
       .where(col("success"))
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map { case (n, f, _) => n -> f }.toMap

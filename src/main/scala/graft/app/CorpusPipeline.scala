@@ -1,6 +1,5 @@
 package graft.app
 
-import graft.model.KernelPage
 import graft.queries.QueryUtil._
 import graft.synth.PageGen
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -94,7 +93,6 @@ object CorpusPipeline {
     val pagesDf =
       if (a.input.nonEmpty) TableIO.read(spark, a.input)
       else PageGen.generate(spark, a.rows, a.seed).toDF()
-    val pages = pagesDf.select("url", "html", "lang").as[KernelPage]
     // Count the UNTYPED frame: for a parquet input Spark answers this
     // from footer metadata without materializing a single row (the
     // typed count would deserialize the whole table just for a metric).
@@ -108,8 +106,9 @@ object CorpusPipeline {
     // Map-only flatMap over the payload — nothing shuffles; the write
     // is the whole cost.
     if (a.links) {
-      pages.flatMap(p => graft.html.Links.records(p.url, p.html)
-          .map { case (t, anchor) => (p.url, t, anchor) })
+      pagesDf.select("url", "html").as[(String, Array[Byte])]
+        .flatMap { case (url, html) => graft.html.Links.records(url, html)
+          .map { case (t, anchor) => (url, t, anchor) } }
         .toDF("src_url", "target", "anchor")
         .write.mode("overwrite").parquet(s"${a.out}/links")
       stages += "links" -> spark.read.parquet(s"${a.out}/links").count()
@@ -122,12 +121,12 @@ object CorpusPipeline {
     // Each piece is APPENDED while its stage's inputs are still cached,
     // so the flag never recomputes the kernel; drop detection is a
     // url-keyed anti-join per stage (the honest cost of the audit).
+    // Every run clears the sidecar first, flag or no flag: an earlier
+    // run's rows would otherwise sit beside this run's corpus and read
+    // as its drops.
     val provPath = s"${a.out}/provenance"
-    if (a.provenance) {
-      val p = new org.apache.hadoop.fs.Path(provPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true) // append-mode sidecar: clear prior runs
-    }
+    val provDir = new org.apache.hadoop.fs.Path(provPath)
+    provDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(provDir, true)
     def recordDrops(df: DataFrame): Unit =
       if (a.provenance)
         df.select("url", "stage", "detail").write.mode("append").parquet(provPath)
@@ -138,7 +137,7 @@ object CorpusPipeline {
           .withColumn("stage", lit(stage)).withColumn("detail", lit("")))
 
     // 1. Extraction (slim schema — the corpus path).
-    val extracted = ExtractJob.extractKernel(pages, a.quality, slim = true)
+    val extracted = ExtractJob.extractKernel(pagesDf, a.quality, slim = true)
       .where(col("success") && length(col("text")) > 0)
       .select("url", "lang", "text", "word_count").persist()
     stages += "extracted" -> extracted.count()

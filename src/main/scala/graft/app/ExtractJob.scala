@@ -122,23 +122,28 @@ object ExtractJob {
 
   def bucketExpr(buckets: Int): Column = pmod(xxhash64(col("url")), lit(buckets)).cast("int")
 
-  /** The extraction kernel stage: opaque to Catalyst, so all pruning/
-    * filtering must happen before this call (SURVEY.md §4.2 obligation 1).
+  /** The extraction kernel stage — the one place Spark runs the kernel.
+    * Takes any frame carrying url/html/lang and projects to exactly those
+    * columns (model.KernelPage) before the stage, so a parquet scan's
+    * ReadSchema never includes the unused golden `text` or `warc_ts`.
+    * The stage is opaque to Catalyst: every other pruning or filtering
+    * must happen before this call (SURVEY.md §4.2 obligation 1).
     */
-  def extractKernel(pages: Dataset[KernelPage], quality: String,
+  def extractKernel(pages: Dataset[_], quality: String,
       slim: Boolean = false): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
+    val in = pages.select("url", "html", "lang").as[KernelPage]
     // Per-partition processor instance = the reference's lazy backend
     // singletons (service/main.py:50-55) — built once per task, O(1)
     // memory per row.
     if (slim)
-      pages.mapPartitions { it =>
+      in.mapPartitions { it =>
         val proc = Processor.default
         it.map(p => proc.extract(p, quality).toSlim)
       }.toDF()
     else
-      pages.mapPartitions { it =>
+      in.mapPartitions { it =>
         val proc = Processor.default
         it.map(p => proc.extract(p, quality))
       }.toDF()
@@ -217,19 +222,13 @@ object ExtractJob {
             else bucketExpr(a.buckets).isin(wave.map(Integer.valueOf): _*))
       }
       val sub = if (a.repartition > 0) sub0.repartition(a.repartition) else sub0
-      import spark.implicits._
-
-      // Project to the kernel's input columns BEFORE the opaque stage:
-      // the parquet scan then skips `text`/`warc_ts` entirely (the
-      // deserializer for the full Page row would force-read them).
-      val kernelIn = sub.select("url", "html", "lang").as[KernelPage]
       // --two-pass is the fast→accurate cascade the Args doc promises:
       // pass 2 always runs `accurate` (with --quality fast the old
       // a.quality wiring re-ran the identical fast kernel over the
       // flagged subset — doubled work, zero rescue). --quality keeps
       // governing the single-pass path only.
-      val recs0 = (if (a.twoPass) TwoPass.extract(kernelIn, slim = a.slim)
-                   else extractKernel(kernelIn, a.quality, a.slim))
+      val recs0 = (if (a.twoPass) TwoPass.extract(sub, slim = a.slim)
+                   else extractKernel(sub, a.quality, a.slim))
         .withColumn("bucket", bucketExpr(a.buckets))
       // Cluster output files by bucket: one exchange of the COMPACT
       // post-kernel records (raw html never shuffles — it's dropped by

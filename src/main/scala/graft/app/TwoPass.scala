@@ -1,6 +1,5 @@
 package graft.app
 
-import graft.model.KernelPage
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,7 +54,7 @@ object TwoPass {
     * compact pass-1 output (url column only), so it costs one small
     * aggregation, never a second payload scan.
     */
-  def extract(pages: Dataset[KernelPage], firstQuality: String = "fast",
+  def extract(pages: Dataset[_], firstQuality: String = "fast",
       secondQuality: String = "accurate", slim: Boolean = false): DataFrame = {
     val pass1 = ExtractJob.extractKernel(pages, firstQuality, slim)
       .localCheckpoint()
@@ -68,10 +67,7 @@ object TwoPass {
         "dedupe revisit snapshots first (CorpusPipeline.latestSnapshot / q77)")
     val flagged = pass1.where(needsSecondPass).select("url")
     val in2 = pages.toDF().join(flagged, Seq("url"))
-      .select("url", "html", "lang")
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val pass2 = ExtractJob.extractKernel(in2.as[KernelPage], secondQuality, slim)
+    val pass2 = ExtractJob.extractKernel(in2, secondQuality, slim)
     val all = pass1.withColumn("pass", lit(1))
       .unionByName(pass2.withColumn("pass", lit(2)))
     val w = Window.partitionBy("url")

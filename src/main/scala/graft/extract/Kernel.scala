@@ -234,25 +234,6 @@ final class Processor(
     (results.result(), errors.result())
   }
 
-  /** Text composition (processor.py:403-432): skip blank pages, page
-    * markers `--- Page {n} ---` / `--- Page {n} (OCR: {method}) ---`,
-    * marker + "\n" + text per part.
-    */
-  def buildTextParts(pageResults: Seq[PageResult]): Vector[String] = {
-    val parts = Vector.newBuilder[String]
-    pageResults.foreach { r =>
-      if (!PyText.isBlank(r.text)) {
-        if (config.includePageMarkers) {
-          val marker =
-            if (r.method == Enums.Direct) s"--- Page ${r.page_number} ---"
-            else s"--- Page ${r.page_number} (OCR: ${r.method}) ---"
-          parts += s"$marker\n${r.text}"
-        } else parts += r.text
-      }
-    }
-    parts.result()
-  }
-
   /** Overall method label (processor.py:434-472). */
   def determineExtractionMethod(
       classification: Classification,
@@ -293,13 +274,15 @@ final class Processor(
         val attempted = pageResults.count(r =>
           pageNeedsOcr(r.page_number, classification, quality))
         val failed = pageErrors.length
-        // Single-pass composition: byte-identical to
-        // buildTextParts(...).mkString("\n\n") (that form allocated every
-        // part twice and then re-scanned the full text for its word
-        // count). The word count accumulates as marker words + the
-        // already-computed per-page counts — exact, because the "\n" /
-        // "\n\n" joins are whitespace and Python split can never merge
-        // words across them, and a blank-skipped page contributes 0.
+        // Text composition (processor.py:403-432) in one pass, byte-
+        // identical to the reference's "\n\n".join(parts): blank pages
+        // are skipped, and each kept page is its marker
+        // (`--- Page {n} ---` or `--- Page {n} (OCR: {method}) ---`) +
+        // "\n" + its text, or its bare text with markers off.
+        // The word count accumulates as marker words + the already-
+        // computed per-page counts — exact, because the "\n" / "\n\n"
+        // joins are whitespace and Python split can never merge words
+        // across them, and a blank-skipped page contributes 0.
         val sb = new java.lang.StringBuilder()
         var wc = 0
         var firstPart = true

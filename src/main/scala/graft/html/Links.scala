@@ -64,15 +64,19 @@ object Links {
   /** Resolve `href` against the page URL per RFC 3986 (java.net.URI —
     * JVM stdlib, deterministic). Fragments are dropped (a crawl target
     * is fragment-less); non-fetchable schemes (mailto:, javascript:,
-    * data:, tel:) and unparseable hrefs resolve to None.
+    * data:, tel:) and unparseable hrefs resolve to None. Schemes match
+    * case-insensitively (RFC 3986 §3.1) and are emitted lowercase, so
+    * `HTTP://h/a` and `http://h/a` are one target key.
     */
   def resolve(baseUrl: String, href: String): Option[String] = {
     val noFrag = { val h = href.indexOf('#'); if (h >= 0) href.substring(0, h) else href }
     if (noFrag.isEmpty) None
     else try {
       val r = new java.net.URI(baseUrl).resolve(new java.net.URI(noFrag))
-      r.getScheme match {
-        case "http" | "https" if r.getHost != null => Some(r.toString)
+      val scheme = Option(r.getScheme).map(_.toLowerCase(java.util.Locale.ROOT))
+      scheme match {
+        case Some(sc @ ("http" | "https")) if r.getHost != null =>
+          Some(sc + r.toString.substring(sc.length))
         case _ => None
       }
     } catch { case _: Exception => None }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.extract.Processor
+import graft.app.ExtractJob
 import graft.json.JsonRepair
 import graft.model.Page
 import graft.synth.PageGen
@@ -80,40 +80,29 @@ object PipelineOps {
     // ---- Full extraction: classify → route → extract → compose, one
     // kernel pass, map-only (§4.4 plan of record).
     ("x40_extract_balanced",
-      (s, _) => {
-        import s.implicits._
-        pages(s, 1200).mapPartitions { it =>
-          val proc = Processor.default
-          it.map(p => proc.extract(p, "balanced"))
-        }.select("url", "pdf_type", "total_pages", "word_count",
-            "extraction_method", "confidence", "success")
-          .orderBy("url")
-      }, None),
+      (s, _) => ExtractJob.extractKernel(pages(s, 1200), "balanced")
+        .select("url", "pdf_type", "total_pages", "word_count",
+          "extraction_method", "confidence", "success")
+        .orderBy("url"),
+      None),
 
     // ---- Classification-only slice (§3.3): per-type corpus histogram.
     ("x41_classify_stats",
-      (s, _) => {
-        import s.implicits._
-        pages(s, 2000).mapPartitions { it =>
-          val proc = Processor.default
-          it.map(p => proc.extract(p, "fast")) // fast → never OCR: pure classify+direct
-        }.groupBy("pdf_type")
-          .agg(count(lit(1)).as("n_docs"),
-               round(avg("confidence"), 6).as("avg_confidence"),
-               sum(col("word_count").cast("long")).as("total_words"))
-          .orderBy("pdf_type")
-      }, None),
+      // fast → never OCR: pure classify+direct
+      (s, _) => ExtractJob.extractKernel(pages(s, 2000), "fast")
+        .groupBy("pdf_type")
+        .agg(count(lit(1)).as("n_docs"),
+             round(avg("confidence"), 6).as("avg_confidence"),
+             sum(col("word_count").cast("long")).as("total_words"))
+        .orderBy("pdf_type"),
+      None),
 
     // ---- Byte-exact extracted text (the per-row invariant surface:
     // url → composed text with page markers).
     ("x42_extract_text",
-      (s, _) => {
-        import s.implicits._
-        pages(s, 300).mapPartitions { it =>
-          val proc = Processor.default
-          it.map(p => proc.extract(p, "accurate"))
-        }.select("url", "text", "word_count").orderBy("url")
-      }, None),
+      (s, _) => ExtractJob.extractKernel(pages(s, 300), "accurate")
+        .select("url", "text", "word_count").orderBy("url"),
+      None),
 
     // ---- Exact dedup over *extracted* text: PageGen plants ~6%
     // duplicate clusters; dedup runs on kernel output, not raw payloads.
@@ -132,11 +121,8 @@ object PipelineOps {
     // prefix needs no SQL replication.
     ("q43_dedup_extracted",
       (s, _) => {
-        import s.implicits._
-        pages(s, 2000).mapPartitions { it =>
-          val proc = Processor.default
-          it.map(p => proc.extract(p, "balanced"))
-        }.where(col("success") && length(col("text")) > 0)
+        ExtractJob.extractKernel(pages(s, 2000), "balanced")
+          .where(col("success") && length(col("text")) > 0)
           .withColumn("id", regexp_extract(col("url"), "p(\\d+)\\.html$", 1).cast("long"))
           .groupBy(md5(col("text")).as("digest"))
           .agg(min("id").as("canonical_id"), count(lit(1)).as("n_docs"))
@@ -557,18 +543,18 @@ object PipelineOps {
           .orderBy("url")
       }, None),
 
-    // ---- The extraction kernel as a first-class Catalyst operator
-    // (plans.GraftExtract: LogicalPlan + Strategy + SparkPlan) — same
-    // results as x40's typed mapPartitions form, but EXPLAIN-visible
-    // and with the unused legacy text column pruned from the scan.
+    // ---- The kernel stage over a stored pages table: the same results
+    // as x40, read from parquet, where the stage's url/html/lang
+    // projection keeps the unused legacy text and warc_ts columns out of
+    // the scan's ReadSchema.
     ("x50_extract_operator",
       (s, _) => {
         // Cache path keyed by (generator version, rows, seed) so a stale
-        // cache from an older PageGen can never feed the operator.
+        // cache from an older PageGen can never feed the kernel.
         val dir = s"/tmp/graft_q/op_pages_v${PageGen.genVersion}_1200_42"
         if (!new java.io.File(s"$dir/_SUCCESS").exists())
           pages(s, 1200).toDF().repartition(4).write.mode("overwrite").parquet(dir)
-        graft.plans.ExtractOperator.extract(s.read.parquet(dir), "balanced")
+        ExtractJob.extractKernel(s.read.parquet(dir), "balanced")
           .select("url", "pdf_type", "total_pages", "word_count",
             "extraction_method", "confidence", "success")
           .orderBy("url")
@@ -583,13 +569,10 @@ object PipelineOps {
     // SQL-expressible (kernel) → rows-only check here; semantics pinned
     // by TwoPassSpec.
     ("x64_two_pass",
-      (s, _) => {
-        import s.implicits._
-        val kp = pages(s, 900).map(p => graft.model.KernelPage(p.url, p.html, p.lang))
-        graft.app.TwoPass.extract(kp)
-          .select("url", "pass", "pdf_type", "word_count", "confidence", "success")
-          .orderBy("url")
-      }, None),
+      (s, _) => graft.app.TwoPass.extract(pages(s, 900))
+        .select("url", "pass", "pdf_type", "word_count", "confidence", "success")
+        .orderBy("url"),
+      None),
 
     // ---- WAT-style link records (crawl-graph construction — Common
     // Crawl ships exactly this as the WAT sidecar): every HTML page →

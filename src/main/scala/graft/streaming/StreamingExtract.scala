@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * job layer is batch-with-progress, which maps to ExtractJob. This
   * module is the graft-added incremental path for a continuously-fed
   * pages table: the SAME kernel runs per micro-batch, so batch and
-  * streaming share one code path (`readStream` → `mapPartitions(kernel)`
+  * streaming share one code path (`readStream` → `ExtractJob.extractKernel`
   * → `writeStream`), with exactly-once parquet output via the streaming
   * checkpoint — the streaming twin of ExtractJob's bucket lineage.
   *
@@ -28,22 +28,16 @@ object StreamingExtract {
   private val DocumentsSchema =
     "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
 
-  /** Incremental extraction over a parquet directory source. The scan
-    * projects to the kernel's input columns (model.KernelPage) — the
-    * unused golden `text` column never leaves the parquet reader.
+  /** Incremental extraction over a parquet directory source, through the
+    * batch kernel stage (app.ExtractJob.extractKernel) — the unused
+    * golden `text` column never leaves the parquet reader.
     */
-  def extractStream(spark: SparkSession, inputDir: String, quality: String): DataFrame = {
-    import spark.implicits._
-    val pages = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Page].schema)
-      .parquet(inputDir)
-      .select("url", "html", "lang")
-      .as[graft.model.KernelPage]
-    pages.mapPartitions { it =>
-      val proc = Processor.default
-      it.map(p => proc.extract(p, quality))
-    }.toDF()
-  }
+  def extractStream(spark: SparkSession, inputDir: String, quality: String): DataFrame =
+    graft.app.ExtractJob.extractKernel(
+      spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[Page].schema)
+        .parquet(inputDir),
+      quality)
 
   /** Run to completion over currently-available files (AvailableNow =
     * bounded run with streaming semantics + checkpoint resume), writing

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.app.SparkUtil
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -34,15 +34,18 @@ object ExplainDump {
     "q92p_semantic_dedup_scaled", "q93_bpe_pair_counts",
     "x40_extract_balanced", "x50_extract_operator", "x65_link_records")
 
+  private val BloomLiteral = """might_contain\(0x([0-9A-Fa-f]{32})([0-9A-Fa-f]+)""".r
+
+  /** A bloom filter's serialized literal inside `might_contain(…)` is
+    * megabytes of hex; keep a 16-byte prefix plus its byte length.
+    */
+  def shortenBloomLiterals(plan: String): String =
+    BloomLiteral.replaceAllIn(plan, m =>
+      s"might_contain(0x${m.group(1)}…[${(m.group(1).length + m.group(2).length) / 2} bytes]")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    val spark = SparkUtil.session("graft-explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder
@@ -57,7 +60,8 @@ object ExplainDump {
     headline.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb ++= s"## $name\n\n```\n"
-      sb ++= df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim
+      sb ++= shortenBloomLiterals(
+        df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim)
       sb ++= "\n```\n\n"
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)

@@ -1,22 +1,18 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.app.SparkUtil
 
 /** Execute one query and print its FINAL adaptive physical plan
-  * (iteration aid for exchange-reuse / join-strategy checks).
+  * (iteration aid for exchange-reuse / join-strategy checks):
+  *   sbt -batch "runMain graft.tools.PlanProbe <name> [sfDir]"
+  * Parallelism follows SPARK_GRAFT_CPUS (app.SparkUtil.session).
   */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
+    val spark = SparkUtil.session("graft-plan-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)
     // collect() (not .write) so THIS plan executes and the printed

@@ -1,30 +1,28 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.app.SparkUtil
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{count, lit}
 
-/** Time one SparkEntry query with a noop sink (iteration aid):
-  *   sbt -batch "runMain graft.tools.TimeQuery q24_minhash_lsh /root/testdata/sf0.1 [cpus]"
+/** Time SparkEntry queries one after another, each into a noop sink that
+  * counts its output rows on the way (iteration aid):
+  *   sbt -batch "runMain graft.tools.TimeQuery <sfDir> <name...>"
+  * Parallelism follows SPARK_GRAFT_CPUS (app.SparkUtil.session).
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    require(args.length >= 2, "usage: TimeQuery <sfDir> <name...>")
+    val sfDir = args(0)
+    val spark = SparkUtil.session("graft-time-query")
     spark.sparkContext.setLogLevel("ERROR")
-    (1 to 2).foreach { rep =>
+    try args.drop(1).foreach { name =>
+      val obs = Observation(s"rows_$name")
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
+      SparkEntry.queries(name)(spark, sfDir).observe(obs, count(lit(1)).as("rows"))
         .write.mode("overwrite").format("noop").save()
-      println(f"[time] $name rep$rep: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
-    spark.stop()
+      val secs = (System.nanoTime() - t0) / 1e9
+      println(f"[time] $name%-32s $secs%8.3f s  (${obs.get("rows")} rows)")
+    } finally spark.stop()
   }
 }

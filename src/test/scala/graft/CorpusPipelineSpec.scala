@@ -273,4 +273,13 @@ class CorpusPipelineSpec extends SparkSuite {
     val b = spark.read.parquet(s"$out2/training_windows")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
+
+  test("rerun without --provenance clears a stale provenance sidecar") {
+    val out = tmpDir("cp_prov_rerun")
+    CorpusPipeline.run(spark, Args(rows = 200, out = out, provenance = true))
+    assert(new java.io.File(s"$out/provenance").exists(), "first run must write the sidecar")
+    CorpusPipeline.run(spark, Args(rows = 200, out = out))
+    assert(!new java.io.File(s"$out/provenance").exists(),
+      "stale provenance sidecar survived a run without --provenance")
+  }
 }

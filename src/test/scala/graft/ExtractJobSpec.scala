@@ -222,12 +222,37 @@ class ExtractJobSpec extends SparkSuite {
   test("same job at local parallelism 1 vs 4 yields identical output (scaling correctness)") {
     import spark.implicits._
     val pages = PageGen.generate(spark, 120L)
-      .select("url", "html", "lang").as[graft.model.KernelPage]
     val one = ExtractJob.extractKernel(pages.repartition(1), "balanced")
       .select("url", "text").as[(String, String)].collect().sortBy(_._1)
     val four = ExtractJob.extractKernel(pages.repartition(4), "balanced")
       .select("url", "text").as[(String, String)].collect().sortBy(_._1)
     assert(one.toSeq == four.toSeq)
+  }
+
+  test("extractKernel on a stored pages table reads only url/html/lang") {
+    val dir = tmpDir("kernel_pages")
+    PageGen.generate(spark, 50).toDF().write.mode("overwrite").parquet(dir)
+    val plan = ExtractJob.extractKernel(spark.read.parquet(dir), "fast")
+      .queryExecution.executedPlan.toString
+    val readSchema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
+    assert(readSchema.contains("url") && readSchema.contains("html") &&
+      readSchema.contains("lang"), plan)
+    assert(!readSchema.contains("text:"), s"text not pruned: $readSchema")
+    assert(!readSchema.contains("warc_ts"), s"warc_ts not pruned: $readSchema")
+  }
+
+  test("extractKernel composes with downstream relational ops") {
+    val dir = tmpDir("kernel_pages_agg")
+    PageGen.generate(spark, 200).toDF().write.mode("overwrite").parquet(dir)
+    val stats = ExtractJob.extractKernel(spark.read.parquet(dir), "balanced")
+      .where(col("success"))
+      .groupBy("pdf_type").agg(count(lit(1)).as("n"), sum("word_count").as("words"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val expected = PageGen.generate(spark, 200).collect().toSeq
+      .map(p => Processor.default.extract(p, "balanced")).filter(_.success)
+      .groupBy(_.pdf_type)
+      .map { case (t, rs) => t -> (rs.length.toLong, rs.map(_.word_count.toLong).sum) }
+    assert(stats == expected)
   }
 
   test("checkpoint retention delete drops only expired lineage rows") {

@@ -39,6 +39,14 @@ class LinksSpec extends SparkSuite {
     assert(Links.resolve(base, "ht tp://bad") == None)
   }
 
+  test("resolve: http/https schemes match case-insensitively and are emitted lowercase") {
+    val base = "HTTP://Host5.example/article/p7.html"
+    assert(Links.resolve(base, "HTTPS://other.example/z") == Some("https://other.example/z"))
+    assert(Links.resolve(base, "next.html") == Some("http://Host5.example/article/next.html"))
+    assert(Links.resolve(base, "//cdn.example/a.js") == Some("http://cdn.example/a.js"))
+    assert(Links.resolve(base, "MAILTO:x@example.com") == None)
+  }
+
   test("records: binary payloads produce zero rows, HTML resolves against its own host") {
     assert(Links.records("https://h.example/d.pdf", "%PDF-1.4 x".getBytes) == Seq.empty)
     assert(Links.records("https://h.example/p", Array[Byte]()) == Seq.empty)
