@@ -1,6 +1,7 @@
 package graft.app
 
 import graft.queries.QueryUtil._
+import graft.queries.Sketch
 import graft.synth.PageGen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -74,15 +75,6 @@ object CorpusPipeline {
     require(a.rows > 0 || a.input.nonEmpty, "--rows or --input is required")
     a
   }
-
-  private def sh3(toks: org.apache.spark.sql.Column) = shingles3(toks)
-
-  private def sh5(toks: org.apache.spark.sql.Column) =
-    when(size(toks) >= 5,
-      array_distinct(transform(sequence(lit(0), size(toks) - 5),
-        i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2),
-          element_at(toks, i + 3), element_at(toks, i + 4), element_at(toks, i + 5)))))
-      .otherwise(array().cast("array<string>"))
 
   /** Run the pipeline; returns (stage → surviving row count), in order. */
   def run(spark: SparkSession, a: Args): Seq[(String, Long)] = {
@@ -197,19 +189,11 @@ object CorpusPipeline {
     // pairs through q35's connected-components logic and keeps exactly
     // ONE representative (min url) per transitive component — the
     // standard corpus-dedup choice (collapses the star to A alone).
-    // The hash family lives in queries.Sketch (shared with q24p/q53 and
-    // the streaming incremental dedup) — one place to tune bands/hashes.
-    val sk = graft.queries.Sketch.sketch(exact, idCol = "url").localCheckpoint()
-    val bands = graft.queries.Sketch.bandRows(sk, idCol = "url")
-    val cand = bands.withColumnRenamed("url", "url_a").hint("shuffle_hash")
-      .join(bands.withColumnRenamed("url", "url_b"), Seq("band_id", "band_sig"))
-      .where(col("url_a") < col("url_b"))
-      .select("url_a", "url_b").distinct()
-    val verified = cand
-      .join(sk.select(col("url").as("url_a"), col("hsh").as("h_a")), Seq("url_a"))
-      .join(sk.select(col("url").as("url_b"), col("hsh").as("h_b")), Seq("url_b"))
-      .where(graft.queries.Sketch.jaccard(col("h_a"), col("h_b")) >= lit(0.5))
-      .select("url_a", "url_b")
+    // The pairs are q24p's, keyed by url (queries.Sketch owns the hash
+    // family, the band join and the verify).
+    val sk = Sketch.sketch(exact, idCol = "url").localCheckpoint()
+    val verified = Sketch.nearDupPairs(sk, Sketch.bandRows(sk, idCol = "url"),
+      "url", "url_a", "url_b")
     // Drop set carries the representative: cluster mode's label IS the
     // kept min-url representative; union-drop names the smallest
     // verified partner (which may itself have been dropped for another
@@ -290,10 +274,10 @@ object CorpusPipeline {
         // Catalyst doesn't re-inline the shingle pipeline into an
         // inferred size()>0 scan filter — the q60 pathology, BENCH.md.
         .withColumn("toks", tokens(col("text")))
-        .select(explode_outer(sh5(col("toks"))).as("shingle"))
+        .select(explode_outer(shingles5(col("toks"))).as("shingle"))
         .where(col("shingle").isNotNull).distinct()
       val contaminated = spanned
-        .select(col("url"), explode_outer(sh5(col("toks"))).as("shingle"))
+        .select(col("url"), explode_outer(shingles5(col("toks"))).as("shingle"))
         .join(broadcast(evalSh), Seq("shingle"))
         .select("url").distinct()
       recordDrops(contaminated
@@ -314,7 +298,7 @@ object CorpusPipeline {
     if (a.stats) {
       import graft.queries.SketchStats
       val sh = clean
-        .select(col("lang"), explode_outer(sh3(col("toks"))).as("g"))
+        .select(col("lang"), explode_outer(shingles3(col("toks"))).as("g"))
         .where(col("g").isNotNull)
       SketchStats.hllRegisters(sh, "g", "lang")
         .write.mode("overwrite").parquet(s"${a.out}/stats/hll_registers")

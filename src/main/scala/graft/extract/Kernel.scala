@@ -22,13 +22,12 @@ object DocParser {
     if (payload == null || payload.isEmpty) Right(ParsedDoc(Vector.empty))
     else if (PdfParser.isPdf(payload)) PdfParser.parse(payload)
     else
-      // BlockSegmenter.parseHtml == StreamSegmenter.parseHtml output
-      // (differential spec). The DOM path is the production choice: with
-      // the tokenizer no longer allocating per-tag attribute maps, the
-      // tree build + recursive walk measures ~35% faster than the
-      // frame-stack stream replay on the mixed corpus (KernelProfile:
-      // 5.4 vs 8.4 µs/doc; 9.5 vs 10.8 on article-heavy). The stream
-      // twin stays as the differential-fuzz counterpart.
+      // The DOM path is the one HTML segmenter: with the tokenizer no
+      // longer allocating per-tag attribute maps, the tree build +
+      // recursive walk measured ~35% faster than a frame-stack stream
+      // replay on the mixed corpus (5.4 vs 8.4 µs/doc). The replay is
+      // kept in the test tree as StreamSegmenterSpec's differential
+      // oracle.
       try Right(BlockSegmenter.parseHtml(graft.text.Charsets.decode(payload)))
       catch { case e: Exception => Left(s"HTML parse error: ${e.getMessage}") }
 }

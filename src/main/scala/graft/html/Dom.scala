@@ -28,8 +28,8 @@ object Dom {
     "input", "link", "meta", "param", "source", "track", "wbr")
 
   /** Openers that implicitly close an open element of the given tags.
-    * (Shared with StreamSegmenter, which replays these rules without
-    * materializing the tree.)
+    * (Also read by the DOM-free differential segmenter in the test
+    * tree, which replays these rules without materializing the tree.)
     */
   val autoClose: Map[String, Set[String]] = Map(
     "p" -> Set("p"),

@@ -4,7 +4,7 @@ import graft.app.ExtractJob
 import graft.json.JsonRepair
 import graft.model.Page
 import graft.synth.PageGen
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The extraction pipeline itself, exposed as driver-checkable queries.
@@ -74,6 +74,13 @@ object PipelineOps {
         MediaMeta(url, n.toLong, magic, if (magic == "bin") "binary" else "document", 0, 0, 0)
     }
   }
+
+  /** x65's grouping key: a resolved link target's path, always rooted at
+    * `/` (an authority-only target keys as `/`).
+    */
+  def linkPath(target: Column): Column =
+    // The query string stays in the key: different query strings are different resources.
+    regexp_replace(target, "^https?://[^/?#]+/?", "/")
 
   val defs: Seq[Q] = Seq(
 
@@ -594,7 +601,7 @@ object PipelineOps {
             .map { case (t, a) => (p.url, t, a) })
           .toDF("src_url", "target", "anchor")
         recs
-          .withColumn("path", regexp_replace(col("target"), "^https?://[^/]+", ""))
+          .withColumn("path", linkPath(col("target")))
           .withColumn("src_host", regexp_extract(col("src_url"), "^https?://([^/]+)", 1))
           .groupBy("path", "anchor")
           .agg(count(lit(1)).as("n_links"),

@@ -39,6 +39,17 @@ object QueryUtil {
           element_at(toks, i + 1), element_at(toks, i + 2), element_at(toks, i + 3)))))
       .otherwise(array().cast("array<string>"))
 
+  /** Distinct word 5-gram shingles over `tokens`, built like
+    * `shingles3`; `< 5` tokens → empty. The decontamination n-gram
+    * (q60 and CorpusPipeline's eval-overlap stage).
+    */
+  def shingles5(toks: Column): Column =
+    when(size(toks) >= 5,
+      array_distinct(transform(sequence(lit(0), size(toks) - 5),
+        i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2),
+          element_at(toks, i + 3), element_at(toks, i + 4), element_at(toks, i + 5)))))
+      .otherwise(array().cast("array<string>"))
+
   /** Jaccard similarity of two distinct-element arrays (reference
     * tests/conftest.py:352-362 word-set Jaccard, generalized to shingle
     * sets). Single IEEE division of two exact ints — bit-identical across

@@ -32,9 +32,7 @@ object SignatureStore {
     * written for a stream to consume must use a negative id.
     */
   def write(docs: DataFrame, sigDir: String, ingestId: Long): Unit =
-    writeRows(
-      Sketch.sketch(docs).withColumn("bands", Sketch.bandSigs(col("sigs"))),
-      sigDir, ingestId)
+    writeRows(Sketch.withBands(Sketch.sketch(docs)), sigDir, ingestId)
 
   /** Write ALREADY-SKETCHED rows (doc_id, hsh, bands, …extras) as one
     * ingest partition — THE single place that owns the on-disk layout;
@@ -57,36 +55,19 @@ object SignatureStore {
   }
 
   /** Near-dup verdicts of an arriving batch against a PRECOMPUTED store
-    * (the q53 semantics with the corpus side never re-sketched): every
+    * (q53's semantics with the corpus side never re-sketched): every
     * batch doc → (doc_id, verdict kept|dup, dup_of = min matching store
-    * doc). Only the batch is sketched; the band join carries (band_id,
-    * band_sig, id) rows; exact Jaccard verifies candidates only.
+    * doc). Only the batch is sketched; Sketch.storeMatches and
+    * Sketch.verdicts own the join, the verify and the verdict.
     */
-  def verdictsAgainst(batchDocs: DataFrame, store: DataFrame,
-      threshold: Double = 0.5): DataFrame = {
+  def verdictsAgainst(batchDocs: DataFrame, store: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.ensureRegistered(batchDocs.sparkSession)
     // The batch sketch feeds both the band join and the verify join —
     // materialize so shingling runs once (store-side needs nothing: its
     // bands are precomputed).
-    val sk = Sketch.sketch(batchDocs)
-      .withColumn("bands", Sketch.bandSigs(col("sigs")))
+    val sk = Sketch.withBands(Sketch.sketch(batchDocs))
       .select("doc_id", "hsh", "bands")
       .localCheckpoint()
-    val cand = Sketch.explodeBands(sk.select("doc_id", "bands"))
-      .withColumnRenamed("doc_id", "b_id")
-      .hint("shuffle_hash")
-      .join(Sketch.explodeBands(store.select("doc_id", "bands"))
-        .withColumnRenamed("doc_id", "c_id"), Seq("band_id", "band_sig"))
-      .select("b_id", "c_id").distinct()
-    val hits = cand
-      .join(sk.select(col("doc_id").as("b_id"), col("hsh").as("h_b")), Seq("b_id"))
-      .join(store.select(col("doc_id").as("c_id"), col("hsh").as("h_c")), Seq("c_id"))
-      .where(Sketch.jaccard(col("h_b"), col("h_c")) >= threshold)
-      .groupBy("b_id").agg(min("c_id").as("dup_of"))
-    batchDocs.select("doc_id")
-      .join(hits.withColumnRenamed("b_id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("dup_of").isNull, "kept").otherwise("dup").as("verdict"),
-        col("dup_of"))
+    Sketch.verdicts(batchDocs, Sketch.storeMatches(sk, store))
   }
 }

@@ -30,6 +30,32 @@ object TextOps {
   private def docToks(s: SparkSession, d: String): DataFrame =
     tbl(s, d, "documents").withColumn("toks", tokens(col("text")))
 
+  /** (doc_id, shingles) of every document with ≥1 shingle — the md5
+    * family's (q24/q35) sketch input. The filter runs BEFORE the
+    * shingles are derived, on the cheap Sketch.hasShingles precondition
+    * (filtering on size(shingles) > 0 instead gets pushed below the
+    * project, so the whole tokenize→shingle→distinct pipeline would
+    * evaluate once in the Filter and again in the Project).
+    */
+  private def shingled(s: SparkSession, d: String): DataFrame =
+    docToks(s, d).where(Sketch.hasShingles)
+      .select(col("doc_id"), shingles3(col("toks")).as("shingles"))
+
+  /** The md5 family's band rows (doc_id, band_id, band_sig): 16
+    * seed-prefixed md5 minhashes from the single-pass codegen'd sketch
+    * (plans.MinhashMd5 — equal to the transform/array_min pipeline,
+    * property-tested in HashSketchSpec), banded 4 × 4. Repartitioned on
+    * the join keys so both sides of the self band join share one
+    * identical Exchange subtree, which Catalyst's ReuseExchange dedups:
+    * the signature pipeline runs ONCE, not twice.
+    */
+  private def md5Bands(sh: DataFrame): DataFrame = sh
+    .withColumn("sigs", call_function("minhash_md5", col("shingles")))
+    .select(col("doc_id"), explode(sequence(lit(0), lit(3))).as("band_id"), col("sigs"))
+    .withColumn("band_sig", concat_ws(",", slice(col("sigs"), col("band_id") * 4 + 1, lit(4))))
+    .select("doc_id", "band_id", "band_sig")
+    .repartition(col("band_id"), col("band_sig"))
+
   val defs: Seq[Q] = Seq(
 
     // ---- Token counting (A4 word-count semantics, Python-split parity).
@@ -142,35 +168,7 @@ object TextOps {
     ("q24_minhash_lsh",
       (s, d) => {
         graft.plans.GraftFunctions.ensureRegistered(s)
-        // Filter BEFORE deriving shingles, on a cheap equivalent
-        // precondition: shingles3 is non-empty iff the text has ≥3
-        // whitespace-separated tokens iff this regex finds a match.
-        // Filtering on size(shingles) > 0 instead gets pushed below the
-        // project, so the whole tokenize→shingle→distinct pipeline would
-        // evaluate once in the Filter and again in the Project.
-        val sh = docToks(s, d)
-          .where(col("text").rlike("\\S+\\s+\\S+\\s+\\S+"))
-          .select(col("doc_id"), shingles3(col("toks")).as("shingles"))
-        // Single-pass codegen'd sketch (plans.MinhashMd5): same 16
-        // seed-prefixed md5 minima as the transform/array_min pipeline
-        // (equality property-tested in HashSketchSpec), none of its
-        // per-shingle allocation.
-        val sig = sh.withColumn("sigs",
-          call_function("minhash_md5", col("shingles")))
-        // Repartition on the join keys BEFORE the self-join: both sides
-        // then share one identical Exchange subtree, which Catalyst's
-        // ReuseExchange dedups — the expensive signature pipeline
-        // (shingle → 16 md5 minhashes) runs ONCE, not twice.
-        val bands = sig.select(col("doc_id"), explode(sequence(lit(0), lit(3))).as("band_id"),
-            col("sigs"))
-          .withColumn("band_sig", concat_ws(",", slice(col("sigs"), col("band_id") * 4 + 1, lit(4))))
-          .select("doc_id", "band_id", "band_sig")
-          .repartition(col("band_id"), col("band_sig"))
-        val a = bands.withColumnRenamed("doc_id", "doc_a")
-        val b = bands.withColumnRenamed("doc_id", "doc_b")
-        a.hint("shuffle_hash").join(b, Seq("band_id", "band_sig"))
-          .where(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b").distinct()
+        Sketch.candidatePairs(md5Bands(shingled(s, d)), "doc_id", "doc_a", "doc_b")
           .orderBy("doc_a", "doc_b")
       },
       Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
@@ -209,20 +207,10 @@ object TextOps {
         // J≥0.9 near-dups this corpus plants — the 4×4 curve misses a
         // J=0.9 pair with ~1.4% probability, which is the wrong trade
         // when candidates are verified exactly anyway. Sketch + banding
-        // + verify live in queries.Sketch (shared with q53 and the
-        // streaming incremental dedup).
+        // + verify live in queries.Sketch (shared with q53,
+        // CorpusPipeline and the streaming incremental dedup).
         val enriched = Sketch.sketch(tbl(s, d, "documents")).localCheckpoint()
-        val bands = Sketch.bandRows(enriched)
-        val a = bands.withColumnRenamed("doc_id", "doc_a")
-        val b = bands.withColumnRenamed("doc_id", "doc_b")
-        val cand = a.hint("shuffle_hash").join(b, Seq("band_id", "band_sig"))
-          .where(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b").distinct()
-        cand
-          .join(enriched.select(col("doc_id").as("doc_a"), col("hsh").as("sh_a")), Seq("doc_a"))
-          .join(enriched.select(col("doc_id").as("doc_b"), col("hsh").as("sh_b")), Seq("doc_b"))
-          .where(Sketch.jaccard(col("sh_a"), col("sh_b")) >= 0.5)
-          .select(col("doc_a"), col("doc_b"))
+        Sketch.nearDupPairs(enriched, Sketch.bandRows(enriched), "doc_id", "doc_a", "doc_b")
           .orderBy("doc_a", "doc_b")
       },
       Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
@@ -250,26 +238,12 @@ object TextOps {
     ("q53_incremental_dedup",
       (s, d) => {
         graft.plans.GraftFunctions.ensureRegistered(s)
-        val hashed = Sketch.sketch(tbl(s, d, "documents")).localCheckpoint()
-        val corpus = Sketch.bandRows(hashed.where(col("doc_id") % 5 =!= 0))
-        val batch = Sketch.bandRows(hashed.where(col("doc_id") % 5 === 0))
-          .withColumnRenamed("doc_id", "b_id")
-        val cand = batch.hint("shuffle_hash")
-          .join(corpus.withColumnRenamed("doc_id", "c_id"), Seq("band_id", "band_sig"))
-          .select(col("b_id"), col("c_id")).distinct()
-        val hits = cand
-          .join(hashed.select(col("doc_id").as("b_id"), col("hsh").as("h_b")), Seq("b_id"))
-          .join(hashed.select(col("doc_id").as("c_id"), col("hsh").as("h_c")), Seq("c_id"))
-          .where(Sketch.jaccard(col("h_b"), col("h_c")) >= 0.5)
-          .groupBy("b_id").agg(min("c_id").as("dup_of"))
+        val hashed = Sketch.withBands(Sketch.sketch(tbl(s, d, "documents")).localCheckpoint())
+        val matches = Sketch.storeMatches(
+          hashed.where(col("doc_id") % 5 === 0), hashed.where(col("doc_id") % 5 =!= 0))
         // Every batch doc gets a verdict — including short docs the
         // shingle precondition filtered out (no shingles → trivially kept).
-        tbl(s, d, "documents").where(col("doc_id") % 5 === 0)
-          .select(col("doc_id"))
-          .join(hits.withColumnRenamed("b_id", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("dup_of").isNull, "kept").otherwise("dup").as("verdict"),
-            col("dup_of"))
+        Sketch.verdicts(tbl(s, d, "documents").where(col("doc_id") % 5 === 0), matches)
           .orderBy("doc_id")
       },
       Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
@@ -455,27 +429,13 @@ object TextOps {
     ("q35_dup_clusters",
       (s, d) => {
         graft.plans.GraftFunctions.ensureRegistered(s)
-        // Same cheap ≥3-token precondition as q24 (see comment there).
-        val sh = docToks(s, d)
-          .where(col("text").rlike("\\S+\\s+\\S+\\s+\\S+"))
-          .select(col("doc_id"), shingles3(col("toks")).as("shingles"))
-        // Same single-pass sketch as q24 (plans.MinhashMd5).
-        val sig = sh.withColumn("sigs",
-          call_function("minhash_md5", col("shingles")))
-        val bands = sig.select(col("doc_id"), explode(sequence(lit(0), lit(3))).as("band_id"),
-            col("sigs"))
-          .withColumn("band_sig", concat_ws(",", slice(col("sigs"), col("band_id") * 4 + 1, lit(4))))
-          .select("doc_id", "band_id", "band_sig")
-          .repartition(col("band_id"), col("band_sig"))
-        val a = bands.withColumnRenamed("doc_id", "doc_a")
-        val b = bands.withColumnRenamed("doc_id", "doc_b")
-        val cand = a.hint("shuffle_hash").join(b, Seq("band_id", "band_sig"))
-          .where(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b").distinct()
-        val verified = cand
+        // q24's candidates, verified on the string shingle sets the
+        // oracle mirrors.
+        val sh = shingled(s, d)
+        val verified = Sketch.candidatePairs(md5Bands(sh), "doc_id", "doc_a", "doc_b")
           .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), Seq("doc_a"))
           .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), Seq("doc_b"))
-          .where(jaccard(col("sh_a"), col("sh_b")) >= 0.5)
+          .where(jaccard(col("sh_a"), col("sh_b")) >= Sketch.Threshold)
           .select("doc_a", "doc_b")
         // Run-to-convergence min-label propagation: the shared
         // QueryUtil.connectedComponents core (localCheckpoint-truncated

@@ -172,12 +172,6 @@ object TrainOps {
     // is a map-side semi-join over the corpus — no corpus shuffle.
     ("q60_decontamination",
       (s, d) => {
-        def sh5(toks: org.apache.spark.sql.Column) =
-          when(size(toks) >= 5,
-            array_distinct(transform(sequence(lit(0), size(toks) - 5),
-              i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2),
-                element_at(toks, i + 3), element_at(toks, i + 4), element_at(toks, i + 5)))))
-            .otherwise(array().cast("array<string>"))
         // Tokenize into a materialized column first, and use
         // explode_OUTER: a plain explode makes Catalyst infer a
         // `size(sh) > 0 AND isnotnull(sh)` predicate and push it into
@@ -187,7 +181,7 @@ object TrainOps {
         // which the inner shingle join / distinct drop for free.
         val t = tbl(s, d, "documents")
           .withColumn("toks", tokens(col("text")))
-          .withColumn("sh", sh5(col("toks")))
+          .withColumn("sh", shingles5(col("toks")))
         val eval_ = t.where(col("doc_id") % 50 === 0)
           .select(explode_outer(col("sh")).as("shingle"))
           .where(col("shingle").isNotNull).distinct()

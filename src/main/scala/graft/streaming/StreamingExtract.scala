@@ -346,10 +346,9 @@ object StreamingExtract {
   }
 
   /** Incremental NEAR-dup dedup over a continuously-fed documents table:
-    * each micro-batch is MinHash-sketched (queries.Sketch — the q24p/q53
-    * production hash family), LSH-banded against (a) itself and (b) the
-    * signature store accumulated from every earlier batch, candidates
-    * are verified with exact shingle-set Jaccard, and only novel
+    * each micro-batch is MinHash-sketched and judged by queries.Sketch
+    * (the q24p/q53 near-dup engine) against (a) itself and (b) the
+    * signature store accumulated from every earlier batch; only novel
     * documents are emitted. This is the streaming form of the
     * oracle-verified q53 operator — `foreachBatch` + an explicit
     * signature table instead of a keyed state store, because the LSH
@@ -382,22 +381,18 @@ object StreamingExtract {
       inputDir: String,
       outDir: String,
       checkpointDir: String,
-      sigDir: String,
-      threshold: Double = 0.5,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream
+      sigDir: String): StreamingQuery =
+    spark.readStream
       .schema(DocumentsSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(inputDir)
+      .parquet(inputDir)
       .select("doc_id", "text", "lang")
       .writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        nearDedupBatch(batch, batchId, outDir, sigDir, threshold)
+        nearDedupBatch(batch, batchId, outDir, sigDir)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
 
   /** One micro-batch of the incremental near-dup (also the unit a batch
     * backfill calls directly, one invocation per ingest).
@@ -406,9 +401,8 @@ object StreamingExtract {
       batchDf: DataFrame,
       batchId: Long,
       outDir: String,
-      sigDir: String,
-      threshold: Double): Unit = {
-    import graft.queries.Sketch
+      sigDir: String): Unit = {
+    import graft.queries.{SignatureStore, Sketch}
     // foreachBatch hands a Dataset bound to a CLONED SparkSession (the
     // micro-batch's isolated session state): the sketch functions must
     // be registered there, not on the caller's session.
@@ -418,10 +412,7 @@ object StreamingExtract {
     // Band signatures are computed once here and PERSISTED with the
     // sketch, so later batches' band joins read precomputed 64-bit keys
     // instead of re-hashing the whole store every trigger.
-    val sk = Sketch.sketch(batch)
-      .withColumn("bands", Sketch.bandSigs(col("sigs")))
-      .localCheckpoint()
-    val bandsB = Sketch.explodeBands(sk)
+    val sk = Sketch.withBands(Sketch.sketch(batch)).localCheckpoint()
 
     // Signature store from earlier batches (absent on the first). Keep
     // only PRIOR partitions (batch_id < batchId, via SignatureStore.read
@@ -438,36 +429,17 @@ object StreamingExtract {
       val path = new org.apache.hadoop.fs.Path(sigDir)
       val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(path) && fs.listStatus(path).nonEmpty)
-        Some(graft.queries.SignatureStore.read(s, sigDir, beforeBatch = Some(batchId)))
+        Some(SignatureStore.read(s, sigDir, beforeBatch = Some(batchId)))
       else None
     }
 
-    // Candidates: within-batch (min doc_id survives) ∪ batch-vs-store
-    // (the store doc always survives). Both joins are on the compact
-    // 64-bit band keys; the verify join pulls shingle-hash arrays for
-    // candidates only.
-    val a = bandsB.withColumnRenamed("doc_id", "doc_a")
-    val b = bandsB.withColumnRenamed("doc_id", "doc_b")
-    val inBatch = a.join(b, Seq("band_id", "band_sig"))
-      .where(col("doc_a") > col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    val cands = store match {
-      case Some(st) =>
-        inBatch.unionByName(
-          bandsB.withColumnRenamed("doc_id", "doc_a")
-            .join(Sketch.explodeBands(st).withColumnRenamed("doc_id", "doc_b"),
-              Seq("band_id", "band_sig"))
-            .select("doc_a", "doc_b").distinct())
-      case None => inBatch
-    }
-    val allSk = store
-      .map(st => sk.select("doc_id", "hsh", "bands").unionByName(st))
-      .getOrElse(sk.select("doc_id", "hsh", "bands"))
-    val dups = cands
-      .join(sk.select(col("doc_id").as("doc_a"), col("hsh").as("h_a")), Seq("doc_a"))
-      .join(allSk.select(col("doc_id").as("doc_b"), col("hsh").as("h_b")), Seq("doc_b"))
-      .where(Sketch.jaccard(col("h_a"), col("h_b")) >= threshold)
-      .select(col("doc_a").as("doc_id")).distinct()
+    // Dropped: the larger doc_id of every within-batch pair, and every
+    // batch doc matching the store (the store doc always survives).
+    val inBatch = Sketch.nearDupPairs(sk, Sketch.explodeBands(sk), "doc_id", "keep", "drop")
+      .select(col("drop").as("doc_id"))
+    val dups = store
+      .map(st => inBatch.union(Sketch.storeMatches(sk, st).select(col("b_id").as("doc_id"))))
+      .getOrElse(inBatch).distinct()
 
     val kept = batch.join(dups, Seq("doc_id"), "left_anti")
     kept.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
@@ -475,8 +447,7 @@ object StreamingExtract {
     // batch); `sigs` is dropped — future joins need only the verify
     // arrays and the precomputed band keys. SignatureStore.writeRows
     // owns the layout (one schema for batch and streaming).
-    graft.queries.SignatureStore.writeRows(
-      sk.join(dups, Seq("doc_id"), "left_anti"), sigDir, batchId)
+    SignatureStore.writeRows(sk.join(dups, Seq("doc_id"), "left_anti"), sigDir, batchId)
   }
 
   /** One metrics row per extracted page (event time carried through the

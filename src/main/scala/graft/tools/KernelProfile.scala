@@ -44,11 +44,8 @@ object KernelProfile {
     time("dom build") {
       var i = 0; while (i < n) { graft.html.Dom.parse(htmlStrings(i)); i += 1 }
     }
-    time("segment (dom path)") {
+    time("segment") {
       var i = 0; while (i < n) { graft.html.BlockSegmenter.parseHtml(htmlStrings(i)); i += 1 }
-    }
-    time("segment (stream path)") {
-      var i = 0; while (i < n) { graft.html.StreamSegmenter.parseHtml(htmlStrings(i)); i += 1 }
     }
     time("parse (tokenize+DOM)") {
       var i = 0; while (i < n) { DocParser.parse(payloads(i).html); i += 1 }

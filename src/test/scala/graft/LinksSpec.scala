@@ -1,6 +1,7 @@
 package graft
 
 import graft.html.Links
+import org.apache.spark.sql.functions.col
 
 /** Outlink/anchor extraction (html.Links) + the x65 link-record query:
   * unit semantics (anchor capture, auto-close, entity decode, URL
@@ -53,6 +54,16 @@ class LinksSpec extends SparkSuite {
     val recs = Links.records("https://h.example/a/p.html",
       """<a href="/r1">Related</a>""".getBytes("UTF-8"))
     assert(recs == Seq(("https://h.example/r1", "Related")))
+  }
+
+  test("x65 path key: every key is rooted at / and keeps its query string") {
+    import spark.implicits._
+    val targets = Seq("https://h.example", "https://h.example?x=1",
+      "https://h.example/a/b?x=1", "http://h.example:8080")
+    val paths = targets.toDF("target")
+      .select(graft.queries.PipelineOps.linkPath(col("target")))
+      .as[String].collect().toSeq
+    assert(paths == Seq("/", "/?x=1", "/a/b?x=1", "/"))
   }
 
   test("x65 golden: link-record aggregate over the deterministic 1200-page corpus") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{PipelineOps, QueryUtil}
+import graft.queries.{PipelineOps, QueryUtil, Sketch}
 import org.apache.spark.sql.functions._
 
 /** Specs for the driver-checkable query surface: pinned semantics for
@@ -221,6 +221,28 @@ class QueryOpsSpec extends SparkSuite {
     }
     // kept rows carry no dup_of.
     assert(rows.filter(_.getString(1) == "kept").forall(_.isNullAt(2)))
+  }
+
+  test("url-keyed near-dup pairs (CorpusPipeline's stage 4) == q24p's oracle-verified pairs") {
+    import spark.implicits._
+    graft.plans.GraftFunctions.ensureRegistered(spark)
+    // A hashed host prefix makes url order differ from doc_id order, so
+    // the engine's a < b ordering is exercised on a different key.
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .withColumn("url", concat(lit("https://"), substring(md5(col("doc_id").cast("string")), 1, 8),
+        lit(".example/"), col("doc_id").cast("string")))
+    val sk = Sketch.sketch(docs, idCol = "url").localCheckpoint()
+    val byUrl = Sketch.nearDupPairs(sk, Sketch.bandRows(sk, idCol = "url"), "url", "url_a", "url_b")
+      .join(docs.select(col("url").as("url_a"), col("doc_id").as("id_a")), "url_a")
+      .join(docs.select(col("url").as("url_b"), col("doc_id").as("id_b")), "url_b")
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+    val q24p = SparkEntry.queries("q24p_minhash_prod")(spark, sf)
+      .as[(Long, Long)].collect().toSet
+
+    assert(byUrl.size == byUrl.toSet.size, "each pair is emitted once")
+    assert(byUrl.map { case (a, b) => (a min b, a max b) }.toSet == q24p)
+    assert(q24p.nonEmpty)
+    assert(byUrl.exists { case (a, b) => a > b }, "url order never differed from doc_id order")
   }
 
   test("q71 bloom-prefiltered dedup: exact verdicts, native probe, no false negatives") {

@@ -63,7 +63,7 @@ class StreamingNearDedupSpec extends SparkSuite {
     val wave1 = spark.read.parquet(in)
       .where(col("doc_id") < 10).select("doc_id", "text", "lang")
     val before = spark.read.parquet(out).orderBy("doc_id").collect().toSeq
-    StreamingExtract.nearDedupBatch(wave1, 0L, out, sig, 0.5)
+    StreamingExtract.nearDedupBatch(wave1, 0L, out, sig)
     val after = spark.read.parquet(out).orderBy("doc_id").collect().toSeq
     assert(after == before, "replay of batch 0 is byte-idempotent")
   }
