@@ -4,14 +4,17 @@ import graft.extract.Processor
 import graft.jobs.{Checkpoint, LineageRow}
 import graft.model.{Enums, KernelPage, Page}
 import graft.synth.PageGen
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** The extraction pipeline as a spark-submit batch job (SURVEY.md §3.1's
   * Spark lifecycle + §4.4 physical plan of record):
   *
   *   scan(pages, pushed filters) → project → [map-only] ExtractKernel
-  *     → write results partitionBy(bucket) → append lineage rows
+  *     → exchange(bucket) → observe(lineage) → write results
+  *       partitionBy(bucket) → append lineage rows
   *
   * Scale design decisions (10^12-row design point):
   *  - **No payload shuffle.** Extraction is embarrassingly parallel; the
@@ -30,6 +33,14 @@ import org.apache.spark.sql.functions._
   *    buckets are skipped (driver-side isin filter — never a join/shuffle
   *    since B is small); incomplete buckets are rewritten atomically.
   *    Waves (`--wave-size`) bound how much work one commit covers.
+  *  - **Lineage from the write.** A wave's per-bucket counts (docs,
+  *    ok_docs, words) are observed in the write job's result stage, not
+  *    read back from the table afterwards. They are exactly the committed
+  *    rows: Spark merges a result task's accumulator updates once per
+  *    partition and ignores later attempts of a finished partition;
+  *    failed attempts' updates are never merged; a write task succeeds
+  *    only once its commit is authorized; and a failed job commit throws
+  *    before any lineage row is built.
   *
   * Usage:
   *   ExtractJob (--rows N [--seed S] | --input path) --out DIR
@@ -235,38 +246,31 @@ object ExtractJob {
       // the kernel). Without this, a partitionBy write from T tasks
       // produces T×B files — at 10^5 tasks that's millions of tiny
       // files; with it, file count ≈ B. AQE coalesces the exchange.
-      val recs = if (a.writeShuffle) recs0.repartition(col("bucket")) else recs0
+      val (recs, lineage) = observeLineage(recs0, a.buckets, a.writeShuffle)
 
       // dynamic overwrite: only this wave's buckets are replaced
       val tWrite0 = System.nanoTime()
       TableIO.overwritePartitions(recs, a.out, "bucket")
       val tWrite = (System.nanoTime() - tWrite0) / 1e9
 
-      // Lineage metrics from the durably-written data (exact, columnar).
-      val tMet0 = System.nanoTime()
-      val metrics = TableIO.read(spark, a.out)
-        .where(col("bucket").isin(wave.map(Integer.valueOf): _*))
-        .groupBy(col("bucket"))
-        .agg(
-          count(lit(1)).as("docs"),
-          sum(when(col("success"), 1L).otherwise(0L)).as("ok_docs"),
-          sum(when(col("success"), 0L).otherwise(1L)).as("error_docs"),
-          sum(col("word_count").cast("long")).as("words"))
-        .collect()
-      // Phase diagnostics (stderr, ops-only): where a wave's wall time
-      // went — the kernel+write job vs the metrics roll-up.
+      // Lineage from the write's own result stage, complete once the
+      // write returns: no read-back. Exactly the committed rows: each
+      // partition's update merges once, failed attempts' never do, and
+      // a failed job commit has thrown before this line.
+      val totals = lineage.get("totals").asInstanceOf[Seq[Long]]
+      val now = new java.sql.Timestamp(System.currentTimeMillis())
+      // Buckets with zero rows still count as completed.
+      val rows = wave.map { b =>
+        val (docs, ok) = (totals(3 * b), totals(3 * b + 1))
+        LineageRow(a.runId, b, "completed", docs, ok, docs - ok, totals(3 * b + 2),
+          a.quality, now)
+      }
+      // Phase diagnostics (stderr, ops-only): the kernel+write job's wall
+      // time and what it committed.
       System.err.println(
         f"[extract-job] wave ${wave.head}-${wave.last}: write ${tWrite}%.1f s, " +
-        f"metrics ${(System.nanoTime() - tMet0) / 1e9}%.1f s")
-      val now = new java.sql.Timestamp(System.currentTimeMillis())
-      val written = metrics.map { r =>
-        LineageRow(a.runId, r.getInt(0), "completed", r.getLong(1),
-          r.getLong(2), r.getLong(3), r.getLong(4), a.quality, now)
-      }.toVector
-      // Buckets with zero rows still count as completed.
-      val zero = wave.filterNot(written.map(_.bucket).toSet).map(b =>
-        LineageRow(a.runId, b, "completed", 0L, 0L, 0L, 0L, a.quality, now))
-      val rows = written ++ zero
+        s"docs ${rows.map(_.docs).sum}, ok ${rows.map(_.ok_docs).sum}, " +
+        s"errors ${rows.map(_.error_docs).sum}, words ${rows.map(_.words).sum}")
       if (a.checkpoint.nonEmpty) Checkpoint.append(spark, a.checkpoint, rows)
       allRows ++= rows
     }
@@ -284,6 +288,42 @@ object ExtractJob {
     if (a.compactTarget > 0) CompactJob.run(spark, a.out, a.compactTarget)
     notifyCompletion(a, result)
     result
+  }
+
+  /** One wave's write frame: `recs` clustered by bucket (unless
+    * `writeShuffle` is off) under a fresh observation of its per-bucket
+    * totals. The observation sits above the exchange, so it runs in the
+    * write job's result stage and counts the rows that stage commits.
+    */
+  private[app] def observeLineage(recs: DataFrame, buckets: Int,
+      writeShuffle: Boolean): (DataFrame, Observation) = {
+    val clustered = if (writeShuffle) recs.repartition(col("bucket")) else recs
+    val obs = Observation()
+    val totals = udaf(new BucketTotals(buckets)).apply(col("bucket"), col("success"), col("word_count"))
+    (clustered.observe(obs, totals.as("totals")), obs)
+  }
+
+  /** (bucket, success, word_count) rows summed per bucket into one array:
+    * slot 3b holds bucket b's docs, 3b+1 its ok_docs, 3b+2 its words.
+    */
+  private final class BucketTotals(buckets: Int)
+      extends Aggregator[(Int, Boolean, Int), Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](3 * buckets)
+    def reduce(acc: Array[Long], r: (Int, Boolean, Int)): Array[Long] = {
+      val i = 3 * r._1
+      acc(i) += 1
+      if (r._2) acc(i + 1) += 1
+      acc(i + 2) += r._3
+      acc
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }
+    def finish(acc: Array[Long]): Array[Long] = acc
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
   /** I4: deliver the completion notification over the configured

@@ -1,6 +1,7 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-bucket lineage row appended to the checkpoint table after a
@@ -32,7 +33,7 @@ object Checkpoint {
     * shuffle.
     */
   def completedBuckets(spark: SparkSession, path: String, runId: String): Set[Int] = {
-    if (!new java.io.File(path).exists()) return Set.empty
+    if (!exists(spark, path)) return Set.empty
     try {
       graft.app.TableIO.read(spark, path)
         .where(col("run_id") === runId && col("status") === "completed")
@@ -53,7 +54,7 @@ object Checkpoint {
     * (Iceberg: `DELETE WHERE completed_ts < now() - INTERVAL 24 HOURS`.)
     */
   def cleanupExpired(spark: SparkSession, path: String, ttlHours: Int = 24): Long = {
-    if (!new java.io.File(path).exists()) return 0L
+    if (!exists(spark, path)) return 0L
     val df = graft.app.TableIO.read(spark, path).cache()
     try {
       val cutoff = new java.sql.Timestamp(System.currentTimeMillis() - ttlHours * 3600L * 1000L)
@@ -62,18 +63,26 @@ object Checkpoint {
       if (dropped > 0) {
         val tmp = path + ".tmp"
         keep.write.format(graft.app.TableIO.format).mode(SaveMode.Overwrite).save(tmp)
-        val fs = new java.io.File(path)
-        val bak = new java.io.File(path + ".old")
-        fs.renameTo(bak)
-        new java.io.File(tmp).renameTo(fs)
-        deleteRecursively(bak)
+        val live = new Path(path)
+        val bak = new Path(path + ".old")
+        val fs = fileSystem(spark, live)
+        // A Hadoop rename onto an existing directory moves the source
+        // into it, so the second rename must not run after a failed first.
+        if (!fs.rename(live, bak) || !fs.rename(new Path(tmp), live))
+          throw new java.io.IOException(s"checkpoint swap failed at $path")
+        fs.delete(bak, true)
       }
       dropped
     } finally df.unpersist()
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete()
+  // Paths go through the Hadoop FileSystem, so a `file:`, `hdfs:` or
+  // `s3a:` checkpoint resolves like a plain local path does.
+  private def fileSystem(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    fileSystem(spark, p).exists(p)
   }
 }

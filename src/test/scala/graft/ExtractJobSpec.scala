@@ -82,6 +82,63 @@ class ExtractJobSpec extends SparkSuite {
     assert(a.length == b.length && a.sameElements(b))
   }
 
+  test("lineage rows equal a groupBy over the written table, zero-row buckets included") {
+    // Input with no row in bucket 3, so the zero-row path is always hit.
+    val input = tmpDir("xjob-lineage-in")
+    PageGen.generate(spark, N).toDF().where(ExtractJob.bucketExpr(4) =!= 3)
+      .write.mode("overwrite").parquet(input)
+    val base = Args(input = input, buckets = 4)
+    Seq(
+      "single wave" -> base,
+      "multi-wave" -> base.copy(waveSize = 2),
+      "two-pass" -> base.copy(twoPass = true),
+      "no write shuffle" -> base.copy(writeShuffle = false)
+    ).foreach { case (name, a) =>
+      val out = tmpDir("xjob-lineage")
+      val rows = ExtractJob.run(spark, a.copy(out = out))
+      val expected = spark.read.parquet(out).groupBy("bucket")
+        .agg(count(lit(1)), sum(when(col("success"), 1L).otherwise(0L)),
+          sum(col("word_count").cast("long")))
+        .collect().map(r => r.getInt(0) ->
+          (r.getLong(1), r.getLong(2), r.getLong(1) - r.getLong(2), r.getLong(3))).toMap
+      assert(rows.map(_.bucket).sorted == (0 until 4), name)
+      assert(!expected.contains(3) && rows.map(_.error_docs).sum > 0, name)
+      rows.foreach { l =>
+        assert(l.status == "completed", name)
+        assert((l.docs, l.ok_docs, l.error_docs, l.words) ==
+          expected.getOrElse(l.bucket, (0L, 0L, 0L, 0L)), s"$name, bucket ${l.bucket}")
+      }
+    }
+  }
+
+  test("a run whose waves match no row returns one zero lineage row per bucket") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    Seq(true, false).foreach { shuffle =>
+      val a = Args(rows = 50, out = tmpDir("xjob-empty"), buckets = 4, lang = "zz",
+        writeShuffle = shuffle)
+      val rows = Await.result(Future(ExtractJob.run(spark, a))(ExecutionContext.global), 3.minutes)
+      assert(rows.sortBy(_.bucket).map(l => (l.bucket, l.status, l.docs, l.ok_docs, l.error_docs,
+        l.words)) == (0 until 4).map(b => (b, "completed", 0L, 0L, 0L, 0L)), s"writeShuffle=$shuffle")
+    }
+  }
+
+  test("checkpoint given as a file:// URI: resume skips done buckets, retention runs") {
+    import graft.jobs.LineageRow
+    val out = tmpDir("xjob-uri")
+    val ckpt = new java.io.File(tmpDir("xjob-uri-ckpt"), "lineage").toURI.toString
+    assert(ckpt.startsWith("file:"))
+    val a = Args(rows = 100, out = out, checkpoint = ckpt, runId = "u1", buckets = 4)
+    assert(ExtractJob.run(spark, a).map(_.bucket).sorted == (0 until 4))
+    assert(ExtractJob.run(spark, a) == Nil)
+
+    val old = new java.sql.Timestamp(System.currentTimeMillis() - 48L * 3600 * 1000)
+    Checkpoint.append(spark, ckpt, Seq(LineageRow("u0", 0, "completed", 1, 1, 0, 1, "balanced", old)))
+    assert(Checkpoint.cleanupExpired(spark, ckpt, ttlHours = 24) == 1)
+    assert(spark.read.parquet(ckpt).where(col("run_id") === "u0").count() == 0)
+    assert(Checkpoint.completedBuckets(spark, ckpt, "u1") == (0 until 4).toSet)
+  }
+
   test("--slim job: flat schema, same per-document values as the full run") {
     val outFull = tmpDir("xjob-full")
     val outSlim = tmpDir("xjob-slim")
