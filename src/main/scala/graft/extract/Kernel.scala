@@ -150,6 +150,12 @@ object DirectExtract {
   * decision → extract with fallback cascade → byte-exact composition.
   * Direct port of the reference's `TwoPassProcessor` semantics
   * (src/text_extraction/processor.py:39-472) over parsed payloads.
+  *
+  * Invariant: `extract`'s record is a pure function of `(html, quality)`
+  * in every field except `url` and `lang`, which are copied from the
+  * input row. PayloadMemo reuses one record for every row carrying the
+  * same payload, so the kernel must never read `url` or `lang` (for
+  * example to resolve links against the url); ProcessorSpec pins this.
   */
 final class Processor(
     primaryBackend: Option[ExtractionBackend] = Some(new BoilerplateBackend()),

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.extract.Processor
-import graft.model.Page
+import graft.extract.PayloadMemo
+import graft.model.{KernelPage, Page}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -317,11 +317,10 @@ object StreamingExtract {
       .select("url", "warc_ts", "html", "lang") // golden `text` pruned
       .as[(String, java.sql.Timestamp, Array[Byte], String)]
     val rows = pages.mapPartitions { it =>
-      val proc = Processor.default
+      val memo = new PayloadMemo(quality)
       val md = java.security.MessageDigest.getInstance("MD5")
       it.flatMap { case (url, ts, html, lang) =>
-        val p = graft.model.KernelPage(url, html, lang)
-        val r = proc.extract(p, quality)
+        val r = memo.extract(KernelPage(url, html, lang))
         if (r.success && r.text.nonEmpty) {
           md.reset()
           val hash = md.digest(r.text.getBytes("UTF-8"))
@@ -471,9 +470,9 @@ object StreamingExtract {
       .select("url", "warc_ts", "html", "lang") // golden `text` pruned
       .as[(String, java.sql.Timestamp, Array[Byte], String)]
     pages.mapPartitions { it =>
-      val proc = Processor.default
+      val memo = new PayloadMemo(quality)
       it.map { case (url, ts, html, lang) =>
-        val r = proc.extract(graft.model.KernelPage(url, html, lang), quality)
+        val r = memo.extract(KernelPage(url, html, lang))
         StreamMetric(ts, r.pdf_type, r.word_count)
       }
     }

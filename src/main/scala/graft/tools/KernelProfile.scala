@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.extract.{DocParser, Processor}
+import graft.extract.{DocParser, PayloadMemo, Processor}
+import graft.model.KernelPage
 import graft.synth.PageGen
 
 /** No-Spark micro-profile of the extraction kernel: stage-level ns/doc
@@ -19,6 +20,8 @@ object KernelProfile {
       else (0 until 4).flatMap(_ => all.filter(_.url.contains(s"/$fam/"))).toArray
     val n = payloads.length
     if (fam.nonEmpty) println(s"[profile] family=$fam n=$n")
+    val distinct = payloads.iterator.map(p => java.nio.ByteBuffer.wrap(p.html)).toSet.size
+    println(f"[profile] distinct payloads $distinct of $n (${100.0 * distinct / n}%.1f%%)")
 
     def time(label: String)(f: => Unit): Unit = {
       f; f // warmup (JIT)
@@ -58,8 +61,17 @@ object KernelProfile {
       }
     }
     val proc = Processor.default
-    time("extract (full)") {
+    time("extract (balanced)") {
       var i = 0; while (i < n) { proc.extract(payloads(i), "balanced"); i += 1 }
+    }
+    // As one Spark task over the whole sample: a fresh memo per pass.
+    time("extract (memoized)") {
+      val memo = new PayloadMemo("balanced")
+      var i = 0
+      while (i < n) {
+        val p = payloads(i)
+        memo.extract(KernelPage(p.url, p.html, p.lang)); i += 1
+      }
     }
     time("extract (fast)") {
       var i = 0; while (i < n) { proc.extract(payloads(i), "fast"); i += 1 }

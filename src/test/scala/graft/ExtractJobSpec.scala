@@ -2,9 +2,10 @@ package graft
 
 import graft.app.ExtractJob
 import graft.app.ExtractJob.Args
-import graft.extract.Processor
+import graft.extract.{PayloadMemo, Processor}
 import graft.jobs.Checkpoint
-import graft.synth.PageGen
+import graft.model.{ExtractionRecord, KernelPage, SlimRecord}
+import graft.synth.{Fixtures, PageGen}
 import org.apache.spark.sql.functions._
 
 /** Pipeline-level specs: generator determinism, end-to-end extraction,
@@ -231,6 +232,73 @@ class ExtractJobSpec extends SparkSuite {
     assert(rows.forall(_.quality == "balanced"))
   }
 
+  test("extractKernel normalizes an invalid quality to balanced, row for row") {
+    import spark.implicits._
+    val pages = PageGen.generate(spark, 120L)
+    val full = Seq("bogus", "balanced").map(q =>
+      ExtractJob.extractKernel(pages, q).as[ExtractionRecord].collect().sortBy(_.url).toSeq)
+    assert(full(0) == full(1))
+    val slim = Seq("bogus", "balanced").map(q =>
+      ExtractJob.extractKernel(pages, q, slim = true).as[SlimRecord].collect().sortBy(_.url).toSeq)
+    assert(slim(0) == slim(1))
+    assert(slim(0).forall(_.quality == "balanced"))
+  }
+
+  test("payload memo in the kernel stage: repeats under many urls/langs, past the cap, == direct calls") {
+    import spark.implicits._
+    val (n, bFrom, pad) = (1000, 900, 80000)
+    // One task sees more bytes of repeated payloads than the production
+    // cap, so the memo fills and then stops admitting (payload B arrives
+    // after that).
+    val repeatedBytes = (0 until bFrom by 4).map(i => ExtractJobSpec.memoRow(i + 2, bFrom, pad).html)
+      .map(_.length.toLong).sum
+    assert(repeatedBytes > PayloadMemo.CapBytes)
+    val rows = spark.range(0, n, 1, 1).map(i => ExtractJobSpec.memoRow(i.toInt, bFrom, pad))
+    val direct = (0 until n)
+      .map(i => Processor.default.extract(ExtractJobSpec.memoRow(i, bFrom, pad), "balanced"))
+      .sortBy(_.url)
+    val full = ExtractJob.extractKernel(rows, "balanced").as[ExtractionRecord].collect().sortBy(_.url)
+    assert(full.toSeq == direct)
+    val slim = ExtractJob.extractKernel(rows, "balanced", slim = true).as[SlimRecord]
+      .collect().sortBy(_.url)
+    assert(slim.toSeq == direct.map(_.toSlim))
+  }
+
+  test("payload memo: a hit reuses the record, the cap stops admission, results == direct calls") {
+    val (n, bFrom, pad) = (400, 300, 2000)
+    val cap = 64L * 1024
+    val memo = new PayloadMemo("balanced", capBytes = cap)
+    val got = (0 until n).map { i =>
+      val p = ExtractJobSpec.memoRow(i, bFrom, pad)
+      val r = memo.extract(p)
+      assert(r == Processor.default.extract(p, "balanced"), s"row $i")
+      (p, r)
+    }
+    assert(memo.retainedBytes <= cap && memo.retainedBytes > cap / 2)
+    // A was admitted at its second sighting: every later copy shares
+    // that record's text. B (first seen after the cap filled, larger
+    // than the room left) was not: each copy is a fresh extraction.
+    def texts(payload: Array[Byte]) = got.collect {
+      case (p, r) if java.util.Arrays.equals(p.html, payload) => r.text
+    }
+    val (a, b) = (texts(ExtractJobSpec.SharedA), texts(ExtractJobSpec.SharedB))
+    assert(a.size == 100 && !(a(0) eq a(1)) && a.drop(2).forall(_ eq a(1)))
+    assert(b.size == 25 && b.tail.forall(t => !(t eq b.head)))
+    assert(memo.size < got.map(x => java.nio.ByteBuffer.wrap(x._1.html)).distinct.size)
+  }
+
+  test("payload memo: payloads whose hashes collide never share an entry") {
+    val memo = new PayloadMemo("balanced", hash = _ => 42)
+    val (a, b) = (Fixtures.textSimpleHtml, Fixtures.germanInvoiceHtml)
+    val pages = Seq(a, a, b, b, a, b).zipWithIndex.map { case (h, i) =>
+      KernelPage(s"https://c.example/$i", h.clone(), Seq("en", "de", "")(i % 3))
+    }
+    val got = pages.map(memo.extract)
+    assert(got == pages.map(p => Processor.default.extract(p, "balanced")))
+    assert(got(0).text != got(2).text)
+    assert(memo.size == 2)
+  }
+
   test("idempotent resume: killed-midway rerun produces identical results table") {
     val outFull = tmpDir("xjob-full")
     val outResume = tmpDir("xjob-resume")
@@ -334,5 +402,29 @@ class ExtractJobSpec extends SparkSuite {
     val ds = ExtractJob.loadPages(spark, ExtractJob.Args(input = dir, out = "/x", lang = "de"))
     val plan = ds.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("EqualTo(lang,de)"), plan)
+  }
+}
+
+object ExtractJobSpec {
+  private def padded(id: Long, pad: Int): Array[Byte] =
+    PageGen.articleHtmlString(3L, id).replace("</body>", s"<!-- ${"x" * pad} -->\n</body>")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  val SharedA: Array[Byte] = Fixtures.hybrid2pPdf
+  val SharedB: Array[Byte] = padded(-1L, 8192)
+
+  /** Row `i` of the payload-memo specs, each with its own url: every
+    * 4th row repeats payload A under a cycling lang; from row `bFrom` on,
+    * rows ≡ 1 mod 4 repeat payload B (an 8 KB article); the other rows
+    * of each group of 4 carry that group's own article, padded with a
+    * `pad`-byte comment (seen 2-3 times, so the memo admits it).
+    */
+  def memoRow(i: Int, bFrom: Int, pad: Int): KernelPage = {
+    val html =
+      if (i % 4 == 0) SharedA.clone()
+      else if (i % 4 == 1 && i >= bFrom) SharedB.clone()
+      else padded(i / 4L, pad)
+    val lang = Vector("en", "de", "ja", "")(i / 4 % 4)
+    KernelPage(s"https://memo$i.example/p$i.html", html, lang)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.extract._
 import graft.model._
-import graft.synth.Fixtures
+import graft.synth.{Fixtures, PageGen}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
@@ -269,6 +269,24 @@ class ProcessorSpec extends AnyFunSuite {
         val r = extract(fam, q)
         assert(r.word_count == graft.text.PyText.wordCount(r.text))
       }
+    }
+  }
+
+  test("a record depends only on (html, quality): url and lang are copied through") {
+    // PayloadMemo reuses one record for every row with the same payload,
+    // so no other field may read url or lang.
+    val sample = (0L until 2000L).map(PageGen.row(42L, _))
+    def has(tag: String) = sample.exists(p =>
+      new String(p.html, java.nio.charset.StandardCharsets.ISO_8859_1).contains(tag))
+    assert(sample.exists(p => graft.pdf.PdfParser.isPdf(p.html)))
+    assert(sample.exists(_.url.contains("/corrupted/")))
+    assert(has("charset=\"windows-1252\"") && has("charset=\"shift_jis\""))
+    val payloads = Fixtures.families.map(_._2) ++ sample.map(_.html)
+    for (html <- payloads; q <- Seq(Enums.Fast, Enums.Balanced, Enums.Accurate)) {
+      val a = Processor.default.extract(KernelPage("https://a.example/x.html", html, "en"), q)
+      val b = Processor.default.extract(KernelPage("http://b.example/y?z=1", html, ""), q)
+      assert(a.url == "https://a.example/x.html" && a.lang == "en")
+      assert(a.copy(url = b.url, lang = b.lang) == b)
     }
   }
 
