@@ -28,28 +28,15 @@ object Bench {
   private def session(cpus: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+    val s = graft.app.SparkUtil.session(s"graft-bench-$cpus", cpus.toString, Map(
+      // The scaling comparison needs exactly `cpus` local cores, even
+      // under a submit that set a master.
+      "spark.master" -> s"local[$cpus]",
       // Shuffle files also bypass the sandbox's lone slow disk (cluster
       // shuffle runs on per-executor local NVMe, which scales).
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft_spark_local"))
-      // Output codec: same single owner as the production session
-      // factory (SparkUtil.parquetCodec scaladoc has the A/B numbers)
-      // so the bench measures what production writes with.
-      .config("spark.sql.parquet.compression.codec",
-        graft.app.SparkUtil.parquetCodec)
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .getOrCreate()
+      "spark.local.dir" ->
+        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft_spark_local"),
+      "spark.io.compression.codec" -> sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -2,6 +2,7 @@ package graft.app
 
 import graft.extract.PayloadMemo
 import graft.jobs.{Checkpoint, LineageRow}
+import graft.json.PyJson
 import graft.model.{Enums, KernelPage, Page}
 import graft.synth.PageGen
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, SparkSession}
@@ -352,19 +353,12 @@ object ExtractJob {
     val docs = rows.map(_.docs).sum
     val errors = rows.map(_.error_docs).sum
     val status = if (rows.nonEmpty) "completed" else "noop"
-    // run_id/out are caller-supplied — escape them or a quote in a
-    // path produces an unparseable notification for a job that
-    // actually succeeded.
-    def js(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+    // run_id/out are caller-supplied: unescaped, a quote in a path
+    // produces an unparseable notification for a job that succeeded.
     val json =
-      s"""{"job":"extract","run_id":"${js(a.runId)}","status":"$status",""" +
+      s"""{"job":"extract","run_id":${PyJson.quote(a.runId)},"status":"$status",""" +
       s""""docs":$docs,"error_docs":$errors,"buckets_done":${rows.length},""" +
-      s""""out":"${js(a.out)}"}"""
+      s""""out":${PyJson.quote(a.out)}}"""
     if (a.notifyPath.nonEmpty) try {
       val target = java.nio.file.Paths.get(a.notifyPath)
       if (target.getParent != null) java.nio.file.Files.createDirectories(target.getParent)
@@ -408,7 +402,7 @@ object ExtractJob {
     val rows = run(spark, a)
     val secs = (System.nanoTime() - t0) / 1e9
     val docs = rows.map(_.docs).sum
-    println(f"""{"job":"extract","run_id":"${a.runId}","docs":$docs,"buckets_done":${rows.length},"sec":$secs%.3f,"docs_per_sec":${docs / math.max(secs, 1e-9)}%.1f}""")
+    println(f"""{"job":"extract","run_id":${PyJson.quote(a.runId)},"docs":$docs,"buckets_done":${rows.length},"sec":$secs%.3f,"docs_per_sec":${docs / math.max(secs, 1e-9)}%.1f}""")
     spark.stop()
   }
 }

@@ -20,7 +20,11 @@ object SparkUtil {
     */
   def parquetCodec: String = sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "zstd")
 
-  def session(appName: String, cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
+  /** `conf` entries are set after the defaults and override them;
+    * `"spark.master"` there overrides an existing master too.
+    */
+  def session(appName: String, cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+      conf: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
@@ -42,7 +46,7 @@ object SparkUtil {
       if (sys.props.contains("spark.master") || sys.env.contains("SPARK_MASTER"))
         b
       else b.master(s"local[$cpus]")
-    val spark = withMaster.getOrCreate()
+    val spark = conf.foldLeft(withMaster) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

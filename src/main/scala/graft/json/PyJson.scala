@@ -37,6 +37,24 @@ object PyJson {
 
   def isValid(doc: String): Boolean = parse(doc).isRight
 
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character (< U+0020) escaped, everything else verbatim, so `parse`
+    * of the result returns `s` unchanged.
+    */
+  def quote(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length + 2).append('"')
+    s.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
+  }
+
   /** Container-nesting cap. CPython's recursive-descent json.loads hits
     * RecursionError at ~sys.getrecursionlimit() (default 1000) nesting —
     * an exception the reference's repair cascade does NOT catch, so its

@@ -64,21 +64,31 @@ object PdfWriter {
     case other => throw new IllegalArgumentException(s"unknown content filter: $other")
   }
 
-  /** Build a complete PDF from page specs. */
-  def build(pages: Seq[PageSpec], compress: Boolean = true): Array[Byte] = {
-    // Object numbering: 1 catalog, 2 pages-tree, 3 font, then per page:
-    // page obj, contents obj, image objs.
-    val objs = scala.collection.mutable.ArrayBuffer[(Int, Array[Byte])]()
-    var nextObj = 4
-    val pageObjNums = scala.collection.mutable.ArrayBuffer[Int]()
+  /** The objects both writers emit, numbered 1 catalog, 2 pages-tree,
+    * 3 font, then per page: page obj, contents obj, image objs.
+    * `streams` are the content and image stream objects, `dicts` every
+    * other object (what `buildXrefStream` packs into its ObjStm), and
+    * `nextObj` the first free object number.
+    */
+  private final case class Layout(
+      streams: Seq[(Int, Array[Byte])], dicts: Seq[(Int, String)], nextObj: Int)
 
+  private def layout(pages: Seq[PageSpec], contentFilter: String): Layout = {
+    var nextObj = 4
     val pageBodies = pages.map { spec =>
       val pageNum = nextObj; nextObj += 1
       val contentsNum = nextObj; nextObj += 1
       val imageNums = spec.imageAlts.map { _ => val n = nextObj; nextObj += 1; n }
-      pageObjNums += pageNum
       (pageNum, contentsNum, imageNums, spec)
     }
+    val streams = scala.collection.mutable.ArrayBuffer[(Int, Array[Byte])]()
+    val dicts = scala.collection.mutable.ArrayBuffer[(Int, String)]()
+    dicts += ((1, "<< /Type /Catalog /Pages 2 0 R >>"))
+    dicts += ((2,
+      s"<< /Type /Pages /Kids [${pageBodies.map(p => s"${p._1} 0 R").mkString(" ")}] " +
+      s"/Count ${pageBodies.length} >>"))
+    dicts += ((3,
+      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /WinAnsiEncoding >>"))
 
     pageBodies.foreach { case (pageNum, contentsNum, imageNums, spec) =>
       // Content stream: one BT..ET per text block, one Do per image.
@@ -100,21 +110,19 @@ object PdfWriter {
         sb.append("q\n100 0 0 100 72 ").append(300 - i * 110).append(" cm\n/Im")
           .append(i + 1).append(" Do\nQ\n")
       }
-      val raw = latin1(sb.toString)
-      val (data, filter) =
-        if (compress) (deflate(raw), " /Filter /FlateDecode") else (raw, "")
+      val (data, filter) = encodeContent(latin1(sb.toString), contentFilter)
       val contents = new ByteArrayOutputStream()
       contents.write(latin1(s"<< /Length ${data.length}$filter >>\nstream\n"))
       contents.write(data)
       contents.write(latin1("\nendstream"))
-      objs += ((contentsNum, contents.toByteArray))
+      streams += ((contentsNum, contents.toByteArray))
 
       val xobjEntries = imageNums.zipWithIndex
         .map { case (num, i) => s"/Im${i + 1} $num 0 R" }.mkString(" ")
       val xobj = if (imageNums.nonEmpty) s" /XObject << $xobjEntries >>" else ""
-      objs += ((pageNum, latin1(
+      dicts += ((pageNum,
         s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-        s"/Resources << /Font << /F1 3 0 R >>$xobj >> /Contents $contentsNum 0 R >>")))
+        s"/Resources << /Font << /F1 3 0 R >>$xobj >> /Contents $contentsNum 0 R >>"))
 
       imageNums.zip(spec.imageAlts).foreach { case (num, alt) =>
         val img = new ByteArrayOutputStream()
@@ -124,16 +132,17 @@ object PdfWriter {
           s"/Alt (${escapeString(alt)}) /Length 1 >>\nstream\n"))
         img.write(0)
         img.write(latin1("\nendstream"))
-        objs += ((num, img.toByteArray))
+        streams += ((num, img.toByteArray))
       }
     }
+    Layout(streams.toSeq, dicts.toSeq, nextObj)
+  }
 
-    objs += ((1, latin1("<< /Type /Catalog /Pages 2 0 R >>")))
-    objs += ((2, latin1(
-      s"<< /Type /Pages /Kids [${pageObjNums.map(n => s"$n 0 R").mkString(" ")}] " +
-      s"/Count ${pageObjNums.length} >>")))
-    objs += ((3, latin1(
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /WinAnsiEncoding >>")))
+  /** Build a complete PDF from page specs. */
+  def build(pages: Seq[PageSpec], compress: Boolean = true): Array[Byte] = {
+    val l = layout(pages, if (compress) "flate" else "none")
+    val nextObj = l.nextObj
+    val objs = l.streams ++ l.dicts.map { case (num, body) => (num, latin1(body)) }
 
     // Serialize with a valid xref table.
     val out = new ByteArrayOutputStream(4096)
@@ -350,80 +359,15 @@ object PdfWriter {
     * every decoder in `PdfFilters` has a writer-side fixture.
     */
   def buildXrefStream(pages: Seq[PageSpec], contentFilter: String = "flate"): Array[Byte] = {
-    // Numbering mirrors build(): 1 catalog, 2 pages-tree, 3 font, then
-    // per page (page obj, contents obj, image objs); finally S (ObjStm)
-    // and X (xref stream).
-    var nextObj = 4
-    val pageObjNums = scala.collection.mutable.ArrayBuffer[Int]()
-    val pageBodies = pages.map { spec =>
-      val pageNum = nextObj; nextObj += 1
-      val contentsNum = nextObj; nextObj += 1
-      val imageNums = spec.imageAlts.map { _ => val n = nextObj; nextObj += 1; n }
-      pageObjNums += pageNum
-      (pageNum, contentsNum, imageNums, spec)
-    }
-    val objStmNum = nextObj; nextObj += 1
-    val xrefNum = nextObj; nextObj += 1
-
-    // Top-level stream objects: contents (+ images).
-    val topLevel = scala.collection.mutable.ArrayBuffer[(Int, Array[Byte])]()
-    // ObjStm members: (objNum, dict body string) — streams are not
-    // allowed inside an ObjStm, everything else goes in.
-    val members = scala.collection.mutable.ArrayBuffer[(Int, String)]()
-    members += ((1, "<< /Type /Catalog /Pages 2 0 R >>"))
-    members += ((2,
-      s"<< /Type /Pages /Kids [${pageObjNums.map(n => s"$n 0 R").mkString(" ")}] " +
-      s"/Count ${pageObjNums.length} >>"))
-    members += ((3,
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /WinAnsiEncoding >>"))
-
-    pageBodies.foreach { case (pageNum, contentsNum, imageNums, spec) =>
-      val sb = new java.lang.StringBuilder()
-      var y = 720
-      spec.textBlocks.foreach { t =>
-        sb.append("BT\n/F1 12 Tf\n72 ").append(y).append(" Td\n")
-        val lines = t.split("\n", -1)
-        var first = true
-        lines.foreach { line =>
-          if (!first) sb.append("0 -14 Td\n")
-          sb.append('(').append(escapeString(line)).append(") Tj\n")
-          first = false
-        }
-        sb.append("ET\n")
-        y -= 20 * lines.length
-      }
-      imageNums.zipWithIndex.foreach { case (_, i) =>
-        sb.append("q\n100 0 0 100 72 ").append(300 - i * 110).append(" cm\n/Im")
-          .append(i + 1).append(" Do\nQ\n")
-      }
-      val (data, filter) = encodeContent(latin1(sb.toString), contentFilter)
-      val contents = new ByteArrayOutputStream()
-      contents.write(latin1(s"<< /Length ${data.length}$filter >>\nstream\n"))
-      contents.write(data)
-      contents.write(latin1("\nendstream"))
-      topLevel += ((contentsNum, contents.toByteArray))
-
-      val xobjEntries = imageNums.zipWithIndex
-        .map { case (num, i) => s"/Im${i + 1} $num 0 R" }.mkString(" ")
-      val xobj = if (imageNums.nonEmpty) s" /XObject << $xobjEntries >>" else ""
-      members += ((pageNum,
-        s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-        s"/Resources << /Font << /F1 3 0 R >>$xobj >> /Contents $contentsNum 0 R >>"))
-
-      imageNums.zip(spec.imageAlts).foreach { case (num, alt) =>
-        val img = new ByteArrayOutputStream()
-        img.write(latin1(
-          s"<< /Type /XObject /Subtype /Image /Width 1 /Height 1 " +
-          s"/ColorSpace /DeviceGray /BitsPerComponent 8 " +
-          s"/Alt (${escapeString(alt)}) /Length 1 >>\nstream\n"))
-        img.write(0)
-        img.write(latin1("\nendstream"))
-        topLevel += ((num, img.toByteArray))
-      }
-    }
+    // Object numbers after build()'s layout: S (ObjStm) and X (xref
+    // stream). Streams are not allowed inside an ObjStm; every dict goes in.
+    val l = layout(pages, contentFilter)
+    val objStmNum = l.nextObj
+    val xrefNum = l.nextObj + 1
+    val nextObj = l.nextObj + 2
 
     // Assemble the ObjStm: header of (num offset) pairs, then bodies.
-    val sortedMembers = members.sortBy(_._1).toVector
+    val sortedMembers = l.dicts.sortBy(_._1).toVector
     val bodyParts = sortedMembers.map(_._2)
     val offsetsInStm = bodyParts.scanLeft(0)((acc, b) => acc + b.length + 1).init
     val header = sortedMembers.zip(offsetsInStm)
@@ -444,7 +388,7 @@ object PdfWriter {
     val out = new ByteArrayOutputStream(4096)
     out.write(latin1("%PDF-1.5\n"))
     val offsets = new Array[Long](nextObj)
-    (topLevel += ((objStmNum, objStmBody))).sortBy(_._1).foreach { case (num, body) =>
+    (l.streams :+ ((objStmNum, objStmBody))).sortBy(_._1).foreach { case (num, body) =>
       offsets(num) = out.size().toLong
       out.write(latin1(s"$num 0 obj\n"))
       out.write(body)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import QueryUtil._
 
@@ -31,6 +31,127 @@ object CorpusOps {
   private def occurrences(s: SparkSession, d: String): DataFrame =
     tbl(s, d, "documents")
       .select(col("doc_id"), col("lang"), explode(tokens(col("text"))).as("term"))
+
+  // ---- Duplicated-span coverage stages (q70, and q85 = q70 with a
+  // bloom pre-filter on the windows before the coverage join).
+
+  private def tokenFrame(s: SparkSession, d: String): DataFrame =
+    tbl(s, d, "documents")
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .withColumn("n_toks", size(col("toks")))
+
+  /** (doc_id, pos, h): the md5 of every 8-token window. The windows feed
+    * BOTH the dup-set aggregation and the coverage join: materialize
+    * them once or the md5-per-window explode (the query's dominant
+    * cost) executes twice in one plan.
+    */
+  private def windowHashes(t: DataFrame): DataFrame =
+    t.where(col("n_toks") >= 8)
+      .select(col("doc_id"),
+        posexplode(transform(sequence(lit(0), col("n_toks") - 8),
+          i => md5(concat_ws(" ",
+            (1 to 8).map(k => element_at(col("toks"), i + k)): _*)))))
+      .toDF("doc_id", "pos", "h")
+      .localCheckpoint()
+
+  private def dupHashes(windows: DataFrame): DataFrame =
+    windows.groupBy("h")
+      .agg(countDistinct("doc_id").as("nd")).where(col("nd") > 1).select("h")
+
+  /** Per document: the token positions covered by a window in `dups`,
+    * their fraction of the document, and the keep verdict (≤ 0.5).
+    */
+  private def coverage(t: DataFrame, windows: DataFrame, dups: DataFrame): DataFrame = {
+    val covered = windows.join(dups, "h")
+      .select(col("doc_id"), explode(sequence(col("pos"), col("pos") + 7)).as("cp"))
+      .distinct()
+      .groupBy("doc_id").agg(count(lit(1)).as("covered"))
+    t.join(covered, Seq("doc_id"), "left")
+      .withColumn("covered", coalesce(col("covered"), lit(0L)))
+      .select(col("doc_id"), col("n_toks"), col("covered"),
+        round(col("covered").cast("double") / col("n_toks").cast("double"), 6)
+          .as("dup_frac"))
+      .withColumn("keep",
+        col("covered").cast("double") / col("n_toks").cast("double") <= 0.5)
+      .orderBy("doc_id")
+  }
+
+  /** q70's and q85's oracle: the two queries return the same rows. */
+  private val dupSpanSql =
+    """WITH t AS (
+         SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
+         FROM documents),
+       base AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_toks, toks FROM t),
+       w AS (SELECT doc_id,
+               [md5(array_to_string(toks[i+1:i+8], ' '))
+                  FOR i IN range(0, len(toks) - 7)] AS hs
+             FROM base WHERE n_toks >= 8),
+       e AS (SELECT doc_id,
+               unnest(hs) AS h,
+               unnest(range(0, len(hs))) AS pos
+             FROM w),
+       dups AS (SELECT h FROM e GROUP BY h HAVING count(DISTINCT doc_id) > 1),
+       cp AS (SELECT doc_id, unnest(range(pos, pos + 8)) AS cp
+              FROM e JOIN dups USING (h)),
+       cov AS (SELECT doc_id, count(*) AS covered
+               FROM (SELECT DISTINCT doc_id, cp FROM cp) GROUP BY 1)
+       SELECT b.doc_id, b.n_toks,
+              CAST(coalesce(cov.covered, 0) AS BIGINT) AS covered,
+              round(CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks, 6) AS dup_frac,
+              (CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks <= 0.5) AS keep
+       FROM base b LEFT JOIN cov ON b.doc_id = cov.doc_id
+       ORDER BY b.doc_id"""
+
+  // ---- Word-bigram LM stages (q72 scores against the full model by
+  // shuffle joins; q86 against a pruned model broadcast to the scan).
+
+  /** A corpus-trained bigram model: the bigram occurrences it is counted
+    * from, its unigram counts `c1` and its vocabulary size.
+    */
+  private final case class BigramModel(bi: DataFrame, c1: DataFrame, vocab: Long) {
+    /** (w1, w2, c2) bigram counts. */
+    def c2: DataFrame = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+  }
+
+  private def bigramModel(s: SparkSession, d: String): BigramModel = {
+    val t = tbl(s, d, "documents").select(col("doc_id"), tokens(col("text")).as("toks"))
+    // bigram occurrences feed the two model aggregates AND the
+    // scoring join: materialize once so the explode runs once.
+    val bi = t.where(size(col("toks")) >= 2)
+      .select(col("doc_id"),
+        explode(transform(sequence(lit(0), size(col("toks")) - 2),
+          i => struct(element_at(col("toks"), i + 1).as("w1"),
+                      element_at(col("toks"), i + 2).as("w2")))).as("bg"))
+      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+      .localCheckpoint()
+    val vocab = t.select(explode(col("toks")).as("w"))
+      .agg(countDistinct("w")).head.getLong(0)
+    BigramModel(bi, bi.groupBy("w1").agg(count(lit(1)).as("c1")), vocab)
+  }
+
+  /** Per-document cross-entropy −avg ln P(w2 | w1), P = (c2+1)/(c1+V),
+    * over bigrams already joined to their model counts; `c2` is the
+    * bigram count the scoring join produced.
+    */
+  private def crossEntropy(scored: DataFrame, c2: Column, vocab: Long, name: String): DataFrame =
+    scored.groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bigrams"),
+        sum(log((c2 + lit(1)).cast("double") /
+                (col("c1") + lit(vocab)).cast("double"))).as("ll"))
+      .select(col("doc_id"), col("n_bigrams"),
+        round(-col("ll") / col("n_bigrams").cast("double"), 6).as(name))
+      .orderBy("doc_id")
+
+  /** The model CTEs (t, bi, c1, v) of q72's and q86's oracles. */
+  private val bigramModelSql =
+    """WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
+         FROM documents),
+       bi AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
+              FROM t, unnest(range(1, len(toks))) AS u(i)
+              WHERE len(toks) >= 2),
+       c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
+       v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS v
+             FROM (SELECT unnest(toks) AS term FROM t)),"""
 
   val defs: Seq[Q] = Seq(
 
@@ -155,57 +276,11 @@ object CorpusOps {
     // per-doc roll-up; text never moves.
     ("q70_dup_span_coverage",
       (s, d) => {
-        val t = tbl(s, d, "documents")
-          .select(col("doc_id"), tokens(col("text")).as("toks"))
-          .withColumn("n_toks", size(col("toks")))
-        // windows feeds BOTH the dup-set aggregation and the coverage
-        // join: materialize it once or the md5-per-window explode (the
-        // query's dominant cost) executes twice in one plan.
-        val windows = t.where(col("n_toks") >= 8)
-          .select(col("doc_id"),
-            posexplode(transform(sequence(lit(0), col("n_toks") - 8),
-              i => md5(concat_ws(" ",
-                (1 to 8).map(k => element_at(col("toks"), i + k)): _*)))))
-          .toDF("doc_id", "pos", "h")
-          .localCheckpoint()
-        val dups = windows.groupBy("h")
-          .agg(countDistinct("doc_id").as("nd")).where(col("nd") > 1).select("h")
-        val covered = windows.join(dups, "h")
-          .select(col("doc_id"), explode(sequence(col("pos"), col("pos") + 7)).as("cp"))
-          .distinct()
-          .groupBy("doc_id").agg(count(lit(1)).as("covered"))
-        t.join(covered, Seq("doc_id"), "left")
-          .withColumn("covered", coalesce(col("covered"), lit(0L)))
-          .select(col("doc_id"), col("n_toks"), col("covered"),
-            round(col("covered").cast("double") / col("n_toks").cast("double"), 6)
-              .as("dup_frac"))
-          .withColumn("keep",
-            col("covered").cast("double") / col("n_toks").cast("double") <= 0.5)
-          .orderBy("doc_id")
+        val t = tokenFrame(s, d)
+        val windows = windowHashes(t)
+        coverage(t, windows, dupHashes(windows))
       },
-      Some("""WITH t AS (
-               SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
-               FROM documents),
-             base AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_toks, toks FROM t),
-             w AS (SELECT doc_id,
-                     [md5(array_to_string(toks[i+1:i+8], ' '))
-                        FOR i IN range(0, len(toks) - 7)] AS hs
-                   FROM base WHERE n_toks >= 8),
-             e AS (SELECT doc_id,
-                     unnest(hs) AS h,
-                     unnest(range(0, len(hs))) AS pos
-                   FROM w),
-             dups AS (SELECT h FROM e GROUP BY h HAVING count(DISTINCT doc_id) > 1),
-             cp AS (SELECT doc_id, unnest(range(pos, pos + 8)) AS cp
-                    FROM e JOIN dups USING (h)),
-             cov AS (SELECT doc_id, count(*) AS covered
-                     FROM (SELECT DISTINCT doc_id, cp FROM cp) GROUP BY 1)
-             SELECT b.doc_id, b.n_toks,
-                    CAST(coalesce(cov.covered, 0) AS BIGINT) AS covered,
-                    round(CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks, 6) AS dup_frac,
-                    (CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks <= 0.5) AS keep
-             FROM base b LEFT JOIN cov ON b.doc_id = cov.doc_id
-             ORDER BY b.doc_id""")),
+      Some(dupSpanSql)),
 
     // ---- Statistical-LM fluency scoring (the CCNet/Wenzek et al. 2020
     // perplexity filter, with the KenLM 5-gram model replaced by a
@@ -222,38 +297,12 @@ object CorpusOps {
     // here model and corpus are the same small table so plain joins win.
     ("q72_lm_perplexity",
       (s, d) => {
-        val t = tbl(s, d, "documents").select(col("doc_id"), tokens(col("text")).as("toks"))
-        // bigram occurrences feed the two model aggregates AND the
-        // scoring join: materialize once so the explode runs once.
-        val bi = t.where(size(col("toks")) >= 2)
-          .select(col("doc_id"),
-            explode(transform(sequence(lit(0), size(col("toks")) - 2),
-              i => struct(element_at(col("toks"), i + 1).as("w1"),
-                          element_at(col("toks"), i + 2).as("w2")))).as("bg"))
-          .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-          .localCheckpoint()
-        val c2 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-        val c1 = bi.groupBy("w1").agg(count(lit(1)).as("c1"))
-        val vocab = t.select(explode(col("toks")).as("w"))
-          .agg(countDistinct("w")).head.getLong(0)
-        bi.join(c2, Seq("w1", "w2")).join(c1, Seq("w1"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum(log((col("c2") + lit(1)).cast("double") /
-                    (col("c1") + lit(vocab)).cast("double"))).as("ll"))
-          .select(col("doc_id"), col("n_bigrams"),
-            round(-col("ll") / col("n_bigrams").cast("double"), 6).as("cross_entropy"))
-          .orderBy("doc_id")
+        val m = bigramModel(s, d)
+        crossEntropy(m.bi.join(m.c2, Seq("w1", "w2")).join(m.c1, Seq("w1")),
+          col("c2"), m.vocab, "cross_entropy")
       },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
-               FROM documents),
-             bi AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-                    FROM t, unnest(range(1, len(toks))) AS u(i)
-                    WHERE len(toks) >= 2),
+      Some(bigramModelSql + """
              c2 AS (SELECT w1, w2, count(*) AS c2 FROM bi GROUP BY 1, 2),
-             c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-             v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS v
-                   FROM (SELECT unnest(toks) AS term FROM t)),
              sc AS (SELECT doc_id, count(*) AS n_bigrams,
                       sum(ln((c2 + 1.0) / (c1 + v))) AS ll
                     FROM bi JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
@@ -440,60 +489,17 @@ object CorpusOps {
     ("q85_dup_span_bloom",
       (s, d) => {
         graft.plans.GraftFunctions.ensureRegistered(s)
-        val t = tbl(s, d, "documents")
-          .select(col("doc_id"), tokens(col("text")).as("toks"))
-          .withColumn("n_toks", size(col("toks")))
-        val windows = t.where(col("n_toks") >= 8)
-          .select(col("doc_id"),
-            posexplode(transform(sequence(lit(0), col("n_toks") - 8),
-              i => md5(concat_ws(" ",
-                (1 to 8).map(k => element_at(col("toks"), i + k)): _*)))))
-          .toDF("doc_id", "pos", "h")
-          .localCheckpoint()
-        val dups = windows.groupBy("h")
-          .agg(countDistinct("doc_id").as("nd")).where(col("nd") > 1).select("h")
-          .localCheckpoint()
+        val t = tokenFrame(s, d)
+        val windows = windowHashes(t)
+        val dups = dupHashes(windows).localCheckpoint()
         val bloomBytes = dups
           .agg(call_function("graft_bloom_agg", xxhash64(col("h")), lit(1000000L)))
           .head.getAs[Array[Byte]](0)
         val candidates = windows.where(
           call_function("graft_might_contain", lit(bloomBytes), xxhash64(col("h"))))
-        val covered = candidates.join(dups, "h")
-          .select(col("doc_id"), explode(sequence(col("pos"), col("pos") + 7)).as("cp"))
-          .distinct()
-          .groupBy("doc_id").agg(count(lit(1)).as("covered"))
-        t.join(covered, Seq("doc_id"), "left")
-          .withColumn("covered", coalesce(col("covered"), lit(0L)))
-          .select(col("doc_id"), col("n_toks"), col("covered"),
-            round(col("covered").cast("double") / col("n_toks").cast("double"), 6)
-              .as("dup_frac"))
-          .withColumn("keep",
-            col("covered").cast("double") / col("n_toks").cast("double") <= 0.5)
-          .orderBy("doc_id")
+        coverage(t, candidates, dups)
       },
-      Some("""WITH t AS (
-               SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
-               FROM documents),
-             base AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_toks, toks FROM t),
-             w AS (SELECT doc_id,
-                     [md5(array_to_string(toks[i+1:i+8], ' '))
-                        FOR i IN range(0, len(toks) - 7)] AS hs
-                   FROM base WHERE n_toks >= 8),
-             e AS (SELECT doc_id,
-                     unnest(hs) AS h,
-                     unnest(range(0, len(hs))) AS pos
-                   FROM w),
-             dups AS (SELECT h FROM e GROUP BY h HAVING count(DISTINCT doc_id) > 1),
-             cp AS (SELECT doc_id, unnest(range(pos, pos + 8)) AS cp
-                    FROM e JOIN dups USING (h)),
-             cov AS (SELECT doc_id, count(*) AS covered
-                     FROM (SELECT DISTINCT doc_id, cp FROM cp) GROUP BY 1)
-             SELECT b.doc_id, b.n_toks,
-                    CAST(coalesce(cov.covered, 0) AS BIGINT) AS covered,
-                    round(CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks, 6) AS dup_frac,
-                    (CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks <= 0.5) AS keep
-             FROM base b LEFT JOIN cov ON b.doc_id = cov.doc_id
-             ORDER BY b.doc_id""")),
+      Some(dupSpanSql)),
 
     // ---- q72's documented production variant, shipped: LM scoring
     // against a PRUNED model BROADCAST to a map-only scoring pass.
@@ -518,43 +524,18 @@ object CorpusOps {
     // broadcast scoring plan).
     ("q86_lm_broadcast_scoring",
       (s, d) => {
-        val t = tbl(s, d, "documents").select(col("doc_id"), tokens(col("text")).as("toks"))
-        val bi = t.where(size(col("toks")) >= 2)
-          .select(col("doc_id"),
-            explode(transform(sequence(lit(0), size(col("toks")) - 2),
-              i => struct(element_at(col("toks"), i + 1).as("w1"),
-                          element_at(col("toks"), i + 2).as("w2")))).as("bg"))
-          .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-          .localCheckpoint()
-        val c2p = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-          .where(col("c2") >= 2) // the prune: hapax bigrams stay home
-        val c1 = bi.groupBy("w1").agg(count(lit(1)).as("c1"))
-        val vocab = t.select(explode(col("toks")).as("w"))
-          .agg(countDistinct("w")).head.getLong(0)
+        val m = bigramModel(s, d)
+        val c2p = m.c2.where(col("c2") >= 2) // the prune: hapax bigrams stay home
         // Map-only scoring: both model sides broadcast; unseen/pruned
         // bigrams coalesce to c2'=0. (c1 always exists: it was counted
         // from the very bigrams being scored.)
-        bi.join(broadcast(c2p), Seq("w1", "w2"), "left")
-          .join(broadcast(c1), Seq("w1"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum(log((coalesce(col("c2"), lit(0L)) + lit(1)).cast("double") /
-                    (col("c1") + lit(vocab)).cast("double"))).as("ll"))
-          .select(col("doc_id"), col("n_bigrams"),
-            round(-col("ll") / col("n_bigrams").cast("double"), 6)
-              .as("cross_entropy_pruned"))
-          .orderBy("doc_id")
+        crossEntropy(
+          m.bi.join(broadcast(c2p), Seq("w1", "w2"), "left").join(broadcast(m.c1), Seq("w1")),
+          coalesce(col("c2"), lit(0L)), m.vocab, "cross_entropy_pruned")
       },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
-               FROM documents),
-             bi AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-                    FROM t, unnest(range(1, len(toks))) AS u(i)
-                    WHERE len(toks) >= 2),
+      Some(bigramModelSql + """
              c2p AS (SELECT w1, w2, count(*) AS c2 FROM bi GROUP BY 1, 2
                      HAVING count(*) >= 2),
-             c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-             v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS v
-                   FROM (SELECT unnest(toks) AS term FROM t)),
              sc AS (SELECT doc_id, count(*) AS n_bigrams,
                       sum(ln((coalesce(c2, 0) + 1.0) / (c1 + v))) AS ll
                     FROM bi LEFT JOIN c2p USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v

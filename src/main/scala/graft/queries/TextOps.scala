@@ -56,6 +56,27 @@ object TextOps {
     .select("doc_id", "band_id", "band_sig")
     .repartition(col("band_id"), col("band_sig"))
 
+  /** q53's and q53s's oracle: the exact batch×corpus Jaccard ≥ 0.5
+    * verdicts both the in-plan sketch and the signature store must hit.
+    */
+  private val incrementalDedupSql =
+    """WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
+       sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-1,1)),
+               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles FROM t),
+       corpus AS (SELECT * FROM sh WHERE doc_id % 5 != 0),
+       batch AS (SELECT * FROM sh WHERE doc_id % 5 = 0),
+       hits AS (SELECT b.doc_id AS doc_id, min(c.doc_id) AS dup_of
+                FROM batch b JOIN corpus c
+                  ON CAST(len(list_intersect(b.shingles, c.shingles)) AS DOUBLE) /
+                     CAST(len(list_distinct(list_concat(b.shingles, c.shingles))) AS DOUBLE) >= 0.5
+                GROUP BY b.doc_id)
+       SELECT d.doc_id,
+         CASE WHEN h.dup_of IS NULL THEN 'kept' ELSE 'dup' END AS verdict,
+         CAST(h.dup_of AS BIGINT) AS dup_of
+       FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
+       LEFT JOIN hits h USING (doc_id)
+       ORDER BY doc_id"""
+
   val defs: Seq[Q] = Seq(
 
     // ---- Token counting (A4 word-count semantics, Python-split parity).
@@ -246,22 +267,7 @@ object TextOps {
         Sketch.verdicts(tbl(s, d, "documents").where(col("doc_id") % 5 === 0), matches)
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
-             sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-1,1)),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles FROM t),
-             corpus AS (SELECT * FROM sh WHERE doc_id % 5 != 0),
-             batch AS (SELECT * FROM sh WHERE doc_id % 5 = 0),
-             hits AS (SELECT b.doc_id AS doc_id, min(c.doc_id) AS dup_of
-                      FROM batch b JOIN corpus c
-                        ON CAST(len(list_intersect(b.shingles, c.shingles)) AS DOUBLE) /
-                           CAST(len(list_distinct(list_concat(b.shingles, c.shingles))) AS DOUBLE) >= 0.5
-                      GROUP BY b.doc_id)
-             SELECT d.doc_id,
-               CASE WHEN h.dup_of IS NULL THEN 'kept' ELSE 'dup' END AS verdict,
-               CAST(h.dup_of AS BIGINT) AS dup_of
-             FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
-             LEFT JOIN hits h USING (doc_id)
-             ORDER BY doc_id""")),
+      Some(incrementalDedupSql)),
 
     // ---- q53 through the PERSISTENT signature store (the production
     // shape): run 1 writes the corpus sketch table once
@@ -290,22 +296,7 @@ object TextOps {
             SignatureStore.read(s, dir))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
-             sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-1,1)),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles FROM t),
-             corpus AS (SELECT * FROM sh WHERE doc_id % 5 != 0),
-             batch AS (SELECT * FROM sh WHERE doc_id % 5 = 0),
-             hits AS (SELECT b.doc_id AS doc_id, min(c.doc_id) AS dup_of
-                      FROM batch b JOIN corpus c
-                        ON CAST(len(list_intersect(b.shingles, c.shingles)) AS DOUBLE) /
-                           CAST(len(list_distinct(list_concat(b.shingles, c.shingles))) AS DOUBLE) >= 0.5
-                      GROUP BY b.doc_id)
-             SELECT d.doc_id,
-               CASE WHEN h.dup_of IS NULL THEN 'kept' ELSE 'dup' END AS verdict,
-               CAST(h.dup_of AS BIGINT) AS dup_of
-             FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
-             LEFT JOIN hits h USING (doc_id)
-             ORDER BY doc_id""")),
+      Some(incrementalDedupSql)),
 
     // ---- Paragraph-span dedup (the C4 "discard all but one of any
     // span occurring more than once" pass, at paragraph granularity).

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import QueryUtil._
 
@@ -22,6 +22,21 @@ object TrainOps {
 
   private val W = 50 // window tokens
   private val S = 40 // stride (10-token overlap)
+
+  private val HostCap = 10 // q80/q84: docs kept per host
+
+  /** Synthetic host: h0 for every third doc (the Zipf head), else h(doc_id % 40). */
+  private def hostCol: Column =
+    concat(lit("h"), when(col("doc_id") % 3 === 0, lit(0L)).otherwise(col("doc_id") % 40))
+
+  private def rkKeyCol: Column = md5(col("doc_id").cast("string"))
+
+  /** The `t` CTE (doc_id, host, rk_key) of q80's and q84's oracles. */
+  private val hostCapSql =
+    """WITH t AS (SELECT doc_id,
+         'h' || (CASE WHEN doc_id % 3 = 0 THEN 0 ELSE doc_id % 40 END) AS host,
+         md5(CAST(doc_id AS VARCHAR)) AS rk_key
+       FROM documents),"""
 
   val defs: Seq[Q] = Seq(
 
@@ -229,21 +244,15 @@ object TrainOps {
     ("q80_host_cap",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val k = 10
         tbl(s, d, "documents")
-          .withColumn("host",
-            concat(lit("h"), when(col("doc_id") % 3 === 0, lit(0L))
-              .otherwise(col("doc_id") % 40)))
-          .withColumn("rk_key", md5(col("doc_id").cast("string")))
+          .withColumn("host", hostCol)
+          .withColumn("rk_key", rkKeyCol)
           .withColumn("rk", row_number().over(
             Window.partitionBy("host").orderBy(col("rk_key"), col("doc_id"))))
-          .select(col("doc_id"), col("host"), col("rk"), (col("rk") <= k).as("kept"))
+          .select(col("doc_id"), col("host"), col("rk"), (col("rk") <= HostCap).as("kept"))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id,
-               'h' || (CASE WHEN doc_id % 3 = 0 THEN 0 ELSE doc_id % 40 END) AS host,
-               md5(CAST(doc_id AS VARCHAR)) AS rk_key
-             FROM documents),
+      Some(hostCapSql + """
              r AS (SELECT doc_id, host,
                CAST(row_number() OVER (PARTITION BY host ORDER BY rk_key, doc_id) AS INT) AS rk
              FROM t)
@@ -266,13 +275,9 @@ object TrainOps {
       (s, d) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        val k = 10
         val base = tbl(s, d, "documents")
-          .withColumn("host",
-            concat(lit("h"), when(col("doc_id") % 3 === 0, lit(0L))
-              .otherwise(col("doc_id") % 40)))
-          .select(col("doc_id"), col("host"),
-            md5(col("doc_id").cast("string")).as("rk_key"))
+          .withColumn("host", hostCol)
+          .select(col("doc_id"), col("host"), rkKeyCol.as("rk_key"))
         val survivors = base.as[(Long, String, String)].mapPartitions { it =>
           import scala.collection.mutable
           // max-heap per host: the root is the WORST kept pair, evicted
@@ -281,7 +286,7 @@ object TrainOps {
           it.foreach { case (docId, host, rkKey) =>
             val h = heaps.getOrElseUpdate(host,
               mutable.PriorityQueue.empty[(String, Long)](Ordering.Tuple2[String, Long]))
-            if (h.size < k) h.enqueue((rkKey, docId))
+            if (h.size < HostCap) h.enqueue((rkKey, docId))
             else if (Ordering.Tuple2[String, Long].lt((rkKey, docId), h.head)) {
               h.dequeue(); h.enqueue((rkKey, docId))
             }
@@ -293,14 +298,11 @@ object TrainOps {
         survivors
           .withColumn("rk", row_number().over(
             Window.partitionBy("host").orderBy(col("rk_key"), col("doc_id"))))
-          .where(col("rk") <= k)
+          .where(col("rk") <= HostCap)
           .select(col("doc_id"), col("host"))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id,
-               'h' || (CASE WHEN doc_id % 3 = 0 THEN 0 ELSE doc_id % 40 END) AS host,
-               md5(CAST(doc_id AS VARCHAR)) AS rk_key
-             FROM documents),
+      Some(hostCapSql + """
              r AS (SELECT doc_id, host,
                row_number() OVER (PARTITION BY host ORDER BY rk_key, doc_id) AS rk
              FROM t)

@@ -304,6 +304,20 @@ object VectorOps {
   /** The teaching-variant prefix (fixed 8 seeds — q32/q33/q39/q92). */
   private val ivfAssignSql: String = ivfAssignSqlK("8")
 
+  /** The tail of q92's and q92p's oracles after the `assign` CTE: every
+    * vector with a same-cell, lower-id neighbour at cos ≥ 0.4 is pruned.
+    */
+  private val semanticDedupSql: String =
+    """, pc AS (SELECT a.vec_id AS vid_a, b.vec_id AS vid_b,
+         sum(ea.v*eb.v)/(sqrt(sum(ea.v*ea.v))*sqrt(sum(eb.v*eb.v))) AS cos
+       FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
+       JOIN e ea ON ea.vec_id = a.vec_id
+       JOIN e eb ON eb.vec_id = b.vec_id AND eb.i = ea.i
+       GROUP BY 1,2),
+    pruned AS (SELECT DISTINCT vid_b FROM pc WHERE cos >= 0.4)
+    SELECT vec_id FROM embeddings WHERE vec_id NOT IN (SELECT vid_b FROM pruned)
+    ORDER BY vec_id"""
+
   val defs: Seq[Q] = Seq(
 
     // ---- Brute-force cosine top-k: 10 query vectors × full corpus.
@@ -537,17 +551,7 @@ object VectorOps {
     // buckets; a cell never does).
     ("q92_semantic_dedup",
       (s, d) => semanticDedupKept(s, d, threshold = 0.4),
-      // (oracle below; q92p follows with the corpus-sized quantizer)
-      Some(ivfAssignSql +
-        """, pc AS (SELECT a.vec_id AS vid_a, b.vec_id AS vid_b,
-             sum(ea.v*eb.v)/(sqrt(sum(ea.v*ea.v))*sqrt(sum(eb.v*eb.v))) AS cos
-           FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
-           JOIN e ea ON ea.vec_id = a.vec_id
-           JOIN e eb ON eb.vec_id = b.vec_id AND eb.i = ea.i
-           GROUP BY 1,2),
-        pruned AS (SELECT DISTINCT vid_b FROM pc WHERE cos >= 0.4)
-        SELECT vec_id FROM embeddings WHERE vec_id NOT IN (SELECT vid_b FROM pruned)
-        ORDER BY vec_id""")),
+      Some(ivfAssignSql + semanticDedupSql)),
 
     // ---- PRODUCTION semantic dedup (q92's scale fix, the q74p
     // treatment applied to the quantizer): cell count derived from
@@ -562,16 +566,7 @@ object VectorOps {
         val n = tbl(s, d, "embeddings").count()
         semanticDedupKept(s, d, threshold = 0.4, k = ivfK(n))
       },
-      Some(ivfAssignSqlK(ivfKSql) +
-        """, pc AS (SELECT a.vec_id AS vid_a, b.vec_id AS vid_b,
-             sum(ea.v*eb.v)/(sqrt(sum(ea.v*ea.v))*sqrt(sum(eb.v*eb.v))) AS cos
-           FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
-           JOIN e ea ON ea.vec_id = a.vec_id
-           JOIN e eb ON eb.vec_id = b.vec_id AND eb.i = ea.i
-           GROUP BY 1,2),
-        pruned AS (SELECT DISTINCT vid_b FROM pc WHERE cos >= 0.4)
-        SELECT vec_id FROM embeddings WHERE vec_id NOT IN (SELECT vid_b FROM pruned)
-        ORDER BY vec_id""")),
+      Some(ivfAssignSqlK(ivfKSql) + semanticDedupSql)),
 
     // ---- All-pairs cosine near-dup (embedding near-duplicate detection
     // baseline; ids only — rank order is FP-stable, raw scores are not).

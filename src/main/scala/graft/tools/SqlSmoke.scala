@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.app.SparkUtil
 
 /** Smoke-check that `--conf spark.sql.extensions=graft.plans.GraftExtensions`
   * installs the engine's functions into a plain spark-submit session:
@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SqlSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().getOrCreate()
+    val spark = SparkUtil.session("graft-sql-smoke")
     val r = spark.sql(
       """SELECT sorted_intersect_count(array('a','b','c'), array('b','c','d')) AS c,
          vector_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,

@@ -31,6 +31,17 @@ class JsonRepairSpec extends AnyFunSuite {
     assert(e.pos == 13)
   }
 
+  test("quote escapes what JSON requires and parse round-trips it") {
+    val cases = Seq("plain", "a\"b", "back\\slash", "tab\there", "cr\rlf\n",
+      "ctl\u0001x", "caf\u00e9 \u6f22\u5b57 \u00fc", "", "\"\\\t\r\u0001\u001f")
+    cases.foreach { s =>
+      val q = PyJson.quote(s)
+      assert(q.forall(_ >= ' '), q)
+      assert(PyJson.parse(q) == Right(JStr(s)), q)
+    }
+    assert(PyJson.quote("a\"b\\c\td\u0001") == "\"a\\\"b\\\\c\\td\\u0001\"")
+  }
+
   test("missing comma after brace repaired (conftest sample_broken_json)") {
     val broken =
       """{

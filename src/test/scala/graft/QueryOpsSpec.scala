@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{PipelineOps, QueryUtil, Sketch}
+import graft.queries.{CorpusOps, PipelineOps, QueryUtil, Relational, Sketch, TextOps, TrainOps, VectorOps, WebOps}
 import org.apache.spark.sql.functions._
 
 /** Specs for the driver-checkable query surface: pinned semantics for
@@ -44,7 +44,12 @@ class QueryOpsSpec extends SparkSuite {
   }
 
   test("SparkEntry wiring: oracle keys ⊆ queries, entry non-empty") {
-    assert(SparkEntry.queries.nonEmpty)
+    // `queries` is a Map: a name defined twice would silently drop a row.
+    val defined = Seq(Relational.defs, TextOps.defs, VectorOps.defs, WebOps.defs,
+      TrainOps.defs, CorpusOps.defs, PipelineOps.defs).map(_.size).sum
+    assert(defined == 98)
+    assert(SparkEntry.queries.size == defined)
+    assert(SparkEntry.oracleSql.size == 89)
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.entry(spark).count() > 0)
   }
