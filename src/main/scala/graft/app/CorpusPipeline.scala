@@ -1,7 +1,7 @@
 package graft.app
 
 import graft.queries.QueryUtil._
-import graft.queries.Sketch
+import graft.queries.{PipelineOps, Sketch, TextOps, TrainOps}
 import graft.synth.PageGen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,10 +16,19 @@ import org.apache.spark.sql.functions._
   *           overlap, optional) → token-window chunking → stratified
   *           sampling → training_windows parquet + per-stage row counts
   *
-  * Every stage is the operator shape verified by the q-series oracles
-  * (q22/q24p/q53/q56/q57/q58/q60/q62); this main wires them into the
-  * one-command path a corpus run actually executes, with stage metrics
-  * for the lineage record. Scale shapes are inherited: the kernel is
+  * Shared stages call their query's one oracle-checked implementation:
+  *  - links sidecar: PipelineOps.linkRecords (x65);
+  *  - near-dup dedup: Sketch.sketch / bandRows / nearDupPairs (q24p);
+  *  - host cap: TrainOps.hostRank (q80, q84);
+  *  - span dedup: TextOps.firstParagraphs / joinParagraphs (q62), on
+  *    line-break paragraphs joined by "\n", not q62's 10-token runs;
+  *  - decontamination: TrainOps.shingleSet / shingleHits (q60);
+  *  - windows: TrainOps.tokenWindows (q57), at --window/--stride;
+  *  - sampling: TrainOps.sampleKept (q58), keyed on url#win_id;
+  *  - packing: TrainOps.prefixOffsets (q75), bucketed on md5(url).
+  * Two stages differ from their query on purpose: the quality filter is
+  * looser than q56's, and exact dedup keys on the raw md5(text), not
+  * q22's normalized digest. Scale shapes are inherited: the kernel is
   * map-only, dedup shuffles only compact digests/signatures, the eval
   * shingle set broadcasts, chunking/sampling are map-only.
   *
@@ -46,7 +55,12 @@ object CorpusPipeline {
       hostCap: Int = 0,
       stats: Boolean = false,
       links: Boolean = false,
-      provenance: Boolean = false)
+      provenance: Boolean = false) {
+    // A zero stride or window divides by zero in the windows and
+    // packing stages, after extraction and every dedup stage has run.
+    require(window >= 1, s"--window must be >= 1, got $window")
+    require(stride >= 1, s"--stride must be >= 1, got $stride")
+  }
 
   def parseArgs(argv: Array[String]): Args = {
     var a = Args()
@@ -78,7 +92,6 @@ object CorpusPipeline {
 
   /** Run the pipeline; returns (stage → surviving row count), in order. */
   def run(spark: SparkSession, a: Args): Seq[(String, Long)] = {
-    import spark.implicits._
     graft.plans.GraftFunctions.ensureRegistered(spark)
     val stages = Vector.newBuilder[(String, Long)]
 
@@ -90,32 +103,21 @@ object CorpusPipeline {
     // typed count would deserialize the whole table just for a metric).
     stages += "pages" -> pagesDf.count()
 
-    // 0.5. Link-record sidecar (optional, --links): the WAT analog —
-    // per-page (resolved target, anchor) records written beside the
-    // corpus BEFORE any filtering: the crawl graph wants EVERY page,
-    // including ones quality/dedup will drop (q89's PageRank and
-    // frontier scheduling consume this table; x65 is the query twin).
-    // Map-only flatMap over the payload — nothing shuffles; the write
-    // is the whole cost.
+    // 0.5. Link-record sidecar (optional, --links): the WAT analog, over
+    // EVERY page before any filtering — the crawl graph (q89's PageRank,
+    // frontier scheduling) wants the pages quality/dedup will drop too.
     if (a.links) {
-      pagesDf.select("url", "html").as[(String, Array[Byte])]
-        .flatMap { case (url, html) => graft.html.Links.records(url, html)
-          .map { case (t, anchor) => (url, t, anchor) } }
-        .toDF("src_url", "target", "anchor")
+      PipelineOps.linkRecords(pagesDf)
         .write.mode("overwrite").parquet(s"${a.out}/links")
       stages += "links" -> spark.read.parquet(s"${a.out}/links").count()
     }
 
     // Provenance sidecar (optional, --provenance): one row per DROPPED
-    // document naming the stage that dropped it and — for the dedup
-    // stages — the surviving representative, the audit record corpus
-    // governance needs ("why is this url not in the training set?").
-    // Each piece is APPENDED while its stage's inputs are still cached,
-    // so the flag never recomputes the kernel; drop detection is a
-    // url-keyed anti-join per stage (the honest cost of the audit).
-    // Every run clears the sidecar first, flag or no flag: an earlier
-    // run's rows would otherwise sit beside this run's corpus and read
-    // as its drops.
+    // url naming the stage that dropped it and, for dedup, the surviving
+    // representative. Each piece is appended while its stage's inputs
+    // are still cached (a url-keyed anti-join per stage; the kernel never
+    // reruns). Every run clears the sidecar first, flag or no flag, so an
+    // earlier run's rows never read as this run's drops.
     val provPath = s"${a.out}/provenance"
     val provDir = new org.apache.hadoop.fs.Path(provPath)
     provDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(provDir, true)
@@ -135,11 +137,9 @@ object CorpusPipeline {
     stages += "extracted" -> extracted.count()
     diffDrops(pagesDf, extracted, "extract")
 
-    // 2. Quality filter — a deliberately LOOSER Gopher-style subset than
-    // the oracle-verified q56 operator: mean_word_len bounds [2,12] here
-    // vs q56's [3,10], and q56's symbol-ratio/ellipsis filters are
-    // omitted. The pipeline keeps marginal docs that downstream dedup
-    // would drop anyway; use queries.WebOps q56 for the strict filter.
+    // 2. Quality filter, deliberately LOOSER than q56: mean_word_len in
+    // [2,12] vs [3,10], no symbol-ratio/ellipsis filters. Marginal docs
+    // that dedup would drop anyway stay; WebOps q56 is the strict filter.
     val withToks = extracted.withColumn("toks", tokens(col("text")))
       .withColumn("n_toks", size(col("toks")))
       .where(col("n_toks") >= 5)
@@ -160,12 +160,9 @@ object CorpusPipeline {
     diffDrops(extracted, quality, "quality")
     extracted.unpersist()
 
-    // 3. Exact dedup: one shuffle on the 128-bit digest, min url
-    // survives (the whole-partition min window == the previous
-    // row_number-over-url form — url is the table's identity key per
-    // the north rule, as app.TwoPass documents; duplicate-url input is
-    // malformed — and it names the representative the provenance rows
-    // record).
+    // 3. Exact dedup on the raw md5(text), not q22's normalized digest:
+    // one shuffle on the digest; the min url survives (url is the
+    // identity key, app.TwoPass) and is the provenance representative.
     val ranked = quality
       .withColumn("digest", md5(col("text")))
       .withColumn("rep", min("url").over(
@@ -177,27 +174,17 @@ object CorpusPipeline {
       .select(col("url"), lit("exact_dup").as("stage"), col("rep").as("detail")))
     quality.unpersist()
 
-    // 4. Near-dup dedup: q24p sketch (xxhash64 minhash, 8 bands × 2) →
-    // exact-Jaccard verify → drop the larger url of every verified pair
-    // (deterministic union-drop; the clustering variant is q35).
-    // Semantics note — the union-drop and the --cluster variant differ on
-    // TRANSITIVE families. Union-drop removes the larger url of every
-    // verified pair: the survivor set contains no verified pair, but a
-    // doc may be dropped "for" a doc that was itself dropped (A~B~C with
-    // A!~C keeps only A even though C is no near-dup of A), and a star
-    // (A~C, B~C, A!~B) keeps both A and B. --cluster routes the verified
-    // pairs through q35's connected-components logic and keeps exactly
-    // ONE representative (min url) per transitive component — the
-    // standard corpus-dedup choice (collapses the star to A alone).
-    // The pairs are q24p's, keyed by url (queries.Sketch owns the hash
-    // family, the band join and the verify).
+    // 4. Near-dup dedup: q24p's verified pairs keyed by url. Default
+    // union-drop removes the larger url of every verified pair: no
+    // verified pair survives, but a doc may be dropped "for" a dropped
+    // doc (A~B~C, A!~C keeps only A) and a star (A~C, B~C, A!~B) keeps A
+    // and B. --cluster keeps ONE representative (min url) per connected
+    // component (q35's logic), the standard corpus-dedup choice.
     val sk = Sketch.sketch(exact, idCol = "url").localCheckpoint()
     val verified = Sketch.nearDupPairs(sk, Sketch.bandRows(sk, idCol = "url"),
       "url", "url_a", "url_b")
-    // Drop set carries the representative: cluster mode's label IS the
-    // kept min-url representative; union-drop names the smallest
-    // verified partner (which may itself have been dropped for another
-    // — the documented union-drop chain semantics).
+    // The drop detail is the representative: the component label, or
+    // the smallest verified partner (which may itself be dropped).
     val dropDetailed =
       (if (a.cluster)
         connectedComponents(verified)
@@ -211,21 +198,14 @@ object CorpusPipeline {
     recordDrops(dropDetailed.withColumn("stage", lit("near_dup")))
     exact.unpersist()
 
-    // 4.5. Per-host cap (optional, q80 shape): at most --host-cap docs
-    // per url host, chosen by deterministic md5(url) rank — RefinedWeb-
-    // style domain balancing so one mega-host can't dominate the
-    // training mix. One shuffle on host; q80's in-file note covers the
-    // algebraic top-K replacement for the window at 10^12 scale.
+    // 4.5. Per-host cap (optional, q80's rank): at most --host-cap docs
+    // per host by md5(url) rank, so one mega-host can't dominate the mix.
+    // urlHost lowercases and strips www/port, so twins share one quota
+    // and schemeless urls keep their own key.
     val nearDeduped = if (a.hostCap <= 0) nearDeduped0 else {
-      import org.apache.spark.sql.expressions.Window
       val kept = nearDeduped0
-        // Shared canonicalizer-grade host key (QueryUtil.urlHost):
-        // lowercase + www/port strip so case/www twins share one quota,
-        // and schemeless urls stay their own key instead of collapsing
-        // into a single ""-host that a cap would silently decimate.
         .withColumn("host", urlHost(col("url")))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("host").orderBy(md5(col("url")), col("url"))))
+        .withColumn("rk", TrainOps.hostRank(md5(col("url")), col("url")))
         .where(col("rk") <= a.hostCap).drop("rk", "host").persist()
       stages += "host_capped" -> kept.count()
       diffDrops(nearDeduped0, kept, "host_cap")
@@ -233,52 +213,39 @@ object CorpusPipeline {
       kept
     }
 
-    // 5. Paragraph-span dedup (optional, q62 shape): C4's "discard all
-    // but one of any span occurring more than once", at paragraph
-    // granularity over the extracted text's real line breaks. Keep-first
-    // = the single global row_number()==1 occurrence per paragraph
-    // ordered by (url, pidx) — unique paragraphs are their own first
-    // occurrence, so one window handles both. Docs whose every
-    // paragraph was a repeat drop out with the empty-text filter.
+    // 5. Paragraph-span dedup (optional, q62's keep-first): C4's
+    // "discard all but one of any span occurring more than once", at
+    // paragraph granularity over the extracted text's real line breaks.
+    // Docs whose every paragraph was a repeat drop out with the
+    // empty-text filter.
     val spanned = if (!a.spanDedup) nearDeduped else {
-      import org.apache.spark.sql.expressions.Window
       val paras = nearDeduped
         .select(col("url"), col("lang"), posexplode(filter(
           transform(split(col("text"), "\n"), p => trim(p)), p => p =!= ""))
           .as(Seq("pidx", "para")))
-      val w0 = Window.partitionBy("para").orderBy("url", "pidx")
-      val rebuilt = paras.withColumn("occ", row_number().over(w0))
-        .where(col("occ") === 1)
+      val rebuilt = TextOps.firstParagraphs(paras, "url")
         .groupBy("url", "lang")
-        .agg(concat_ws("\n", transform(
-          array_sort(collect_list(struct(col("pidx"), col("para")))),
-          t => t.getField("para"))).as("text"))
+        .agg(TextOps.joinParagraphs("\n").as("text"))
         .where(length(col("text")) > 0)
         .withColumn("toks", tokens(col("text")))
         .persist()
       stages += "span_dedup" -> rebuilt.count()
-      // Only FULL drops (every paragraph was a repeat) are provenance
-      // rows; surviving docs with some paragraphs removed keep their
-      // url in the corpus and are not "dropped".
+      // Only FULL drops (every paragraph a repeat) are provenance rows.
       diffDrops(nearDeduped, rebuilt, "span_dedup")
       nearDeduped.unpersist()
       rebuilt
     }
 
     // 6. Decontamination (optional): drop docs sharing a 5-gram with the
-    // eval set; the eval shingle set broadcasts (q60 shape).
+    // eval set; the eval shingle set broadcasts (q60's stages). toks is
+    // materialized first: inlining tokens(text) into the shingle lambda
+    // re-runs the regex per element_at.
     val clean = if (a.evalPath.nonEmpty) {
-      val evalSh = spark.read.parquet(a.evalPath)
-        // Materialize toks first (inlining tokens(text) into the shingle
-        // lambda re-runs the regex per element_at) and explode_OUTER so
-        // Catalyst doesn't re-inline the shingle pipeline into an
-        // inferred size()>0 scan filter — the q60 pathology, BENCH.md.
+      val evalSh = TrainOps.shingleSet(spark.read.parquet(a.evalPath)
         .withColumn("toks", tokens(col("text")))
-        .select(explode_outer(shingles5(col("toks"))).as("shingle"))
-        .where(col("shingle").isNotNull).distinct()
-      val contaminated = spanned
-        .select(col("url"), explode_outer(shingles5(col("toks"))).as("shingle"))
-        .join(broadcast(evalSh), Seq("shingle"))
+        .withColumn("sh", shingles5(col("toks"))))
+      val contaminated = TrainOps.shingleHits(
+          spanned.withColumn("sh", shingles5(col("toks"))), "url", evalSh)
         .select("url").distinct()
       recordDrops(contaminated
         .withColumn("stage", lit("decontaminated")).withColumn("detail", lit("")))
@@ -286,15 +253,11 @@ object CorpusPipeline {
     } else spanned
     stages += "decontaminated" -> clean.count()
 
-    // 6.5. Corpus-statistics sketches (optional, q82/q83 shape): the
-    // HLL register table (per-lang distinct-shingle summary) and CMS
-    // counter table (term-frequency summary) of the FINAL cleaned
-    // corpus, persisted under $out/stats/. These are the mergeable
-    // fixed-size summaries downstream mixture design reads instead of
-    // re-scanning the corpus; a later incremental run folds its own
-    // tables in by register-max / counter-sum (SketchStats scaladoc,
-    // StreamingSketchSpec proves the fold). Cost: one pass over toks,
-    // output a few hundred rows.
+    // 6.5. Corpus-statistics sketches (optional, q82/q83 shape): HLL
+    // registers (per-lang distinct shingles) and CMS counters (term
+    // frequency) of the final corpus under $out/stats/ — mergeable
+    // fixed-size summaries a later run folds in by register-max /
+    // counter-sum (StreamingSketchSpec proves the fold).
     if (a.stats) {
       import graft.queries.SketchStats
       val sh = clean
@@ -311,57 +274,35 @@ object CorpusPipeline {
         spark.read.parquet(s"${a.out}/stats/cms_counters").count()
     }
 
-    // 7. Token-window chunking (q57 shape).
-    val w = a.window; val st = a.stride
-    val windows = clean
-      .withColumn("n", size(col("toks")))
-      .withColumn("win_id", explode(sequence(lit(0),
-        ceil(greatest(col("n") - w, lit(0)).cast("double") / st).cast("int"))))
-      .withColumn("win", slice(col("toks"), col("win_id") * st + 1, lit(w)))
+    // 7. Token-window chunking (q57's windows).
+    val windows = TrainOps.tokenWindows(
+        clean.withColumn("n", size(col("toks"))), a.window, a.stride)
       .select(col("url"), col("lang"), col("win_id"),
         size(col("win")).as("n_toks"),
         concat_ws(" ", col("win")).as("window_text")).persist()
     stages += "windows" -> windows.count()
 
-    // 8. Stratified sampling (q58 thresholds: en 80% / de 50% / * 20%),
+    // 8. Stratified sampling (q58's rates: en 80% / de 50% / * 20%),
     // keyed on (url, win_id) so the sample is reproducible.
-    val h = substring(md5(concat(col("url"), lit("#"), col("win_id"))), 1, 2)
-    val sampled = windows.where(
-      when(col("lang") === "en", h < "cc")
-        .when(col("lang") === "de", h < "80")
-        .otherwise(h < "33"))
+    val sampled = windows.where(TrainOps.sampleKept(col("lang"),
+      concat(col("url"), lit("#"), col("win_id"))))
     sampled.write.mode("overwrite").parquet(s"${a.out}/training_windows")
     val nSampled = spark.read.parquet(s"${a.out}/training_windows").count()
     stages += "sampled" -> nSampled
 
-    // 9. Sequence PACKING (optional, q75 shape, materialized): all
-    // cleaned docs concatenated in a deterministic order and chopped
-    // into fixed --window-token training sequences — the padding-free
-    // alternative to per-doc windows. Order key = md5(url) (urls are
-    // not dense ids, so the q75 doc_id buckets become the digest's
-    // first 4 hex chars — 65,536 uniformly-filled buckets that
-    // PARTITION the order: ~15M docs/bucket at the 10^12 design point,
-    // one parallel window task each, while the global window sees only
-    // the 65,536 bucket rows); offsets come from the same two-level
-    // distributed prefix sum, then tokens regroup by global position
-    // div L. One token-level shuffle — the honest cost of materializing
-    // packed sequences.
+    // 9. Sequence PACKING (optional, q75's prefix sum): cleaned docs
+    // concatenated in md5(url) order and chopped into --window-token
+    // sequences, the padding-free alternative to per-doc windows. The
+    // buckets are the digest's first 4 hex chars: 65,536 uniform buckets
+    // that partition the order (~15M docs each at 10^12). One
+    // token-level shuffle regroups the tokens by position div L.
     if (a.pack) {
-      import org.apache.spark.sql.expressions.Window
       val L = a.window
       val t = clean
         .withColumn("okey", md5(col("url")))
         .withColumn("bucket", conv(substring(col("okey"), 1, 4), 16, 10).cast("long"))
         .withColumn("n_toks", size(col("toks")))
-      val bp = t.groupBy("bucket").agg(sum("n_toks").as("btoks"))
-        .withColumn("bucket_offset", coalesce(sum("btoks").over(
-          Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("bucket", "bucket_offset")
-      val wOff = Window.partitionBy("bucket").orderBy("okey", "url")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val seqs = t.join(broadcast(bp), "bucket")
-        .withColumn("tok_offset",
-          col("bucket_offset") + coalesce(sum("n_toks").over(wOff), lit(0L)))
+      val seqs = TrainOps.prefixOffsets(t, col("okey"), col("url"))
         .select(col("tok_offset"), posexplode(col("toks")).as(Seq("tidx", "tok")))
         .withColumn("seq_id", expr(s"(tok_offset + tidx) div $L"))
         .withColumn("gpos", col("tok_offset") + col("tidx"))

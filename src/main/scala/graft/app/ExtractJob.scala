@@ -59,8 +59,9 @@ import org.apache.spark.sql.functions._
   * Usage:
   *   ExtractJob (--rows N [--seed S] | --input path) --out DIR
   *     [--checkpoint DIR] [--run-id ID] [--quality q] [--lang xx]
-  *     [--buckets B] [--wave-size W] [--repartition N] [--slim]
-  *     [--notify PATH] [--notify-url URL] [--compact-target BYTES] [--two-pass]
+  *     [--buckets B] [--wave-size W] [--repartition N] [--no-write-shuffle]
+  *     [--input-format table|warc] [--slim] [--notify PATH]
+  *     [--notify-url URL] [--compact-target BYTES] [--two-pass]
   */
 object ExtractJob {
 
@@ -106,7 +107,13 @@ object ExtractJob {
       // everything, `accurate` re-extraction of the docs pass 1 flags,
       // better result kept per url (adds a `pass` column to the output
       // schema).
-      twoPass: Boolean = false)
+      twoPass: Boolean = false) {
+    // Zero buckets would leave no work: the job would write nothing and
+    // report success. Any other format would silently be read as a table.
+    require(buckets >= 1, s"--buckets must be >= 1, got $buckets")
+    require(inputFormat == "table" || inputFormat == "warc",
+      s"--input-format must be table or warc, got '$inputFormat'")
+  }
 
   def parseArgs(argv: Array[String]): Args = {
     var a = Args()

@@ -75,6 +75,19 @@ object PipelineOps {
     }
   }
 
+  /** x65's WAT link records, shared with app.CorpusPipeline's `--links`
+    * sidecar: one (src_url, target, anchor) row per resolved link of
+    * every page's `html` (html.Links). Map-only flatMap over the
+    * payload; only `url` and `html` are deserialized.
+    */
+  def linkRecords(pages: Dataset[_]): DataFrame = {
+    import pages.sparkSession.implicits._
+    pages.select("url", "html").as[(String, Array[Byte])]
+      .flatMap { case (url, html) =>
+        graft.html.Links.records(url, html).map { case (t, a) => (url, t, a) } }
+      .toDF("src_url", "target", "anchor")
+  }
+
   /** x65's grouping key: a resolved link target's path, always rooted at
     * `/` (an authority-only target keys as `/`).
     */
@@ -594,20 +607,15 @@ object PipelineOps {
     // key — at 10^12 pages the production keying is dst_host for graph
     // building, same single-exchange shape.
     ("x65_link_records",
-      (s, _) => {
-        import s.implicits._
-        val recs = pages(s, 1200).flatMap(p =>
-          graft.html.Links.records(p.url, p.html)
-            .map { case (t, a) => (p.url, t, a) })
-          .toDF("src_url", "target", "anchor")
-        recs
+      (s, _) =>
+        linkRecords(pages(s, 1200))
           .withColumn("path", linkPath(col("target")))
           .withColumn("src_host", regexp_extract(col("src_url"), "^https?://([^/]+)", 1))
           .groupBy("path", "anchor")
           .agg(count(lit(1)).as("n_links"),
             countDistinct("src_host").as("n_hosts"))
-          .orderBy("path", "anchor")
-      }, None),
+          .orderBy("path", "anchor"),
+      None),
 
     // ---- Multimodal binary kernel: opaque payload bytes → typed
     // metadata via the per-partition header decoder (real container

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import QueryUtil._
 
@@ -55,6 +56,22 @@ object TextOps {
     .withColumn("band_sig", concat_ws(",", slice(col("sigs"), col("band_id") * 4 + 1, lit(4))))
     .select("doc_id", "band_id", "band_sig")
     .repartition(col("band_id"), col("band_sig"))
+
+  /** q62's C4 keep-first, shared with app.CorpusPipeline's span dedup:
+    * the rows of `paras` (`idCol`, pidx, para, …) whose paragraph text
+    * occurs first in (`idCol`, pidx) order. Unique paragraphs are their
+    * own first occurrence, so one window handles both.
+    */
+  def firstParagraphs(paras: DataFrame, idCol: String): DataFrame =
+    paras.withColumn("occ", row_number().over(
+        Window.partitionBy("para").orderBy(idCol, "pidx")))
+      .where(col("occ") === 1)
+
+  /** Aggregate: a document's kept paragraphs in pidx order, joined by `sep`. */
+  def joinParagraphs(sep: String): Column =
+    array_join(transform(
+      array_sort(collect_list(struct(col("pidx"), col("para")))),
+      t => t.getField("para")), sep)
 
   /** q53's and q53s's oracle: the exact batch×corpus Jaccard ≥ 0.5
     * verdicts both the in-plan sketch and the signature store must hit.
@@ -302,18 +319,15 @@ object TextOps {
     // span occurring more than once" pass, at paragraph granularity).
     // The corpus text is single-line, so paragraph breaks are derived
     // deterministically in BOTH engines: tokens grouped in runs of 10
-    // (last run partial). Keep-first = the single global row_number==1
-    // occurrence of each paragraph ordered by (doc_id, pidx) — unique
-    // paragraphs are their own first occurrence, so one window
-    // expression handles both. Output pins the per-doc kept-count AND
-    // the md5 of the reassembled cleaned text, so the green hash proves
-    // span selection byte-exactly. Scale shape: one explode + one
-    // window shuffle keyed on the paragraph (at 10^12 rows: hash the
-    // paragraph to 128 bits first so the shuffle carries digests, not
-    // text — same plan), one group-by doc.
+    // (last run partial); firstParagraphs keeps each paragraph's first
+    // occurrence. Output pins the per-doc kept-count AND the md5 of the
+    // reassembled text, so the green hash proves span selection
+    // byte-exactly. Scale shape: one explode + one window shuffle keyed
+    // on the paragraph (at 10^12 rows: hash the paragraph to 128 bits
+    // first so the shuffle carries digests, not text — same plan), one
+    // group-by doc.
     ("q62_span_dedup",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val t = tbl(s, d, "documents")
           .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
         // paras feeds both the keep-first window and the per-doc total:
@@ -324,14 +338,9 @@ object TextOps {
               g => array_join(slice(col("toks"), g * 10 + 1, lit(10)), " ")))
               .as(Seq("pidx", "para")))
           .localCheckpoint()
-        val w = Window.partitionBy("para").orderBy("doc_id", "pidx")
-        val kept = paras.withColumn("occ", row_number().over(w))
-          .where(col("occ") === 1)
+        val kept = firstParagraphs(paras, "doc_id")
           .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_kept"),
-            md5(array_join(transform(
-              array_sort(collect_list(struct(col("pidx"), col("para")))),
-              t => t.getField("para")), " ")).as("clean_digest"))
+          .agg(count(lit(1)).as("n_kept"), md5(joinParagraphs(" ")).as("clean_digest"))
         paras.groupBy("doc_id").agg(count(lit(1)).as("n_paras"))
           .join(kept, Seq("doc_id"), "left")
           .select(col("doc_id"), col("n_paras"),

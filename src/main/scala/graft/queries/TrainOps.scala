@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import QueryUtil._
 
@@ -31,6 +32,65 @@ object TrainOps {
 
   private def rkKeyCol: Column = md5(col("doc_id").cast("string"))
 
+  // ---- Stages q57, q58, q60, q75, q80 and q84 share with
+  // app.CorpusPipeline. Each caller passes its own id, key and order
+  // columns (doc_id here, url in the pipeline).
+
+  /** q57's token windows over a frame with `toks` and its size `n`: one
+    * row per `w`-token window at stride `st` (`win_id` from 0, tokens in
+    * `win`).
+    */
+  def tokenWindows(docs: DataFrame, w: Int, st: Int): DataFrame = docs
+    .withColumn("win_id", explode(sequence(lit(0),
+      ceil(greatest(col("n") - w, lit(0)).cast("double") / st).cast("int"))))
+    .withColumn("win", slice(col("toks"), col("win_id") * st + 1, lit(w)))
+
+  /** q58's per-language keep predicate: en 80% / de 50% / others 20%,
+    * kept iff the first md5 byte of `key` is below rate×256 (2 hex chars).
+    */
+  def sampleKept(lang: Column, key: Column): Column = {
+    val h = substring(md5(key), 1, 2)
+    when(lang === "en", h < "cc")       // 204/256 ≈ 80%
+      .when(lang === "de", h < "80")    // 128/256 = 50%
+      .otherwise(h < "33")              //  51/256 ≈ 20%
+  }
+
+  /** q60's eval shingle set: the distinct non-null shingles of the `sh`
+    * arrays. explode_OUTER on purpose: a plain explode makes Catalyst
+    * infer a `size(sh) > 0` scan filter with the whole tokenize→shingle
+    * pipeline inlined (the q24 round-1 pathology, BENCH.md).
+    */
+  def shingleSet(eval: DataFrame): DataFrame =
+    eval.select(explode_outer(col("sh")).as("shingle"))
+      .where(col("shingle").isNotNull).distinct()
+
+  /** q60's contamination probe: one (`idCol`, shingle) row per shingle of
+    * `docs`' `sh` arrays that is in the (small, broadcast) `evalSet`.
+    */
+  def shingleHits(docs: DataFrame, idCol: String, evalSet: DataFrame): DataFrame =
+    docs.select(col(idCol), explode_outer(col("sh")).as("shingle"))
+      .join(broadcast(evalSet), Seq("shingle"))
+
+  /** q75's two-level prefix sum: adds `tok_offset`, the sum of `n_toks`
+    * over every row before this one in (bucket, `order`) order.
+    */
+  def prefixOffsets(t: DataFrame, order: Column*): DataFrame = {
+    val bucketPrefix = t.groupBy("bucket").agg(sum("n_toks").as("btoks"))
+      .withColumn("bucket_offset",
+        coalesce(sum("btoks").over(Window.orderBy("bucket")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select("bucket", "bucket_offset")
+    val w = Window.partitionBy("bucket").orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    t.join(broadcast(bucketPrefix), "bucket")
+      .withColumn("tok_offset",
+        col("bucket_offset") + coalesce(sum("n_toks").over(w), lit(0L)))
+  }
+
+  /** q80's per-host rank: row_number over `host` ordered by (rank key, id). */
+  def hostRank(rankKey: Column, id: Column): Column =
+    row_number().over(Window.partitionBy("host").orderBy(rankKey, id))
+
   /** The `t` CTE (doc_id, host, rk_key) of q80's and q84's oracles. */
   private val hostCapSql =
     """WITH t AS (SELECT doc_id,
@@ -51,10 +111,7 @@ object TrainOps {
           .withColumn("toks", tokens(col("text")))
           .withColumn("n", size(col("toks")))
           .where(col("n") > 0)
-        t.withColumn("win_id",
-            explode(sequence(lit(0),
-              ceil(greatest(col("n") - W, lit(0)).cast("double") / S).cast("int"))))
-          .withColumn("win", slice(col("toks"), col("win_id") * S + 1, lit(W)))
+        tokenWindows(t, W, S)
           .select(col("doc_id"), col("win_id"),
             size(col("win")).as("n_win_toks"),
             md5(concat_ws(" ", col("win"))).as("win_md5"))
@@ -92,23 +149,13 @@ object TrainOps {
     // count() that sizes it is parquet-footer metadata, not a scan.
     ("q75_sequence_packing",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val nDocs = tbl(s, d, "documents").count()
         val bucketDocs = math.max(64L, math.ceil(math.sqrt(nDocs.toDouble)).toLong)
         val t = tbl(s, d, "documents")
           .withColumn("n_toks", size(tokens(col("text"))))
           .select(col("doc_id"), col("n_toks"))
           .withColumn("bucket", expr(s"doc_id div $bucketDocs"))
-        val bucketPrefix = t.groupBy("bucket").agg(sum("n_toks").as("btoks"))
-          .withColumn("bucket_offset",
-            coalesce(sum("btoks").over(Window.orderBy("bucket")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select("bucket", "bucket_offset")
-        val w = Window.partitionBy("bucket").orderBy("doc_id")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        t.join(broadcast(bucketPrefix), "bucket")
-          .withColumn("tok_offset",
-            col("bucket_offset") + coalesce(sum("n_toks").over(w), lit(0L)))
+        prefixOffsets(t, col("doc_id"))
           .withColumn("seq_first", expr("tok_offset div 128"))
           .withColumn("seq_last",
             expr("(tok_offset + greatest(n_toks, 1) - 1) div 128"))
@@ -137,12 +184,8 @@ object TrainOps {
     // kept iff the first md5 byte is below it.
     ("q58_stratified_sample",
       (s, d) => {
-        val h = substring(md5(col("doc_id").cast("string")), 1, 2)
         tbl(s, d, "documents")
-          .withColumn("kept",
-            when(col("lang") === "en", h < "cc")       // 204/256 ≈ 80%
-              .when(col("lang") === "de", h < "80")    // 128/256 = 50%
-              .otherwise(h < "33"))                    //  51/256 ≈ 20%
+          .withColumn("kept", sampleKept(col("lang"), col("doc_id").cast("string")))
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
                sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"))
@@ -187,22 +230,15 @@ object TrainOps {
     // is a map-side semi-join over the corpus — no corpus shuffle.
     ("q60_decontamination",
       (s, d) => {
-        // Tokenize into a materialized column first, and use
-        // explode_OUTER: a plain explode makes Catalyst infer a
-        // `size(sh) > 0 AND isnotnull(sh)` predicate and push it into
-        // the scan filter with the WHOLE tokenize→shingle pipeline
-        // inlined (the q24 round-1 pathology — measured 40s vs 1.5s at
-        // sf0.1). Outer explode emits a null row for empty docs instead,
-        // which the inner shingle join / distinct drop for free.
+        // Tokenize into a materialized column first; with explode_OUTER
+        // (shingleSet) this keeps the shingle pipeline out of the scan
+        // filter — measured 40s vs 1.5s at sf0.1.
         val t = tbl(s, d, "documents")
           .withColumn("toks", tokens(col("text")))
           .withColumn("sh", shingles5(col("toks")))
-        val eval_ = t.where(col("doc_id") % 50 === 0)
-          .select(explode_outer(col("sh")).as("shingle"))
-          .where(col("shingle").isNotNull).distinct()
+        val eval_ = shingleSet(t.where(col("doc_id") % 50 === 0))
         val corpus = t.where(col("doc_id") % 50 =!= 0)
-        val hits = corpus.select(col("doc_id"), explode_outer(col("sh")).as("shingle"))
-          .join(broadcast(eval_), Seq("shingle"))
+        val hits = shingleHits(corpus, "doc_id", eval_)
           .groupBy("doc_id").agg(countDistinct("shingle").as("n_shared"))
         corpus.select("doc_id")
           .join(hits, Seq("doc_id"), "left")
@@ -243,12 +279,10 @@ object TrainOps {
     // no full sort; AQE skew-split covers the hot host either way.
     ("q80_host_cap",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         tbl(s, d, "documents")
           .withColumn("host", hostCol)
           .withColumn("rk_key", rkKeyCol)
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("host").orderBy(col("rk_key"), col("doc_id"))))
+          .withColumn("rk", hostRank(col("rk_key"), col("doc_id")))
           .select(col("doc_id"), col("host"), col("rk"), (col("rk") <= HostCap).as("kept"))
           .orderBy("doc_id")
       },
@@ -274,7 +308,6 @@ object TrainOps {
     ("q84_host_cap_topk",
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.expressions.Window
         val base = tbl(s, d, "documents")
           .withColumn("host", hostCol)
           .select(col("doc_id"), col("host"), rkKeyCol.as("rk_key"))
@@ -296,8 +329,7 @@ object TrainOps {
           }
         }.toDF("doc_id", "host", "rk_key")
         survivors
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("host").orderBy(col("rk_key"), col("doc_id"))))
+          .withColumn("rk", hostRank(col("rk_key"), col("doc_id")))
           .where(col("rk") <= HostCap)
           .select(col("doc_id"), col("host"))
           .orderBy("doc_id")

@@ -274,6 +274,57 @@ class CorpusPipelineSpec extends SparkSuite {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
+  test("--window/--stride < 1 are rejected by parseArgs and by Args, naming the flag") {
+    for ((flag, v) <- Seq("--window" -> "0", "--stride" -> "0", "--stride" -> "-1")) {
+      val e = intercept[IllegalArgumentException](
+        CorpusPipeline.parseArgs(Array("--rows", "10", "--out", "o", flag, v)))
+      assert(e.getMessage.contains(flag), e.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](Args(rows = 10, out = "o", stride = 0))
+    assert(e.getMessage.contains("--stride"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](Args(rows = 10, out = "o", window = 0, pack = true))
+    assert(e2.getMessage.contains("--window"), e2.getMessage)
+  }
+
+  test("every flag on: exact stage counts and output digests are pinned") {
+    // Values taken from the pipeline before its stages were shared with
+    // the queries; a change here is a change to the corpus.
+    // Eval set: the extracted text of three of the corpus's own first
+    // pages (PageGen is a pure function of (seed, id)).
+    val evalDir = tmpDir("cp_pin_eval")
+    graft.app.ExtractJob.extractKernel(graft.synth.PageGen.generate(spark, 40), "balanced")
+      .where(col("success") && length(col("text")) > 0)
+      .orderBy("url").limit(3).select("text")
+      .write.mode("overwrite").parquet(evalDir)
+    val out = tmpDir("cp_pin")
+    val stages = CorpusPipeline.run(spark, Args(rows = 600, out = out, evalPath = evalDir,
+      cluster = true, spanDedup = true, pack = true, hostCap = 5, stats = true,
+      links = true, provenance = true))
+    // Order-free digest of a dataset: its schema plus its sorted rows.
+    def digest(dir: String): String = {
+      val df = spark.read.parquet(s"$out/$dir")
+      val rows = df.collect().map(_.mkString("\u0001")).sorted
+      val md = java.security.MessageDigest.getInstance("MD5")
+      md.update((df.schema.simpleString +: rows).mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      md.digest().map("%02x".format(_)).mkString
+    }
+    val digests = Seq("links", "provenance", "training_windows", "packed_sequences",
+      "stats/hll_registers", "stats/cms_counters").map(d => d -> digest(d))
+    assert(stages == Seq[(String, Long)]("pages" -> 600, "links" -> 1418,
+      "extracted" -> 578, "quality" -> 438, "exact_dedup" -> 146, "near_dedup" -> 146,
+      "host_capped" -> 102, "span_dedup" -> 102, "decontaminated" -> 101,
+      "stats_hll_registers" -> 320, "stats_cms_cells" -> 283, "windows" -> 183,
+      "sampled" -> 92, "packed" -> 131, "provenance_drops" -> 499), stages)
+    assert(digests == Seq(
+      "links" -> "342779167f8ea2f209305057af3a92b1",
+      "provenance" -> "03ddf3468afa34e85037e374f71510ca",
+      "training_windows" -> "8440fb4ede4a30def34ccb0945841a68",
+      "packed_sequences" -> "9748e15a5cb45462836c596279ca189e",
+      "stats/hll_registers" -> "9567b7c857f8e651aea5c0aa0a9d50fa",
+      "stats/cms_counters" -> "c8b753374a6af22110e4c93a0fd0d4e9"), digests)
+  }
+
   test("rerun without --provenance clears a stale provenance sidecar") {
     val out = tmpDir("cp_prov_rerun")
     CorpusPipeline.run(spark, Args(rows = 200, out = out, provenance = true))

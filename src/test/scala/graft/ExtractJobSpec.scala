@@ -226,6 +226,29 @@ class ExtractJobSpec extends SparkSuite {
     assert(res.where(col("lang") =!= "de").count() == 0)
   }
 
+  test("--buckets < 1 is rejected by parseArgs and by Args, naming the flag") {
+    for (b <- Seq("0", "-3")) {
+      val e = intercept[IllegalArgumentException](
+        ExtractJob.parseArgs(Array("--rows", "10", "--out", "o", "--buckets", b)))
+      assert(e.getMessage.contains("--buckets"), e.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](Args(rows = 10, out = "o", buckets = 0))
+    assert(e.getMessage.contains("--buckets"), e.getMessage)
+    assert(ExtractJob.parseArgs(Array("--rows", "10", "--out", "o", "--buckets", "1")).buckets == 1)
+  }
+
+  test("an unknown --input-format is rejected by parseArgs and by Args, naming the flag") {
+    val e = intercept[IllegalArgumentException](
+      ExtractJob.parseArgs(Array("--input", "in", "--out", "o", "--input-format", "parquet")))
+    assert(e.getMessage.contains("--input-format"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      Args(input = "in", out = "o", inputFormat = "WARC"))
+    assert(e2.getMessage.contains("--input-format"), e2.getMessage)
+    for (f <- Seq("table", "warc"))
+      assert(ExtractJob.parseArgs(
+        Array("--input", "in", "--out", "o", "--input-format", f)).inputFormat == f)
+  }
+
   test("invalid quality normalizes to balanced at the job boundary") {
     val out = tmpDir("xjob-q")
     val rows = ExtractJob.run(spark, Args(rows = 50, out = out, buckets = 2, quality = "turbo"))
