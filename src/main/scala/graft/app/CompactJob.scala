@@ -54,10 +54,6 @@ import org.apache.spark.sql.SparkSession
   * each rewrite is one narrow read→coalesce→write job per bucket, no
   * shuffle; buckets rewrite independently, so a scheduler can spread
   * them across a cluster or run them incrementally.
-  *
-  * Usage: CompactJob --in DIR [--target-bytes N] [--sort c1,c2]
-  *   [--commit-mode rename|manifest]
-  * (default target 128 MiB; --sort clusters each rewritten partition)
   */
 object CompactJob {
 
@@ -130,9 +126,12 @@ object CompactJob {
     * reason Iceberg/Delta pair rewrite-files with a sort order).
     */
   def run(spark: SparkSession, inDir: String,
-      targetBytes: Long = 128L * 1024 * 1024,
+      targetBytes: Long = DefaultTargetBytes,
       sortCols: Seq[String] = Nil,
       commitMode: String = "rename"): (Int, Int, Int) = {
+    // 0 would plan Int.MaxValue output files (nothing compacts) and a
+    // negative target one file per bucket.
+    require(targetBytes > 0, s"--target-bytes must be > 0, got $targetBytes")
     require(commitMode == "rename" || commitMode == "manifest",
       s"unknown --commit-mode: $commitMode")
     val root = new Path(inDir)
@@ -186,23 +185,26 @@ object CompactJob {
     (todo.size, todo.map(_.files).sum, todo.map(_.outFiles).sum)
   }
 
+  private val DefaultTargetBytes: Long = 128L * 1024 * 1024
+
+  // Usage: CompactJob --in DIR [--target-bytes N] [--sort c1,c2]
+  //   [--commit-mode rename|manifest]
+  // (default target 128 MiB; --sort clusters each rewritten partition)
+  private final case class Args(in: String = "", targetBytes: Long = DefaultTargetBytes,
+      sort: Seq[String] = Nil, commitMode: String = "rename")
+
+  private val flags: Map[String, Flags.Flag[Args]] = Map(
+    "--in" -> Flags.Valued((a, v) => a.copy(in = v.str)),
+    "--target-bytes" -> Flags.Valued((a, v) => a.copy(targetBytes = v.long)),
+    "--sort" -> Flags.Valued((a, v) => a.copy(sort = v.str.split(",").toSeq)),
+    "--commit-mode" -> Flags.Valued((a, v) => a.copy(commitMode = v.str)))
+
   def main(argv: Array[String]): Unit = {
-    var in = ""; var target = 128L * 1024 * 1024; var sort = Seq.empty[String]
-    var mode = "rename"
-    var i = 0
-    while (i < argv.length) {
-      argv(i) match {
-        case "--in" => in = argv(i + 1); i += 2
-        case "--target-bytes" => target = argv(i + 1).toLong; i += 2
-        case "--sort" => sort = argv(i + 1).split(",").toSeq; i += 2
-        case "--commit-mode" => mode = argv(i + 1); i += 2
-        case other => throw new IllegalArgumentException(s"unknown arg: $other")
-      }
-    }
-    require(in.nonEmpty, "--in is required")
+    val a = Flags.parse(argv, Args(), flags)
+    require(a.in.nonEmpty, "--in is required")
     val spark = SparkUtil.session("graft-compact")
     val t0 = System.nanoTime()
-    val (n, before, after) = run(spark, in, target, sort, mode)
+    val (n, before, after) = run(spark, a.in, a.targetBytes, a.sort, a.commitMode)
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"""{"job":"compact","buckets_compacted":$n,"files_before":$before,"files_after":$after,"sec":$secs%.3f}""")
     spark.stop()

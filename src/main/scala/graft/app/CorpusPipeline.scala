@@ -31,12 +31,6 @@ import org.apache.spark.sql.functions._
   * q22's normalized digest. Scale shapes are inherited: the kernel is
   * map-only, dedup shuffles only compact digests/signatures, the eval
   * shingle set broadcasts, chunking/sampling are map-only.
-  *
-  * Usage:
-  *   CorpusPipeline (--rows N [--seed S] | --input path) --out DIR
-  *     [--eval path] [--window W] [--stride S] [--quality q] [--cluster]
-  *     [--span-dedup] [--pack] [--host-cap K] [--stats] [--links]
-  *     [--provenance]
   */
 object CorpusPipeline {
 
@@ -60,31 +54,34 @@ object CorpusPipeline {
     // packing stages, after extraction and every dedup stage has run.
     require(window >= 1, s"--window must be >= 1, got $window")
     require(stride >= 1, s"--stride must be >= 1, got $stride")
+    // 0 means "no cap"; a negative cap would read as no cap too.
+    require(hostCap >= 0, s"--host-cap must be >= 0, got $hostCap")
   }
 
+  // Usage:
+  //   CorpusPipeline (--rows N [--seed S] | --input path) --out DIR
+  //     [--eval path] [--window W] [--stride S] [--quality q] [--cluster]
+  //     [--span-dedup] [--pack] [--host-cap K] [--stats] [--links]
+  //     [--provenance]
+  private val flags: Map[String, Flags.Flag[Args]] = Map(
+    "--rows" -> Flags.Valued((a, v) => a.copy(rows = v.long)),
+    "--seed" -> Flags.Valued((a, v) => a.copy(seed = v.long)),
+    "--input" -> Flags.Valued((a, v) => a.copy(input = v.str)),
+    "--out" -> Flags.Valued((a, v) => a.copy(out = v.str)),
+    "--eval" -> Flags.Valued((a, v) => a.copy(evalPath = v.str)),
+    "--window" -> Flags.Valued((a, v) => a.copy(window = v.int)),
+    "--stride" -> Flags.Valued((a, v) => a.copy(stride = v.int)),
+    "--quality" -> Flags.Valued((a, v) => a.copy(quality = v.str)),
+    "--cluster" -> Flags.Switch(_.copy(cluster = true)),
+    "--span-dedup" -> Flags.Switch(_.copy(spanDedup = true)),
+    "--pack" -> Flags.Switch(_.copy(pack = true)),
+    "--host-cap" -> Flags.Valued((a, v) => a.copy(hostCap = v.int)),
+    "--stats" -> Flags.Switch(_.copy(stats = true)),
+    "--links" -> Flags.Switch(_.copy(links = true)),
+    "--provenance" -> Flags.Switch(_.copy(provenance = true)))
+
   def parseArgs(argv: Array[String]): Args = {
-    var a = Args()
-    var i = 0
-    while (i < argv.length) {
-      argv(i) match {
-        case "--rows" => a = a.copy(rows = argv(i + 1).toLong); i += 2
-        case "--seed" => a = a.copy(seed = argv(i + 1).toLong); i += 2
-        case "--input" => a = a.copy(input = argv(i + 1)); i += 2
-        case "--out" => a = a.copy(out = argv(i + 1)); i += 2
-        case "--eval" => a = a.copy(evalPath = argv(i + 1)); i += 2
-        case "--window" => a = a.copy(window = argv(i + 1).toInt); i += 2
-        case "--stride" => a = a.copy(stride = argv(i + 1).toInt); i += 2
-        case "--quality" => a = a.copy(quality = argv(i + 1)); i += 2
-        case "--cluster" => a = a.copy(cluster = true); i += 1
-        case "--span-dedup" => a = a.copy(spanDedup = true); i += 1
-        case "--pack" => a = a.copy(pack = true); i += 1
-        case "--host-cap" => a = a.copy(hostCap = argv(i + 1).toInt); i += 2
-        case "--stats" => a = a.copy(stats = true); i += 1
-        case "--links" => a = a.copy(links = true); i += 1
-        case "--provenance" => a = a.copy(provenance = true); i += 1
-        case other => throw new IllegalArgumentException(s"unknown arg: $other")
-      }
-    }
+    val a = Flags.parse(argv, Args(), flags)
     require(a.out.nonEmpty, "--out is required")
     require(a.rows > 0 || a.input.nonEmpty, "--rows or --input is required")
     a

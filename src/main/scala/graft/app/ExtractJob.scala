@@ -55,13 +55,6 @@ import org.apache.spark.sql.functions._
   *    stops once the entries' estimated heap (payload, texts and a
   *    per-entry allowance) reaches a fixed 16 MB per task. Copies that
   *    land in different tasks are not shared.
-  *
-  * Usage:
-  *   ExtractJob (--rows N [--seed S] | --input path) --out DIR
-  *     [--checkpoint DIR] [--run-id ID] [--quality q] [--lang xx]
-  *     [--buckets B] [--wave-size W] [--repartition N] [--no-write-shuffle]
-  *     [--input-format table|warc] [--slim] [--notify PATH]
-  *     [--notify-url URL] [--compact-target BYTES] [--two-pass]
   */
 object ExtractJob {
 
@@ -110,37 +103,44 @@ object ExtractJob {
       twoPass: Boolean = false) {
     // Zero buckets would leave no work: the job would write nothing and
     // report success. Any other format would silently be read as a table.
+    // The last three default to 0 (one wave, no repartition, no
+    // compaction); a negative value would silently mean the same.
     require(buckets >= 1, s"--buckets must be >= 1, got $buckets")
     require(inputFormat == "table" || inputFormat == "warc",
       s"--input-format must be table or warc, got '$inputFormat'")
+    require(waveSize >= 0, s"--wave-size must be >= 0, got $waveSize")
+    require(repartition >= 0, s"--repartition must be >= 0, got $repartition")
+    require(compactTarget >= 0, s"--compact-target must be >= 0, got $compactTarget")
   }
 
+  // Usage:
+  //   ExtractJob (--rows N [--seed S] | --input path) --out DIR
+  //     [--checkpoint DIR] [--run-id ID] [--quality q] [--lang xx]
+  //     [--buckets B] [--wave-size W] [--repartition N] [--no-write-shuffle]
+  //     [--input-format table|warc] [--slim] [--notify PATH]
+  //     [--notify-url URL] [--compact-target BYTES] [--two-pass]
+  private val flags: Map[String, Flags.Flag[Args]] = Map(
+    "--rows" -> Flags.Valued((a, v) => a.copy(rows = v.long)),
+    "--seed" -> Flags.Valued((a, v) => a.copy(seed = v.long)),
+    "--input" -> Flags.Valued((a, v) => a.copy(input = v.str)),
+    "--out" -> Flags.Valued((a, v) => a.copy(out = v.str)),
+    "--checkpoint" -> Flags.Valued((a, v) => a.copy(checkpoint = v.str)),
+    "--run-id" -> Flags.Valued((a, v) => a.copy(runId = v.str)),
+    "--quality" -> Flags.Valued((a, v) => a.copy(quality = v.str)),
+    "--lang" -> Flags.Valued((a, v) => a.copy(lang = v.str)),
+    "--buckets" -> Flags.Valued((a, v) => a.copy(buckets = v.int)),
+    "--wave-size" -> Flags.Valued((a, v) => a.copy(waveSize = v.int)),
+    "--repartition" -> Flags.Valued((a, v) => a.copy(repartition = v.int)),
+    "--no-write-shuffle" -> Flags.Switch(_.copy(writeShuffle = false)),
+    "--input-format" -> Flags.Valued((a, v) => a.copy(inputFormat = v.str)),
+    "--slim" -> Flags.Switch(_.copy(slim = true)),
+    "--notify" -> Flags.Valued((a, v) => a.copy(notifyPath = v.str)),
+    "--notify-url" -> Flags.Valued((a, v) => a.copy(notifyUrl = v.str)),
+    "--compact-target" -> Flags.Valued((a, v) => a.copy(compactTarget = v.long)),
+    "--two-pass" -> Flags.Switch(_.copy(twoPass = true)))
+
   def parseArgs(argv: Array[String]): Args = {
-    var a = Args()
-    var i = 0
-    while (i < argv.length) {
-      argv(i) match {
-        case "--rows" => a = a.copy(rows = argv(i + 1).toLong); i += 2
-        case "--seed" => a = a.copy(seed = argv(i + 1).toLong); i += 2
-        case "--input" => a = a.copy(input = argv(i + 1)); i += 2
-        case "--out" => a = a.copy(out = argv(i + 1)); i += 2
-        case "--checkpoint" => a = a.copy(checkpoint = argv(i + 1)); i += 2
-        case "--run-id" => a = a.copy(runId = argv(i + 1)); i += 2
-        case "--quality" => a = a.copy(quality = argv(i + 1)); i += 2
-        case "--lang" => a = a.copy(lang = argv(i + 1)); i += 2
-        case "--buckets" => a = a.copy(buckets = argv(i + 1).toInt); i += 2
-        case "--wave-size" => a = a.copy(waveSize = argv(i + 1).toInt); i += 2
-        case "--repartition" => a = a.copy(repartition = argv(i + 1).toInt); i += 2
-        case "--no-write-shuffle" => a = a.copy(writeShuffle = false); i += 1
-        case "--input-format" => a = a.copy(inputFormat = argv(i + 1)); i += 2
-        case "--slim" => a = a.copy(slim = true); i += 1
-        case "--notify" => a = a.copy(notifyPath = argv(i + 1)); i += 2
-        case "--notify-url" => a = a.copy(notifyUrl = argv(i + 1)); i += 2
-        case "--compact-target" => a = a.copy(compactTarget = argv(i + 1).toLong); i += 2
-        case "--two-pass" => a = a.copy(twoPass = true); i += 1
-        case other => throw new IllegalArgumentException(s"unknown arg: $other")
-      }
-    }
+    val a = Flags.parse(argv, Args(), flags)
     require(a.out.nonEmpty, "--out is required")
     require(a.rows > 0 || a.input.nonEmpty, "--rows or --input is required")
     a

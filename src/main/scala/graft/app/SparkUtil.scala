@@ -9,17 +9,6 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkUtil {
 
-  /** Parquet output codec — SINGLE owner of the default, shared by this
-    * session factory and graft.Bench so the bench always measures the
-    * codec production writes with. zstd over snappy trades abundant CPU
-    * for scarce memory-channel/storage bytes — measured on the job
-    * bench (8M rows, local[16]): 19.4 s → 17.0 s (+12% throughput) and
-    * 4→16 scaling 0.70 → 0.82, because the parquet write's memcpy
-    * traffic is the job's non-scaling term (BENCH.md, MemBw). On a
-    * real cluster the same trade cuts storage + replication bytes.
-    */
-  def parquetCodec: String = sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "zstd")
-
   /** `conf` entries are set after the defaults and override them;
     * `"spark.master"` there overrides an existing master too.
     */
@@ -39,7 +28,13 @@ object SparkUtil {
       // only wide stages shuffle compact post-kernel records, sized by
       // shuffle.partitions ≈ cores (AQE coalesces further).
       .config("spark.sql.files.maxPartitionBytes", "134217728")
-      .config("spark.sql.parquet.compression.codec", parquetCodec)
+      // Parquet output codec: zstd over snappy trades abundant CPU for
+      // scarce memory-channel/storage bytes — measured on the job bench
+      // (8M rows, local[16]): 19.4 s → 17.0 s (+12% throughput) and 4→16
+      // scaling 0.70 → 0.82, because the parquet write's memcpy traffic
+      // is the job's non-scaling term (BENCH.md, MemBw). On a real
+      // cluster the same trade cuts storage + replication bytes.
+      .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     // Respect an existing master (spark-submit); default to local[cpus].
     val withMaster =

@@ -2,13 +2,14 @@ package graft.sources
 
 import graft.model.Page
 import java.io.ByteArrayOutputStream
-import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.sql.Timestamp
 
-/** From-scratch WARC 1.0 reader/writer — the Common-Crawl container
-  * format, so the engine ingests crawl archives directly instead of
-  * requiring a pre-converted pages table. Co-evolved writer/parser per
-  * the fixture philosophy (SURVEY.md §5.2); documented subset:
+/** From-scratch WARC 1.0 reader — the Common-Crawl container format,
+  * so the engine ingests crawl archives directly instead of requiring a
+  * pre-converted pages table. Its co-evolved fixture writer and the
+  * whole-archive reader it replaced live with the tests (`WarcFixtures`,
+  * SURVEY.md §5.2's fixture philosophy); documented subset:
   *
   *  - records with `WARC-Type: response` become pages; other types
   *    (warcinfo, request, metadata) are skipped;
@@ -24,102 +25,12 @@ object Warc {
 
   private val Iso = java.time.format.DateTimeFormatter.ISO_INSTANT
 
-  /** Write pages as a WARC byte stream (fixture/round-trip writer). */
-  def write(pages: Seq[Page]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    pages.foreach { p =>
-      // No charset parameter: fixture pages self-describe their encoding
-      // (meta/BOM), and a transport claim that disagreed would make the
-      // reader's normalizeCharset transcode them — the round-trip must be
-      // byte-identical.
-      val httpHead =
-        "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-      val payload = httpHead.getBytes(ISO_8859_1) ++
-        (if (p.html == null) Array.emptyByteArray else p.html)
-      val date = Iso.format(java.time.Instant.ofEpochMilli(
-        if (p.warc_ts == null) 0L else p.warc_ts.getTime))
-      val head =
-        s"""WARC/1.0\r
-           |WARC-Type: response\r
-           |WARC-Target-URI: ${p.url}\r
-           |WARC-Date: $date\r
-           |Content-Length: ${payload.length}\r
-           |\r
-           |""".stripMargin
-      out.write(head.getBytes(ISO_8859_1))
-      out.write(payload)
-      out.write("\r\n\r\n".getBytes(ISO_8859_1))
-    }
-    out.toByteArray
-  }
-
-  /** Parse a WARC byte stream into pages (response records only). */
-  def parse(bytes: Array[Byte]): Vector[Page] = {
-    val out = Vector.newBuilder[Page]
-    var i = 0
-    val n = bytes.length
-
-    def lineEnd(from: Int): Int = {
-      var j = from
-      while (j < n && bytes(j) != '\n') j += 1
-      j
-    }
-    def lineAt(from: Int): (String, Int) = {
-      val e = lineEnd(from)
-      val raw = new String(bytes, from, e - from, ISO_8859_1)
-      (raw.stripSuffix("\r"), math.min(e + 1, n))
-    }
-
-    while (i < n) {
-      // Seek the next record marker.
-      val (first, afterFirst) = lineAt(i)
-      if (!first.startsWith("WARC/")) { i = afterFirst }
-      else {
-        // WARC headers until blank line.
-        var j = afterFirst
-        var url = ""; var date = ""; var tpe = ""; var len = -1L
-        var halted = false
-        var blank = false
-        while (!blank && !halted && j < n) {
-          val (line, next) = lineAt(j)
-          j = next
-          if (line.isEmpty) blank = true
-          else {
-            val c = line.indexOf(':')
-            if (c > 0) {
-              val k = line.substring(0, c).trim.toLowerCase
-              val v = line.substring(c + 1).trim
-              k match {
-                case "warc-type" => tpe = v
-                case "warc-target-uri" => url = v
-                case "warc-date" => date = v
-                case "content-length" =>
-                  len = try v.toLong catch { case _: Exception => halted = true; -1L }
-                case _ =>
-              }
-            }
-          }
-        }
-        if (halted || len < 0 || j + len > n) {
-          // Malformed record: skip to next line and rescan.
-          i = j
-        } else {
-          if (tpe.equalsIgnoreCase("response") && url.nonEmpty) {
-            val payload = java.util.Arrays.copyOfRange(bytes, j, (j + len).toInt)
-            out += buildPage(url, date, payload)
-          }
-          i = (j + len).toInt
-        }
-      }
-    }
-    out.result()
-  }
-
   /** Response-record payload → Page: HTTP header strip + charset
-    * normalization + WARC-Date parse (shared by `parse` and the
-    * streaming reader — both MUST stay byte-identical).
+    * normalization + WARC-Date parse (shared by the streaming reader and
+    * the whole-archive reader the tests keep as its oracle,
+    * `WarcFixtures.parse` — both MUST stay byte-identical).
     */
-  private def buildPage(url: String, date: String, payload: Array[Byte]): Page = {
+  private[graft] def buildPage(url: String, date: String, payload: Array[Byte]): Page = {
     val (transportCharset, mediaType, rawBody) = splitHttpPayload(payload)
     val body = normalizeCharset(rawBody, transportCharset, mediaType)
     val ts = try new Timestamp(java.time.Instant.from(Iso.parse(date)).toEpochMilli)
@@ -211,47 +122,6 @@ object Warc {
     }
   }
 
-  /** Transparent gunzip: Common Crawl ships `.warc.gz` with one gzip
-    * member PER RECORD (so archives are splittable by member);
-    * GZIPInputStream consumes concatenated members, so a full-file
-    * inflate yields the whole record stream. Non-gzip bytes pass
-    * through.
-    *
-    * Inflated output is materialized as one array, so the hard ceiling
-    * is ~2 GB inflated per archive (JVM array limit) — this is the
-    * FIXTURE path; real archives go through `streamPages`/`readPages`,
-    * which inflate record-at-a-time with no such ceiling. Initial
-    * capacity is clamped so the `length * 4` estimate can't overflow
-    * Int for multi-hundred-MB inputs.
-    */
-  def gunzipIfNeeded(bytes: Array[Byte]): Array[Byte] = {
-    if (bytes.length < 2 || bytes(0) != 0x1f.toByte || bytes(1) != 0x8b.toByte)
-      return bytes
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(bytes), 64 * 1024)
-    val cap = math.min(math.max(bytes.length.toLong * 4, 64L * 1024),
-      Int.MaxValue.toLong - 16).toInt
-    val out = new ByteArrayOutputStream(cap)
-    val buf = new Array[Byte](64 * 1024)
-    try {
-      var r = in.read(buf)
-      while (r >= 0) { if (r > 0) out.write(buf, 0, r); r = in.read(buf) }
-    } catch { case _: java.io.IOException => /* truncated member: keep what inflated */ }
-    finally in.close()
-    out.toByteArray
-  }
-
-  /** Gzip pages as per-record members (the CC layout). */
-  def writeGz(pages: Seq[Page]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    pages.foreach { p =>
-      val gz = new java.util.zip.GZIPOutputStream(out)
-      gz.write(write(Seq(p)))
-      gz.finish()
-    }
-    out.toByteArray
-  }
-
   /** Hard cap on a single materialized record payload: a `Content-Length`
     * past this can't be held in one JVM array, so the streaming reader
     * treats the record as malformed (continues line-scanning without
@@ -260,12 +130,12 @@ object Warc {
   val MaxRecordBytes: Long = Int.MaxValue.toLong - 16
 
   /** Buffered byte reader over an InputStream with line reads, exact-N
-    * reads, and pushback — the streaming `parse` equivalent needs all
-    * three (pushback replays a truncated final payload through the
-    * line scanner, matching `parse`'s rescan of those bytes). IO errors
-    * surface as EOF: crawl archives are adversarial and a truncated
-    * gzip member must yield the records that did inflate, never throw
-    * (same contract as `gunzipIfNeeded`).
+    * reads, and pushback — the streaming equivalent of the whole-archive
+    * `WarcFixtures.parse` needs all three (pushback replays a truncated
+    * final payload through the line scanner, matching `parse`'s rescan
+    * of those bytes). IO errors surface as EOF: crawl archives are
+    * adversarial and a truncated gzip member must yield the records
+    * that did inflate, never throw.
     */
   private final class RecordStream(in: java.io.InputStream) {
     private var buf = new Array[Byte](64 * 1024)
@@ -330,12 +200,13 @@ object Warc {
   /** Stream pages from a WARC InputStream — the scale-path reader.
     * Memory is O(single record), never O(archive): Common-Crawl
     * archives (~1 GB gzip, 3-5 GB inflated) stream record-at-a-time
-    * where `parse(gunzipIfNeeded(...))` would need the whole inflated
-    * archive in one ~2 GB-capped array. Gzip input (leading 1f 8b) is
-    * inflated on the fly; GZIPInputStream consumes CC's per-record
-    * concatenated members transparently. Record semantics are identical
-    * to `parse` (same header handling, same malformed-record recovery —
-    * a truncated final payload is replayed through the line scanner),
+    * where a whole-file inflate would need the inflated archive in one
+    * ~2 GB-capped array. Gzip input (leading 1f 8b) is inflated on the
+    * fly; GZIPInputStream consumes CC's per-record concatenated members
+    * transparently. Record semantics are identical to the whole-archive
+    * `WarcFixtures.parse` (same header handling, same malformed-record
+    * recovery — a truncated final payload is replayed through the line
+    * scanner),
     * except a `Content-Length` > ~2 GB is skipped as malformed instead
     * of materialized. The stream is closed when the iterator exhausts.
     */

@@ -45,6 +45,19 @@ class CompactJobSpec extends SparkSuite {
     assert(partFiles(dir).size == 6)
   }
 
+  test("--target-bytes <= 0 is rejected naming the flag, and the table is left as it was") {
+    // At 0 the plan asked for Int.MaxValue files per bucket (nothing
+    // compacted); at -1 for one file per bucket.
+    val dir = tmpDir("compact_bad_target")
+    mkFragmented(dir, buckets = 2, filesPer = 3)
+    val files = partFiles(dir).toSet
+    for (t <- Seq(0L, -1L)) {
+      val e = intercept[IllegalArgumentException](CompactJob.run(spark, dir, targetBytes = t))
+      assert(e.getMessage.contains("--target-bytes"), e.getMessage)
+      assert(partFiles(dir).toSet == files)
+    }
+  }
+
   test("--sort clusters each rewritten partition (rows come back ordered)") {
     import spark.implicits._
     val dir = tmpDir("compact_sort")

@@ -2,6 +2,7 @@ package graft
 
 import graft.app.CorpusPipeline
 import graft.app.CorpusPipeline.Args
+import graft.synth.PageGen
 import org.apache.spark.sql.functions._
 
 /** The one-command training-data pipeline: stage monotonicity, dedup
@@ -272,6 +273,45 @@ class CorpusPipelineSpec extends SparkSuite {
     val a = spark.read.parquet(s"$out/training_windows")
     val b = spark.read.parquet(s"$out2/training_windows")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  }
+
+  test("planted near-copies of PageGen articles: near_dedup drops exactly the copies, provenance names the originals") {
+    import spark.implicits._
+    // PageGen alone has no near-but-not-exact twins: its dup clusters are
+    // byte-identical, so exact dedup takes them all before stage 4.
+    val baseOut = tmpDir("cp_near_base")
+    val base = CorpusPipeline.run(spark, Args(rows = 300, out = baseOut, provenance = true)).toMap
+    assert(base("near_dedup") == base("exact_dedup"), s"base stages: $base")
+    val dropped = spark.read.parquet(s"$baseOut/provenance").select("url")
+      .as[String].collect().toSet
+    // Four surviving UTF-8 articles, each copied under a larger url with
+    // one added three-token paragraph (a verified pair at Jaccard ~0.9).
+    val seed = 42L
+    val picked = (0L until 300L).map(id => PageGen.contentId(seed, id) -> PageGen.row(seed, id))
+      .filter { case (cid, p) => p.url.contains("/article/") && !dropped(p.url) &&
+        PageGen.encodingVariant(seed, cid) >= 2 }
+      .take(4)
+    assert(picked.size == 4)
+    val originals = picked.map(_._2)
+    val copies = picked.map { case (cid, p) =>
+      p.copy(url = p.url + "?near=1",
+        html = PageGen.articleHtmlString(seed, cid, extraSentence = "planted kestrel marmot.")
+          .getBytes("UTF-8"))
+    }
+    val inDir = tmpDir("cp_near_in")
+    (PageGen.generate(spark, 300, seed).collect().toSeq ++ copies).toDS()
+      .write.mode("overwrite").parquet(inDir)
+    val out = tmpDir("cp_near")
+    val stages = CorpusPipeline.run(spark, Args(input = inDir, out = out, provenance = true)).toMap
+    assert(stages("exact_dedup") == base("exact_dedup") + 4, s"stages: $stages")
+    assert(stages("near_dedup") == base("near_dedup"), s"stages: $stages")
+    val near = spark.read.parquet(s"$out/provenance").where(col("stage") === "near_dup")
+      .select("url", "detail").as[(String, String)].collect().toMap
+    assert(near == copies.zip(originals).map { case (c, o) => c.url -> o.url }.toMap, near)
+    // Each representative survives the whole run.
+    val allDropped = spark.read.parquet(s"$out/provenance").select("url")
+      .as[String].collect().toSet
+    assert(originals.forall(o => !allDropped(o.url)))
   }
 
   test("--window/--stride < 1 are rejected by parseArgs and by Args, naming the flag") {

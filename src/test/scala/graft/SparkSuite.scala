@@ -1,5 +1,6 @@
 package graft
 
+import graft.app.SparkUtil
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,24 +9,28 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.shared
 
-  def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  /** A fresh temp directory, deleted with its contents at JVM exit. */
+  def tmpDir(prefix: String): String = SparkSuite.tmpDir(prefix)
 }
 
 object SparkSuite {
+  /** The production session factory (Kryo, zstd, AQE), pinned to four
+    * local cores whatever SPARK_GRAFT_CPUS says.
+    */
   lazy val shared: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val s = SparkUtil.session("graft-test", "4", Map("spark.master" -> "local[4]"))
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  // File.deleteOnExit skips a non-empty directory, so the created
+  // directories are deleted recursively by one shutdown hook instead.
+  private val created = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(created.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    created.add(d)
+    d.getAbsolutePath
   }
 }

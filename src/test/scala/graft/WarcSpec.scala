@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.Page
-import graft.sources.Warc
+import graft.sources.{Warc, WarcFixtures}
 import graft.synth.PageGen
 import java.sql.Timestamp
 
@@ -16,7 +16,7 @@ class WarcSpec extends SparkSuite {
 
   test("round-trip: write → parse preserves url, timestamp, payload bytes") {
     val pages = (0L until 50L).map(id => PageGen.row(42L, id))
-    val parsed = Warc.parse(Warc.write(pages))
+    val parsed = WarcFixtures.parse(WarcFixtures.write(pages))
     assert(parsed.length == 50)
     parsed.zip(pages).foreach { case (a, b) =>
       assert(a.url == b.url)
@@ -54,7 +54,7 @@ class WarcSpec extends SparkSuite {
     val sjBody = (s"""<html><head><meta charset="windows-1252"></head>""" +
       s"<body><article><p>$jp</p></article></body></html>")
       .getBytes(java.nio.charset.Charset.forName("Shift_JIS"))
-    val parsed = Warc.parse(
+    val parsed = WarcFixtures.parse(
       record("https://de.example/a", "windows-1252", cpBody) ++
       record("https://jp.example/b", "shift_jis", sjBody))
     assert(parsed.length == 2)
@@ -66,7 +66,7 @@ class WarcSpec extends SparkSuite {
     assert(!rDe.text.contains("�") && !rJp.text.contains("�"))
     // A plain UTF-8 page with matching transport passes through byte-identical.
     val utf8Body = "<html><body><p>plain</p></body></html>".getBytes("UTF-8")
-    val p3 = Warc.parse(record("https://c.example/c", "utf-8", utf8Body))
+    val p3 = WarcFixtures.parse(record("https://c.example/c", "utf-8", utf8Body))
     assert(java.util.Arrays.equals(p3(0).html, utf8Body))
   }
 
@@ -81,23 +81,23 @@ class WarcSpec extends SparkSuite {
         .getBytes("ISO-8859-1") ++ payload ++ "\r\n\r\n".getBytes("ISO-8859-1")
     }
     val gif = graft.media.MediaGen.gif(40, 30, seed = 9)
-    val parsed = Warc.parse(record("image/gif; charset=iso-8859-1", gif))
+    val parsed = WarcFixtures.parse(record("image/gif; charset=iso-8859-1", gif))
     assert(java.util.Arrays.equals(parsed(0).html, gif),
       "GIF bytes were transcoded by a bogus transport charset")
     // Textual media types still normalize.
     val cp = "<p>Straße</p>".getBytes(java.nio.charset.Charset.forName("windows-1252"))
-    val txt = Warc.parse(record("text/html; charset=windows-1252", cp))
+    val txt = WarcFixtures.parse(record("text/html; charset=windows-1252", cp))
     assert(new String(txt(0).html, "UTF-8").contains("Straße"))
   }
 
   test("non-response records and malformed garbage are skipped") {
-    val good = Warc.write(Seq(page("https://a.example/x", "<p>keep</p>")))
+    val good = WarcFixtures.write(Seq(page("https://a.example/x", "<p>keep</p>")))
     val info = ("WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Length: 4\r\n\r\nabcd\r\n\r\n")
       .getBytes("ISO-8859-1")
     val junk = "complete garbage\nnot a record\n".getBytes("ISO-8859-1")
     val truncated = ("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://b.example/y\r\n" +
       "Content-Length: 999999\r\n\r\nshort").getBytes("ISO-8859-1")
-    val parsed = Warc.parse(junk ++ info ++ good ++ truncated)
+    val parsed = WarcFixtures.parse(junk ++ info ++ good ++ truncated)
     assert(parsed.length == 1 && parsed(0).url == "https://a.example/x")
   }
 
@@ -108,9 +108,9 @@ class WarcSpec extends SparkSuite {
     val dir = tmpDir("warc_in")
     // Two archive files, read via binaryFile source.
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.warc"),
-      Warc.write(pages.take(150)))
+      WarcFixtures.write(pages.take(150)))
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/b.warc"),
-      Warc.write(pages.drop(150)))
+      WarcFixtures.write(pages.drop(150)))
 
     val proc = graft.extract.Processor.default
     val fromWarc = Warc.readPages(spark, dir)
@@ -126,9 +126,9 @@ class WarcSpec extends SparkSuite {
   test("gzipped archives (per-record members, the CC layout) round-trip") {
     import org.apache.spark.sql.functions._
     val pages = (0L until 80L).map(id => PageGen.row(42L, id))
-    val gz = Warc.writeGz(pages)
+    val gz = WarcFixtures.writeGz(pages)
     assert(gz(0) == 0x1f.toByte && gz(1) == 0x8b.toByte)
-    val parsed = Warc.parse(Warc.gunzipIfNeeded(gz))
+    val parsed = WarcFixtures.parse(WarcFixtures.gunzipIfNeeded(gz))
     assert(parsed.length == 80)
     assert(parsed.zip(pages).forall { case (a, b) =>
       a.url == b.url && java.util.Arrays.equals(a.html, b.html) })
@@ -149,14 +149,14 @@ class WarcSpec extends SparkSuite {
 
   test("streamPages == parse on plain and per-member-gzip archives") {
     val pages = (0L until 120L).map(id => PageGen.row(7L, id))
-    val plain = Warc.write(pages)
+    val plain = WarcFixtures.write(pages)
     pagesEqual(
       Warc.streamPages(new java.io.ByteArrayInputStream(plain)).toVector,
-      Warc.parse(plain))
-    val gz = Warc.writeGz(pages)
+      WarcFixtures.parse(plain))
+    val gz = WarcFixtures.writeGz(pages)
     pagesEqual(
       Warc.streamPages(new java.io.ByteArrayInputStream(gz)).toVector,
-      Warc.parse(Warc.gunzipIfNeeded(gz)))
+      WarcFixtures.parse(WarcFixtures.gunzipIfNeeded(gz)))
   }
 
   test("streaming inflates past the whole-array reader's 4x estimate byte-identically") {
@@ -166,17 +166,17 @@ class WarcSpec extends SparkSuite {
     val filler = "lorem ipsum dolor sit amet " * 3000 // ~80 KB of repetition
     val pages = (0 until 64).map(i =>
       page(s"https://big.example/$i", s"<html><body><p>doc$i $filler</p></body></html>"))
-    val gz = Warc.writeGz(pages)
-    val inflated = Warc.gunzipIfNeeded(gz)
+    val gz = WarcFixtures.writeGz(pages)
+    val inflated = WarcFixtures.gunzipIfNeeded(gz)
     assert(inflated.length.toLong > 4L * gz.length,
       s"fixture not compressible enough: ${inflated.length} inflated / ${gz.length} gz")
     pagesEqual(
       Warc.streamPages(new java.io.ByteArrayInputStream(gz)).toVector,
-      Warc.parse(inflated))
+      WarcFixtures.parse(inflated))
   }
 
   test("streamPages == parse on malformed mixes; giant Content-Length skipped not materialized") {
-    val good = Warc.write(Seq(page("https://a.example/x", "<p>keep</p>")))
+    val good = WarcFixtures.write(Seq(page("https://a.example/x", "<p>keep</p>")))
     val info = "WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Length: 4\r\n\r\nabcd\r\n\r\n"
       .getBytes("ISO-8859-1")
     val junk = "complete garbage\nnot a record\n".getBytes("ISO-8859-1")
@@ -186,7 +186,7 @@ class WarcSpec extends SparkSuite {
       "Content-Length: banana\r\n\r\n").getBytes("ISO-8859-1")
     // A payload whose BODY contains WARC/-looking lines must not resync
     // mid-record (Content-Length spans it in both readers).
-    val embedded = Warc.write(Seq(page("https://d.example/w",
+    val embedded = WarcFixtures.write(Seq(page("https://d.example/w",
       "<pre>WARC/1.0\r\nWARC-Type: response\r\nContent-Length: 0\r\n\r\n</pre>")))
     for (mix <- Seq(
         junk ++ info ++ good ++ truncated,
@@ -196,7 +196,7 @@ class WarcSpec extends SparkSuite {
         Array.emptyByteArray)) {
       pagesEqual(
         Warc.streamPages(new java.io.ByteArrayInputStream(mix)).toVector,
-        Warc.parse(mix))
+        WarcFixtures.parse(mix))
     }
     // A declared Content-Length past the array ceiling is skipped as
     // malformed (no 3 GB allocation attempt); the next record still parses.
@@ -211,7 +211,7 @@ class WarcSpec extends SparkSuite {
     val filler = (0 until 2500).map(i => s"w$i").mkString(" ") // ~15 KB, incompressible-ish
     val pages = (0 until 100).map(i =>
       page(s"https://lazy.example/$i", s"<html><body><p>$filler</p></body></html>"))
-    val plain = Warc.write(pages)
+    val plain = WarcFixtures.write(pages)
     var bytesRead = 0L
     val counting = new java.io.InputStream {
       private val in = new java.io.ByteArrayInputStream(plain)
@@ -229,10 +229,10 @@ class WarcSpec extends SparkSuite {
 
   test("truncated gzip member yields the records that inflated, never throws") {
     val pages = (0L until 40L).map(id => PageGen.row(11L, id))
-    val gz = Warc.writeGz(pages)
+    val gz = WarcFixtures.writeGz(pages)
     val cut = java.util.Arrays.copyOf(gz, gz.length * 3 / 5)
     val streamed = Warc.streamPages(new java.io.ByteArrayInputStream(cut)).toVector
-    pagesEqual(streamed, Warc.parse(Warc.gunzipIfNeeded(cut)))
+    pagesEqual(streamed, WarcFixtures.parse(WarcFixtures.gunzipIfNeeded(cut)))
     assert(streamed.nonEmpty && streamed.length < 40)
   }
 
@@ -240,8 +240,8 @@ class WarcSpec extends SparkSuite {
     val dir = tmpDir("warc_mixed")
     val a = (0L until 30L).map(id => PageGen.row(3L, id))
     val b = (30L until 70L).map(id => PageGen.row(3L, id))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.warc"), Warc.write(a))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/b.warc.gz"), Warc.writeGz(b))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.warc"), WarcFixtures.write(a))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/b.warc.gz"), WarcFixtures.writeGz(b))
     // Hidden/metadata files are ignored, as the binaryFile source did.
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/_SUCCESS"), Array.emptyByteArray)
     val got = Warc.readPages(spark, dir).collect().map(_.url).sorted
@@ -305,7 +305,7 @@ class WarcSpec extends SparkSuite {
     val dir = tmpDir("warc_nested")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/seg0"))
     val a = (0L until 20L).map(id => PageGen.row(5L, id))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/seg0/a.warc"), Warc.write(a))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/seg0/a.warc"), WarcFixtures.write(a))
     assert(Warc.readPages(spark, dir).count() == 20)
     // A directory with no archives at all is loud too.
     val empty = tmpDir("warc_empty")
@@ -317,7 +317,7 @@ class WarcSpec extends SparkSuite {
     val in = tmpDir("warc_job_in")
     val out = tmpDir("warc_job_out")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/c.warc"),
-      Warc.write((0L until 200L).map(id => PageGen.row(42L, id))))
+      WarcFixtures.write((0L until 200L).map(id => PageGen.row(42L, id))))
     val rows = ExtractJob.run(spark,
       ExtractJob.Args(input = in, inputFormat = "warc", out = out, buckets = 8))
     assert(rows.map(_.docs).sum == 200)

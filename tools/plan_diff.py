@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
-"""Diff two PLANS.md files (graft.tools.ExplainDump output) section by section,
-ignoring what changes from run to run without the plan changing: expression
-ids (#123), RDD ids, plan ids, lambda variable numbers, JVM lambda class names,
-object hash codes and source line numbers.
+"""Diff two PLANS.md files (`graft.tools.Query explain` output; before that
+tool, `graft.tools.ExplainDump`) section by section, ignoring what changes from
+run to run without the plan changing: expression ids (#123), RDD ids, plan ids,
+lambda variable numbers, JVM lambda class names, object hash codes, source line
+numbers and the names of the query cache directories under /tmp/graft_q (q53s's
+signature store is named after the documents table's mtime).
 
     python3 tools/plan_diff.py PARENT/PLANS.md PLANS.md [section ...]
 
@@ -21,6 +23,7 @@ NORMALIZE = [
     (r"Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+", "Lambda"),
     (r"@[0-9a-f]{6,8}\b", "@"),
     (r"\.scala:\d+", ".scala:N"),
+    (r"file:/tmp/graft_q/[^\]\s,]+", "file:/tmp/graft_q/..."),
 ]
 
 
