@@ -233,7 +233,9 @@ object ExtractJob {
     val staging: Option[String] =
       if (waves.length <= 1) None
       else {
-        val dir = s"${a.out}_staging/${a.runId}"
+        // One directory per run, beside the output: the finally below
+        // removes all of it, and never another run's staging.
+        val dir = s"${a.out}_staging_${a.runId}"
         pages.toDF()
           .select(col("url"), col("html"), col("lang"))
           .withColumn("bucket", bucketExpr(a.buckets))

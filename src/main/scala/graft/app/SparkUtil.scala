@@ -32,8 +32,9 @@ object SparkUtil {
       // scarce memory-channel/storage bytes — measured on the job bench
       // (8M rows, local[16]): 19.4 s → 17.0 s (+12% throughput) and 4→16
       // scaling 0.70 → 0.82, because the parquet write's memcpy traffic
-      // is the job's non-scaling term (BENCH.md, MemBw). On a real
-      // cluster the same trade cuts storage + replication bytes.
+      // is the job's non-scaling term (BENCH.md, "Output codec A/B").
+      // On a real cluster the same trade cuts storage + replication
+      // bytes.
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     // Respect an existing master (spark-submit); default to local[cpus].

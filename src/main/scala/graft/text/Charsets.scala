@@ -122,11 +122,4 @@ object Charsets {
     }
     new String(b, skip, b.length - skip, cs)
   }
-
-  /** True when the payload under this charset is already byte-identical
-    * to its UTF-8 encoding (ASCII-only or already UTF-8) — lets callers
-    * skip a transcode round-trip.
-    */
-  def isUtf8Compatible(cs: Charset): Boolean =
-    cs == StandardCharsets.UTF_8
 }

@@ -72,9 +72,10 @@ class ExtractJobSpec extends SparkSuite {
     val rows = ExtractJob.run(spark,
       Args(rows = N, out = outMany, buckets = 8, waveSize = 2, runId = "waved"))
     assert(rows.map(_.docs).sum == N)
-    // The bucketed staging table is deleted after the run.
-    assert(!new java.io.File(s"${outMany}_staging").exists() ||
-      new java.io.File(s"${outMany}_staging").list().isEmpty)
+    // The bucketed staging table is deleted after the run, directory and all.
+    val outFile = new java.io.File(outMany)
+    val left = outFile.getParentFile.list().filter(_.startsWith(s"${outFile.getName}_staging"))
+    assert(left.isEmpty, s"staging left behind: ${left.mkString(", ")}")
     // Output tables are identical row-for-row.
     val a = spark.read.parquet(outOne).select("url", "text", "word_count", "success")
       .orderBy("url").collect()
