@@ -1,5 +1,8 @@
 package graft.app
 
+import java.net.URI
+
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the scale-relevant defaults applied in one place
@@ -37,6 +40,9 @@ object SparkUtil {
       // bytes.
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // `file:` writes without a forked `chmod` per output file and
+      // directory (no native libhadoop in the Spark jars); see LocalFs.
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
     // Respect an existing master (spark-submit); default to local[cpus].
     val withMaster =
       if (sys.props.contains("spark.master") || sys.env.contains("SPARK_MASTER"))
@@ -44,6 +50,14 @@ object SparkUtil {
       else b.master(s"local[$cpus]")
     val spark = conf.foldLeft(withMaster) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Hadoop caches one `file:` instance per user, whatever conf asked for
+    // it: a stock one cached before this session was built would win.
+    // Closing it evicts it (and runs its deleteOnExit paths now), so the
+    // next lookup builds the configured class.
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val local = FileSystem.get(URI.create("file:///"), hconf)
+    if (hconf.get("fs.file.impl") == classOf[LocalFs].getName && !local.isInstanceOf[LocalFs])
+      local.close()
     spark
   }
 }
