@@ -254,7 +254,7 @@ object CorpusPipeline {
     // registers (per-lang distinct shingles) and CMS counters (term
     // frequency) of the final corpus under $out/stats/ — mergeable
     // fixed-size summaries a later run folds in by register-max /
-    // counter-sum (StreamingSketchSpec proves the fold).
+    // counter-sum (CorpusOpsSpec proves both merges).
     if (a.stats) {
       import graft.queries.SketchStats
       val sh = clean

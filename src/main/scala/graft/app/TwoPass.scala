@@ -49,8 +49,8 @@ object TwoPass {
     * re-associated with their pass-1 rows; rather than silently
     * collapsing them to one output row (or multiplying them through the
     * flag join), the violation fails loudly below. Dedupe revisits
-    * first — `CorpusPipeline.latestSnapshot` / q77_url_revisit is the
-    * canonical keep-latest pass. The check runs on the CHECKPOINTED
+    * first — q77_url_revisit (queries.WebOps) is the canonical
+    * keep-latest pass. The check runs on the CHECKPOINTED
     * compact pass-1 output (url column only), so it costs one small
     * aggregation, never a second payload scan.
     */
@@ -64,7 +64,7 @@ object TwoPass {
       s"TwoPass requires url-unique input (one snapshot per url): " +
         s"'${dup.headOption.map(_.getString(0)).getOrElse("")}' appears " +
         s"${dup.headOption.map(_.getLong(1)).getOrElse(0L)} times — " +
-        "dedupe revisit snapshots first (CorpusPipeline.latestSnapshot / q77)")
+        "dedupe revisit snapshots first (q77_url_revisit)")
     val flagged = pass1.where(needsSecondPass).select("url")
     val in2 = pages.toDF().join(flagged, Seq("url"))
     val pass2 = ExtractJob.extractKernel(in2, secondQuality, slim)

@@ -340,8 +340,4 @@ final class Processor(
 
 object Processor {
   val default = new Processor()
-  /** Processor with no OCR backends: routing forces direct-only
-    * (router.py:142-143 analog at kernel level).
-    */
-  val directOnly = new Processor(primaryBackend = None, fallbackBackend = None)
 }

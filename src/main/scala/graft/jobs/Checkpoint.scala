@@ -27,19 +27,28 @@ final case class LineageRow(
 
 object Checkpoint {
 
-  /** Buckets already completed for this run_id (empty when the table
-    * doesn't exist yet). Small by construction (≤ numBuckets rows) —
-    * collected to the driver and broadcast as an isin filter, never a
-    * shuffle.
+  /** Buckets already completed for this run_id. Small by construction
+    * (≤ numBuckets rows) — collected to the driver and broadcast as an
+    * isin filter, never a shuffle.
+    *
+    * Empty only when no lineage was ever committed: the table is absent,
+    * or its directory holds nothing but `_`/`.`-prefixed entries (a
+    * first `append` killed after the committer made `_temporary/`). Any
+    * other read failure (a corrupt footer, a permission error, a schema
+    * change) stops the job naming the path: treating it as "nothing
+    * done" would rerun and overwrite every bucket.
     */
   def completedBuckets(spark: SparkSession, path: String, runId: String): Set[Int] = {
-    if (!exists(spark, path)) return Set.empty
+    if (!hasData(spark, path)) return Set.empty
     try {
       graft.app.TableIO.read(spark, path)
         .where(col("run_id") === runId && col("status") === "completed")
         .select("bucket").distinct()
         .collect().map(_.getInt(0)).toSet
-    } catch { case _: Exception => Set.empty }
+    } catch {
+      case e: Exception =>
+        throw new java.io.IOException(s"checkpoint table unreadable at $path: ${e.getMessage}", e)
+    }
   }
 
   /** Append lineage rows for buckets whose results were just written. */
@@ -54,7 +63,7 @@ object Checkpoint {
     * (Iceberg: `DELETE WHERE completed_ts < now() - INTERVAL 24 HOURS`.)
     */
   def cleanupExpired(spark: SparkSession, path: String, ttlHours: Int = 24): Long = {
-    if (!exists(spark, path)) return 0L
+    if (!hasData(spark, path)) return 0L
     val df = graft.app.TableIO.read(spark, path).cache()
     try {
       val cutoff = new java.sql.Timestamp(System.currentTimeMillis() - ttlHours * 3600L * 1000L)
@@ -81,8 +90,14 @@ object Checkpoint {
   private def fileSystem(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
+  // Hidden entries (`_temporary`, `_SUCCESS`, `.crc` files) are what
+  // Hadoop's committer and checksummed filesystem leave; readers skip them.
+  private def hasData(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    fileSystem(spark, p).exists(p)
+    val fs = fileSystem(spark, p)
+    fs.exists(p) && fs.listStatus(p).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
   }
 }

@@ -109,16 +109,6 @@ case class PageResult(
 /** Per-page error record (models.py:47-53). */
 case class PageError(page_number: Int, backend: String, error: String)
 
-/** Backend availability + counters (models.py:34-44). */
-case class BackendStatus(
-    primary_backend: String,
-    primary_available: Boolean,
-    fallback_backend: Option[String],
-    fallback_available: Boolean,
-    attempted_pages: Int,
-    successful_pages: Int,
-    failed_pages: Int)
-
 /** Processor configuration (models.py:23-31). */
 case class ProcessorConfig(
     textThreshold: Int = 10,

@@ -64,10 +64,11 @@ object QueryUtil {
     * `dst` columns hold one direction of each edge (any orderable
     * type); both directions are derived here. Output: (node, label)
     * where label = min node id of the component. Plan depth stays O(1)
-    * across rounds via localCheckpoint; convergence needs O(component
-    * diameter) rounds — at 10^12 scale the same loop runs with
-    * alternating large-star/small-star optimization, still plain joins.
-    * The iteration cap is a runaway guard only and fails LOUDLY.
+    * across rounds via localCheckpoint. A label moves one hop per round,
+    * so convergence takes O(component diameter) rounds, each a join plus
+    * a `count`; the `maxIters = 1000` cap is a runaway guard that fails
+    * LOUDLY through the `require` below. An O(log n)-round form is
+    * ROADMAP direction 3.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 1000): DataFrame = {
     val Seq(srcCol, dstCol) = pairs.columns.toSeq.take(2).map(col)
@@ -96,13 +97,6 @@ object QueryUtil {
     labels
   }
 
-  /** Guard for the O(n²) brute-force baselines (q23/q31): they broadcast
-    * the FULL corpus to every executor, which is correct and fast as a
-    * small-scale verifier but OOMs at production scale. Refuse loudly
-    * instead of silently melting a cluster; the scale paths are q24
-    * (MinHash-LSH) and q30/q32/q33 (LSH/IVF buckets). The count is a
-    * parquet metadata-only scan — effectively free.
-    */
   /** Lower-cased, www-/default-port-stripped host of a url — the same
     * normalization as the q54 canonicalizer (WebOps), extracted as the
     * single owner for every host-keyed stage (per-host cap, host
@@ -120,6 +114,13 @@ object QueryUtil {
     when(length(h) > 0, h).otherwise(lower(u))
   }
 
+  /** Guard for the O(n²) brute-force baselines (q23/q31): they broadcast
+    * the FULL corpus to every executor, which is correct and fast as a
+    * small-scale verifier but OOMs at production scale. Refuse loudly
+    * instead of silently melting a cluster; the scale paths are q24
+    * (MinHash-LSH) and q30/q32/q33 (LSH/IVF buckets). The count is a
+    * parquet metadata-only scan — effectively free.
+    */
   def requireBaselineScale(s: SparkSession, dir: String, table: String,
       query: String, maxRows: Long = 200000L): Unit = {
     val n = tbl(s, dir, table).count()

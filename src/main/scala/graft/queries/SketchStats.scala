@@ -4,12 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Single owner of the corpus-statistics sketch math shared by the
-  * oracle-checked queries (q82/q83), their streaming twins
-  * (`StreamingExtract.hllRegisterStream` / `cmsCounterStream`) and the
-  * `CorpusPipeline --stats` stage. Everything here is integer-exact and
-  * order-free (register max / counter sum), which is what makes the
-  * sketches both mergeable across partitions/days AND bit-identical
-  * between Spark and the DuckDB oracle.
+  * oracle-checked queries (q82/q83) and the `CorpusPipeline --stats`
+  * stage. Everything here is integer-exact and order-free (register
+  * max / counter sum), which is what makes the sketches both mergeable
+  * across partitions/days AND bit-identical between Spark and the
+  * DuckDB oracle.
   *
   * HLL (Flajolet et al. 2007): m=64 registers; bucket = first md5 byte
   * mod 64, rho = leading-zero rank of the next 60 bits (15 hex chars),

@@ -421,10 +421,10 @@ object TextOps {
     // ---- The complete near-dup dedup pipeline: MinHash-LSH candidate
     // generation → exact-Jaccard verification (only on candidates — the
     // O(n²) compare never happens) → connected-components clustering by
-    // iterative smallest-label propagation (converges in O(cluster
-    // diameter) rounds; at 10^12 scale the same loop runs with
-    // alternating large-star/small-star optimization, still plain
-    // joins). cluster_id = min doc_id of the component = the canonical
+    // iterative smallest-label propagation (QueryUtil.connectedComponents:
+    // O(cluster diameter) rounds, capped at maxIters = 1000 by a
+    // require; an O(log n)-round form is ROADMAP direction 3).
+    // cluster_id = min doc_id of the component = the canonical
     // document to keep.
     ("q35_dup_clusters",
       (s, d) => {

@@ -1,30 +1,29 @@
 package graft.streaming
 
-import graft.extract.PayloadMemo
-import graft.model.{KernelPage, Page}
+import graft.model.Page
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Structured-Streaming surface of the extraction pipeline.
+/** Structured-Streaming surface: two incremental streams, each running
+  * the same code as its batch form.
   *
   * The reference has no stream processing (SURVEY.md §2.9) — its async
-  * job layer is batch-with-progress, which maps to ExtractJob. This
-  * module is the graft-added incremental path for a continuously-fed
-  * pages table: the SAME kernel runs per micro-batch, so batch and
-  * streaming share one code path (`readStream` → `ExtractJob.extractKernel`
-  * → `writeStream`), with exactly-once parquet output via the streaming
-  * checkpoint — the streaming twin of ExtractJob's bucket lineage.
-  *
-  * Scale notes: the kernel stage is stateless map-only (no state store);
-  * watermarked windowed aggregation is used only for the metrics stream
-  * where state is bounded by (window × pdf_type) cardinality.
+  * job layer is batch-with-progress, which maps to ExtractJob. The
+  * graft adds two streams over continuously-fed tables:
+  *  - `extractStream` / `runAvailableNow`: incremental extraction of a
+  *    pages table through the batch kernel stage (`readStream` →
+  *    `ExtractJob.extractKernel` → `writeStream`), with exactly-once
+  *    parquet output via the streaming checkpoint. The kernel stage is
+  *    stateless map-only (no state store).
+  *  - `nearDedupStream` / `nearDedupBatch`: the q53 near-dup engine
+  *    (queries.Sketch) per micro-batch of a documents table, against a
+  *    signature store (queries.SignatureStore) that accumulates across
+  *    batches.
   */
 object StreamingExtract {
 
-  /** Read-schema of the synthetic `documents` table (TESTDATA.md) —
-    * single owner for every documents-sourced stream builder below.
-    */
+  /** Read-schema of the synthetic `documents` table (TESTDATA.md). */
   private val DocumentsSchema =
     "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
 
@@ -53,289 +52,6 @@ object StreamingExtract {
       .select("url", "pdf_type", "total_pages", "text", "word_count",
         "extraction_method", "confidence", "success", "quality", "lang")
       .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Per-user session accumulator for the custom-state path. */
-  final case class SessionAgg(lastUs: Long, nSessions: Long, nEvents: Long)
-
-  /** Per-user state: the fold over all CONFIRMED events (event time ≤
-    * watermark when folded — no earlier event can still arrive, modulo
-    * the allowed lateness) plus a buffer of not-yet-confirmed (us,
-    * event_id) pairs. The buffer is bounded by (watermark delay × per-
-    * user event rate), NOT total event volume.
-    */
-  final case class SessionState(confirmed: SessionAgg, buffer: Vector[(Long, Long)])
-
-  /** Gap-based sessionization with EXPLICIT state
-    * (`mapGroupsWithState`) — the streaming twin of the batch window
-    * form (queries.Relational q34). Micro-batch and cross-file ordering
-    * is NOT trusted (the file source orders batches by mod-time/path,
-    * not event time): each user's events are buffered in state and only
-    * folded into the running (lastTs, nSessions, nEvents) once the
-    * event-time watermark passes them, so any event that arrives within
-    * `lateness` lands in its correct sorted position before it is
-    * committed. Each batch emits provisional totals = confirmed fold +
-    * fold of the (sorted) still-buffered suffix; the final emission under
-    * AvailableNow therefore covers every event in global (ts, event_id)
-    * order. Events later than `lateness` are a documented correctness
-    * bound (standard watermark contract), not a silent reorder.
-    */
-  def sessionizeStream(
-      spark: SparkSession,
-      inputDir: String,
-      tableName: String,
-      gapUs: Long = 6L * 3600 * 1000000,
-      lateness: String = "1 hour"): StreamingQuery = {
-    import spark.implicits._
-    // The watermarked event-time column must itself reach the grouped
-    // Dataset (projecting it away detaches the watermark from the
-    // stateful operator), so `ts` is carried through and micros derived
-    // in the lambda.
-    val events = spark.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-      .parquet(inputDir)
-      .withWatermark("ts", lateness)
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .as[(Long, java.sql.Timestamp, Long)]
-    def micros(t: java.sql.Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-
-    def fold(init: SessionAgg, evs: Seq[(Long, Long)]): SessionAgg =
-      evs.foldLeft(init) { case (a, (us, _)) =>
-        val newSession = a.lastUs == Long.MinValue || us - a.lastUs > gapUs
-        SessionAgg(us, a.nSessions + (if (newSession) 1 else 0), a.nEvents + 1)
-      }
-
-    def update(user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long)],
-        state: GroupState[SessionState]): (Long, Long, Long) = {
-      val prev = state.getOption.getOrElse(SessionState(SessionAgg(Long.MinValue, 0L, 0L), Vector.empty))
-      val merged = (prev.buffer ++ rows.map(r => (micros(r._2), r._3))).sorted
-      // Commit the prefix the watermark has passed; keep the rest buffered.
-      val wmUs = state.getCurrentWatermarkMs() * 1000L
-      val (safe, keep) = merged.partition(_._1 <= wmUs)
-      val confirmed = fold(prev.confirmed, safe)
-      state.update(SessionState(confirmed, keep))
-      val provisional = fold(confirmed, keep)
-      (user, provisional.nSessions, provisional.nEvents)
-    }
-
-    events.groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
-      .toDF("user_id", "n_sessions", "n_events")
-      .writeStream
-      .format("memory")
-      .queryName(tableName)
-      .outputMode(OutputMode.Update)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Per-url revisit state: one fixed-size record per distinct url. */
-  final case class SnapshotState(n: Long, keptDoc: Long, keptTs: Long, firstTs: Long)
-
-  /** Streaming URL-revisit dedup — the incremental twin of the batch
-    * q77 operator (queries.WebOps): a crawl feed delivers multiple
-    * snapshots of the same url across micro-batches, and each trigger
-    * emits the url's current NEWEST snapshot (max by (ts, doc_id) —
-    * lexicographic, so ties are deterministic) plus snapshot counters.
-    * The fold is a commutative monoid (count/max/min), so arrival order
-    * across files and batches cannot change the final answer — no
-    * watermark or event-time buffering is needed, unlike
-    * sessionizeStream whose fold is order-sensitive. State is one
-    * fixed-size record per DISTINCT url; at 10^12 urls that is the
-    * RocksDB state-store deployment, or the persistent-table pattern
-    * (queries.SignatureStore) once the url set outgrows streaming
-    * state.
-    */
-  def latestSnapshotStream(
-      spark: SparkSession,
-      inputDir: String,
-      tableName: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import spark.implicits._
-    val reader = spark.readStream
-      .schema("doc_id LONG, url STRING, ts_s LONG")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val snaps = reader.parquet(inputDir).as[(Long, String, Long)]
-
-    def update(url: String, rows: Iterator[(Long, String, Long)],
-        state: GroupState[SnapshotState]): (String, Long, Long, Long, Long) = {
-      val init = state.getOption
-        .getOrElse(SnapshotState(0L, Long.MinValue, Long.MinValue, Long.MaxValue))
-      val next = rows.foldLeft(init) { case (a, (doc, _, ts)) =>
-        val takes = ts > a.keptTs || (ts == a.keptTs && doc > a.keptDoc)
-        SnapshotState(a.n + 1,
-          if (takes) doc else a.keptDoc,
-          if (takes) ts else a.keptTs,
-          math.min(a.firstTs, ts))
-      }
-      state.update(next)
-      (url, next.n, next.keptDoc, next.firstTs, next.keptTs)
-    }
-
-    snaps.groupByKey(_._2)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
-      .toDF("url", "n_snapshots", "kept_doc_id", "first_ts_s", "last_ts_s")
-      .writeStream
-      .format("memory")
-      .queryName(tableName)
-      .outputMode(OutputMode.Update)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Reader for latestSnapshotStream's Update-mode memory sink. The
-    * sink is an UPDATE LOG — one row per (url, micro-batch that touched
-    * it) — NOT a table of current state; consumers that join it raw see
-    * up to one stale row per batch. A url's current state is its
-    * emission with the highest n_snapshots (the counter is monotone),
-    * which this helper selects — the single owner of that contract.
-    */
-  def latestSnapshots(spark: SparkSession, tableName: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    spark.table(tableName)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("url").orderBy(col("n_snapshots").desc)))
-      .where(col("rn") === 1).drop("rn")
-  }
-
-  /** Streaming maintenance of the q82 HyperLogLog registers: per
-    * micro-batch, fold each arriving document's shingle hashes into the
-    * per-(lang, bucket) register max. The register update is a plain
-    * streaming max aggregate because HLL is DUPLICATE-INSENSITIVE —
-    * max(rho) over all occurrences equals max(rho) over distinct values
-    * — so no cross-batch dropDuplicates state is needed at all. State =
-    * langs × 64 registers (a few hundred longs); output mode complete,
-    * so the sink table always holds the sketch of everything ingested
-    * so far. `StreamingSketchSpec` proves the streamed registers equal
-    * the one-pass batch registers across forced micro-batch splits —
-    * the "daily partials fold into the corpus sketch" contract, live.
-    */
-  def hllRegisterStream(
-      spark: SparkSession,
-      inputDir: String,
-      tableName: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import graft.queries.{QueryUtil, SketchStats}
-    val reader = spark.readStream
-      .schema(DocumentsSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val shingled = reader.parquet(inputDir)
-      .withColumn("toks", QueryUtil.tokens(col("text")))
-      .select(col("lang"), explode_outer(QueryUtil.shingles3(col("toks"))).as("g"))
-      .where(col("g").isNotNull)
-    SketchStats.hllRegisters(shingled, "g", "lang")
-      .writeStream
-      .format("memory")
-      .queryName(tableName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Streaming maintenance of the q83 Count-Min counters: each arriving
-    * token increments its d=4 md5-derived cells; the streaming sum
-    * aggregate IS the sketch merge (counter addition commutes across
-    * micro-batches). State = 4×256 longs regardless of corpus size.
-    * Together with hllRegisterStream this makes the corpus statistics
-    * incrementally maintainable: a 10^12-token corpus's distinct and
-    * frequency summaries stay current without any batch recomputation.
-    */
-  def cmsCounterStream(
-      spark: SparkSession,
-      inputDir: String,
-      tableName: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import graft.queries.{QueryUtil, SketchStats}
-    val reader = spark.readStream
-      .schema(DocumentsSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    SketchStats.cmsCounters(
-      reader.parquet(inputDir)
-        .select(explode(QueryUtil.tokens(col("text"))).as("term")), "term")
-      .writeStream
-      .format("memory")
-      .queryName(tableName)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Streaming dedup output row: extraction output + the content hash it
-    * was deduplicated on (md5 of extracted text — 128 bits so hash
-    * collisions are negligible even at 10^12 documents; a 64-bit key
-    * would produce ~10^4 false merges there) + the page's event time.
-    */
-  final case class DedupRow(
-      url: String,
-      warc_ts: java.sql.Timestamp,
-      content_hash: String,
-      word_count: Int,
-      text: String)
-
-  /** Incremental EXACT dedup: extract each page, drop documents whose
-    * extracted text was already seen. The streaming twin of the batch
-    * hash-groupBy dedup (queries.TextOps q22) for a continuously-fed
-    * pages table — the arriving-batch-vs-corpus case a training-data
-    * pipeline hits daily.
-    *
-    * Two state regimes:
-    *  - `lateness = None` (default): global dedup via `dropDuplicates` —
-    *    state holds one entry per DISTINCT document ever seen. State is
-    *    hash-partitioned across executors and grows with the distinct
-    *    corpus; at 10^12 docs that is a RocksDB-state-store deployment
-    *    (~50 B/key → ~50 TB across the fleet), or periodic compaction
-    *    into the batch job. Correct-by-construction, cost is explicit.
-    *  - `lateness = Some(delay)`: bounded state via
-    *    `dropDuplicatesWithinWatermark` — duplicates are only suppressed
-    *    while their first copy is within the event-time watermark. State
-    *    is bounded by (delay × arrival rate) regardless of corpus size;
-    *    the right choice when duplicates cluster in time (recrawls,
-    *    mirror bursts) and a trailing batch dedup mops up the rest.
-    *
-    * Which document survives a duplicate set is arrival-order dependent
-    * (streaming has no total order) — the CONTENT kept is deterministic,
-    * the representative url is not, matching `dropDuplicates` contract.
-    */
-  def dedupStream(
-      spark: SparkSession,
-      inputDir: String,
-      outDir: String,
-      checkpointDir: String,
-      quality: String = "balanced",
-      lateness: Option[String] = None): StreamingQuery = {
-    import spark.implicits._
-    val pages = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Page].schema)
-      .parquet(inputDir)
-      .select("url", "warc_ts", "html", "lang") // golden `text` pruned
-      .as[(String, java.sql.Timestamp, Array[Byte], String)]
-    val rows = pages.mapPartitions { it =>
-      val memo = new PayloadMemo(quality)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      it.flatMap { case (url, ts, html, lang) =>
-        val r = memo.extract(KernelPage(url, html, lang))
-        if (r.success && r.text.nonEmpty) {
-          md.reset()
-          val hash = md.digest(r.text.getBytes("UTF-8"))
-            .map(b => f"$b%02x").mkString
-          Some(DedupRow(r.url, ts, hash, r.word_count, r.text))
-        } else None
-      }
-    }
-    val deduped = lateness match {
-      case Some(delay) =>
-        rows.withWatermark("warc_ts", delay)
-          .dropDuplicatesWithinWatermark("content_hash")
-      case None => rows.dropDuplicates("content_hash")
-    }
-    deduped.writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
@@ -447,44 +163,5 @@ object StreamingExtract {
     // arrays and the precomputed band keys. SignatureStore.writeRows
     // owns the layout (one schema for batch and streaming).
     SignatureStore.writeRows(sk.join(dups, Seq("doc_id"), "left_anti"), sigDir, batchId)
-  }
-
-  /** One metrics row per extracted page (event time carried through the
-    * kernel for windowing).
-    */
-  final case class StreamMetric(warc_ts: java.sql.Timestamp, pdf_type: String, word_count: Int)
-
-  /** Streaming metrics roll-up: tumbling event-time windows over
-    * warc_ts with a watermark bounding state (per-window docs and word
-    * volume by pdf_type). Complete mode → in-memory table `tableName`.
-    */
-  def metricsStream(
-      spark: SparkSession,
-      inputDir: String,
-      tableName: String,
-      quality: String = "fast"): StreamingQuery = {
-    import spark.implicits._
-    val pages = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Page].schema)
-      .parquet(inputDir)
-      .select("url", "warc_ts", "html", "lang") // golden `text` pruned
-      .as[(String, java.sql.Timestamp, Array[Byte], String)]
-    pages.mapPartitions { it =>
-      val memo = new PayloadMemo(quality)
-      it.map { case (url, ts, html, lang) =>
-        val r = memo.extract(KernelPage(url, html, lang))
-        StreamMetric(ts, r.pdf_type, r.word_count)
-      }
-    }
-      .withWatermark("warc_ts", "1 hour")
-      .groupBy(window(col("warc_ts"), "1 day"), col("pdf_type"))
-      .agg(count(lit(1)).as("n_docs"),
-           sum(col("word_count").cast("long")).as("words"))
-      .writeStream
-      .format("memory")
-      .queryName(tableName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 }

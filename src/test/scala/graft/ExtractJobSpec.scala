@@ -141,6 +141,48 @@ class ExtractJobSpec extends SparkSuite {
     assert(Checkpoint.completedBuckets(spark, ckpt, "u1") == (0 until 4).toSet)
   }
 
+  /** Every non-hidden file under `dir` with its length and mtime. */
+  private def fileStamps(dir: String): Set[(String, Long, Long)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(dir)).filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+      .map(f => (f.getPath, f.length(), f.lastModified())).toSet
+  }
+
+  test("an unreadable checkpoint table fails the run naming its path, rewriting no bucket") {
+    val out = tmpDir("xjob-badckpt")
+    val ckpt = tmpDir("xjob-badckpt-ckpt") + "/lineage"
+    val a = Args(rows = 100, out = out, checkpoint = ckpt, runId = "t1", buckets = 4)
+    assert(ExtractJob.run(spark, a).map(_.bucket).sorted == (0 until 4))
+    // Truncate the lineage file to half its bytes (a torn copy), and drop
+    // its checksum so the parquet reader, not the checksum, meets it.
+    val parts = new java.io.File(ckpt).listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.nonEmpty)
+    parts.foreach { f =>
+      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+      java.nio.file.Files.write(f.toPath, bytes.take(bytes.length / 2))
+      new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+    }
+    // A rewritten bucket would get new part files (fresh names).
+    val before = fileStamps(out)
+    val e = intercept[Exception](ExtractJob.run(spark, a))
+    assert(e.getMessage.contains(ckpt), e.getMessage)
+    assert(fileStamps(out) == before)
+  }
+
+  test("a checkpoint with no committed lineage (absent, or only _temporary) runs every bucket") {
+    for (killedAppend <- Seq(false, true)) {
+      val ckpt = tmpDir("xjob-newckpt") + "/lineage"
+      // What a first append killed after the committer started leaves.
+      if (killedAppend) assert(new java.io.File(ckpt, "_temporary/0").mkdirs())
+      val a = Args(rows = 100, out = tmpDir("xjob-newckpt-out"), checkpoint = ckpt,
+        runId = "t2", buckets = 4)
+      assert(Checkpoint.completedBuckets(spark, ckpt, "t2") == Set.empty)
+      assert(ExtractJob.run(spark, a).map(_.bucket).sorted == (0 until 4), s"killedAppend=$killedAppend")
+      assert(Checkpoint.completedBuckets(spark, ckpt, "t2") == (0 until 4).toSet)
+    }
+  }
+
   test("--slim job: flat schema, same per-document values as the full run") {
     val outFull = tmpDir("xjob-full")
     val outSlim = tmpDir("xjob-slim")

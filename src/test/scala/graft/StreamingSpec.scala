@@ -4,9 +4,9 @@ import graft.streaming.StreamingExtract
 import graft.synth.PageGen
 import org.apache.spark.sql.functions._
 
-/** Structured-Streaming surface: the streaming path must produce results
-  * identical to the batch kernel, resume from its checkpoint without
-  * duplicates, and roll up windowed metrics.
+/** Incremental extraction stream: the streaming path must produce
+  * results identical to the batch kernel and resume from its checkpoint
+  * without duplicates.
   */
 class StreamingSpec extends SparkSuite {
 
@@ -21,16 +21,20 @@ class StreamingSpec extends SparkSuite {
     val q = StreamingExtract.runAvailableNow(spark, in, out, ckpt)
     q.awaitTermination()
 
+    // Every column runAvailableNow writes, against direct kernel calls.
+    val cols = Seq("url", "pdf_type", "total_pages", "text", "word_count",
+      "extraction_method", "confidence", "success", "quality", "lang")
     val streamed = spark.read.parquet(out)
-      .select("url", "text", "word_count").orderBy("url").collect()
+    assert(streamed.columns.toSeq.sorted == cols.sorted)
+    val streamedRows = streamed.select(cols.map(col): _*).orderBy("url").collect()
     val batch = {
       val proc = graft.extract.Processor.default
       spark.read.parquet(in).as[graft.model.Page]
         .mapPartitions(it => it.map(p => proc.extract(p, "balanced")))
-        .select("url", "text", "word_count").orderBy("url").collect()
+        .select(cols.map(col): _*).orderBy("url").collect()
     }
-    assert(streamed.length == 400)
-    assert(streamed.sameElements(batch))
+    assert(streamedRows.length == 400)
+    assert(streamedRows.sameElements(batch))
   }
 
   test("checkpoint: second availableNow run with new files processes only them") {
@@ -52,159 +56,5 @@ class StreamingSpec extends SparkSuite {
     // No reprocessing of the first 100 rows: output grows by exactly the
     // appended row count.
     assert(spark.read.parquet(out).count() == 100 + added)
-  }
-
-  test("streaming exact dedup keeps one document per distinct text == batch dedup") {
-    import spark.implicits._
-    val in = tmpDir("dedup_in")
-    val out = tmpDir("dedup_out")
-    val ckpt = tmpDir("dedup_ckpt")
-    // PageGen plants ~6% duplicate clusters — the dedup has real work.
-    PageGen.generate(spark, 600).toDF()
-      .repartition(3).write.mode("overwrite").parquet(in)
-    StreamingExtract.dedupStream(spark, in, out, ckpt).awaitTermination()
-
-    val streamed = spark.read.parquet(out)
-    val batchTexts = {
-      val proc = graft.extract.Processor.default
-      spark.read.parquet(in).as[graft.model.Page]
-        .mapPartitions(it => it.map(p => proc.extract(p, "balanced")))
-        .where(col("success") && length(col("text")) > 0)
-        .select("text").distinct().as[String].collect().toSet
-    }
-    // The set of distinct contents kept matches batch dedup exactly, and
-    // nothing passes twice (representative choice is order-dependent —
-    // content set + counts are the deterministic contract).
-    assert(streamed.count() == batchTexts.size)
-    assert(streamed.select("text").as[String].collect().toSet == batchTexts)
-    assert(streamed.select("content_hash").distinct().count() == batchTexts.size)
-
-    // Incremental: re-running over a new file that repeats old content
-    // emits nothing new (state carries across runs via the checkpoint).
-    spark.read.parquet(in).limit(50)
-      .coalesce(1).write.mode("append").parquet(in)
-    StreamingExtract.dedupStream(spark, in, out, ckpt).awaitTermination()
-    assert(spark.read.parquet(out).count() == batchTexts.size)
-  }
-
-  test("watermark-bounded dedup suppresses in-window duplicates") {
-    import spark.implicits._
-    val in = tmpDir("wdedup_in")
-    val out = tmpDir("wdedup_out")
-    val ckpt = tmpDir("wdedup_ckpt")
-    PageGen.generate(spark, 300).toDF()
-      .repartition(2).write.mode("overwrite").parquet(in)
-    // PageGen's warc_ts spread is narrow relative to a 30-day delay, so
-    // every duplicate lands within the watermark window → output matches
-    // the global-dedup distinct count.
-    StreamingExtract.dedupStream(spark, in, out, ckpt,
-      lateness = Some("30 days")).awaitTermination()
-    val streamed = spark.read.parquet(out)
-    val distinctTexts = {
-      val proc = graft.extract.Processor.default
-      spark.read.parquet(in).as[graft.model.Page]
-        .mapPartitions(it => it.map(p => proc.extract(p, "balanced")))
-        .where(col("success") && length(col("text")) > 0)
-        .select("text").distinct().count()
-    }
-    assert(streamed.count() == distinctTexts)
-  }
-
-  test("watermark-bounded dedup EXPIRES state: a dup after the window passes through") {
-    import spark.implicits._
-    val in = tmpDir("exp_in")
-    val out = tmpDir("exp_out")
-    val ckpt = tmpDir("exp_ckpt")
-    val day = 86400000L
-    val t0 = 1700000000000L
-    def page(url: String, tsMs: Long, body: String) = graft.model.Page(
-      url, new java.sql.Timestamp(tsMs),
-      s"<html><body><p>$body</p></body></html>".getBytes("UTF-8"), "", "en")
-
-    def runFile(pages: Seq[graft.model.Page]): Unit = {
-      pages.toDS().toDF().coalesce(1).write.mode("append").parquet(in)
-      StreamingExtract.dedupStream(spark, in, out, ckpt,
-        lateness = Some("30 days")).awaitTermination()
-    }
-    // Run 1: the content at T0 — emitted, state entry expires at T0+30d.
-    runFile(Seq(page("https://a.example/1", t0, "repeated body"),
-                page("https://a.example/2", t0 + 1, "repeated body")))
-    assert(spark.read.parquet(out).count() == 1) // in-window dup suppressed
-    // Run 2: unrelated content at T0+90d advances the watermark to
-    // T0+60d, evicting the expired entry.
-    runFile(Seq(page("https://a.example/3", t0 + 90 * day, "other body")))
-    // Run 3: the SAME content again, after the window — passes through
-    // (the documented bounded-state trade; a trailing batch dedup mops up).
-    runFile(Seq(page("https://a.example/4", t0 + 91 * day, "repeated body")))
-    val texts = spark.read.parquet(out).select("text").as[String].collect()
-    assert(texts.count(_.contains("repeated body")) == 2,
-      s"expected the out-of-window dup to re-emit; got ${texts.toSeq}")
-    assert(texts.count(_.contains("other body")) == 1)
-  }
-
-  test("windowed metrics stream aggregates by event-time window") {
-    val in = tmpDir("met_in")
-    PageGen.generate(spark, 300).toDF()
-      .repartition(2).write.mode("overwrite").parquet(in)
-    StreamingExtract.metricsStream(spark, in, "met_tbl").awaitTermination()
-    val rows = spark.table("met_tbl")
-    assert(rows.agg(sum("n_docs")).collect()(0).getLong(0) == 300L)
-    // Every row has a closed 1-day window and a known pdf_type.
-    val types = rows.select("pdf_type").distinct().collect().map(_.getString(0)).toSet
-    assert(types.subsetOf(Set("pure_text", "pure_image", "hybrid", "unknown")))
-  }
-
-  test("mapGroupsWithState sessionization equals the batch window form (q34)") {
-    import org.apache.spark.sql.functions._
-    // Stage the single-file table into a directory (file stream sources
-    // read directories) — also gives the source multiple files.
-    val in = tmpDir("sess_in")
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .repartition(3).write.mode("overwrite").parquet(in)
-    StreamingExtract.sessionizeStream(spark, in, "sess_tbl")
-      .awaitTermination()
-    val streamed = spark.table("sess_tbl")
-      .groupBy("user_id")
-      .agg(max("n_sessions").as("n_sessions"), max("n_events").as("n_events"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val batch = SparkEntry.queries("q34_sessionize")(spark, "/root/testdata/sf0.001")
-      .select("user_id", "n_sessions", "n_events")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(streamed.sameElements(batch))
-  }
-
-  test("streaming url-revisit dedup equals the batch q77 semantics across micro-batches") {
-    import org.apache.spark.sql.functions._
-    val in = tmpDir("snap_in")
-    // The q77 planting (url ~ doc_id % 120, injective ts) over 500 ids,
-    // split into 3 source files and forced into one-file micro-batches
-    // so revisit groups genuinely straddle batch boundaries.
-    val urlKey = col("id") % 120
-    val planted = spark.range(0, 500).select(
-      col("id").as("doc_id"),
-      concat(lit("https://site"), urlKey % 7, lit(".com/page/"), urlKey).as("url"),
-      (lit(1600000000L) + (col("id") * 7919) % 100000).as("ts_s"))
-    Seq(col("doc_id") % 3 === 0, col("doc_id") % 3 === 1, col("doc_id") % 3 === 2)
-      .foreach(p => planted.where(p).coalesce(1).write.mode("append").parquet(in))
-
-    graft.streaming.StreamingExtract
-      .latestSnapshotStream(spark, in, "snap_tbl", maxFilesPerTrigger = Some(1))
-      .awaitTermination()
-
-    // The operator's own reader owns the update-log → current-state
-    // contract (one stale row per touching micro-batch otherwise).
-    val streamed = graft.streaming.StreamingExtract
-      .latestSnapshots(spark, "snap_tbl")
-      .select("url", "n_snapshots", "kept_doc_id", "first_ts_s", "last_ts_s")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .sortBy(_._1)
-    val batch = planted.groupBy("url")
-      .agg(count(lit(1)).as("n_snapshots"),
-        max_by(col("doc_id"), col("ts_s")).as("kept_doc_id"),
-        min("ts_s").as("first_ts_s"), max("ts_s").as("last_ts_s"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .sortBy(_._1)
-    assert(streamed.length == 120)
-    assert(streamed.sameElements(batch))
   }
 }
