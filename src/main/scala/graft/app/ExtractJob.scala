@@ -91,10 +91,12 @@ object ExtractJob {
       // contract. (Orchestrators that can't receive HTTP use the file
       // seam instead.)
       notifyUrl: String = "",
-      // Post-job small-file compaction (CompactJob.run on the output):
-      // an incremental corpus accretes one part file per wave per
-      // bucket; compacting while the job still owns the table avoids a
-      // separate maintenance window. 0 = off.
+      // Post-job small-file compaction (CompactJob.run on the output,
+      // parquet format only). Each wave overwrites whole buckets, and
+      // with the write shuffle a bucket is one file; buckets fragment
+      // under --no-write-shuffle/--repartition or other writers.
+      // Compacting while the job still owns the table avoids a separate
+      // maintenance window. 0 = off.
       compactTarget: Long = 0L,
       // K6 two-pass cascade (TwoPass.extract): cheap `fast` kernel over
       // everything, `accurate` re-extraction of the docs pass 1 flags,
@@ -204,6 +206,8 @@ object ExtractJob {
     */
   def run(spark: SparkSession, a0: Args): Seq[LineageRow] = {
     val a = a0.copy(quality = normalizeQuality(a0.quality))
+    // A compaction that cannot run fails the job before any wave writes.
+    if (a.compactTarget > 0) CompactJob.requireParquet()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     val pages = loadPages(spark, a)

@@ -22,13 +22,9 @@ object TableIO {
     sys.props.getOrElse("graft.table.format",
       sys.env.getOrElse("SPARK_GRAFT_TABLE_FORMAT", "parquet"))
 
-  /** Parquet reads resolve per-bucket compaction manifests (ManifestIO —
-    * no-op fast path when none exist); real table formats own their own
-    * manifests, so non-parquet formats load directly.
-    */
+  /** Read a table (input pages, results, lineage) in the configured format. */
   def read(spark: SparkSession, path: String): DataFrame =
-    if (format == "parquet") ManifestIO.read(spark, path)
-    else spark.read.format(format).load(path)
+    spark.read.format(format).load(path)
 
   /** Append rows (lineage/metrics tables). */
   def append(df: DataFrame, path: String): Unit =

@@ -111,9 +111,6 @@ case class PageError(page_number: Int, backend: String, error: String)
 
 /** Processor configuration (models.py:23-31). */
 case class ProcessorConfig(
-    textThreshold: Int = 10,
-    enableTwoPass: Boolean = true,
-    confidenceThreshold: Double = 0.8,
     fallbackOnError: Boolean = true,
     includePageMarkers: Boolean = true)
 

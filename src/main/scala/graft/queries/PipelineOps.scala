@@ -23,11 +23,8 @@ object PipelineOps {
   /** Deterministic page table; independent of sfDir by design. */
   private def pages(s: SparkSession, n: Long): Dataset[Page] = PageGen.generate(s, n)
 
-  /** One binary "multimodal" record: treat payload as opaque bytes with
-    * a stubbed decode (deterministic fake dims — the real image/audio
-    * decoder is environment-dependent and out of sandbox scope; the
-    * Spark-side plumbing — binary column, per-partition kernel, typed
-    * output schema — is real).
+  /** One binary "multimodal" record: payload size, magic, kind and, for
+    * images, header dimensions (`decodeMedia`).
     */
   final case class MediaMeta(
       url: String, n_bytes: Long, magic: String, media_kind: String,
@@ -39,27 +36,11 @@ object PipelineOps {
   final case class MediaFeature(
       url: String, kind: String, idx: Int, start_ms: Long, dur_ms: Long)
 
-  def decodeStub(url: String, payload: Array[Byte]): MediaMeta = {
-    val n = if (payload == null) 0 else payload.length
-    val magic =
-      if (n >= 5 && new String(payload, 0, 5, java.nio.charset.StandardCharsets.ISO_8859_1) == "%PDF-") "pdf"
-      else if (n > 0 && (payload(0) == '<' || payload(0) == ' ')) "html"
-      else "bin"
-    // Deterministic fake decode: dimensions derived from content hash.
-    val h = java.util.Arrays.hashCode(payload)
-    MediaMeta(url, n.toLong, magic,
-      media_kind = if (magic == "bin") "image" else "document",
-      width = math.floorMod(h, 640) + 1,
-      height = math.floorMod(h >> 8, 480) + 1,
-      frames = 1)
-  }
-
   /** Real multimodal decode: header-only dimension parse for the image
     * container formats (graft.media.ImageHeaders — PNG/JPEG/GIF/BMP/
     * TIFF, the reference's accepted upload types, backends/base.py:
     * 202-209); document payloads (pdf/html) classify by magic with no
-    * dimensions. Replaces the round-1 `decodeStub` in the x46 kernel —
-    * the stub remains only as the SQL-projection analog used by q28.
+    * dimensions.
     */
   def decodeMedia(url: String, payload: Array[Byte]): MediaMeta = {
     graft.media.ImageHeaders.decode(payload) match {

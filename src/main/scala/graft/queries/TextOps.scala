@@ -649,7 +649,7 @@ object TextOps {
              FROM sc ORDER BY doc_id""")),
 
     // ---- Multimodal metadata pass: payload treated as opaque bytes →
-    // (byte length, content digest, stub-decoded dimensions). The real
+    // (byte length, content digest, length-derived dimensions). The real
     // binary kernel lives in PipelineOps.x46; this is its SQL-checkable
     // projection.
     ("q28_multimodal_meta",

@@ -1,11 +1,13 @@
 package graft
 
-import graft.app.CompactJob
+import graft.app.{CompactJob, TableIO}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
-/** Small-file compaction: row-set preservation, idempotence, and the
-  * crash-recovery rename protocol.
+/** Small-file compaction: row-set preservation, idempotence, the
+  * rename protocol as readers see it, and crash recovery.
   */
 class CompactJobSpec extends SparkSuite {
 
@@ -80,7 +82,7 @@ class CompactJobSpec extends SparkSuite {
     val frag = tmpDir("xjob_frag")
     val tidy = tmpDir("xjob_tidy")
     // no-write-shuffle + repartition fragments each bucket (one file
-    // per input partition) — the layout an incremental corpus accretes.
+    // per input partition).
     ExtractJob.run(spark, ExtractJob.Args(rows = 600, out = frag, buckets = 4,
       writeShuffle = false, repartition = 5))
     assert(partFiles(frag).size > 4)
@@ -93,19 +95,24 @@ class CompactJobSpec extends SparkSuite {
     assert(a.sameElements(b))
   }
 
+  private def fsOf(dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   test("recovery restores a bucket stranded mid-swap and drops stale tmp/old dirs") {
     val dir = tmpDir("compact_rec")
     mkFragmented(dir, buckets = 2, filesPer = 3)
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(dir)
+    val (_, old0) = CompactJob.workDirs(root, "bucket=0")
+    val (tmp1, old1) = CompactJob.workDirs(root, "bucket=1")
 
     // Crash between rename(live -> old) and rename(tmp -> live):
-    // only the .compact_old dir exists for bucket=0.
-    fs.rename(new Path(dir, "bucket=0"), new Path(dir, "bucket=0.compact_old"))
+    // only the old dir exists for bucket=0.
+    fs.rename(new Path(dir, "bucket=0"), old0)
     // Crash after step 3 for bucket=1: live is intact, a stale old
     // copy remains; plus an orphaned tmp dir that must be dropped.
-    fs.mkdirs(new Path(dir, "bucket=1.compact_old"))
-    fs.mkdirs(new Path(dir, "bucket=1.compact_tmp"))
+    fs.mkdirs(old1)
+    fs.mkdirs(tmp1)
 
     val (n, _, _) = CompactJob.run(spark, dir) // runs recover() first
     val names = fs.listStatus(root).map(_.getPath.getName).toSet
@@ -114,161 +121,60 @@ class CompactJobSpec extends SparkSuite {
     assert(spark.read.parquet(s"$dir/bucket=*").count() == 80)
   }
 
-  // ---- manifest commit mode (object-store-safe protocol) ----
-
-  import graft.app.{ManifestIO, TableIO}
-
-  private def fsOf(dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  test("manifest mode: row set preserved, manifest authoritative, idempotent") {
-    import spark.implicits._
-    val dir = tmpDir("compact_m")
-    mkFragmented(dir, buckets = 4, filesPer = 5)
-    val before = TableIO.read(spark, dir).select("id", "text")
-      .as[(Long, String)].collect().toSet
-
-    val (n, fb, fa) = CompactJob.run(spark, dir, commitMode = "manifest")
-    assert(n == 4 && fb == 20 && fa == 4)
+  test("readers of the table root see old or new rows, never both, at every step of the swap") {
+    val dir = tmpDir("compact_swap")
+    mkFragmented(dir, buckets = 2, filesPer = 3)
+    val root = new Path(dir)
     val fs = fsOf(dir)
-    (0 until 4).foreach { b =>
-      val bd = new Path(dir, s"bucket=$b")
-      val manifest = ManifestIO.readManifest(fs, bd)
-      assert(manifest.isDefined, s"bucket $b missing manifest")
-      // Manifest lists exactly the on-disk parquet files (old ones gone).
-      val onDisk = fs.listStatus(bd)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName).toSet
-      assert(manifest.get.toSet == onDisk, s"bucket $b manifest/on-disk drift")
-      assert(onDisk.size == 1 && onDisk.forall(_.startsWith("compact-")))
-    }
-    val after = TableIO.read(spark, dir).select("id", "text")
-      .as[(Long, String)].collect().toSet
-    assert(after == before)
-    // The `bucket` partition column survives the manifest-aware read.
-    assert(TableIO.read(spark, dir).select("bucket").distinct().count() == 4)
-    val (n2, _, _) = CompactJob.run(spark, dir, commitMode = "manifest")
-    assert(n2 == 0)
+    val live = new Path(root, "bucket=0")
+    val (tmp, old) = CompactJob.workDirs(root, "bucket=0")
+    // (id, text, bucket) multiset, sorted; `bucket` as its string form
+    // so a mistyped column still compares.
+    def rows(df: DataFrame): Seq[String] =
+      df.select(concat_ws("|", col("id"), col("text"), col("bucket").cast("string")))
+        .collect().map(_.getString(0)).toSeq.sorted
+    val all = rows(spark.read.parquet(dir))
+    assert(all.size == 80)
+    def readersSee(expected: Seq[String], step: String): Unit =
+      for ((reader, df) <- Seq("spark.read.parquet" -> spark.read.parquet(dir),
+          "TableIO.read" -> TableIO.read(spark, dir))) {
+        val got = rows(df)
+        val (extra, missing) = (got.diff(expected), expected.diff(got))
+        assert(extra.isEmpty && missing.isEmpty, s"$reader after $step: ${got.size} rows, " +
+          s"${extra.size} unexpected (${extra.take(2)}), ${missing.size} missing (${missing.take(2)})")
+        assert(df.schema("bucket").dataType == IntegerType, s"$reader after $step: ${df.schema}")
+      }
+
+    // Step 1: the rewrite lands in the tmp dir, exactly as run() writes it.
+    spark.read.parquet(fs.listStatus(live).map(_.getPath.toString)
+        .filter(_.endsWith(".parquet")).toIndexedSeq: _*)
+      .coalesce(1).write.parquet(tmp.toString)
+    readersSee(all, "tmp is written")
+    // Step 2: live parked as old; only bucket 0 is missing.
+    assert(fs.rename(live, old))
+    readersSee(all.filterNot(_.endsWith("|0")), "live is renamed to old")
+    // Step 3: tmp is live, old not yet deleted.
+    assert(fs.rename(tmp, live))
+    readersSee(all, "tmp is renamed to live")
+    assert(fs.listStatus(live).count(_.getPath.getName.endsWith(".parquet")) == 1)
   }
 
-  test("manifest mode crash before commit (m2): reader sees OLD data, recovery sweeps stage debris") {
-    import spark.implicits._
-    val dir = tmpDir("compact_m_pre")
-    mkFragmented(dir, buckets = 1, filesPer = 4)
-    val fs = fsOf(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bd = new Path(dir, "bucket=0")
-    val before = TableIO.read(spark, dir).select("id").as[Long].collect().toSet
-
-    // Reconstruct the m0–m2 crash state: manifest adopted the legacy
-    // files, the rewrite landed in the live dir as unreferenced
-    // compact-* files, and _manifest.tmp was being written when the
-    // job died.
-    val legacy = ManifestIO.liveFiles(fs, bd).map(_.getName)
-    ManifestIO.commit(conf, fs, bd, legacy) // m0
-    spark.read.parquet(bd.toString).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/bucket=0.compact_stage") // m1
-    val staged = fs.listStatus(new Path(s"$dir/bucket=0.compact_stage"))
-      .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
-    fs.rename(staged, new Path(bd, "compact-deadbeef-00000.parquet")) // m2
-    val tmpManifest = new Path(bd, ManifestIO.ManifestFile + ".tmp")
-    fs.create(tmpManifest, true).close()
-
-    // Readers at this instant: old manifest authoritative — same rows,
-    // no duplicates, despite the staged file sitting in the live dir.
-    assert(TableIO.read(spark, dir).select("id").as[Long].collect().toSet == before)
-    assert(TableIO.read(spark, dir).count() == 40) // would be 80 if duplicated
-
-    // Recovery (any later CompactJob.run) sweeps the unreferenced file,
-    // the tmp manifest, and the stage dir; data unchanged.
-    CompactJob.run(spark, dir, commitMode = "manifest")
-    assert(!fs.exists(new Path(bd, "compact-deadbeef-00000.parquet")))
-    assert(!fs.exists(tmpManifest))
-    assert(!fs.exists(new Path(s"$dir/bucket=0.compact_stage")))
-    assert(TableIO.read(spark, dir).select("id").as[Long].collect().toSet == before)
-  }
-
-  test("manifest read ignores debris dirs still holding parquet (m1 crash / concurrent rewrite)") {
-    import spark.implicits._
-    val dir = tmpDir("compact_m_m1")
-    mkFragmented(dir, buckets = 2, filesPer = 2)
-    val fs = fsOf(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bd = new Path(dir, "bucket=0")
-    val before = TableIO.read(spark, dir).select("id").as[Long].collect().toSet
-
-    // m0 committed, then the job died DURING m1: the stage dir still
-    // holds the full rewritten parquet — nothing moved into the live
-    // dir yet. Plus rename-mode debris beside the other bucket. Both
-    // dir names start with "bucket=", which a prefix match would count
-    // as extra legacy buckets and double the rows.
-    ManifestIO.commit(conf, fs, bd, ManifestIO.liveFiles(fs, bd).map(_.getName))
-    spark.read.parquet(bd.toString).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/bucket=0.compact_stage")
-    spark.read.parquet(s"$dir/bucket=1").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/bucket=1.compact_old")
-
-    // A reader at this instant sees exactly the committed sets.
-    assert(TableIO.read(spark, dir).count() == 80, "debris parquet surfaced as extra buckets")
-    assert(TableIO.read(spark, dir).select("id").as[Long].collect().toSet == before)
-    assert(TableIO.read(spark, dir).select("bucket").distinct().count() == 2)
-
-    // Recovery sweeps both debris dirs; data unchanged.
-    CompactJob.run(spark, dir, commitMode = "manifest")
-    assert(!fs.exists(new Path(s"$dir/bucket=0.compact_stage")))
-    assert(!fs.exists(new Path(s"$dir/bucket=1.compact_old")))
-    assert(TableIO.read(spark, dir).select("id").as[Long].collect().toSet == before)
-  }
-
-  test("manifest mode crash after commit (m3): reader sees NEW data, recovery deletes old files") {
-    import spark.implicits._
-    val dir = tmpDir("compact_m_post")
-    mkFragmented(dir, buckets = 1, filesPer = 4)
-    val fs = fsOf(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bd = new Path(dir, "bucket=0")
-    val before = TableIO.read(spark, dir).select("id").as[Long].collect().toSet
-    val oldNames = ManifestIO.liveFiles(fs, bd).map(_.getName)
-
-    // Reconstruct the m3→m4 crash state: compacted file moved in AND
-    // manifest committed to it, but the old files were never deleted.
-    spark.read.parquet(bd.toString).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/bucket=0.compact_stage")
-    val staged = fs.listStatus(new Path(s"$dir/bucket=0.compact_stage"))
-      .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
-    fs.rename(staged, new Path(bd, "compact-cafebabe-00000.parquet"))
-    fs.delete(new Path(s"$dir/bucket=0.compact_stage"), true)
-    ManifestIO.commit(conf, fs, bd, Seq("compact-cafebabe-00000.parquet"))
-
-    // Readers: new manifest authoritative — same row set through the
-    // new file only, old files invisible (no duplicates).
-    assert(TableIO.read(spark, dir).count() == 40)
-    assert(TableIO.read(spark, dir).select("id").as[Long].collect().toSet == before)
-
-    CompactJob.run(spark, dir, commitMode = "manifest")
-    oldNames.foreach(nm => assert(!fs.exists(new Path(bd, nm)), s"stale $nm survived"))
-    assert(TableIO.read(spark, dir).select("id").as[Long].collect().toSet == before)
-  }
-
-  test("partition overwrite reverts a manifested bucket to legacy layout consistently") {
+  test("compaction refuses a non-parquet table format before writing anything") {
     import graft.app.ExtractJob
-    val out = tmpDir("compact_m_xjob")
-    ExtractJob.run(spark, ExtractJob.Args(rows = 300, out = out, buckets = 2,
-      writeShuffle = false, repartition = 4))
-    CompactJob.run(spark, out, commitMode = "manifest")
-    val fs = fsOf(out)
-    assert(ManifestIO.readManifest(fs, new Path(out, "bucket=0")).isDefined)
-    val docs = TableIO.read(spark, out).count()
-
-    // Re-extraction overwrites both buckets dynamically: the manifests
-    // vanish with the partition dirs and reads stay exact.
-    ExtractJob.run(spark, ExtractJob.Args(rows = 300, out = out, buckets = 2,
-      writeShuffle = false, repartition = 4))
-    assert(ManifestIO.readManifest(fs, new Path(out, "bucket=0")).isEmpty)
-    assert(TableIO.read(spark, out).count() == docs)
-    // And the lineage metrics path (TableIO.read inside the job) saw no
-    // duplicates either: urls are unique.
-    val d = TableIO.read(spark, out)
-    assert(d.select("url").distinct().count() == d.count())
+    val dir = tmpDir("compact_fmt")
+    mkFragmented(dir, buckets = 2, filesPer = 3)
+    val files = partFiles(dir).toSet
+    val out = tmpDir("xjob_fmt") + "/out"
+    val fmt = classOf[TestTableFormat].getName
+    sys.props("graft.table.format") = fmt
+    try {
+      val e1 = intercept[IllegalArgumentException](CompactJob.run(spark, dir))
+      assert(e1.getMessage.contains(fmt), e1.getMessage)
+      assert(partFiles(dir).toSet == files)
+      val e2 = intercept[IllegalArgumentException](ExtractJob.run(spark,
+        ExtractJob.Args(rows = 100, out = out, buckets = 2, compactTarget = 1024)))
+      assert(e2.getMessage.contains(fmt), e2.getMessage)
+      assert(!fsOf(out).exists(new Path(out)))
+    } finally sys.props.remove("graft.table.format")
   }
 }

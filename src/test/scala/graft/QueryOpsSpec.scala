@@ -316,13 +316,16 @@ class QueryOpsSpec extends SparkSuite {
     assert(math.abs(rows((true, true)) - 2 * rows((true, false))) <= 2)
   }
 
+  // decodeMedia replaced the synthetic decode stub; non-image payloads
+  // classify by magic alone and carry no dimensions.
   test("multimodal decode stub classifies payload magic deterministically") {
     val pdf = "%PDF-1.4 x".getBytes("ISO-8859-1")
     val html = "<html></html>".getBytes("UTF-8")
-    assert(PipelineOps.decodeStub("u", pdf).magic == "pdf")
-    assert(PipelineOps.decodeStub("u", html).magic == "html")
-    val m = PipelineOps.decodeStub("u", Array[Byte](1, 2, 3))
-    assert(m.magic == "bin" && m.width >= 1 && m.height >= 1)
+    assert(PipelineOps.decodeMedia("u", pdf).magic == "pdf")
+    val h = PipelineOps.decodeMedia("u", html)
+    assert(h.magic == "html" && h.media_kind == "document")
+    val m = PipelineOps.decodeMedia("u", Array[Byte](1, 2, 3))
+    assert(m.magic == "bin" && m.media_kind == "binary" && m.width == 0 && m.height == 0)
   }
 
   test("q47 salted two-phase distinct equals direct aggregation") {

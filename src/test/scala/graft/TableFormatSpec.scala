@@ -49,14 +49,13 @@ class TableFormatSpec extends SparkSuite {
       val back = TableIO.read(spark, dir)
       assert(back.count() == 4)
       assert(back.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 11L, 12L))
-      // The read genuinely went through the custom source, not the
-      // parquet fast path (manifest resolution is parquet-only).
+      // The read genuinely went through the custom source, not parquet.
       assert(back.queryExecution.logical.toString.toLowerCase
         .contains("testtableformat"))
     } finally sys.props.remove("graft.table.format")
   }
 
-  test("format default stays parquet and resolves compaction manifests") {
+  test("format default stays parquet") {
     assert(TableIO.format == "parquet")
   }
 }
