@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction for the bucket-partitioned results layout
   * (`bucket=NN/part-*.parquet`) that ExtractJob writes — the standard
-  * table-maintenance pass a long-lived 100 TB corpus needs once writers
-  * leave buckets fragmented (`--no-write-shuffle`/`--repartition`, or
-  * other writers appending). Per bucket, if the file count exceeds
+  * table-maintenance pass a long-lived 100 TB corpus needs once other
+  * writers leave buckets fragmented (ExtractJob itself writes one file
+  * per bucket per wave). Per bucket, if the file count exceeds
   * ceil(bytes / targetBytes), the partition is rewritten into that many
   * files.
   *
@@ -25,9 +25,7 @@ import org.apache.spark.sql.SparkSession
   * never both, and every other bucket unchanged throughout. (Without the
   * dot, a `bucket=NN.compact_tmp` sibling is read as one more partition
   * value: every row twice and `bucket` typed as a string.) The job must
-  * own the table during the swap for readers to never see the gap
-  * (ExtractJob --compact-target compacts before its completion
-  * notification, so --notify consumers see only the final layout).
+  * own the table during the swap for readers to never see the gap.
   *
   * A crash between 2 and 3 leaves only the old dir; recovery (run at
   * every start) renames it back. A crash after 3 leaves a stale old dir
@@ -83,13 +81,6 @@ object CompactJob {
         else None
       }.toSeq.sortBy(_.bucket)
 
-  /** Compaction reads and writes parquet bucket directories itself; under
-    * any other table format it would find no buckets and report success.
-    */
-  def requireParquet(): Unit =
-    require(TableIO.format == "parquet",
-      s"compaction needs the parquet table format, got '${TableIO.format}'")
-
   /** Compacts in place; returns (bucketsCompacted, filesBefore, filesAfter).
     *
     * `sortCols` additionally CLUSTERS each rewritten partition
@@ -105,7 +96,10 @@ object CompactJob {
     // 0 would plan Int.MaxValue output files (nothing compacts) and a
     // negative target one file per bucket.
     require(targetBytes > 0, s"--target-bytes must be > 0, got $targetBytes")
-    requireParquet()
+    // Compaction reads and writes parquet bucket directories itself; under
+    // any other table format it would find no buckets and report success.
+    require(TableIO.format == "parquet",
+      s"compaction needs the parquet table format, got '${TableIO.format}'")
     val root = new Path(inDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recover(fs, root)

@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
   *  - **No payload shuffle.** Extraction is embarrassingly parallel; the
   *    html payload column dominates bytes, so the kernel stage is map-only
   *    — the scan's input splits are the parallelism. The only exchange is
-  *    of compact post-kernel records, clustering output files by bucket
-  *    (disable with `--no-write-shuffle`). An optional `--repartition N`
-  *    exists for pathological input layouts only.
+  *    of compact post-kernel records, clustering output files by bucket:
+  *    each wave writes exactly one file per bucket.
   *  - **Explicit bucket partitioning** for lineage/resume: bucket =
   *    pmod(xxhash64(url), B). xxhash64 spreads Zipfian hosts uniformly,
   *    so bucket sizes are balanced regardless of host skew; skew in
@@ -69,8 +68,6 @@ object ExtractJob {
       lang: String = "",
       buckets: Int = 64,
       waveSize: Int = 0, // 0 → all remaining buckets in one wave
-      repartition: Int = 0,
-      writeShuffle: Boolean = true,
       inputFormat: String = "table", // table (parquet/iceberg via TableIO) | warc
       // Corpus-scale output schema: flat per-document columns only
       // (model.SlimRecord) — drops the nested per-page structs whose
@@ -91,13 +88,6 @@ object ExtractJob {
       // contract. (Orchestrators that can't receive HTTP use the file
       // seam instead.)
       notifyUrl: String = "",
-      // Post-job small-file compaction (CompactJob.run on the output,
-      // parquet format only). Each wave overwrites whole buckets, and
-      // with the write shuffle a bucket is one file; buckets fragment
-      // under --no-write-shuffle/--repartition or other writers.
-      // Compacting while the job still owns the table avoids a separate
-      // maintenance window. 0 = off.
-      compactTarget: Long = 0L,
       // K6 two-pass cascade (TwoPass.extract): cheap `fast` kernel over
       // everything, `accurate` re-extraction of the docs pass 1 flags,
       // better result kept per url (adds a `pass` column to the output
@@ -105,22 +95,31 @@ object ExtractJob {
       twoPass: Boolean = false) {
     // Zero buckets would leave no work: the job would write nothing and
     // report success. Any other format would silently be read as a table.
-    // The last three default to 0 (one wave, no repartition, no
-    // compaction); a negative value would silently mean the same.
+    // --wave-size defaults to 0 (one wave); a negative value would
+    // silently mean the same.
     require(buckets >= 1, s"--buckets must be >= 1, got $buckets")
     require(inputFormat == "table" || inputFormat == "warc",
       s"--input-format must be table or warc, got '$inputFormat'")
     require(waveSize >= 0, s"--wave-size must be >= 0, got $waveSize")
-    require(repartition >= 0, s"--repartition must be >= 0, got $repartition")
-    require(compactTarget >= 0, s"--compact-target must be >= 0, got $compactTarget")
+  }
+
+  /** WARC pages carry no lang until the kernel runs, and WARC without
+    * --input would generate PageGen rows: either way a flag would be
+    * ignored. These checks span two fields, so they run on the finished
+    * Args (parseArgs, run), not in its constructor: `Flags.parse` builds
+    * Args one flag at a time, and `--input-format warc --input x` passes
+    * through a copy with no input yet.
+    */
+  private def requireWarcFlags(a: Args): Unit = if (a.inputFormat == "warc") {
+    require(a.input.nonEmpty, "--input-format warc needs --input (a WARC file or directory)")
+    require(a.lang.isEmpty, "--lang does not apply to --input-format warc (WARC pages carry no lang)")
   }
 
   // Usage:
   //   ExtractJob (--rows N [--seed S] | --input path) --out DIR
   //     [--checkpoint DIR] [--run-id ID] [--quality q] [--lang xx]
-  //     [--buckets B] [--wave-size W] [--repartition N] [--no-write-shuffle]
-  //     [--input-format table|warc] [--slim] [--notify PATH]
-  //     [--notify-url URL] [--compact-target BYTES] [--two-pass]
+  //     [--buckets B] [--wave-size W] [--input-format table|warc] [--slim]
+  //     [--notify PATH] [--notify-url URL] [--two-pass]
   private val flags: Map[String, Flags.Flag[Args]] = Map(
     "--rows" -> Flags.Valued((a, v) => a.copy(rows = v.long)),
     "--seed" -> Flags.Valued((a, v) => a.copy(seed = v.long)),
@@ -132,19 +131,17 @@ object ExtractJob {
     "--lang" -> Flags.Valued((a, v) => a.copy(lang = v.str)),
     "--buckets" -> Flags.Valued((a, v) => a.copy(buckets = v.int)),
     "--wave-size" -> Flags.Valued((a, v) => a.copy(waveSize = v.int)),
-    "--repartition" -> Flags.Valued((a, v) => a.copy(repartition = v.int)),
-    "--no-write-shuffle" -> Flags.Switch(_.copy(writeShuffle = false)),
     "--input-format" -> Flags.Valued((a, v) => a.copy(inputFormat = v.str)),
     "--slim" -> Flags.Switch(_.copy(slim = true)),
     "--notify" -> Flags.Valued((a, v) => a.copy(notifyPath = v.str)),
     "--notify-url" -> Flags.Valued((a, v) => a.copy(notifyUrl = v.str)),
-    "--compact-target" -> Flags.Valued((a, v) => a.copy(compactTarget = v.long)),
     "--two-pass" -> Flags.Switch(_.copy(twoPass = true)))
 
   def parseArgs(argv: Array[String]): Args = {
     val a = Flags.parse(argv, Args(), flags)
     require(a.out.nonEmpty, "--out is required")
     require(a.rows > 0 || a.input.nonEmpty, "--rows or --input is required")
+    requireWarcFlags(a)
     a
   }
 
@@ -188,16 +185,15 @@ object ExtractJob {
   def loadPages(spark: SparkSession, a: Args): Dataset[Page] = {
     import spark.implicits._
     val df =
-      if (a.input.nonEmpty && a.inputFormat == "warc")
+      if (a.inputFormat == "warc")
         // Raw crawl archives: one task per archive file (WARC is the
         // crawl's natural split granularity); no lang column until the
-        // kernel runs, so --lang doesn't apply here.
+        // kernel runs, so requireWarcFlags rejects --lang with it.
         graft.sources.Warc.readPages(spark, a.input).toDF()
       else if (a.input.nonEmpty) TableIO.read(spark, a.input)
       else PageGen.generate(spark, a.rows, a.seed).toDF()
     // Pushed-down predicates + projection BEFORE the opaque kernel.
-    val filtered = if (a.lang.nonEmpty && a.inputFormat != "warc")
-      df.where(col("lang") === a.lang) else df
+    val filtered = if (a.lang.nonEmpty) df.where(col("lang") === a.lang) else df
     filtered.select("url", "warc_ts", "html", "text", "lang").as[Page]
   }
 
@@ -205,9 +201,8 @@ object ExtractJob {
     * checkpoint table when one is configured).
     */
   def run(spark: SparkSession, a0: Args): Seq[LineageRow] = {
+    requireWarcFlags(a0)
     val a = a0.copy(quality = normalizeQuality(a0.quality))
-    // A compaction that cannot run fails the job before any wave writes.
-    if (a.compactTarget > 0) CompactJob.requireParquet()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     val pages = loadPages(spark, a)
@@ -252,7 +247,7 @@ object ExtractJob {
 
     try waves.foreach { wave =>
       val waveSet = wave.toSet
-      val sub0 = staging match {
+      val sub = staging match {
         case Some(dir) =>
           spark.read.parquet(dir)
             .where(col("bucket").isin(wave.map(Integer.valueOf): _*))
@@ -261,7 +256,6 @@ object ExtractJob {
             if (waveSet.size == a.buckets) lit(true)
             else bucketExpr(a.buckets).isin(wave.map(Integer.valueOf): _*))
       }
-      val sub = if (a.repartition > 0) sub0.repartition(a.repartition) else sub0
       // --two-pass is the fast→accurate cascade the Args doc promises:
       // pass 2 always runs `accurate` (with --quality fast the old
       // a.quality wiring re-ran the identical fast kernel over the
@@ -274,8 +268,8 @@ object ExtractJob {
       // post-kernel records (raw html never shuffles — it's dropped by
       // the kernel). Without this, a partitionBy write from T tasks
       // produces T×B files — at 10^5 tasks that's millions of tiny
-      // files; with it, file count ≈ B. AQE coalesces the exchange.
-      val (recs, lineage) = observeLineage(recs0, a.buckets, a.writeShuffle)
+      // files; with it, one file per bucket. AQE coalesces the exchange.
+      val (recs, lineage) = observeLineage(recs0, a.buckets)
 
       // dynamic overwrite: only this wave's buckets are replaced
       val tWrite0 = System.nanoTime()
@@ -312,24 +306,19 @@ object ExtractJob {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
     val result = allRows.result()
-    // Compaction runs BEFORE the completion notification: a consumer
-    // triggered by --notify must see the final file layout.
-    if (a.compactTarget > 0) CompactJob.run(spark, a.out, a.compactTarget)
     notifyCompletion(a, result)
     result
   }
 
-  /** One wave's write frame: `recs` clustered by bucket (unless
-    * `writeShuffle` is off) under a fresh observation of its per-bucket
-    * totals. The observation sits above the exchange, so it runs in the
-    * write job's result stage and counts the rows that stage commits.
+  /** One wave's write frame: `recs` clustered by bucket under a fresh
+    * observation of its per-bucket totals. The observation sits above the
+    * exchange, so it runs in the write job's result stage and counts the
+    * rows that stage commits.
     */
-  private[app] def observeLineage(recs: DataFrame, buckets: Int,
-      writeShuffle: Boolean): (DataFrame, Observation) = {
-    val clustered = if (writeShuffle) recs.repartition(col("bucket")) else recs
+  private[app] def observeLineage(recs: DataFrame, buckets: Int): (DataFrame, Observation) = {
     val obs = Observation()
     val totals = udaf(new BucketTotals(buckets)).apply(col("bucket"), col("success"), col("word_count"))
-    (clustered.observe(obs, totals.as("totals")), obs)
+    (recs.repartition(col("bucket")).observe(obs, totals.as("totals")), obs)
   }
 
   /** (bucket, success, word_count) rows summed per bucket into one array:

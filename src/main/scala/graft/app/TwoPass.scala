@@ -1,5 +1,6 @@
 package graft.app
 
+import graft.model.Enums
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,9 +55,8 @@ object TwoPass {
     * compact pass-1 output (url column only), so it costs one small
     * aggregation, never a second payload scan.
     */
-  def extract(pages: Dataset[_], firstQuality: String = "fast",
-      secondQuality: String = "accurate", slim: Boolean = false): DataFrame = {
-    val pass1 = ExtractJob.extractKernel(pages, firstQuality, slim)
+  def extract(pages: Dataset[_], slim: Boolean = false): DataFrame = {
+    val pass1 = ExtractJob.extractKernel(pages, Enums.Fast, slim)
       .localCheckpoint()
     val dup = pass1.groupBy("url").count()
       .where(col("count") > 1).limit(1).collect()
@@ -67,7 +67,7 @@ object TwoPass {
         "dedupe revisit snapshots first (q77_url_revisit)")
     val flagged = pass1.where(needsSecondPass).select("url")
     val in2 = pages.toDF().join(flagged, Seq("url"))
-    val pass2 = ExtractJob.extractKernel(in2, secondQuality, slim)
+    val pass2 = ExtractJob.extractKernel(in2, Enums.Accurate, slim)
     val all = pass1.withColumn("pass", lit(1))
       .unionByName(pass2.withColumn("pass", lit(2)))
     val w = Window.partitionBy("url")

@@ -77,24 +77,6 @@ class CompactJobSpec extends SparkSuite {
     assert(spark.read.parquet(s"$dir/bucket=*").count() == 120)
   }
 
-  test("ExtractJob --compact-target folds compaction into the job run") {
-    import graft.app.ExtractJob
-    val frag = tmpDir("xjob_frag")
-    val tidy = tmpDir("xjob_tidy")
-    // no-write-shuffle + repartition fragments each bucket (one file
-    // per input partition).
-    ExtractJob.run(spark, ExtractJob.Args(rows = 600, out = frag, buckets = 4,
-      writeShuffle = false, repartition = 5))
-    assert(partFiles(frag).size > 4)
-    ExtractJob.run(spark, ExtractJob.Args(rows = 600, out = tidy, buckets = 4,
-      writeShuffle = false, repartition = 5, compactTarget = 128L * 1024 * 1024))
-    assert(partFiles(tidy).size == 4, partFiles(tidy).mkString(","))
-    // Identical content either way.
-    val a = spark.read.parquet(s"$frag/bucket=*").select("url").collect().map(_.getString(0)).sorted
-    val b = spark.read.parquet(s"$tidy/bucket=*").select("url").collect().map(_.getString(0)).sorted
-    assert(a.sameElements(b))
-  }
-
   private def fsOf(dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -160,21 +142,15 @@ class CompactJobSpec extends SparkSuite {
   }
 
   test("compaction refuses a non-parquet table format before writing anything") {
-    import graft.app.ExtractJob
     val dir = tmpDir("compact_fmt")
     mkFragmented(dir, buckets = 2, filesPer = 3)
     val files = partFiles(dir).toSet
-    val out = tmpDir("xjob_fmt") + "/out"
     val fmt = classOf[TestTableFormat].getName
     sys.props("graft.table.format") = fmt
     try {
-      val e1 = intercept[IllegalArgumentException](CompactJob.run(spark, dir))
-      assert(e1.getMessage.contains(fmt), e1.getMessage)
+      val e = intercept[IllegalArgumentException](CompactJob.run(spark, dir))
+      assert(e.getMessage.contains(fmt), e.getMessage)
       assert(partFiles(dir).toSet == files)
-      val e2 = intercept[IllegalArgumentException](ExtractJob.run(spark,
-        ExtractJob.Args(rows = 100, out = out, buckets = 2, compactTarget = 1024)))
-      assert(e2.getMessage.contains(fmt), e2.getMessage)
-      assert(!fsOf(out).exists(new Path(out)))
     } finally sys.props.remove("graft.table.format")
   }
 }

@@ -82,6 +82,11 @@ class ExtractJobSpec extends SparkSuite {
     val b = spark.read.parquet(outMany).select("url", "text", "word_count", "success")
       .orderBy("url").collect()
     assert(a.length == b.length && a.sameElements(b))
+    // The bucket exchange leaves every bucket one file, one wave or many.
+    for (out <- Seq(outOne, outMany)) {
+      val files = parquetFilesPerBucket(out)
+      assert(files.size == 8 && files.values.forall(_ == 1), s"$out: $files")
+    }
   }
 
   test("lineage rows equal a groupBy over the written table, zero-row buckets included") {
@@ -93,8 +98,7 @@ class ExtractJobSpec extends SparkSuite {
     Seq(
       "single wave" -> base,
       "multi-wave" -> base.copy(waveSize = 2),
-      "two-pass" -> base.copy(twoPass = true),
-      "no write shuffle" -> base.copy(writeShuffle = false)
+      "two-pass" -> base.copy(twoPass = true)
     ).foreach { case (name, a) =>
       val out = tmpDir("xjob-lineage")
       val rows = ExtractJob.run(spark, a.copy(out = out))
@@ -116,13 +120,10 @@ class ExtractJobSpec extends SparkSuite {
   test("a run whose waves match no row returns one zero lineage row per bucket") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
-    Seq(true, false).foreach { shuffle =>
-      val a = Args(rows = 50, out = tmpDir("xjob-empty"), buckets = 4, lang = "zz",
-        writeShuffle = shuffle)
-      val rows = Await.result(Future(ExtractJob.run(spark, a))(ExecutionContext.global), 3.minutes)
-      assert(rows.sortBy(_.bucket).map(l => (l.bucket, l.status, l.docs, l.ok_docs, l.error_docs,
-        l.words)) == (0 until 4).map(b => (b, "completed", 0L, 0L, 0L, 0L)), s"writeShuffle=$shuffle")
-    }
+    val a = Args(rows = 50, out = tmpDir("xjob-empty"), buckets = 4, lang = "zz")
+    val rows = Await.result(Future(ExtractJob.run(spark, a))(ExecutionContext.global), 3.minutes)
+    assert(rows.sortBy(_.bucket).map(l => (l.bucket, l.status, l.docs, l.ok_docs, l.error_docs,
+      l.words)) == (0 until 4).map(b => (b, "completed", 0L, 0L, 0L, 0L)))
   }
 
   test("checkpoint given as a file:// URI: resume skips done buckets, retention runs") {
@@ -287,6 +288,25 @@ class ExtractJobSpec extends SparkSuite {
     val e2 = intercept[IllegalArgumentException](
       Args(input = "in", out = "o", inputFormat = "WARC"))
     assert(e2.getMessage.contains("--input-format"), e2.getMessage)
+    // WARC flag combinations that would silently drop a flag: --lang
+    // (WARC pages carry no lang) and no --input (PageGen rows instead),
+    // rejected by parseArgs and by run before any Spark work.
+    for ((argv, bad, flags) <- Seq(
+        (Seq("--input", "in", "--lang", "de"), Args(input = "in", lang = "de"),
+          Seq("--lang", "--input-format")),
+        (Seq("--rows", "10"), Args(rows = 10), Seq("--input-format", "--input")))) {
+      val e3 = intercept[IllegalArgumentException](ExtractJob.parseArgs(
+        (argv ++ Seq("--out", "o", "--input-format", "warc")).toArray))
+      assert(flags.forall(e3.getMessage.contains), e3.getMessage)
+      val out = tmpDir("xjob-warc-flags") + "/out"
+      val e4 = intercept[IllegalArgumentException](
+        ExtractJob.run(spark, bad.copy(out = out, inputFormat = "warc")))
+      assert(flags.forall(e4.getMessage.contains), e4.getMessage)
+      assert(!new java.io.File(out).exists())
+    }
+    // Flag order does not matter: --input may follow --input-format.
+    assert(ExtractJob.parseArgs(Array("--input-format", "warc", "--input", "in",
+      "--out", "o")).inputFormat == "warc")
     for (f <- Seq("table", "warc"))
       assert(ExtractJob.parseArgs(
         Array("--input", "in", "--out", "o", "--input-format", f)).inputFormat == f)

@@ -41,11 +41,9 @@ class FlagsSpec extends AnyFunSuite {
   }
 
   test("a negative value for a flag where 0 means off is rejected, naming the flag") {
-    for (flag <- Seq("--wave-size", "--repartition", "--compact-target")) {
-      val m = rejected(ExtractJob.parseArgs, "--rows", "10", "--out", "o", flag, "-1")
-      assert(m.contains(flag), m)
-      ExtractJob.parseArgs(Array("--rows", "10", "--out", "o", flag, "0"))
-    }
+    val m0 = rejected(ExtractJob.parseArgs, "--rows", "10", "--out", "o", "--wave-size", "-1")
+    assert(m0.contains("--wave-size"), m0)
+    ExtractJob.parseArgs(Array("--rows", "10", "--out", "o", "--wave-size", "0"))
     val m = rejected(CorpusPipeline.parseArgs, "--rows", "10", "--out", "o", "--host-cap", "-2")
     assert(m.contains("--host-cap"), m)
     assert(CorpusPipeline.parseArgs(Array("--rows", "10", "--out", "o", "--host-cap", "0")).hostCap == 0)
@@ -54,15 +52,13 @@ class FlagsSpec extends AnyFunSuite {
   test("every ExtractJob flag sets its Args field; a repeated flag's last value wins") {
     val a = ExtractJob.parseArgs(Array("--rows", "7", "--seed", "3", "--input", "in",
       "--out", "x", "--checkpoint", "ck", "--run-id", "r1", "--quality", "fast",
-      "--lang", "de", "--buckets", "8", "--wave-size", "2", "--repartition", "5",
-      "--no-write-shuffle", "--input-format", "warc", "--slim", "--notify", "n.json",
-      "--notify-url", "http://localhost:1/hook", "--compact-target", "1024",
+      "--lang", "de", "--buckets", "8", "--wave-size", "2", "--input-format", "table",
+      "--slim", "--notify", "n.json", "--notify-url", "http://localhost:1/hook",
       "--two-pass", "--out", "o"))
     assert(a == ExtractJob.Args(rows = 7, seed = 3, input = "in", out = "o",
       checkpoint = "ck", runId = "r1", quality = "fast", lang = "de", buckets = 8,
-      waveSize = 2, repartition = 5, writeShuffle = false, inputFormat = "warc",
-      slim = true, notifyPath = "n.json", notifyUrl = "http://localhost:1/hook",
-      compactTarget = 1024, twoPass = true))
+      waveSize = 2, inputFormat = "table", slim = true, notifyPath = "n.json",
+      notifyUrl = "http://localhost:1/hook", twoPass = true))
     assert(ExtractJob.parseArgs(Array("--rows", "10", "--out", "o")) ==
       ExtractJob.Args(rows = 10, out = "o"))
   }

@@ -11,6 +11,11 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   /** A fresh temp directory, deleted with its contents at JVM exit. */
   def tmpDir(prefix: String): String = SparkSuite.tmpDir(prefix)
+
+  /** `*.parquet` file count of each `bucket=NN` directory under `dir`. */
+  def parquetFilesPerBucket(dir: String): Map[String, Int] =
+    new java.io.File(dir).listFiles().filter(d => d.isDirectory && d.getName.startsWith("bucket="))
+      .map(d => d.getName -> d.list().count(_.endsWith(".parquet"))).toMap
 }
 
 object SparkSuite {

@@ -86,7 +86,9 @@ class TwoPassSpec extends SparkSuite {
     val job = spark.read.parquet(out)
     assert(job.columns.contains("pass"))
     assert(job.count() == 400)
-    val lib = TwoPass.extract(kernelPages(400), secondQuality = "accurate")
+    val files = parquetFilesPerBucket(out)
+    assert(files.size == 2 && files.values.forall(_ == 1), files)
+    val lib = TwoPass.extract(kernelPages(400))
     val a = job.select("url", "pass", "word_count").orderBy("url")
       .collect().map(_.toString).toSeq
     val b = lib.select("url", "pass", "word_count").orderBy("url")
