@@ -89,7 +89,6 @@ object CorpusPipeline {
 
   /** Run the pipeline; returns (stage → surviving row count), in order. */
   def run(spark: SparkSession, a: Args): Seq[(String, Long)] = {
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val stages = Vector.newBuilder[(String, Long)]
 
     val pagesDf =

@@ -286,7 +286,7 @@ object ExtractJob {
       val rows = wave.map { b =>
         val (docs, ok) = (totals(3 * b), totals(3 * b + 1))
         LineageRow(a.runId, b, "completed", docs, ok, docs - ok, totals(3 * b + 2),
-          a.quality, now)
+          if (a.twoPass) TwoPass.Quality else a.quality, now)
       }
       // Phase diagnostics (stderr, ops-only): the kernel+write job's wall
       // time and what it committed.

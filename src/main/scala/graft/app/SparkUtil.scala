@@ -2,13 +2,16 @@ package graft.app
 
 import java.net.URI
 
+import graft.plans.GraftExtensions
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the scale-relevant defaults applied in one place
   * (SURVEY.md §4.2): AQE with skew handling + partition coalescing, UTC
   * session time, shuffle partitions sized to the local core count
-  * (cluster deployments override via spark-submit conf).
+  * (cluster deployments override via spark-submit conf). It also installs
+  * the engine's SQL functions (`GraftExtensions`), so every session it
+  * builds, and every `newSession()` of one, can run the queries.
   */
 object SparkUtil {
 
@@ -19,6 +22,7 @@ object SparkUtil {
       conf: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")

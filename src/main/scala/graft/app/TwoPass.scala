@@ -43,6 +43,11 @@ object TwoPass {
   def needsSecondPass: org.apache.spark.sql.Column =
     !col("success") || col("word_count") === 0 || col("confidence") < 1.0
 
+  /** The quality a two-pass wave's lineage rows record: its rows come
+    * from both passes, never from `--quality`.
+    */
+  val Quality: String = s"${Enums.Fast}+${Enums.Accurate}"
+
   /** CONTRACT: input must be url-unique — one snapshot per url, the
     * shape of an extraction results table for one crawl wave. The flag
     * join and the merge window are keyed by url (the kernel's only

@@ -1,13 +1,13 @@
 package graft.plans
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
-import org.apache.spark.sql.SparkSession
 
 /** `sorted_intersect_count(a, b)` — intersection size of two SORTED,
   * DISTINCT arrays (both `array<string>` or both `array<bigint>`) via a
@@ -161,10 +161,11 @@ case class VectorDot(left: Expression, right: Expression) extends BinaryExpressi
   * literal ("Expression java.lang.Long is not an rvalue") and the stage
   * silently drops to interpreted mode. This twin keeps Spark's null
   * semantics exactly (null/absent bloom → null, null value → null) and
-  * emits a parenthesized primitive operand, so constant probes — the
-  * shape `SqlSmoke` exercises — compile. The bloom side must be constant
-  * per query (literal or scalar subquery, as in Spark's expression): it
-  * deserializes ONCE per expression instance, never per row.
+  * emits a parenthesized primitive operand, so constant probes (a
+  * literal probe value against a scalar-subquery bloom) compile. The
+  * bloom side must be constant per query (literal or scalar subquery, as
+  * in Spark's expression): it deserializes ONCE per expression instance,
+  * never per row.
   */
 case class GraftBloomProbe(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -226,56 +227,50 @@ case class GraftBloomProbe(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The engine's six SQL functions. `SparkUtil.session` installs them
+  * into every session it builds, through `GraftExtensions`.
+  */
 object GraftFunctions {
+  /** Entry `name` → `cls`, built from exactly `arity` arguments; any other
+    * count fails at analysis with Spark's own WRONG_NUM_ARGS error.
+    */
+  private def entry(name: String, cls: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (exprs: Seq[Expression]) => {
+        if (exprs.size != arity)
+          throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+            "functionName" -> s"`$name`", "expectedNum" -> arity.toString,
+            "actualNum" -> exprs.size.toString, "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+        build(exprs)
+      })
+
   val entries: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1))),
-    (FunctionIdentifier("vector_dot"),
-      new ExpressionInfo(classOf[VectorDot].getName, "vector_dot"),
-      (exprs: Seq[Expression]) => VectorDot(exprs(0), exprs(1))),
-    (FunctionIdentifier("minhash_md5"),
-      new ExpressionInfo(classOf[MinhashMd5].getName, "minhash_md5"),
-      (exprs: Seq[Expression]) => MinhashMd5(exprs(0))),
-    (FunctionIdentifier("simhash_md5"),
-      new ExpressionInfo(classOf[SimhashMd5].getName, "simhash_md5"),
-      (exprs: Seq[Expression]) => SimhashMd5(exprs(0))),
+    entry("sorted_intersect_count", classOf[SortedIntersectCount], 2)(
+      e => SortedIntersectCount(e(0), e(1))),
+    entry("vector_dot", classOf[VectorDot], 2)(e => VectorDot(e(0), e(1))),
+    entry("minhash_md5", classOf[MinhashMd5], 1)(e => MinhashMd5(e(0))),
+    entry("simhash_md5", classOf[SimhashMd5], 1)(e => SimhashMd5(e(0))),
     // Spark ships BloomFilterAggregate / BloomFilterMightContain for its
     // internal runtime-filter rewrite but does not register them as SQL
     // functions; exposing them here gives the query surface a native
     // (codegen-friendly, UDF-free) bloom build + membership probe.
     // graft_bloom_agg(xxhash64(k), estimatedItems) -> binary;
     // graft_might_contain(bloomBinary, xxhash64(k)) -> boolean.
-    (FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1))),
+    entry("graft_bloom_agg", classOf[BloomFilterAggregate], 2)(
+      e => new BloomFilterAggregate(e(0), e(1))),
     // Probe is our codegen-safe twin of Spark's BloomFilterMightContain
     // (identical null semantics) — Spark's generates a bare
     // `(Long)<negative literal>` cast for constant-folded probe values,
     // which Janino rejects and the stage then runs interpreted. See
     // GraftBloomProbe.
-    (FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[GraftBloomProbe].getName, "graft_might_contain"),
-      (exprs: Seq[Expression]) => GraftBloomProbe(exprs(0), exprs(1))))
-
-  /** Imperative registration (idempotent) for sessions built without the
-    * extensions config.
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    entries.foreach { case (id, _, builder) =>
-      if (!reg.functionExists(id))
-        reg.createOrReplaceTempFunction(id.funcName, builder, "built-in")
-    }
-  }
+    entry("graft_might_contain", classOf[GraftBloomProbe], 2)(e => GraftBloomProbe(e(0), e(1))))
 }
 
-/** `--conf spark.sql.extensions=graft.plans.GraftExtensions` — the
-  * spark-submit-native way to install the engine's functions cluster-wide.
+/** Installs `GraftFunctions.entries`. `SparkUtil.session` applies it to
+  * every session it builds; a session built elsewhere (spark-shell, a
+  * notebook) gets the functions with
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =

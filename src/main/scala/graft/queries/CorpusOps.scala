@@ -488,7 +488,6 @@ object CorpusOps {
     // candidate-set reduction actually happened.
     ("q85_dup_span_bloom",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
         val t = tokenFrame(s, d)
         val windows = windowHashes(t)
         val dups = dupHashes(windows).localCheckpoint()

@@ -61,7 +61,6 @@ object SignatureStore {
     * Sketch.verdicts own the join, the verify and the verdict.
     */
   def verdictsAgainst(batchDocs: DataFrame, store: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(batchDocs.sparkSession)
     // The batch sketch feeds both the band join and the verify join —
     // materialize so shingling runs once (store-side needs nothing: its
     // bands are precomputed).

@@ -88,8 +88,9 @@ object Sketch {
     .select(col(idCol), posexplode(col("bands")).as(Seq("band_id", "band_sig")))
 
   /** Exact Jaccard of two sorted shingle-hash arrays via the codegen'd
-    * sorted-merge intersection (register graft.plans.GraftFunctions
-    * first). Single IEEE division — bit-identical across engines.
+    * sorted-merge intersection (`sorted_intersect_count`, which
+    * `SparkUtil.session` installs). Single IEEE division — bit-identical
+    * across engines.
     */
   def jaccard(ha: Column, hb: Column): Column = {
     val c = call_function("sorted_intersect_count", ha, hb)

@@ -157,7 +157,6 @@ object TextOps {
     ("q23_neardup_jaccard",
       (s, d) => {
         requireBaselineScale(s, d, "documents", "q23_neardup_jaccard")
-        graft.plans.GraftFunctions.ensureRegistered(s)
         // Shingles hashed to longs (xxhash64, collision odds ~2^-64 at
         // this cardinality) and sorted ONCE per doc, so the per-pair
         // intersection is a zero-allocation codegen'd long merge
@@ -205,7 +204,6 @@ object TextOps {
     // group-by on band signatures whose buckets are near-dup clusters.
     ("q24_minhash_lsh",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
         Sketch.candidatePairs(md5Bands(shingled(s, d)), "doc_id", "doc_a", "doc_b")
           .orderBy("doc_a", "doc_b")
       },
@@ -238,7 +236,6 @@ object TextOps {
     // not once per downstream branch.
     ("q24p_minhash_prod",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
         // 8 bands × 2 rows (vs q24's 4×4): the banding S-curve midpoint
         // moves from J≈0.66 down to J≈0.29, so recall AT the 0.5
         // decision threshold is ~90% per pair and ≥1-2e-6 for the
@@ -275,7 +272,6 @@ object TextOps {
     // streams — per-ingest cost is O(batch), not O(corpus).
     ("q53_incremental_dedup",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
         val hashed = Sketch.withBands(Sketch.sketch(tbl(s, d, "documents")).localCheckpoint())
         val matches = Sketch.storeMatches(
           hashed.where(col("doc_id") % 5 === 0), hashed.where(col("doc_id") % 5 =!= 0))
@@ -386,7 +382,6 @@ object TextOps {
     // on a real crawl — never shuffle at all.
     ("q71_bloom_dedup",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
         val keyed = tbl(s, d, "documents")
           .select(col("doc_id"),
             md5(array_join(slice(tokens(col("text")), 1, 16), " ")).as("k"))
@@ -428,7 +423,6 @@ object TextOps {
     // document to keep.
     ("q35_dup_clusters",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
         // q24's candidates, verified on the string shingle sets the
         // oracle mirrors.
         val sh = shingled(s, d)
@@ -478,7 +472,6 @@ object TextOps {
     // Hamming-ball lookup is the at-scale near-dup join key.
     ("q25_simhash",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
         // Single-pass codegen'd sketch (plans.SimhashMd5): md5 once per
         // distinct token, all 32 parity counters updated in that same
         // pass — replaces 32 `aggregate` passes over an md5-hex array
@@ -521,7 +514,6 @@ object TextOps {
     // the pair set through three independent aggregates).
     ("q73_simhash_hamming",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
         val sig = docToks(s, d)
           .withColumn("sig",
             call_function("simhash_md5", array_distinct(col("toks"))))

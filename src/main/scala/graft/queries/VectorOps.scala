@@ -30,7 +30,6 @@ object VectorOps {
     * engines.
     */
   private[graft] def emb(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(s)
     tbl(s, d, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("nrm", sqrt(call_function("vector_dot", col("v"), col("v"))))

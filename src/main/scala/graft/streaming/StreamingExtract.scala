@@ -119,10 +119,9 @@ object StreamingExtract {
       sigDir: String): Unit = {
     import graft.queries.{SignatureStore, Sketch}
     // foreachBatch hands a Dataset bound to a CLONED SparkSession (the
-    // micro-batch's isolated session state): the sketch functions must
-    // be registered there, not on the caller's session.
+    // micro-batch's isolated session state); the store is read through
+    // it. A clone keeps the functions `SparkUtil.session` installed.
     val s = batchDf.sparkSession
-    graft.plans.GraftFunctions.ensureRegistered(s)
     val batch = batchDf.localCheckpoint()
     // Band signatures are computed once here and PERSISTED with the
     // sketch, so later batches' band joins read precomputed 64-bit keys

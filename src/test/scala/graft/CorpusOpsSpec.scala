@@ -228,7 +228,6 @@ class CorpusOpsSpec extends SparkSuite {
     // so the bloom must drop most of the coverage join's probe side.
     import org.apache.spark.sql.functions._
     import graft.queries.QueryUtil._
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val windows = spark.read.parquet(s"$d1/documents.parquet")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 8)

@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** MinhashMd5 / SimhashMd5: byte-equality with the built-in-functions
@@ -11,8 +10,6 @@ import org.apache.spark.sql.functions._
   * from both sides.
   */
 class HashSketchSpec extends SparkSuite {
-
-  override def beforeAll(): Unit = { super.beforeAll(); GraftFunctions.ensureRegistered(spark) }
 
   private def refMinhash = (sh: org.apache.spark.sql.Column) =>
     transform(sequence(lit(0), lit(15)),

@@ -230,7 +230,6 @@ class QueryOpsSpec extends SparkSuite {
 
   test("url-keyed near-dup pairs (CorpusPipeline's stage 4) == q24p's oracle-verified pairs") {
     import spark.implicits._
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     // A hashed host prefix makes url order differ from doc_id order, so
     // the engine's a < b ordering is exercised on a different key.
     val docs = spark.read.parquet(s"$sf/documents.parquet")

@@ -1,14 +1,11 @@
 package graft
 
-import graft.plans.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** SortedIntersectCount: agreement with array_intersect on both element
   * types, across interpreted and codegen paths.
   */
 class SortedIntersectSpec extends SparkSuite {
-
-  override def beforeAll(): Unit = { super.beforeAll(); GraftFunctions.ensureRegistered(spark) }
 
   test("string variant equals size(array_intersect) on random sets") {
     import spark.implicits._

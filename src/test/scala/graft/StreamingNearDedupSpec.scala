@@ -82,7 +82,6 @@ class StreamingNearDedupSpec extends SparkSuite {
     docs.coalesce(1).write.mode("overwrite").parquet(in)
     StreamingExtract.nearDedupStream(spark, in, out, ckpt, sig).awaitTermination()
 
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val sk = graft.queries.Sketch.sketch(docs).localCheckpoint()
     val bands = graft.queries.Sketch.bandRows(sk)
     val dropped = bands.withColumnRenamed("doc_id", "doc_a")

@@ -81,11 +81,16 @@ class TwoPassSpec extends SparkSuite {
   test("ExtractJob --two-pass: job output carries the pass column, matches the library merge") {
     import spark.implicits._
     val out = tmpDir("xjob-2p")
-    ExtractJob.run(spark, ExtractJob.Args(rows = 400, out = out, buckets = 2,
+    val lineage = ExtractJob.run(spark, ExtractJob.Args(rows = 400, out = out, buckets = 2,
       quality = "accurate", twoPass = true))
     val job = spark.read.parquet(out)
     assert(job.columns.contains("pass"))
     assert(job.count() == 400)
+    // Lineage names the two passes, not the single-pass --quality.
+    assert(lineage.nonEmpty && lineage.forall(_.quality == "fast+accurate"),
+      lineage.map(_.quality))
+    val qualities = job.select("quality").distinct().as[String].collect().toSet
+    assert(qualities.subsetOf(Set("fast", "accurate")), qualities)
     val files = parquetFilesPerBucket(out)
     assert(files.size == 2 && files.values.forall(_ == 1), files)
     val lib = TwoPass.extract(kernelPages(400))
