@@ -6,7 +6,10 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir) = args match {
+      case Array(sf, out) => (sf, out)
+      case _ => throw new IllegalArgumentException("usage: Verify SF_DIR OUT_DIR")
+    }
     val spark = SparkUtil.session("graft-verify")
     // Clean slate: a reused outDir must not keep results of queries that
     // no longer exist (renames would leave stale dirs beside the fresh

@@ -2,7 +2,7 @@ package graft.app
 
 import java.net.URI
 
-import graft.plans.GraftExtensions
+import graft.plans.{GraftExtensions, GraftFunctions}
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 
@@ -11,7 +11,10 @@ import org.apache.spark.sql.SparkSession
   * session time, shuffle partitions sized to the local core count
   * (cluster deployments override via spark-submit conf). It also installs
   * the engine's SQL functions (`GraftExtensions`), so every session it
-  * builds, and every `newSession()` of one, can run the queries.
+  * builds, and every `newSession()` of one, can run the queries. An
+  * active session built elsewhere is returned as it is by `getOrCreate`,
+  * without those functions; the factory rejects it rather than let a
+  * query fail later on an unresolved routine.
   */
 object SparkUtil {
 
@@ -53,6 +56,10 @@ object SparkUtil {
         b
       else b.master(s"local[$cpus]")
     val spark = conf.foldLeft(withMaster) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    val missing = GraftFunctions.entries.map(_._1.funcName).filterNot(spark.catalog.functionExists)
+    if (missing.nonEmpty) throw new IllegalStateException(
+      s"the active Spark session lacks ${missing.mkString(", ")}: it was built without " +
+        "this factory; build it with --conf spark.sql.extensions=graft.plans.GraftExtensions")
     spark.sparkContext.setLogLevel("WARN")
     // Hadoop caches one `file:` instance per user, whatever conf asked for
     // it: a stock one cached before this session was built would win.

@@ -1,7 +1,6 @@
 package graft.pdf
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.Deflater
 
 /** Deterministic minimal PDF writer for fixtures and the synthetic page
   * table. Mirrors the reference's fixture philosophy — PDFs are
@@ -34,16 +33,6 @@ object PdfWriter {
     sb.toString
   }
 
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(Deflater.BEST_SPEED)
-    d.setInput(data); d.finish()
-    val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    val buf = new Array[Byte](4096)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
   private def latin1(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
 
@@ -52,13 +41,13 @@ object PdfWriter {
     */
   def encodeContent(raw: Array[Byte], filter: String): (Array[Byte], String) = filter match {
     case "none" => (raw, "")
-    case "flate" => (deflate(raw), " /Filter /FlateDecode")
+    case "flate" => (PdfFilters.deflate(raw), " /Filter /FlateDecode")
     case "lzw" => (PdfFilters.lzwEncode(raw), " /Filter /LZWDecode")
     case "ahx" => (PdfFilters.asciiHexEncode(raw), " /Filter /ASCIIHexDecode")
     case "a85" => (PdfFilters.ascii85Encode(raw), " /Filter /ASCII85Decode")
     case "rl" => (PdfFilters.runLengthEncode(raw), " /Filter /RunLengthDecode")
     case "ahx+flate" =>
-      (PdfFilters.asciiHexEncode(deflate(raw)), " /Filter [/ASCIIHexDecode /FlateDecode]")
+      (PdfFilters.asciiHexEncode(PdfFilters.deflate(raw)), " /Filter [/ASCIIHexDecode /FlateDecode]")
     case "a85+lzw" =>
       (PdfFilters.ascii85Encode(PdfFilters.lzwEncode(raw)), " /Filter [/ASCII85Decode /LZWDecode]")
     case other => throw new IllegalArgumentException(s"unknown content filter: $other")
@@ -374,7 +363,7 @@ object PdfWriter {
       .map { case ((num, _), off) => s"$num $off" }.mkString(" ") + "\n"
     val stmPlain = latin1(header.drop(0) + bodyParts.mkString("\n") + "\n")
     val first = header.length
-    val stmData = deflate(stmPlain)
+    val stmData = PdfFilters.deflate(stmPlain)
     val objStmBody = {
       val o = new ByteArrayOutputStream()
       o.write(latin1(s"<< /Type /ObjStm /N ${sortedMembers.length} /First $first " +
@@ -417,7 +406,7 @@ object PdfWriter {
       }
     }
     val predicted = PdfFilters.pngPredictUp(rows.toByteArray, rowLen)
-    val xrefData = deflate(predicted)
+    val xrefData = PdfFilters.deflate(predicted)
     out.write(latin1(s"$xrefNum 0 obj\n<< /Type /XRef /Size $nextObj /Root 1 0 R " +
       s"/W [1 3 2] /Index [0 $nextObj] /Filter /FlateDecode " +
       s"/DecodeParms << /Predictor 12 /Columns $rowLen >> " +

@@ -1,15 +1,20 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.app.SparkUtil
+import graft.app.{ExtractJob, SparkUtil}
+import graft.extract.Processor
+import graft.model.Page
+import graft.synth.Fixtures
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.unsafe.types.UTF8String
 import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
 
-/** The query diagnostics, one main over SparkEntry.queries:
+/** The diagnostics, one main over SparkEntry.queries and the kernel:
   *   sbt -batch "runMain graft.tools.Query time|plan|explain [--sf DIR] [name...]"
+  *   sbt -batch "runMain graft.tools.Query kernel FAMILY [QUALITY]"
   *
   *  - `time`: run each query into a noop sink that counts its output
   *    rows on the way; print seconds and rows per query.
@@ -18,6 +23,8 @@ import java.nio.file.{Files, Paths}
   *  - `explain`: write PLANS.md, the formatted physical plan of each
   *    query, for plan review (pushdown present? joins broadcast?
   *    codegen spans wide?). Regenerate after plan-affecting changes.
+  *  - `kernel`: run the extraction kernel on a `Fixtures.families`
+  *    payload and print its record (see `kernel`); no session starts.
   *
   * No names means the `headline` queries; `--sf` defaults to the
   * sf0.001 tables the specs use. The mode and every name are checked
@@ -49,12 +56,20 @@ object Query {
     "q92p_semantic_dedup_scaled", "q93_bpe_pair_counts",
     "x40_extract_balanced", "x50_extract_operator", "x65_link_records")
 
-  private val Usage = "usage: Query time|plan|explain [--sf DIR] [name...]"
+  private val Usage = "usage: Query time|plan|explain [--sf DIR] [name...]\n" +
+    "       Query kernel FAMILY [QUALITY]"
 
   def main(args: Array[String]): Unit = run(args, SparkUtil.session("graft-query"))
 
-  /** Checks `args`, then builds `session` and runs the mode. */
-  def run(args: Array[String], session: => SparkSession): Unit = {
+  /** Checks `args`, then builds `session` and runs the mode; `kernel`
+    * never builds it.
+    */
+  def run(args: Array[String], session: => SparkSession): Unit = args.toSeq match {
+    case Seq("kernel", rest @ _*) => print(kernel(rest))
+    case _ => runQueries(args, session)
+  }
+
+  private def runQueries(args: Array[String], session: => SparkSession): Unit = {
     def usage = throw new IllegalArgumentException(Usage)
     val (mode, sfDir, named) = args.toSeq match {
       case Seq(m, "--sf", dir, names @ _*) => (m, dir, names)
@@ -88,6 +103,39 @@ object Query {
       s"unknown query '$n' (nearest: ${near.mkString(", ")})"
     }.mkString("\n"))
     names
+  }
+
+  /** The kernel's record for the named fixture family, one field per line,
+    * then its text between `---- text ----` and `---- end ----`. The
+    * quality is normalized as the kernel stage normalizes it, so the
+    * record is the one `ExtractJob` writes (an invalid quality reads
+    * `balanced`). A missing or unknown family fails listing the families.
+    */
+  def kernel(args: Seq[String]): String = {
+    val families = Fixtures.families.map(_._1).mkString(", ")
+    val (family, quality) = args match {
+      case Seq(f) => (f, "balanced")
+      case Seq(f, q) => (f, q)
+      case _ => throw new IllegalArgumentException(
+        s"usage: Query kernel FAMILY [QUALITY]; families: $families")
+    }
+    val payload = Fixtures.families.toMap.getOrElse(family, throw new IllegalArgumentException(
+      s"unknown family '$family'; one of: $families"))
+    val page = Page(s"https://fixtures.example/$family", new Timestamp(0L), payload, "", "en")
+    val r = Processor.default.extract(page, ExtractJob.normalizeQuality(quality))
+    Seq(
+      s"url:               ${r.url}",
+      s"success:           ${r.success}",
+      s"pdf_type:          ${r.pdf_type}",
+      s"total_pages:       ${r.total_pages}",
+      s"quality:           ${r.quality}",
+      s"extraction_method: ${r.extraction_method}",
+      s"confidence:        ${r.confidence}",
+      s"word_count:        ${r.word_count}",
+      s"text_pages:        ${r.text_pages.mkString(",")}  image_pages: ${r.image_pages.mkString(",")}  hybrid_pages: ${r.hybrid_pages.mkString(",")}",
+      s"page_errors:       ${r.page_errors}",
+      s"error:             ${r.error.getOrElse("-")}",
+      "---- text ----", r.text, "---- end ----").mkString("", "\n", "\n")
   }
 
   private def time(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =

@@ -399,17 +399,15 @@ class ExtractJobSpec extends SparkSuite {
     assert(firstWave.map(_.bucket).toSet == (0 until 8).toSet)
 
     // ...simulate a crash after wave 1: drop lineage for buckets >2 and
-    // corrupt their result partitions (partial files).
+    // tear their result partitions (every data file gone).
     val keep = spark.read.parquet(ckpt).where(col("bucket") < 3)
     val ckpt2 = tmpDir("xjob-ckpt2") + "/lineage"
     keep.write.parquet(ckpt2)
     (3 until 8).foreach { b =>
       val dir = new java.io.File(s"$outResume/bucket=$b")
-      if (dir.exists()) {
-        // Truncate: delete half the files to simulate a torn write.
-        dir.listFiles().zipWithIndex.foreach { case (f, i) => if (i % 2 == 0) f.delete() }
-      }
+      if (dir.exists()) dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach(_.delete())
     }
+    assert(spark.read.parquet(outResume).count() < N)
 
     // Resume with the surviving checkpoint: buckets 0-2 must be skipped,
     // 3-7 rewritten atomically.
@@ -424,6 +422,9 @@ class ExtractJobSpec extends SparkSuite {
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getString(3))).sortBy(_._1)
     assert(res.length == N)
     assert(full.toSeq == res.toSeq)
+    // A rerun bucket is rewritten whole, as one file.
+    val files = parquetFilesPerBucket(outResume)
+    assert(files.size == 8 && files.values.forall(_ == 1), files)
 
     // Re-running with complete checkpoint is a no-op.
     val noop = ExtractJob.run(spark, a.copy(checkpoint = ckpt2))

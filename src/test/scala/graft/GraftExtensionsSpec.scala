@@ -1,8 +1,10 @@
 package graft
 
+import graft.app.SparkUtil
 import graft.plans.{GraftBloomProbe, GraftExtensions, GraftFunctions, MinhashMd5, SimhashMd5,
   SortedIntersectCount, VectorDot}
-import org.apache.spark.sql.{AnalysisException, ExtensionsAccess, SparkSessionExtensions}
+import org.apache.spark.sql.{AnalysisException, ExtensionsAccess, SparkSession,
+  SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -92,5 +94,20 @@ class GraftExtensionsSpec extends SparkSuite {
       assert(e.getMessageParameters.get("expectedNum") == want.toString, e.getMessage)
       assert(e.getMessageParameters.get("actualNum") == got.toString, e.getMessage)
     }
+  }
+
+  test("the session factory rejects an active session that lacks a function") {
+    val s = spark.newSession()
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.functionRegistry
+      .dropFunction(FunctionIdentifier("vector_dot"))
+    assert(!s.catalog.functionExists("vector_dot"))
+    SparkSession.setActiveSession(s)
+    try {
+      val e = intercept[IllegalStateException](SparkUtil.session("graft-test", "4"))
+      assert(e.getMessage.contains("vector_dot"), e.getMessage)
+      assert(!e.getMessage.contains("minhash_md5"), e.getMessage)
+      assert(e.getMessage.contains("--conf spark.sql.extensions=graft.plans.GraftExtensions"),
+        e.getMessage)
+    } finally SparkSession.setActiveSession(spark)
   }
 }
