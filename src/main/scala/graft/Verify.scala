@@ -10,13 +10,39 @@ object Verify {
       case Array(sf, out) => (sf, out)
       case _ => throw new IllegalArgumentException("usage: Verify SF_DIR OUT_DIR")
     }
+    prepareOut(outDir)
     val spark = SparkUtil.session("graft-verify")
-    // Clean slate: a reused outDir must not keep results of queries that
-    // no longer exist (renames would leave stale dirs beside the fresh
-    // ones and misread as live surface). But NEVER wipe a directory this
-    // tool didn't write: a mistyped --out pointing at a data directory
-    // must refuse, not destroy. A previous Verify run is recognized by
-    // its marker file; only then (or when empty) is the dir cleaned.
+    // Builder-iteration aid: SPARK_GRAFT_ONLY=q67_inverted_index,q73_…
+    // dumps just those queries (the driver never sets it — full surface).
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val selected = only match {
+      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
+      case None        => SparkEntry.queries
+    }
+    selected.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+    }
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${PyJson.quote(k)}: ${PyJson.quote(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    spark.stop()
+  }
+
+  /** Clean slate: a reused outDir must not keep results of queries that
+    * no longer exist (renames would leave stale dirs beside the fresh
+    * ones and misread as live surface). But NEVER wipe a directory this
+    * tool didn't write: a mistyped --out pointing at a data directory
+    * must refuse, not destroy. A previous Verify run is recognized by
+    * its marker file; only then (or when empty) is the dir cleaned.
+    * `main` runs this before the session starts, so a refused directory
+    * fails before any Spark work.
+    */
+  def prepareOut(outDir: String): Unit = {
     val outRoot = new java.io.File(outDir)
     val marker = new java.io.File(outRoot, ".graft_verify")
     if (outRoot.exists()) {
@@ -49,24 +75,5 @@ object Verify {
     }
     outRoot.mkdirs()
     Files.write(marker.toPath, Array.emptyByteArray)
-    // Builder-iteration aid: SPARK_GRAFT_ONLY=q67_inverted_index,q73_…
-    // dumps just those queries (the driver never sets it — full surface).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${PyJson.quote(k)}: ${PyJson.quote(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -71,15 +71,11 @@ final class Boilerplate(
       val b = page.blocks(i)
       if (b.tpe == Block.TextType) { if (mask(i)) parts += b.text }
       else if (b.tpe == Block.ImageType && b.ctx.isEmpty && !PyText.isBlank(b.alt))
-        parts += BlockSegHelp.normalize(b.alt)
+        parts += PyText.normalizeSpaces(b.alt)
       i += 1
     }
     parts.result().mkString("\n")
   }
-}
-
-private object BlockSegHelp {
-  def normalize(s: String): String = PyText.pySplit(s).mkString(" ")
 }
 
 object Boilerplate {

@@ -45,7 +45,7 @@ object PdfCrypt {
     out
   }
 
-  private def md5(parts: Array[Byte]*): Array[Byte] = {
+  private[pdf] def md5(parts: Array[Byte]*): Array[Byte] = {
     val md = MessageDigest.getInstance("MD5")
     parts.foreach(md.update)
     md.digest()

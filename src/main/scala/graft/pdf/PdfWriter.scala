@@ -178,14 +178,9 @@ object PdfWriter {
   def encryptStandard(clear: Array[Byte], variant: String): Array[Byte] = {
     val s = new String(clear, java.nio.charset.StandardCharsets.ISO_8859_1)
     val empty = Array.emptyByteArray
-    val id16 = java.security.MessageDigest.getInstance("MD5").digest(clear)
+    val id16 = PdfCrypt.md5(clear)
     val perm = -44
     def hexStr(b: Array[Byte]): String = "<" + b.map(x => f"$x%02x").mkString + ">"
-    def md5of(parts: Array[Byte]*): Array[Byte] = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      parts.foreach(md.update)
-      md.digest()
-    }
     val (key: Array[Byte], encDictBody: String) = variant match {
       case "rc4" =>
         val o = PdfCrypt.computeO(empty, empty, 3, 128)
@@ -205,10 +200,10 @@ object PdfWriter {
         val r = if (variant.endsWith("5")) 5 else 6
         val k = java.security.MessageDigest.getInstance("SHA-256")
           .digest(id16 ++ "filekey".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-        val vSalt = md5of(id16, Array(1.toByte)).take(8)
-        val kSalt = md5of(id16, Array(2.toByte)).take(8)
-        val ovSalt = md5of(id16, Array(3.toByte)).take(8)
-        val okSalt = md5of(id16, Array(4.toByte)).take(8)
+        val vSalt = PdfCrypt.md5(id16, Array(1.toByte)).take(8)
+        val kSalt = PdfCrypt.md5(id16, Array(2.toByte)).take(8)
+        val ovSalt = PdfCrypt.md5(id16, Array(3.toByte)).take(8)
+        val okSalt = PdfCrypt.md5(id16, Array(4.toByte)).take(8)
         val (u, ue) = PdfCrypt.computeUV5(r, k, vSalt, kSalt)
         val (o, oe) = PdfCrypt.computeOV5(r, k, u, ovSalt, okSalt)
         val perms = PdfCrypt.permsV5(perm, encryptMetadata = true, k)
@@ -224,7 +219,7 @@ object PdfWriter {
     var ivCtr = 0
     def nextIv(): Array[Byte] = {
       ivCtr += 1
-      md5of(id16, Array[Byte]((ivCtr >> 8).toByte, ivCtr.toByte))
+      PdfCrypt.md5(id16, Array[Byte]((ivCtr >> 8).toByte, ivCtr.toByte))
     }
     def encBytes(num: Int, b: Array[Byte]): Array[Byte] = variant match {
       case "rc4" => PdfCrypt.rc4(PdfCrypt.objKey(key, num, 0), b)

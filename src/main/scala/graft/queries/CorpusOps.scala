@@ -390,16 +390,9 @@ object CorpusOps {
         val rho = SketchStats.hllRegisters(sh, "g", "lang")
         val agg = rho.groupBy("lang").agg(
           count(lit(1)).cast("int").as("hll_regs_hit"),
-          sum(expr("CAST(shiftleft(1L, 61 - r) AS DECIMAL(38,0))"))
-            .cast("double").as("s_hit"))
+          SketchStats.hllWeightSum(col("r")).as("s_hit"))
         val ex = sh.groupBy("lang").agg(countDistinct("g").as("n_exact"))
-        val p61 = 2305843009213693952L // 2^61
-        // α_m · m² · 2^61 / (Σ_hit + misses·2^61) — every constant
-        // derived from SketchStats so the estimator tracks the register
-        // layout (the oracle SQL necessarily inlines the m=64 values).
-        val m = SketchStats.HllM
-        val est = lit(SketchStats.HllAlphaM) * lit(m.toLong * m) * lit(p61) /
-          (col("s_hit") + (lit(m) - col("hll_regs_hit")) * lit(p61.toDouble))
+        val est = SketchStats.hllEstimate(col("s_hit"), col("hll_regs_hit"))
         agg.join(ex, Seq("lang"))
           .select(col("lang"), col("n_exact"), col("hll_regs_hit"),
             round(est, 4).as("hll_estimate"),
@@ -570,17 +563,12 @@ object CorpusOps {
           max(when(col("ha"), col("r"))).as("ra"),
           max(when(!col("ha"), col("r"))).as("rb"),
           max("r").as("ru"))
-        def sHit(c: String) = sum(when(col(c).isNotNull,
-          expr(s"CAST(shiftleft(1L, 61 - $c) AS DECIMAL(38,0))"))).cast("double")
+        def sHit(c: String) = SketchStats.hllWeightSum(col(c))
         val agg = piv.groupBy("lang").agg(
           count(col("ra")).cast("int").as("hit_a"), sHit("ra").as("sa"),
           count(col("rb")).cast("int").as("hit_b"), sHit("rb").as("sb"),
           count(col("ru")).cast("int").as("hit_u"), sHit("ru").as("su"))
-        val m = SketchStats.HllM
-        val p61 = 2305843009213693952L
-        def est(sC: String, hitC: String) =
-          lit(SketchStats.HllAlphaM) * lit(m.toLong * m) * lit(p61) /
-            (col(sC) + (lit(m) - col(hitC)) * lit(p61.toDouble))
+        def est(sC: String, hitC: String) = SketchStats.hllEstimate(col(sC), col(hitC))
         // INTERSECT is already set-semantic — a distinct on each side
         // would just add two full shuffles of the widest table here.
         val inter = sh.where(col("ha")).select("lang", "g")

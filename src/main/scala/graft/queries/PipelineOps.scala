@@ -547,14 +547,12 @@ object PipelineOps {
     // ---- The kernel stage over a stored pages table: the same results
     // as x40, read from parquet, where the stage's url/html/lang
     // projection keeps the unused legacy text and warc_ts columns out of
-    // the scan's ReadSchema.
+    // the scan's ReadSchema. Each call writes the table into a fresh
+    // session scratch dir.
     ("x50_extract_operator",
       (s, _) => {
-        // Cache path keyed by (generator version, rows, seed) so a stale
-        // cache from an older PageGen can never feed the kernel.
-        val dir = s"/tmp/graft_q/op_pages_v${PageGen.genVersion}_1200_42"
-        if (!new java.io.File(s"$dir/_SUCCESS").exists())
-          pages(s, 1200).toDF().repartition(4).write.mode("overwrite").parquet(dir)
+        val dir = QueryUtil.scratchDir(s, "x50_pages")
+        pages(s, 1200).toDF().repartition(4).write.mode("overwrite").parquet(dir)
         ExtractJob.extractKernel(s.read.parquet(dir), "balanced")
           .select("url", "pdf_type", "total_pages", "word_count",
             "extraction_method", "confidence", "success")

@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.file.{Files, Paths}
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,6 +22,15 @@ object QueryUtil {
 
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
+
+  /** A fresh directory `name<random>` for a query's intermediate table,
+    * under the root scratch directory of `s`'s SparkContext, which Spark
+    * creates per context and deletes on `stop()`; so a query keeps no
+    * state between runs. Driver-local, like the queries' local-mode
+    * sessions.
+    */
+  def scratchDir(s: SparkSession, name: String): String =
+    Files.createTempDirectory(Paths.get(SparkFiles.getRootDirectory()), name).toString
 
   /** Lower-cased whitespace-run tokens — the byte-exact analog of the
     * reference's Python `str.split()` word model (processor.py:129) as a

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Single owner of the corpus-statistics sketch math shared by the
-  * oracle-checked queries (q82/q83) and the `CorpusPipeline --stats`
+  * oracle-checked queries (q82/q83/q91) and the `CorpusPipeline --stats`
   * stage. Everything here is integer-exact and order-free (register
   * max / counter sum), which is what makes the sketches both mergeable
   * across partitions/days AND bit-identical between Spark and the
@@ -54,6 +54,24 @@ object SketchStats {
       .select(keyCols.map(col) :+ hllBucket(hx).as("bucket") :+ hllRho(hx).as("rho"): _*)
       .groupBy((keyCols :+ "bucket").map(col): _*)
       .agg(max("rho").as("r"))
+  }
+
+  /** Aggregate: Σ 2^(61 - r) over the non-null registers `r`, summed as
+    * exact decimals (no float-summation-order drift) and cast to double
+    * once.
+    */
+  def hllWeightSum(r: Column): Column =
+    sum(call_function("shiftleft", lit(1L), lit(61) - r).cast("decimal(38,0)"))
+      .cast("double")
+
+  /** Raw HLL estimate α_m · m² · 2^61 / (Σ_hit + (m − hits) · 2^61) from
+    * an `hllWeightSum` and the registers hit, with no small-range
+    * correction: one double expression, bit-identical to the oracle's.
+    */
+  def hllEstimate(weightSum: Column, hits: Column): Column = {
+    val p61 = 1L << 61
+    lit(HllAlphaM) * lit(HllM.toLong * HllM) * lit(p61) /
+      (weightSum + (lit(HllM) - hits) * lit(p61.toDouble))
   }
 
   /** The d CMS (row, cell) coordinates of a term, as a posexplode

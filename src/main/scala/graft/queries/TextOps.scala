@@ -283,26 +283,19 @@ object TextOps {
       Some(incrementalDedupSql)),
 
     // ---- q53 through the PERSISTENT signature store (the production
-    // shape): run 1 writes the corpus sketch table once
+    // shape): the corpus half is written as a sketch table
     // (queries.SignatureStore — the exact layout the streaming near-dup
-    // path has always persisted); every later ingest reads precomputed
-    // (hsh, bands) rows and sketches only the arriving batch. Same
-    // oracle as q53 — a green row proves the store round-trip loses
-    // nothing vs the in-plan staging variant. The store dir is cached
-    // per sf input (x50's fixture-cache pattern).
+    // path persists), read back as precomputed (hsh, bands) rows, and
+    // only the arriving batch is sketched in the plan. Same oracle as
+    // q53 — a green row proves the store round-trip loses nothing vs
+    // the in-plan staging variant. Each call writes its own store into
+    // a fresh session scratch dir.
     ("q53s_dedup_store",
       (s, d) => {
-        // Cache key carries the sketch family version AND the source
-        // table's mtime: a regenerated corpus or a changed hash family
-        // must never silently reuse stale signatures (the op_pages
-        // genVersion precedent).
-        val src = new java.io.File(s"$d/documents.parquet")
-        val dir = s"/tmp/graft_q/sigstore_v${Sketch.NumHashes}x${Sketch.Bands}" +
-          s"_${src.lastModified}_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-        if (!new java.io.File(s"$dir/batch_id=0/_SUCCESS").exists())
-          SignatureStore.write(
-            tbl(s, d, "documents").where(col("doc_id") % 5 =!= 0)
-              .select("doc_id", "text"), dir, 0L)
+        val dir = scratchDir(s, "q53s_store")
+        SignatureStore.write(
+          tbl(s, d, "documents").where(col("doc_id") % 5 =!= 0)
+            .select("doc_id", "text"), dir, 0L)
         SignatureStore.verdictsAgainst(
             tbl(s, d, "documents").where(col("doc_id") % 5 === 0)
               .select("doc_id", "text"),

@@ -18,15 +18,6 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 object PageGen {
 
-  /** Generator version — BUMP whenever any generation logic changes.
-    * Every on-disk cache of generated pages keys its path on this, so a
-    * stale cache from an older generator can never silently feed a
-    * query or benchmark.
-    */
-  // v2: non-UTF-8 article encoding variants (~4%);
-  // v3: PDF 1.5+ xref-stream/ObjStm container variants (50% of PDFs)
-  val genVersion = 3
-
   val NumHosts = 1000
   val ZipfS = 1.07
 

@@ -85,8 +85,8 @@ class LinksSpec extends SparkSuite {
       assert(n >= h && h >= 1, s"($p,$a): n_links=$n n_hosts=$h")
     }
     // Golden pin of the full aggregate (deterministic function of
-    // PageGen.genVersion=3, seed 42, 1200 rows — regenerate from the
-    // failure diff if the generator ever bumps). Articles contribute
+    // PageGen's output, seed 42, 1200 rows — regenerate from the
+    // failure diff if the generator ever changes). Articles contribute
     // the 7-target frame; the boilerplate family its 8-target frame.
     val golden = Seq(
       ("/", "Home", 359L, 126L), ("/a", "News", 306L, 115L),

@@ -91,4 +91,23 @@ class PyTextSpec extends AnyFunSuite {
     assert(PyText.normalizeSpaces(astral) == PyText.pySplit(astral).mkString(" "))
     assert(PyText.normalizedLength(astral) == PyText.normalizeSpaces(astral).length)
   }
+
+  test("property: normalizeSpaces == pySplit-join and normalizedLength == its length") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // Every code point Python's str.isspace() accepts.
+    val pySpaces = (0x09 to 0x0D) ++ (0x1C to 0x20) ++ Seq(0x85, 0xA0, 0x1680) ++
+      (0x2000 to 0x200A) ++ Seq(0x2028, 0x2029, 0x202F, 0x205F, 0x3000)
+    val nonSpaces = Seq(0x200B, 0xFEFF, 'a'.toInt, 'Z'.toInt, 0xDF, 0x1F600)
+    assert(pySpaces.forall(PyText.isPySpace) && !nonSpaces.exists(PyText.isPySpace))
+    // Lone high and low surrogates beside the pieces above.
+    val pieces = (pySpaces ++ nonSpaces).map(cp => new String(Character.toChars(cp))) ++
+      Seq("\uD83D", "\uDE00")
+    val prop = Prop.forAllNoShrink(Gen.listOf(Gen.oneOf(pieces)).map(_.mkString)) { s =>
+      val ref = PyText.pySplit(s).mkString(" ")
+      PyText.normalizeSpaces(s) == ref && PyText.normalizedLength(s) == ref.length
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(20000).withInitialSeed(0x5EEDL), prop)
+    assert(res.passed, res.status)
+  }
 }

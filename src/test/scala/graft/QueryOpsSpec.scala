@@ -228,6 +228,23 @@ class QueryOpsSpec extends SparkSuite {
     assert(rows.filter(_.getString(1) == "kept").forall(_.isNullAt(2)))
   }
 
+  test("q53s and x50 write their tables under the session's scratch root and nowhere shared") {
+    import java.io.File
+    val copy = tmpDir("sf_copy")
+    org.apache.commons.io.FileUtils.copyDirectory(new File(sf), new File(copy))
+    val s = spark // the scratch root exists once the session does
+    val root = new File(org.apache.spark.SparkFiles.getRootDirectory())
+    val shared = new File("/tmp/graft_q") // where both queries once kept cross-run caches
+    def names(d: File): Set[String] = Option(d.list()).map(_.toSet).getOrElse(Set.empty)
+    val (rootBefore, sharedBefore) = (names(root), names(shared))
+    Seq("q53s_dedup_store", "x50_extract_operator")
+      .foreach(n => assert(SparkEntry.queries(n)(s, copy).collect().nonEmpty, n))
+    assert(names(shared) -- sharedBefore == Set.empty, s"no query writes under $shared")
+    val added = names(root) -- rootBefore
+    assert(added.exists(_.startsWith("q53s_store")), added)
+    assert(added.exists(_.startsWith("x50_pages")), added)
+  }
+
   test("url-keyed near-dup pairs (CorpusPipeline's stage 4) == q24p's oracle-verified pairs") {
     import spark.implicits._
     // A hashed host prefix makes url order differ from doc_id order, so

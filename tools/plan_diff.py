@@ -3,8 +3,9 @@
 tool, `graft.tools.ExplainDump`) section by section, ignoring what changes from
 run to run without the plan changing: expression ids (#123), RDD ids, plan ids,
 lambda variable numbers, JVM lambda class names, object hash codes, source line
-numbers and the names of the query cache directories under /tmp/graft_q (q53s's
-signature store is named after the documents table's mtime).
+numbers and the paths of the tables q53s and x50 write under the SparkContext's
+scratch root (`.../spark-<uuid>/userFiles-<uuid>/<name><random digits>`), which
+become `file:<spark-scratch>/<name>`.
 
     python3 tools/plan_diff.py PARENT/PLANS.md PLANS.md [section ...]
 
@@ -23,7 +24,8 @@ NORMALIZE = [
     (r"Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+", "Lambda"),
     (r"@[0-9a-f]{6,8}\b", "@"),
     (r"\.scala:\d+", ".scala:N"),
-    (r"file:/tmp/graft_q/[^\]\s,]+", "file:/tmp/graft_q/..."),
+    (r"file:[^\]\s,]*/spark-[0-9a-f-]+/userFiles-[0-9a-f-]+/(\w*?)\d+\b",
+     r"file:<spark-scratch>/\1"),
 ]
 
 
