@@ -157,8 +157,9 @@ object CorpusPipeline {
     extracted.unpersist()
 
     // 3. Exact dedup on the raw md5(text), not q22's normalized digest:
-    // one shuffle on the digest; the min url survives (url is the
-    // identity key, app.TwoPass) and is the provenance representative.
+    // one shuffle on the digest; the min url survives (url is this
+    // pipeline's row key: provenance and near-dup pairs are keyed by it)
+    // and is the provenance representative.
     val ranked = quality
       .withColumn("digest", md5(col("text")))
       .withColumn("rep", min("url").over(

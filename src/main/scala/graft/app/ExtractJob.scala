@@ -1,9 +1,9 @@
 package graft.app
 
-import graft.extract.PayloadMemo
+import graft.extract.{PayloadMemo, Processor}
 import graft.jobs.{Checkpoint, LineageRow}
 import graft.json.PyJson
-import graft.model.{Enums, KernelPage, Page}
+import graft.model.{Enums, ExtractionRecord, KernelPage, Page}
 import graft.synth.PageGen
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -90,8 +90,8 @@ object ExtractJob {
       notifyUrl: String = "",
       // K6 two-pass cascade (TwoPass.extract): cheap `fast` kernel over
       // everything, `accurate` re-extraction of the docs pass 1 flags,
-      // better result kept per url (adds a `pass` column to the output
-      // schema).
+      // better result kept per document (adds a `pass` column to the
+      // output schema).
       twoPass: Boolean = false) {
     // Zero buckets would leave no work: the job would write nothing and
     // report success. Any other format would silently be read as a table.
@@ -164,20 +164,30 @@ object ExtractJob {
     */
   def extractKernel(pages: Dataset[_], quality: String,
       slim: Boolean = false): DataFrame = {
+    val q = normalizeQuality(quality)
+    kernelStage(pages, Processor.default.extract(_, q), slim)
+  }
+
+  /** The stage itself, running `kernel` once per row: one extraction at
+    * a fixed quality (extractKernel) or the two-pass cascade
+    * (TwoPass.extract). `kernel` must be pure in `html` apart from the
+    * `url` and `lang` it copies from the row (extract.PayloadMemo).
+    */
+  private[app] def kernelStage(pages: Dataset[_],
+      kernel: KernelPage => ExtractionRecord, slim: Boolean): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val q = normalizeQuality(quality)
     val in = pages.select("url", "html", "lang").as[KernelPage]
     // One payload memo per task (extract.PayloadMemo): a repeated
     // payload is extracted once, and the memo is dropped with the task.
     if (slim)
       in.mapPartitions { it =>
-        val memo = new PayloadMemo(q)
+        val memo = new PayloadMemo(kernel)
         it.map(p => memo.extract(p).toSlim)
       }.toDF()
     else
       in.mapPartitions { it =>
-        val memo = new PayloadMemo(q)
+        val memo = new PayloadMemo(kernel)
         it.map(memo.extract)
       }.toDF()
   }
@@ -257,10 +267,8 @@ object ExtractJob {
             else bucketExpr(a.buckets).isin(wave.map(Integer.valueOf): _*))
       }
       // --two-pass is the fast→accurate cascade the Args doc promises:
-      // pass 2 always runs `accurate` (with --quality fast the old
-      // a.quality wiring re-ran the identical fast kernel over the
-      // flagged subset — doubled work, zero rescue). --quality keeps
-      // governing the single-pass path only.
+      // pass 2 always runs `accurate`. --quality governs the single-pass
+      // path only.
       val recs0 = (if (a.twoPass) TwoPass.extract(sub, slim = a.slim)
                    else extractKernel(sub, a.quality, a.slim))
         .withColumn("bucket", bucketExpr(a.buckets))

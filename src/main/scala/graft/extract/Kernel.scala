@@ -125,7 +125,7 @@ final class AltTextBackend extends ExtractionBackend {
     if (pageNumber < 1 || pageNumber > doc.totalPages) ""
     else doc.pages(pageNumber - 1).blocks
       .filter(b => b.tpe == Block.ImageType && !PyText.isBlank(b.alt))
-      .map(b => BlockSegmenter.normalize(b.alt))
+      .map(b => PyText.normalizeSpaces(b.alt))
       .mkString("\n")
 }
 

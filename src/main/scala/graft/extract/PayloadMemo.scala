@@ -6,10 +6,15 @@ import org.apache.spark.unsafe.Platform
 
 /** One task's memo of kernel results, keyed by payload bytes.
   *
-  * A record is a pure function of `(html, quality)` apart from `url` and
-  * `lang` (the invariant stated on [[Processor]]). So a repeat within one
-  * task reuses an earlier copy's record with only `url` and `lang` taken
-  * from the current row.
+  * `kernel` is the stage's per-document function: one
+  * `Processor.default.extract` at a fixed quality, or the two-pass
+  * cascade (app.TwoPass.cascade), which picks between two such records
+  * of one payload. A record is a pure function of `(html, quality)` apart
+  * from `url` and `lang` (the invariant stated on [[Processor]]), so
+  * either function is pure in `html` apart from those two. A repeat
+  * within one task therefore reuses an earlier copy's record with only
+  * `url` and `lang` taken from the current row; for the cascade a hit
+  * skips both passes.
   *
   * What it saves depends on one input property: the share of a task's
   * rows whose payload is byte-identical to an earlier row of the same
@@ -39,12 +44,11 @@ import org.apache.spark.unsafe.Platform
   * `capBytes` and `hash` are test seams; production uses the defaults.
   */
 final class PayloadMemo(
-    quality: String,
+    kernel: KernelPage => ExtractionRecord,
     capBytes: Long = PayloadMemo.CapBytes,
     hash: Array[Byte] => Int = PayloadMemo.hashBytes) {
   import PayloadMemo.Key
 
-  private val proc = Processor.default
   private val table = new java.util.HashMap[Key, ExtractionRecord]()
   private val seen = new Array[Int](PayloadMemo.SeenSlots)
   private var retained = 0L
@@ -54,18 +58,16 @@ final class PayloadMemo(
   /** Sum of `retainedCost` over the entries held. */
   def retainedBytes: Long = retained
 
-  /** `Processor.default.extract(p, quality)`, reusing an earlier result
-    * for the same payload bytes.
-    */
+  /** `kernel(p)`, reusing an earlier result for the same payload bytes. */
   def extract(p: KernelPage): ExtractionRecord =
-    if (p.html == null) proc.extract(p, quality)
+    if (p.html == null) kernel(p)
     else {
       val h = hash(p.html)
       val key = new Key(p.html, h)
       val hit = table.get(key)
       if (hit != null) hit.copy(url = p.url, lang = p.lang)
       else {
-        val r = proc.extract(p, quality)
+        val r = kernel(p)
         val slot = h & (seen.length - 1)
         val cost = PayloadMemo.retainedCost(p.html, r)
         if (seen(slot) != h) seen(slot) = h

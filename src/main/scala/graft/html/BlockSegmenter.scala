@@ -36,11 +36,6 @@ object BlockSegmenter {
     "form", "fieldset", "address", "details", "summary", "caption",
     "hr", "body", "html")
 
-  /** Collapse whitespace runs (Python-space classes) to single spaces and
-    * trim — one canonical spacing for block text.
-    */
-  def normalize(s: String): String = PyText.normalizeSpaces(s)
-
   private final class BlockBuf {
     val sb = new java.lang.StringBuilder()
     var anchorChars = 0

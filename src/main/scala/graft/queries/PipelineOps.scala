@@ -397,8 +397,10 @@ object PipelineOps {
     // CASE-WHEN + list comprehensions. A green hash proves the Scala
     // Router equals the published matrix on quality×type×backend×
     // page-mix combinations, including the reasoning text byte-for-byte.
-    // (The kernel applies the same Router in-stream; its end-to-end
-    // behavior stays pinned by RouterSpec/ProcessorSpec goldens.)
+    // The kernel does not call the Router: it decides OCR pages with
+    // Processor.pageNeedsOcr, a separate port of the same policy. A
+    // RouterSpec property pins that both pick the same pages for every
+    // Detector classification and quality.
     ("q48_routing_plan",
       (s, d) => {
         import s.implicits._
@@ -559,14 +561,14 @@ object PipelineOps {
           .orderBy("url")
       }, None),
 
-    // ---- K6 two-pass cascade (app.TwoPass): cheap `fast` kernel over
-    // the corpus, `accurate` re-kernel over the docs pass 1 flags
-    // (failed / empty / below-full confidence), better result kept per
-    // url. Pass-1 output selecting pass-2's input IS the reference's
-    // enrich-then-reprocess shape (two_pass_ocr_processor_original.py:
-    // 225-324) minus its out-of-scope LLM prompt. Deterministic but not
-    // SQL-expressible (kernel) → rows-only check here; semantics pinned
-    // by TwoPassSpec.
+    // ---- K6 two-pass cascade (app.TwoPass): per document, the cheap
+    // `fast` extraction, then the `accurate` one if pass 1 is flagged
+    // (failed / empty / below-full confidence), better result kept, all
+    // inside the one kernel stage. Pass-1 output selecting pass-2's
+    // input IS the reference's enrich-then-reprocess shape
+    // (two_pass_ocr_processor_original.py:225-324) minus its
+    // out-of-scope LLM prompt. Deterministic but not SQL-expressible
+    // (kernel) → rows-only check here; semantics pinned by TwoPassSpec.
     ("x64_two_pass",
       (s, _) => graft.app.TwoPass.extract(pages(s, 900))
         .select("url", "pass", "pdf_type", "word_count", "confidence", "success")

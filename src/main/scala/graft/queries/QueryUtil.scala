@@ -39,6 +39,10 @@ object QueryUtil {
     */
   def tokens(c: Column): Column = regexp_extract_all(lower(c), lit("\\S+"), lit(0))
 
+  /** The `documents` table with its `tokens` of `text` as `toks`. */
+  def docToks(s: SparkSession, d: String): DataFrame =
+    tbl(s, d, "documents").withColumn("toks", tokens(col("text")))
+
   /** Distinct word 3-gram shingles over `tokens`; `< 3` tokens → empty.
     * DuckDB side uses `list_transform(range(1, greatest(len-1,1)), ...)`
     * (1-based, exclusive end) which yields the same `n-2` shingles.

@@ -28,9 +28,6 @@ object TextOps {
 
   type Q = (String, (SparkSession, String) => DataFrame, Option[String])
 
-  private def docToks(s: SparkSession, d: String): DataFrame =
-    tbl(s, d, "documents").withColumn("toks", tokens(col("text")))
-
   /** (doc_id, shingles) of every document with ≥1 shingle — the md5
     * family's (q24/q35) sketch input. The filter runs BEFORE the
     * shingles are derived, on the cheap Sketch.hasShingles precondition

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import QueryUtil._
 
@@ -208,7 +209,6 @@ object VectorOps {
     * same cost as any k-means iteration.
     */
   private def ivfCentroids(s: SparkSession, d: String, k: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb(s, d)
     val seeds = e.where(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cell"), col("v").as("sv"),
@@ -237,7 +237,6 @@ object VectorOps {
     */
   private def ivfAssign(s: SparkSession, d: String, probes: Int = 1,
       centroids: Option[DataFrame] = None, k: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb(s, d)
     // The Lloyd pass is a full corpus scan: materialize its tiny k×dim
     // result so no query plan embeds (and re-executes) it twice —
@@ -300,6 +299,20 @@ object VectorOps {
         FROM dotsn) WHERE rn = 1)
     """
 
+  /** Each query's `k` best neighbours in `scored` (query_id,
+    * neighbor_id, cos), as (query_id, rank, neighbor_id) ordered by both:
+    * cos descending, ties to the smaller neighbor_id, the oracle's
+    * `row_number() OVER (PARTITION BY query_id ORDER BY cos DESC,
+    * neighbor_id)`.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k)
+      .select("query_id", "rank", "neighbor_id")
+      .orderBy("query_id", "rank")
+  }
+
   /** The teaching-variant prefix (fixed 8 seeds — q32/q33/q39/q92). */
   private val ivfAssignSql: String = ivfAssignSqlK("8")
 
@@ -322,7 +335,6 @@ object VectorOps {
     // ---- Brute-force cosine top-k: 10 query vectors × full corpus.
     ("q29_cosine_topk",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val e = emb(s, d)
         val q = e.where(col("vec_id") < 10)
           .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -330,11 +342,7 @@ object VectorOps {
           .repartition(s.sparkContext.defaultParallelism)
         val scored = n.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
           .withColumn("cos", dot("qv", "nv") / (col("qn") * col("nn")))
-        val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-        scored.withColumn("rank", row_number().over(w).cast("long"))
-          .where(col("rank") <= 5)
-          .select("query_id", "rank", "neighbor_id")
-          .orderBy("query_id", "rank")
+        topK(scored, 5)
       },
       Some("""WITH e AS (SELECT vec_id, unnest(embedding)::DOUBLE AS v,
                            generate_subscripts(embedding,1) AS i FROM embeddings),
@@ -397,7 +405,6 @@ object VectorOps {
     // brute-force q29 is its exact-recall verifier).
     ("q33_ivf_topk",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         // assign feeds both the query and neighbor sides: materialize it
         // once (same rationale as q24p's `enriched`).
         val assign = ivfAssign(s, d).localCheckpoint()
@@ -409,11 +416,7 @@ object VectorOps {
         val scored = n.join(broadcast(q), Seq("cell"))
           .where(col("neighbor_id") =!= col("query_id"))
           .withColumn("cos", dot("qv", "nv") / (col("qn") * col("nn")))
-        val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-        scored.withColumn("rank", row_number().over(w).cast("long"))
-          .where(col("rank") <= 3)
-          .select("query_id", "rank", "neighbor_id")
-          .orderBy("query_id", "rank")
+        topK(scored, 3)
       },
       Some(ivfAssignSql +
         """, p AS (SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
@@ -435,7 +438,6 @@ object VectorOps {
     // single-assigned; only query fan-out grows.
     ("q39_ivf_multiprobe",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         // One Lloyd pass shared by both probe depths, and the corpus
         // assignment materialized once for the join's neighbor side.
         val cents = ivfCentroids(s, d).localCheckpoint()
@@ -450,11 +452,7 @@ object VectorOps {
           .where(col("neighbor_id") =!= col("query_id"))
           .withColumn("cos", dot("qv", "nv") / (col("qn") * col("nn")))
           .select("query_id", "neighbor_id", "cos").distinct()
-        val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-        scored.withColumn("rank", row_number().over(w).cast("long"))
-          .where(col("rank") <= 3)
-          .select("query_id", "rank", "neighbor_id")
-          .orderBy("query_id", "rank")
+        topK(scored, 3)
       },
       Some(ivfAssignSql +
         """, probes AS (SELECT vec_id, cell FROM (

@@ -129,7 +129,7 @@ object WebOps {
     // would filter on. Map-only.
     ("q56_quality_filters",
       (s, d) => {
-        val t = docToksPub(s, d)
+        val t = docToks(s, d)
           .withColumn("n_toks", size(col("toks")))
           .where(col("n_toks") > 0)
           .withColumn("mean_word_len",
@@ -209,7 +209,7 @@ object WebOps {
     // trained-weights variant broadcasts one tiny weight vector.
     ("q76_quality_classifier",
       (s, d) => {
-        val t = docToksPub(s, d)
+        val t = docToks(s, d)
           .withColumn("n_toks", size(col("toks")))
           .where(col("n_toks") > 0)
           .withColumn("stop_frac",
@@ -529,8 +529,4 @@ object WebOps {
                coalesce(w.action = 'allow', TRUE) AS allowed
              FROM urls u LEFT JOIN w USING (doc_id) ORDER BY u.doc_id"""))
   )
-
-  /** Public twin of TextOps.docToks (kept private there). */
-  private def docToksPub(s: SparkSession, d: String): DataFrame =
-    tbl(s, d, "documents").withColumn("toks", tokens(col("text")))
 }

@@ -353,7 +353,7 @@ class ExtractJobSpec extends SparkSuite {
   test("payload memo: a hit reuses the record, the cap stops admission, results == direct calls") {
     val (n, bFrom, pad) = (400, 300, 2000)
     val cap = 64L * 1024
-    val memo = new PayloadMemo("balanced", capBytes = cap)
+    val memo = new PayloadMemo(Processor.default.extract(_, "balanced"), capBytes = cap)
     val got = (0 until n).map { i =>
       val p = ExtractJobSpec.memoRow(i, bFrom, pad)
       val r = memo.extract(p)
@@ -374,7 +374,7 @@ class ExtractJobSpec extends SparkSuite {
   }
 
   test("payload memo: payloads whose hashes collide never share an entry") {
-    val memo = new PayloadMemo("balanced", hash = _ => 42)
+    val memo = new PayloadMemo(Processor.default.extract(_, "balanced"), hash = _ => 42)
     val (a, b) = (Fixtures.textSimpleHtml, Fixtures.germanInvoiceHtml)
     val pages = Seq(a, a, b, b, a, b).zipWithIndex.map { case (h, i) =>
       KernelPage(s"https://c.example/$i", h.clone(), Seq("en", "de", "")(i % 3))

@@ -1,13 +1,16 @@
 package graft
 
 import graft.app.{ExtractJob, TwoPass}
-import graft.model.KernelPage
+import graft.extract.Processor
+import graft.model.{Enums, ExtractionRecord, KernelPage}
 import graft.synth.PageGen
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.{Join, MapPartitions, Window}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** K6 two-pass cascade (app.TwoPass): the chained-kernel shape — pass-1
-  * output selects pass-2's input; merge keeps the better extraction.
+/** K6 two-pass cascade (app.TwoPass): pass-1 output selects which
+  * documents get pass 2; the better extraction of each is kept.
   */
 class TwoPassSpec extends SparkSuite {
 
@@ -17,11 +20,10 @@ class TwoPassSpec extends SparkSuite {
   }
 
   test("two-pass: pass 2 runs exactly on the flagged subset and never regresses a doc") {
+    import spark.implicits._
     val kp = kernelPages(600).cache()
-    val pass1 = ExtractJob.extractKernel(kp, "fast")
-      .select("url", "word_count", "success", "confidence").cache()
-    val flagged = pass1.where(TwoPass.needsSecondPass)
-      .select("url").collect().map(_.getString(0)).toSet
+    val pass1 = ExtractJob.extractKernel(kp, "fast").as[ExtractionRecord].cache()
+    val flagged = pass1.collect().filter(TwoPass.needsSecondPass).map(_.url).toSet
     assert(flagged.nonEmpty, "corpus must flag some docs for the second pass")
     assert(flagged.size < 600, "cascade must not flag everything")
 
@@ -53,19 +55,36 @@ class TwoPassSpec extends SparkSuite {
     kp.unpersist(); pass1.unpersist(); merged.unpersist()
   }
 
-  test("duplicate urls (revisit snapshots) fail loudly instead of silently collapsing") {
+  test("revisit snapshots of one url each get their own cascade result and pass") {
     import spark.implicits._
-    // Same url twice with different payloads — the url-keyed flag join
-    // and merge window cannot re-associate these with their pass-1
-    // rows; the contract check must throw, not drop a snapshot.
-    val revisit = kernelPages(10).collect().toSeq
-    val dup = revisit ++ Seq(revisit.head.copy(
-      html = "<html><body><p>changed content on revisit</p></body></html>".getBytes("UTF-8")))
-    val ex = intercept[IllegalArgumentException] {
-      TwoPass.extract(spark.createDataset(dup))
+    val pages = kernelPages(200).collect().toSeq
+    def fast(p: KernelPage) = Processor.default.extract(p, Enums.Fast)
+    // One page the cascade leaves at pass 1, one it takes to pass 2.
+    val kept = pages.find(p => TwoPass.cascade(p) == fast(p)).get
+    val rescued = pages.find(p => TwoPass.cascade(p) != fast(p)).get
+    // A second snapshot of kept's url carrying rescued's payload.
+    val input = pages :+ rescued.copy(url = kept.url)
+    val out = TwoPass.extract(spark.createDataset(input))
+    val got = out.select(struct(out.columns.filter(_ != "pass").map(col): _*).as("_1"),
+      col("pass").as("_2")).as[(ExtractionRecord, Int)].collect().toSeq
+    val want = input.map { p =>
+      val r = TwoPass.cascade(p)
+      (r, if (r == fast(p)) 1 else 2)
     }
-    assert(ex.getMessage.contains("url-unique"), ex.getMessage)
-    assert(ex.getMessage.contains(revisit.head.url), ex.getMessage)
+    assert(got.sortBy(_.toString) == want.sortBy(_.toString))
+    assert(got.filter(_._1.url == kept.url).map(_._2).sorted == Seq(1, 2))
+  }
+
+  test("the cascade is one map-only kernel stage: no join, window or checkpoint") {
+    import spark.implicits._
+    val pages = spark.createDataset(kernelPages(20).collect().toSeq)
+    val plan = TwoPass.extract(pages).queryExecution.optimizedPlan
+    assert(plan.collect { case m: MapPartitions => m }.size == 1, plan)
+    assert(plan.collect {
+      case j: Join => j
+      case w: Window => w
+      case r: LogicalRDD => r
+    }.isEmpty, plan)
   }
 
   test("x64 query surface: deterministic, tagged, ordered") {

@@ -17,6 +17,7 @@ echo "== Simplicity check ($(pwd))"
 echo "lines:                 $(src | wc -l)"
 echo "non-blank non-comment: $(src | grep -cvE '^\s*$|^\s*(//|/\*|\*)')"
 echo "files with a main:     $(grep -rl 'def main' src/main/scala | wc -l)"
+echo "PayloadMemo built in:  $(grep -rl 'new PayloadMemo' src/main/scala | sed 's|^src/main/scala/graft/||' | sort | xargs)"
 echo "SPARK_GRAFT_ env vars: $(grep -rhoE 'SPARK_GRAFT_[A-Z_]+' src/main/scala | sort -u | xargs)"
 echo "flags per job:"
 grep -rcE 'Flags\.(Valued|Switch)' src/main/scala | grep -v ':0$' | sort | sed 's/^/  /'
