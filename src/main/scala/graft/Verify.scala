@@ -2,24 +2,22 @@ package graft
 import graft.app.SparkUtil
 import graft.json.PyJson
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json (always the full map), for a DuckDB compare
+  * (tools/check_oracle.py). Names after OUT_DIR dump just those queries;
+  * an unknown name fails, naming the nearest queries, before the output
+  * directory is touched or a session starts. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = args match {
-      case Array(sf, out) => (sf, out)
-      case _ => throw new IllegalArgumentException("usage: Verify SF_DIR OUT_DIR")
+    val (sfDir, outDir, names) = args.toSeq match {
+      case Seq(sf, out, names @ _*) => (sf, out, graft.tools.Query.lookup(names))
+      case _ => throw new IllegalArgumentException("usage: Verify SF_DIR OUT_DIR [name...]")
     }
     prepareOut(outDir)
     val spark = SparkUtil.session("graft-verify")
-    // Builder-iteration aid: SPARK_GRAFT_ONLY=q67_inverted_index,q73_…
-    // dumps just those queries (the driver never sets it — full surface).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
+    val selected =
+      if (names.isEmpty) SparkEntry.queries
+      else SparkEntry.queries.filter { case (n, _) => names.contains(n) }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -3,7 +3,8 @@ package graft.app
 import graft.extract.{PayloadMemo, Processor}
 import graft.jobs.{Checkpoint, LineageRow}
 import graft.json.PyJson
-import graft.model.{Enums, ExtractionRecord, KernelPage, Page}
+import graft.model.{ExtractionRecord, KernelPage, Page}
+import graft.route.Router
 import graft.synth.PageGen
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -145,12 +146,6 @@ object ExtractJob {
     a
   }
 
-  /** API-boundary quality gate (reference service/main.py:390-394 regex;
-    * router.py:134-136 normalization): invalid → balanced.
-    */
-  def normalizeQuality(q: String): String =
-    if (Enums.Qualities.contains(q)) q else Enums.Balanced
-
   def bucketExpr(buckets: Int): Column = pmod(xxhash64(col("url")), lit(buckets)).cast("int")
 
   /** The extraction kernel stage — the one place Spark runs the kernel.
@@ -159,14 +154,12 @@ object ExtractJob {
     * ReadSchema never includes the unused golden `text` or `warc_ts`.
     * The stage is opaque to Catalyst: every other pruning or filtering
     * must happen before this call (SURVEY.md §4.2 obligation 1).
-    * `quality` is normalized here, so every caller's rows carry a valid
-    * quality.
+    * The kernel normalizes `quality` (route.Router), so every caller's
+    * rows carry a valid quality.
     */
   def extractKernel(pages: Dataset[_], quality: String,
-      slim: Boolean = false): DataFrame = {
-    val q = normalizeQuality(quality)
-    kernelStage(pages, Processor.default.extract(_, q), slim)
-  }
+      slim: Boolean = false): DataFrame =
+    kernelStage(pages, Processor.default.extract(_, quality), slim)
 
   /** The stage itself, running `kernel` once per row: one extraction at
     * a fixed quality (extractKernel) or the two-pass cascade
@@ -212,7 +205,7 @@ object ExtractJob {
     */
   def run(spark: SparkSession, a0: Args): Seq[LineageRow] = {
     requireWarcFlags(a0)
-    val a = a0.copy(quality = normalizeQuality(a0.quality))
+    val a = a0.copy(quality = Router.normalizeQuality(a0.quality))
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     val pages = loadPages(spark, a)

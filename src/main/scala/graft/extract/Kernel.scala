@@ -5,6 +5,7 @@ import graft.classify.Detector
 import graft.html.BlockSegmenter
 import graft.model._
 import graft.pdf.PdfParser
+import graft.route.Router
 import graft.text.PyText
 
 /** Payload dispatch: `%PDF-` magic → PDF text-layer parse, else HTML
@@ -146,8 +147,9 @@ object DirectExtract {
   }
 }
 
-/** The two-pass extraction processor — classification → per-page OCR-need
-  * decision → extract with fallback cascade → byte-exact composition.
+/** The two-pass extraction processor — classification → routing
+  * (route.Router normalizes the quality and picks the OCR pages) →
+  * extract with fallback cascade → byte-exact composition.
   * Direct port of the reference's `TwoPassProcessor` semantics
   * (src/text_extraction/processor.py:39-472) over parsed payloads.
   *
@@ -162,13 +164,6 @@ final class Processor(
     fallbackBackend: Option[ExtractionBackend] = Some(new AltTextBackend()),
     config: ProcessorConfig = ProcessorConfig(),
     detector: Detector = Detector.default) extends Serializable {
-
-  /** OCR-need predicate (processor.py:248-276). */
-  def pageNeedsOcr(pageNumber: Int, classification: Classification, quality: String): Boolean = {
-    if (quality == Enums.Fast) false
-    else if (classification.image_pages.contains(pageNumber)) true
-    else quality == Enums.Accurate && classification.hybrid_pages.contains(pageNumber)
-  }
 
   /** Fallback cascade (processor.py:315-386). Returns
     * (text, method, backendName, error).
@@ -214,17 +209,23 @@ final class Processor(
   }
 
   /** Per-page loop (processor.py:177-246): page results in order plus
-    * error records for OCR-needing pages that errored.
+    * error records for OCR-needing pages that errored. A page needs OCR
+    * when the Router sends it to OCR (route.Router.ocrPages).
     */
   def processPages(
       doc: ParsedDoc,
       classification: Classification,
-      quality: String): (Vector[PageResult], Vector[PageError]) = {
+      quality: String): (Vector[PageResult], Vector[PageError]) =
+    processPages(doc, Router.default.ocrPages(classification, quality))
+
+  private def processPages(
+      doc: ParsedDoc,
+      ocrPages: Vector[Int]): (Vector[PageResult], Vector[PageError]) = {
     val results = Vector.newBuilder[PageResult]
     val errors = Vector.newBuilder[PageError]
     var pageNumber = 1
     while (pageNumber <= doc.totalPages) {
-      val needsOcr = pageNeedsOcr(pageNumber, classification, quality)
+      val needsOcr = ocrPages.contains(pageNumber)
       val (text, method, backendName, error) = extractPageText(doc, pageNumber, needsOcr)
       if (error.isDefined && needsOcr)
         errors += PageError(pageNumber, backendName, error.get)
@@ -261,7 +262,8 @@ final class Processor(
     * narrow kernel projection — url/html/lang are the only input columns
     * extraction reads (model.KernelPage).
     */
-  def extract(page: KernelPage, quality: String): ExtractionRecord = {
+  def extract(page: KernelPage, qualityRaw: String): ExtractionRecord = {
+    val quality = Router.normalizeQuality(qualityRaw)
     DocParser.parse(page.html) match {
       case Left(err) =>
         ExtractionRecord(
@@ -274,10 +276,10 @@ final class Processor(
           error = Some(err))
       case Right(doc) =>
         val classification = detector.classify(doc)
-        val (pageResults, pageErrors) = processPages(doc, classification, quality)
+        val ocrPages = Router.default.ocrPages(classification, quality)
+        val (pageResults, pageErrors) = processPages(doc, ocrPages)
         // Backend counters (processor.py:116-124).
-        val attempted = pageResults.count(r =>
-          pageNeedsOcr(r.page_number, classification, quality))
+        val attempted = ocrPages.length
         val failed = pageErrors.length
         // Text composition (processor.py:403-432) in one pass, byte-
         // identical to the reference's "\n\n".join(parts): blank pages

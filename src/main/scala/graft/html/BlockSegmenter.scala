@@ -39,7 +39,6 @@ object BlockSegmenter {
   private final class BlockBuf {
     val sb = new java.lang.StringBuilder()
     var anchorChars = 0
-    var tag = "body"
     var ctx = ""
   }
 
@@ -53,7 +52,7 @@ object BlockSegmenter {
       // no token vector) — this is the segmentation hot path.
       val norm = PyText.normalizeSpaces(buf.sb)
       if (norm.nonEmpty)
-        out += Block(Block.TextType, norm, math.min(buf.anchorChars, norm.length), buf.tag, buf.ctx, "")
+        out += Block(Block.TextType, norm, math.min(buf.anchorChars, norm.length), buf.ctx, "")
       buf.sb.setLength(0)
       buf.anchorChars = 0
     }
@@ -66,7 +65,7 @@ object BlockSegmenter {
     // did after its recursive call (block: flush + buf restore; inline:
     // trailing space), so the emitted blocks are byte-identical.
     val stack = new ArrayBuffer[WalkFrame](16)
-    stack += new WalkFrame(pageRoot, initialCtx(pageRoot), 0, WalkFrame.ExitNone, null, null)
+    stack += new WalkFrame(pageRoot, initialCtx(pageRoot), 0, WalkFrame.ExitNone, null)
     while (stack.nonEmpty) {
       val f = stack(stack.length - 1)
       if (f.idx < f.el.children.length) {
@@ -81,21 +80,20 @@ object BlockSegmenter {
             if (skipTags.contains(tag)) ()
             else if (tag == "img") {
               flush()
-              out += Block(Block.ImageType, "", 0, "img", f.ctx, child.attr("alt"))
+              out += Block(Block.ImageType, "", 0, f.ctx, child.attr("alt"))
             } else if (tag == "br" || tag == "hr") {
               buf.sb.append(' ')
             } else if (blockTags.contains(tag)) {
               flush()
               val childCtx = if (boilerCtxTags.contains(tag)) tag else f.ctx
-              val nf = new WalkFrame(child, childCtx, f.anchorDepth,
-                WalkFrame.ExitBlock, buf.tag, buf.ctx)
-              buf.tag = tag; buf.ctx = childCtx
-              stack += nf
+              stack += new WalkFrame(child, childCtx, f.anchorDepth,
+                WalkFrame.ExitBlock, buf.ctx)
+              buf.ctx = childCtx
             } else {
               // Inline element (a, b, i, em, strong, span, ...).
               val depth = if (tag == "a") f.anchorDepth + 1 else f.anchorDepth
               buf.sb.append(' ')
-              stack += new WalkFrame(child, f.ctx, depth, WalkFrame.ExitInline, null, null)
+              stack += new WalkFrame(child, f.ctx, depth, WalkFrame.ExitInline, null)
             }
         }
       } else {
@@ -103,7 +101,7 @@ object BlockSegmenter {
         f.exitKind match {
           case WalkFrame.ExitBlock =>
             flush()
-            buf.tag = f.prevTag; buf.ctx = f.prevCtx
+            buf.ctx = f.prevCtx
           case WalkFrame.ExitInline =>
             buf.sb.append(' ')
           case _ => ()
@@ -121,7 +119,7 @@ object BlockSegmenter {
   }
   private final class WalkFrame(
       val el: Element, val ctx: String, val anchorDepth: Int,
-      val exitKind: Int, val prevTag: String, val prevCtx: String) {
+      val exitKind: Int, val prevCtx: String) {
     var idx = 0
   }
 

@@ -86,9 +86,7 @@ object Links {
     * skip binary families (PDF, images) without decoding them.
     */
   def looksHtml(payload: Array[Byte]): Boolean =
-    payload.length > 0 &&
-      !(payload.length >= 5 && payload(0) == '%' && payload(1) == 'P' &&
-        payload(2) == 'D' && payload(3) == 'F' && payload(4) == '-') &&
+    payload.length > 0 && !graft.pdf.PdfParser.isPdf(payload) &&
       !(payload.length >= 4 && (payload(0) & 0xff) == 0x89 && payload(1) == 'P') && // PNG
       !(payload.length >= 2 && (payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8) // JPEG
 

@@ -12,8 +12,6 @@ final case class Block(
     text: String,
     /** Characters inside anchors — for link-density boilerplate scoring. */
     anchorChars: Int,
-    /** Block element tag ("p", "h1", "li", ... ; "pdf" for PDF blocks). */
-    tag: String,
     /** Innermost boilerplate-ish ancestor ("nav"/"header"/"footer"/
       * "aside"), or "" when in main content flow.
       */
@@ -24,10 +22,10 @@ final case class Block(
 object Block {
   val TextType = 0
   val ImageType = 1
-  def text(t: String, tag: String = "p", anchorChars: Int = 0, ctx: String = ""): Block =
-    Block(TextType, t, anchorChars, tag, ctx, "")
-  def image(alt: String, tag: String = "img", ctx: String = ""): Block =
-    Block(ImageType, "", 0, tag, ctx, alt)
+  def text(t: String, anchorChars: Int = 0, ctx: String = ""): Block =
+    Block(TextType, t, anchorChars, ctx, "")
+  def image(alt: String, ctx: String = ""): Block =
+    Block(ImageType, "", 0, ctx, alt)
 }
 
 /** One unit/page of a parsed document. */

@@ -647,7 +647,7 @@ object PdfParser {
     def endBlock(): Unit = {
       if (curLine.length > 0) newLine()
       val text = lines.filterNot(_.isEmpty).mkString("\n")
-      if (text.nonEmpty) out += Block.text(text, tag = "pdf")
+      if (text.nonEmpty) out += Block.text(text)
       lines.clear(); curLine.setLength(0)
     }
 
@@ -696,7 +696,7 @@ object PdfParser {
             operands.lastOption.foreach {
               case PName(name) =>
                 xobjects.get(name).foreach { case (isImage, alt) =>
-                  if (isImage) out += Block.image(alt, tag = "pdfimg")
+                  if (isImage) out += Block.image(alt)
                 }
               case _ =>
             }

@@ -49,7 +49,7 @@ object PipelineOps {
       case None =>
         val n = if (payload == null) 0 else payload.length
         val magic =
-          if (n >= 5 && new String(payload, 0, 5, java.nio.charset.StandardCharsets.ISO_8859_1) == "%PDF-") "pdf"
+          if (n > 0 && graft.pdf.PdfParser.isPdf(payload)) "pdf"
           else if (n > 0 && (payload(0) == '<' || payload(0) == ' ')) "html"
           else "bin"
         MediaMeta(url, n.toLong, magic, if (magic == "bin") "binary" else "document", 0, 0, 0)
@@ -397,10 +397,9 @@ object PipelineOps {
     // CASE-WHEN + list comprehensions. A green hash proves the Scala
     // Router equals the published matrix on quality×type×backend×
     // page-mix combinations, including the reasoning text byte-for-byte.
-    // The kernel does not call the Router: it decides OCR pages with
-    // Processor.pageNeedsOcr, a separate port of the same policy. A
-    // RouterSpec property pins that both pick the same pages for every
-    // Detector classification and quality.
+    // This is the Router every extraction runs: the kernel normalizes
+    // its quality through it and extracts with OCR exactly the pages of
+    // Router.default.ocrPages (extract.Processor).
     ("q48_routing_plan",
       (s, d) => {
         import s.implicits._

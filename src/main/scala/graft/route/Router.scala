@@ -20,15 +20,8 @@ final class Router(
     timePerDirectPage: Double = Router.DefaultTimePerDirectPage) extends Serializable {
 
   def route(classification: Classification, qualityRaw: String): RoutingDecision = {
-    // Invalid quality normalizes to balanced (router.py:134-136).
-    val quality =
-      if (Enums.Qualities.contains(qualityRaw)) qualityRaw else Enums.Balanced
-
-    var strategy = determineStrategy(classification.pdf_type, quality)
-    // No OCR backend → force direct only (router.py:142-143).
-    if (strategy != Enums.DirectOnly && !hasOcrBackend) strategy = Enums.DirectOnly
-
-    val (directPages, ocrPages) = selectPages(classification, strategy, quality)
+    val quality = Router.normalizeQuality(qualityRaw)
+    val (strategy, directPages, ocrPages) = selectPages(classification, quality)
     val est = estimateCost(ocrPages.length, directPages.length)
     val reasoning = generateReasoning(
       classification.pdf_type, quality, strategy, directPages, ocrPages)
@@ -44,6 +37,12 @@ final class Router(
       total_pages = classification.total_pages,
       reasoning = reasoning)
   }
+
+  /** The pages `route` sends to OCR, sorted: the kernel's per-page OCR
+    * decision (processor.py:248-276) is membership in this set.
+    */
+  def ocrPages(classification: Classification, quality: String): Vector[Int] =
+    selectPages(classification, Router.normalizeQuality(quality))._3
 
   /** Cost model (router.py:173-197): direct extraction is free. */
   def estimateCost(ocrPageCount: Int, directPageCount: Int = 0): CostEstimate = {
@@ -67,24 +66,26 @@ final class Router(
     else if (docType == Enums.Hybrid) Enums.OcrSelective
     else Enums.DirectOnly
 
-  /** Page selection (router.py:247-283): OCR_SELECTIVE sends image pages
-    * to OCR, text pages direct; hybrid pages follow quality (accurate →
-    * OCR, balanced → direct); outputs sorted.
+  /** Strategy and page selection (router.py:142-143, 247-283) for a
+    * normalized quality: (strategy, direct pages, OCR pages). No OCR
+    * backend forces direct only; OCR_SELECTIVE sends image pages to OCR,
+    * text pages direct; hybrid pages follow quality (accurate → OCR,
+    * balanced → direct); outputs sorted.
     */
-  def selectPages(
-      classification: Classification,
-      strategy: String,
-      quality: String): (Vector[Int], Vector[Int]) = {
+  private def selectPages(classification: Classification,
+      quality: String): (String, Vector[Int], Vector[Int]) = {
+    val strategy =
+      if (hasOcrBackend) determineStrategy(classification.pdf_type, quality) else Enums.DirectOnly
     val allPages = (1 to classification.total_pages).toVector
     strategy match {
-      case Enums.DirectOnly => (allPages, Vector.empty)
-      case Enums.OcrAll => (Vector.empty, allPages)
+      case Enums.DirectOnly => (strategy, allPages, Vector.empty)
+      case Enums.OcrAll => (strategy, Vector.empty, allPages)
       case _ =>
         var direct = classification.text_pages.toVector
         var ocr = classification.image_pages.toVector
         if (quality == Enums.Accurate) ocr = ocr ++ classification.hybrid_pages
         else direct = direct ++ classification.hybrid_pages
-        (direct.sorted, ocr.sorted)
+        (strategy, direct.sorted, ocr.sorted)
     }
   }
 
@@ -120,4 +121,10 @@ object Router {
   val DefaultTimePerOcrPage = 3.0
   val DefaultTimePerDirectPage = 0.1
   val default = new Router()
+
+  /** API-boundary quality gate (reference service/main.py:390-394 regex;
+    * router.py:134-136 normalization): invalid → balanced.
+    */
+  def normalizeQuality(q: String): String =
+    if (Enums.Qualities.contains(q)) q else Enums.Balanced
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.app.{ExtractJob, SparkUtil}
+import graft.app.SparkUtil
 import graft.extract.Processor
 import graft.model.Page
 import graft.synth.Fixtures
@@ -107,9 +107,9 @@ object Query {
 
   /** The kernel's record for the named fixture family, one field per line,
     * then its text between `---- text ----` and `---- end ----`. The
-    * quality is normalized as the kernel stage normalizes it, so the
-    * record is the one `ExtractJob` writes (an invalid quality reads
-    * `balanced`). A missing or unknown family fails listing the families.
+    * kernel normalizes the quality, so the record is the one `ExtractJob`
+    * writes (an invalid quality reads `balanced`). A missing or unknown
+    * family fails listing the families.
     */
   def kernel(args: Seq[String]): String = {
     val families = Fixtures.families.map(_._1).mkString(", ")
@@ -122,7 +122,7 @@ object Query {
     val payload = Fixtures.families.toMap.getOrElse(family, throw new IllegalArgumentException(
       s"unknown family '$family'; one of: $families"))
     val page = Page(s"https://fixtures.example/$family", new Timestamp(0L), payload, "", "en")
-    val r = Processor.default.extract(page, ExtractJob.normalizeQuality(quality))
+    val r = Processor.default.extract(page, quality)
     Seq(
       s"url:               ${r.url}",
       s"success:           ${r.success}",

@@ -290,6 +290,117 @@ class ProcessorSpec extends AnyFunSuite {
     }
   }
 
+  // --- routing: the record fields the Router decides ----------------------
+
+  test("routing fields of every fixture family at every quality (invalid → balanced)") {
+    // (family, quality in, pdf_type, extraction_method, quality out,
+    //  attempted, successful, failed, per-page methods)
+    val expected = Seq(
+    ("text_simple", "fast", "pure_text", "direct", "fast", 0, 0, 0, Seq("direct")),
+    ("text_simple", "balanced", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct")),
+    ("text_simple", "accurate", "pure_text", "direct", "accurate", 0, 0, 0, Seq("direct")),
+    ("text_simple", "draft", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct")),
+    ("image_only", "fast", "pure_image", "direct (no OCR backend available)", "fast", 0, 0, 0, Seq("direct")),
+    ("image_only", "balanced", "pure_image", "hybrid (direct + llm_ocr)", "balanced", 1, 1, 0, Seq("llm_ocr")),
+    ("image_only", "accurate", "pure_image", "hybrid (direct + llm_ocr)", "accurate", 1, 1, 0, Seq("llm_ocr")),
+    ("image_only", "draft", "pure_image", "hybrid (direct + llm_ocr)", "balanced", 1, 1, 0, Seq("llm_ocr")),
+    ("hybrid_2p", "fast", "hybrid", "direct", "fast", 0, 0, 0, Seq("direct", "direct")),
+    ("hybrid_2p", "balanced", "hybrid", "hybrid (direct + llm_ocr)", "balanced", 1, 1, 0, Seq("direct", "llm_ocr")),
+    ("hybrid_2p", "accurate", "hybrid", "hybrid (direct + llm_ocr)", "accurate", 1, 1, 0, Seq("direct", "llm_ocr")),
+    ("hybrid_2p", "draft", "hybrid", "hybrid (direct + llm_ocr)", "balanced", 1, 1, 0, Seq("direct", "llm_ocr")),
+    ("empty", "fast", "pure_image", "direct (no OCR backend available)", "fast", 0, 0, 0, Seq("direct")),
+    ("empty", "balanced", "pure_image", "direct (no OCR backend available)", "balanced", 1, 0, 1, Seq("direct")),
+    ("empty", "accurate", "pure_image", "direct (no OCR backend available)", "accurate", 1, 0, 1, Seq("direct")),
+    ("empty", "draft", "pure_image", "direct (no OCR backend available)", "balanced", 1, 0, 1, Seq("direct")),
+    ("multipage_3", "fast", "pure_text", "direct", "fast", 0, 0, 0, Seq("direct", "direct", "direct")),
+    ("multipage_3", "balanced", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct", "direct", "direct")),
+    ("multipage_3", "accurate", "pure_text", "direct", "accurate", 0, 0, 0, Seq("direct", "direct", "direct")),
+    ("multipage_3", "draft", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct", "direct", "direct")),
+    ("german_invoice", "fast", "pure_text", "direct", "fast", 0, 0, 0, Seq("direct")),
+    ("german_invoice", "balanced", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct")),
+    ("german_invoice", "accurate", "pure_text", "direct", "accurate", 0, 0, 0, Seq("direct")),
+    ("german_invoice", "draft", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct")),
+    ("boilerplate", "fast", "pure_text", "direct", "fast", 0, 0, 0, Seq("direct")),
+    ("boilerplate", "balanced", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct")),
+    ("boilerplate", "accurate", "pure_text", "direct", "accurate", 0, 0, 0, Seq("direct")),
+    ("boilerplate", "draft", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct")),
+    ("corrupted", "fast", "unknown", "error", "fast", 0, 0, 0, Seq()),
+    ("corrupted", "balanced", "unknown", "error", "balanced", 0, 0, 0, Seq()),
+    ("corrupted", "accurate", "unknown", "error", "accurate", 0, 0, 0, Seq()),
+    ("corrupted", "draft", "unknown", "error", "balanced", 0, 0, 0, Seq()),
+    ("text_simple_pdf", "fast", "pure_text", "direct", "fast", 0, 0, 0, Seq("direct")),
+    ("text_simple_pdf", "balanced", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct")),
+    ("text_simple_pdf", "accurate", "pure_text", "direct", "accurate", 0, 0, 0, Seq("direct")),
+    ("text_simple_pdf", "draft", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct")),
+    ("image_only_pdf", "fast", "pure_image", "direct (no OCR backend available)", "fast", 0, 0, 0, Seq("direct")),
+    ("image_only_pdf", "balanced", "pure_image", "hybrid (direct + llm_ocr)", "balanced", 1, 1, 0, Seq("llm_ocr")),
+    ("image_only_pdf", "accurate", "pure_image", "hybrid (direct + llm_ocr)", "accurate", 1, 1, 0, Seq("llm_ocr")),
+    ("image_only_pdf", "draft", "pure_image", "hybrid (direct + llm_ocr)", "balanced", 1, 1, 0, Seq("llm_ocr")),
+    ("hybrid_2p_pdf", "fast", "hybrid", "direct", "fast", 0, 0, 0, Seq("direct", "direct")),
+    ("hybrid_2p_pdf", "balanced", "hybrid", "hybrid (direct + llm_ocr)", "balanced", 1, 1, 0, Seq("direct", "llm_ocr")),
+    ("hybrid_2p_pdf", "accurate", "hybrid", "hybrid (direct + llm_ocr)", "accurate", 1, 1, 0, Seq("direct", "llm_ocr")),
+    ("hybrid_2p_pdf", "draft", "hybrid", "hybrid (direct + llm_ocr)", "balanced", 1, 1, 0, Seq("direct", "llm_ocr")),
+    ("multipage_3_pdf", "fast", "pure_text", "direct", "fast", 0, 0, 0, Seq("direct", "direct", "direct")),
+    ("multipage_3_pdf", "balanced", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct", "direct", "direct")),
+    ("multipage_3_pdf", "accurate", "pure_text", "direct", "accurate", 0, 0, 0, Seq("direct", "direct", "direct")),
+    ("multipage_3_pdf", "draft", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct", "direct", "direct")),
+    ("german_invoice_pdf", "fast", "pure_text", "direct", "fast", 0, 0, 0, Seq("direct")),
+    ("german_invoice_pdf", "balanced", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct")),
+    ("german_invoice_pdf", "accurate", "pure_text", "direct", "accurate", 0, 0, 0, Seq("direct")),
+    ("german_invoice_pdf", "draft", "pure_text", "direct", "balanced", 0, 0, 0, Seq("direct"))
+    )
+    assert(expected.map(e => (e._1, e._2)) ==
+      (for ((f, _) <- Fixtures.families; q <- Seq("fast", "balanced", "accurate", "draft")) yield (f, q)))
+    for ((family, q, pdfType, method, quality, attempted, successful, failed, pageMethods) <- expected) {
+      val r = Processor.default.extract(
+        KernelPage(s"https://fixtures.example/$family", Fixtures.families.toMap.apply(family), "en"), q)
+      assert((r.pdf_type, r.extraction_method, r.quality, r.attempted_pages, r.successful_pages,
+        r.failed_pages, r.pages.map(_.method)) ==
+        (pdfType, method, quality, attempted, successful, failed, pageMethods), s"$family $q")
+    }
+  }
+
+  test("property: the kernel extracts with OCR exactly the Router's OCR pages of its Detector classification") {
+    import graft.classify.Detector
+    import graft.route.Router
+    import org.scalacheck.{Gen, Prop, Test}
+    // Each page is a <section> of t text and i image blocks; no sections
+    // is the empty payload, which parses to zero pages.
+    val page = for {
+      t <- Gen.choose(0, 3)
+      i <- Gen.choose(0, 2)
+    } yield (t, i)
+    val docs = Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, page))
+    val asked = scala.collection.mutable.ArrayBuffer[Int]()
+    val recording = new ExtractionBackend {
+      val name = "recording"; val method = Enums.LlmOcr
+      def isAvailable = true
+      def extractText(doc: ParsedDoc, pageNumber: Int): String = { asked += pageNumber; "ocr" }
+    }
+    val proc = new Processor(Some(recording), None)
+    val prop = Prop.forAllNoShrink(docs) { pages =>
+      val html = if (pages.isEmpty) "" else pages.map { case (t, i) =>
+        "<section>" + "<p>t</p>" * t + "<img alt=\"a\">" * i + "</section>"
+      }.mkString("<body>", "", "</body>")
+      val payload = html.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val doc = DocParser.parse(payload).toOption.get
+      val c = Detector.default.classify(doc)
+      doc == ParsedDoc(pages.map { case (t, i) =>
+        DocPage(Vector.fill(t)(Block.text("t")) ++ Vector.fill(i)(Block.image("a")))
+      }.toVector) &&
+      Seq(Enums.Fast, Enums.Balanced, Enums.Accurate, "draft").forall { q =>
+        asked.clear()
+        val r = proc.extract(KernelPage("https://p.example/", payload, "en"), q)
+        val ocr = Router.default.route(c, q).ocr_pages
+        asked == ocr && r.attempted_pages == ocr.length &&
+          r.quality == Router.normalizeQuality(q)
+      }
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(2000).withInitialSeed(0x0C2L), prop)
+    assert(res.passed, res.status)
+  }
+
   test("page order is preserved in composition (W1)") {
     val r = extract(Fixtures.multipageHtml(5), Enums.Balanced)
     val idx = (1 to 5).map(i => r.text.indexOf(s"--- Page $i ---"))

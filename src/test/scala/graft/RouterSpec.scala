@@ -119,26 +119,12 @@ class RouterSpec extends AnyFunSuite {
     assert(math.abs(e.total_time_seconds - (10.0 + 0.6)) < 1e-12)
   }
 
-  test("property: the kernel's pageNeedsOcr picks the Router's OCR pages for every Detector classification") {
-    import graft.classify.Detector
-    import graft.extract.Processor
-    import org.scalacheck.{Gen, Prop, Test}
-    // Every page is text, image or hybrid, and `unknown` means zero
-    // pages, so the two ports of the policy must agree on all of them.
-    val page = for {
-      t <- Gen.choose(0, 3)
-      i <- Gen.choose(0, 2)
-    } yield DocPage(Vector.fill(t)(Block.text("t")) ++ Vector.fill(i)(Block.image("a")))
-    val doc = Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, page)).map(ps => ParsedDoc(ps.toVector))
-    val prop = Prop.forAllNoShrink(doc) { d =>
-      val c = Detector.default.classify(d)
-      Seq(Enums.Fast, Enums.Balanced, Enums.Accurate).forall { q =>
-        Router.default.route(c, q).ocr_pages ==
-          (1 to d.totalPages).filter(Processor.default.pageNeedsOcr(_, c, q))
-      }
-    }
-    val res = Test.check(
-      Test.Parameters.default.withMinSuccessfulTests(2000).withInitialSeed(0x0C2L), prop)
-    assert(res.passed, res.status)
+  test("ocrPages is route's OCR page list; an invalid quality normalizes to balanced") {
+    for (router <- Seq(r, noBackend); c <- Seq(textCls, imageCls, hybridCls, cls(Enums.Unknown, 0));
+         q <- Seq(Enums.Fast, Enums.Balanced, Enums.Accurate, "draft"))
+      assert(router.ocrPages(c, q) == router.route(c, q).ocr_pages, s"${c.pdf_type} $q")
+    assert(Seq(Enums.Fast, Enums.Balanced, Enums.Accurate, "draft", "", "FAST")
+      .map(Router.normalizeQuality) ==
+      Seq(Enums.Fast, Enums.Balanced, Enums.Accurate, Enums.Balanced, Enums.Balanced, Enums.Balanced))
   }
 }

@@ -39,11 +39,8 @@ object StreamSegmenter {
   private final class Frame(
       val tag: String,
       val kind: Int,
-      // Block frames: saved buffer attribution to restore on close.
-      val savedTag: String,
+      // Block frames: saved buffer ctx to restore on close.
       val savedCtx: String,
-      val savedInBodySection: Boolean,
-      val savedInRootSection: Boolean,
       // Inline frames: +1 when this frame is an <a>.
       val anchorDelta: Int,
       // The (single) page-root body frame: restores outer state on close.
@@ -59,9 +56,7 @@ object StreamSegmenter {
       val block: Block,
       val insideBody: Boolean,
       val bodySectionIdx: Int,  // -1 = not inside a body-rooted top section
-      val rootSectionIdx: Int,  // -1 = not inside a root-rooted top section
-      val directUnderBodySection: Boolean,
-      val directUnderRootSection: Boolean)
+      val rootSectionIdx: Int)  // -1 = not inside a root-rooted top section
 
   def parseHtml(html: String): ParsedDoc = {
     val toks = HtmlTokenizer.tokenize(html)
@@ -73,9 +68,6 @@ object StreamSegmenter {
     var ctx = "" // innermost boiler ancestor below the page root
     val sb = new java.lang.StringBuilder()
     var anchorChars = 0
-    var bufTag = "body" // BlockBuf initial attribution (BlockSegmenter)
-    var inBodySection = false // buffer directly inside a body-axis top section?
-    var inRootSection = false // …or a root-axis top section?
     var bodyFrame: Frame = null // the open page-root body frame, if any
     var bodySeen = false // any <body> element (even self-closing)
     var nBodySections = 0
@@ -87,9 +79,8 @@ object StreamSegmenter {
       val norm = PyText.normalizeSpaces(sb)
       if (norm.nonEmpty) {
         out += new Emitted(
-          Block(Block.TextType, norm, math.min(anchorChars, norm.length), bufTag, ctx, ""),
-          bodyFrame != null, curBodySection, curRootSection,
-          inBodySection, inRootSection)
+          Block(Block.TextType, norm, math.min(anchorChars, norm.length), ctx, ""),
+          bodyFrame != null, curBodySection, curRootSection)
       }
       sb.setLength(0)
       anchorChars = 0
@@ -101,10 +92,7 @@ object StreamSegmenter {
         case KBlock =>
           if (skipDepth == 0) {
             flush()
-            bufTag = f.savedTag
             ctx = f.savedCtx
-            inBodySection = f.savedInBodySection
-            inRootSection = f.savedInRootSection
           }
           if (f.bodySectionIdx >= 0) curBodySection = -1
           if (f.rootSectionIdx >= 0) curRootSection = -1
@@ -140,16 +128,15 @@ object StreamSegmenter {
         val pushed = !selfClosing && !Dom.voidTags.contains(name)
         if (skipTags.contains(name)) {
           if (pushed) {
-            stack += new Frame(name, KSkip, "", "", false, false, 0, false, 0, 0, -1, -1)
+            stack += new Frame(name, KSkip, "", 0, false, 0, 0, -1, -1)
             skipDepth += 1
           }
         } else if (name == "img") {
           if (skipDepth == 0) {
             flush()
             out += new Emitted(
-              Block(Block.ImageType, "", 0, "img", ctx, attrs.getOrElse("alt", "")),
-              bodyFrame != null, curBodySection, curRootSection,
-              inBodySection, inRootSection)
+              Block(Block.ImageType, "", 0, ctx, attrs.getOrElse("alt", "")),
+              bodyFrame != null, curBodySection, curRootSection)
           }
         } else if (name == "br" || name == "hr") {
           if (skipDepth == 0) sb.append(' ')
@@ -167,8 +154,7 @@ object StreamSegmenter {
             flush()
             if (pushed) {
               val f = new Frame(name, KBlock,
-                savedTag = bufTag, savedCtx = ctx,
-                savedInBodySection = inBodySection, savedInRootSection = inRootSection,
+                savedCtx = ctx,
                 anchorDelta = 0,
                 isBodyRoot = isBodyRoot,
                 savedAnchorDepth = anchorDepth, savedSkipDepth = skipDepth,
@@ -176,25 +162,21 @@ object StreamSegmenter {
                 rootSectionIdx = if (isRootSection) nRootSections else -1)
               stack += f
               if (isBodyRoot) {
-                // The body-axis walk is rooted AT body: fresh attribution,
-                // ctx, anchor and skip state (body may sit under anchors,
-                // boiler ancestors or invisible markup).
+                // The body-axis walk is rooted AT body: fresh ctx, anchor
+                // and skip state (body may sit under anchors, boiler
+                // ancestors or invisible markup).
                 bodyFrame = f
-                bufTag = "body"; ctx = ""
-                inBodySection = false; inRootSection = false
+                ctx = ""
                 anchorDepth = 0; skipDepth = 0
               } else {
                 if (isBodySection) { curBodySection = nBodySections; nBodySections += 1 }
                 if (isRootSection) { curRootSection = nRootSections; nRootSections += 1 }
-                bufTag = name
                 if (boilerCtxTags.contains(name)) ctx = name
-                inBodySection = isBodySection
-                inRootSection = isRootSection
               }
             }
             if (!pushed) {
               // Self-closing block: childless — flush happened, no
-              // attribution change survives. A self-closed top-level
+              // ctx change survives. A self-closed top-level
               // SECTION is still a (block-less) page on its axis: the
               // DOM version collects section elements regardless of
               // whether they nested children.
@@ -203,15 +185,14 @@ object StreamSegmenter {
             }
           } else if (pushed) {
             // Structural bookkeeping inside an invisible subtree.
-            stack += new Frame(name, KBlock, bufTag, ctx, inBodySection, inRootSection,
-              0, false, 0, 0, -1, -1)
+            stack += new Frame(name, KBlock, ctx, 0, false, 0, 0, -1, -1)
           }
         } else {
           // Inline element.
           if (skipDepth == 0) sb.append(' ')
           if (pushed) {
             val delta = if (name == "a") 1 else 0
-            stack += new Frame(name, KInline, "", "", false, false, delta, false, 0, 0, -1, -1)
+            stack += new Frame(name, KInline, "", delta, false, 0, 0, -1, -1)
             anchorDepth += delta
           } else {
             if (skipDepth == 0) sb.append(' ') // childless: trailing space now
@@ -233,27 +214,23 @@ object StreamSegmenter {
     // Page assembly — mirror BlockSegmenter.parseHtml:
     //   pageRoot = first <body> element if any, else the document root;
     //   pages = pageRoot's direct <section> children, else pageRoot.
-    // Blocks DIRECTLY under a winning top section re-attribute their tag
-    // to "body" (each section runs as a fresh segment() walk there).
-    def finalBlock(e: Emitted, direct: Boolean): Block =
-      if (direct && e.block.tpe == Block.TextType) e.block.copy(tag = "body") else e.block
     if (bodySeen) {
       if (nBodySections > 0) {
         ParsedDoc(Vector.tabulate(nBodySections) { i =>
           DocPage(out.iterator.filter(e => e.insideBody && e.bodySectionIdx == i)
-            .map(e => finalBlock(e, e.directUnderBodySection)).toVector)
+            .map(_.block).toVector)
         })
       } else {
         ParsedDoc(Vector(DocPage(
-          out.iterator.filter(_.insideBody).map(e => finalBlock(e, direct = false)).toVector)))
+          out.iterator.filter(_.insideBody).map(_.block).toVector)))
       }
     } else if (nRootSections > 0) {
       ParsedDoc(Vector.tabulate(nRootSections) { i =>
         DocPage(out.iterator.filter(_.rootSectionIdx == i)
-          .map(e => finalBlock(e, e.directUnderRootSection)).toVector)
+          .map(_.block).toVector)
       })
     } else {
-      ParsedDoc(Vector(DocPage(out.iterator.map(e => finalBlock(e, direct = false)).toVector)))
+      ParsedDoc(Vector(DocPage(out.iterator.map(_.block).toVector)))
     }
   }
 }

@@ -44,7 +44,7 @@ class StreamSegmenterSpec extends AnyFunSuite {
       "<ul><li>one<li>two</ul>after",
       "<div><p>para</div>trailing",                      // p closed by div end
       "<body><section><p>s1</p></section><section>s2</section></body>",
-      "<body><section>direct text</section></body>",     // tag attribution: body
+      "<body><section>direct text</section></body>",     // text directly in a page
       "<body>before<section>in</section>between<section>in2</section>after</body>",
       "<body><div><section>nested, not a page</section></div></body>",
       "<body><section><section>inner</section></section></body>",

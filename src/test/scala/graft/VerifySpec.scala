@@ -3,17 +3,25 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The correctness dump main (graft.Verify): a wrong argument count fails
-  * with its usage before any session starts, and `prepareOut` cleans only
-  * a directory an earlier Verify run wrote.
+/** The correctness dump main (graft.Verify): a wrong argument count or an
+  * unknown query name fails before any session starts, and `prepareOut`
+  * cleans only a directory an earlier Verify run wrote.
   */
 class VerifySpec extends AnyFunSuite {
 
   test("Verify rejects a wrong argument count with its usage") {
-    for (args <- Seq(Array.empty[String], Array("sf", "out", "extra"))) {
+    for (args <- Seq(Array.empty[String], Array("sf"))) {
       val e = intercept[IllegalArgumentException](Verify.main(args))
-      assert(e.getMessage == "usage: Verify SF_DIR OUT_DIR", args.mkString(" "))
+      assert(e.getMessage == "usage: Verify SF_DIR OUT_DIR [name...]", args.mkString(" "))
     }
+  }
+
+  test("Verify rejects an unknown query name before creating OUT_DIR") {
+    val out = Paths.get(SparkSuite.tmpDir("verify_names")).resolve("out")
+    val e = intercept[IllegalArgumentException](
+      Verify.main(Array("sf", out.toString, "q48_routing_plan", "extra")))
+    assert(e.getMessage.startsWith("unknown query 'extra' (nearest: "), e.getMessage)
+    assert(!Files.exists(out))
   }
 
   /** A fresh directory holding an empty file at each relative path. */
