@@ -53,20 +53,20 @@ object PdfParser {
       // case: "encrypted" only to restrict printing/copying). AES and
       // real password protection refuse loudly — honest error beats
       // silent garbage (the reference gets decryption from PyMuPDF).
-      val trailerDict: Option[PDict] = {
-        val classic = Option(s.lastIndexOf("trailer")).filter(_ >= 0).flatMap { tpos =>
-          // A stray "trailer" token with no dict after it (e.g. inside an
-          // uncompressed stream of an xref-stream PDF) must not abort the
-          // whole parse via charAt(-1) in parseValueAt.
-          Option(s.indexOf("<<", tpos)).filter(_ >= 0)
-            .flatMap(parseValueAt(s, _)).collect { case (d: PDict, _) => d }
-        }
+      // The classic trailer dict, parsed once: /Encrypt here, /Root below.
+      val classic = Option(s.lastIndexOf("trailer")).filter(_ >= 0).flatMap { tpos =>
+        // A stray "trailer" token with no dict after it (e.g. inside an
+        // uncompressed stream of an xref-stream PDF) must not abort the
+        // whole parse via charAt(-1) in parseValueAt.
+        Option(s.indexOf("<<", tpos)).filter(_ >= 0)
+          .flatMap(parseValueAt(s, _)).collect { case (d: PDict, _) => d }
+      }
+      val trailerDict: Option[PDict] =
         classic.filter(_.v.contains("Encrypt")).orElse(
           topObjs.values.collectFirst {
             case o if o.dict.v.get("Type").contains(PName("XRef")) &&
               o.dict.v.contains("Encrypt") => o.dict
           }).orElse(classic)
-      }
       val decryptedTop: Map[Int, PObj] =
         trailerDict.flatMap(td => td.v.get("Encrypt").map(td -> _)) match {
           case None => topObjs
@@ -102,9 +102,7 @@ object PdfParser {
       // Find the catalog: via trailer /Root if present, else any /Type /Catalog.
       val catalog: Option[PObj] = {
         val viaTrailer = for {
-          tpos <- Option(s.lastIndexOf("trailer")).filter(_ >= 0)
-          dpos <- Option(s.indexOf("<<", tpos)).filter(_ >= 0)
-          dict <- parseValueAt(s, dpos).collect { case (d: PDict, _) => d }
+          dict <- classic
           root <- dict.v.get("Root").collect { case PRef(n) => n }
           obj <- objs.get(root)
         } yield obj

@@ -131,22 +131,16 @@ object PipelineOps {
           .select("canonical_id", "n_docs")
           .orderBy("canonical_id")
       },
-      Some("""WITH ids AS MATERIALIZED (SELECT unnest(range(0, 2000)) AS id),
+      Some(s"""WITH ids AS MATERIALIZED (SELECT unnest(range(0, 2000)) AS id),
              -- splitmix64, staged via lateral aliases; MATERIALIZED stops
              -- CTE inlining from exponentially re-expanding the chain.
              ma AS MATERIALIZED (
                SELECT *,
-                 CAST((CAST(CAST(xor(id, 1685418085) AS UBIGINT) AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS ma_z1,
-                 CAST((CAST(xor(ma_z1, ma_z1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS ma_z2,
-                 CAST((CAST(xor(ma_z2, ma_z2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS ma_z3,
-                 xor(ma_z3, ma_z3 >> 31) AS ma
+                 ${PageGen.mix64Sql("CAST(xor(id, 1685418085) AS UBIGINT)", "ma_")(_ + " AS ma")}
                FROM ids),
              mb AS MATERIALIZED (
                SELECT *,
-                 CAST((CAST(xor(CAST(42 AS UBIGINT), ma) AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS mb_z1,
-                 CAST((CAST(xor(mb_z1, mb_z1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS mb_z2,
-                 CAST((CAST(xor(mb_z2, mb_z2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS mb_z3,
-                 xor(mb_z3, mb_z3 >> 31) AS mb
+                 ${PageGen.mix64Sql("xor(CAST(42 AS UBIGINT), ma)", "mb_")(_ + " AS mb")}
                FROM ma),
              cid_t AS MATERIALIZED (
                SELECT id, CASE WHEN CAST(mb >> 11 AS DOUBLE) / 9007199254740992.0 < 0.06 AND id >= 32
@@ -154,17 +148,11 @@ object PipelineOps {
                FROM mb),
              mc AS MATERIALIZED (
                SELECT *,
-                 CAST((CAST(CAST(xor(cid, 439721224556) AS UBIGINT) AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS mc_z1,
-                 CAST((CAST(xor(mc_z1, mc_z1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS mc_z2,
-                 CAST((CAST(xor(mc_z2, mc_z2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS mc_z3,
-                 xor(mc_z3, mc_z3 >> 31) AS mc
+                 ${PageGen.mix64Sql("CAST(xor(cid, 439721224556) AS UBIGINT)", "mc_")(_ + " AS mc")}
                FROM cid_t),
              md AS MATERIALIZED (
                SELECT *,
-                 CAST((CAST(xor(CAST(42 AS UBIGINT), mc) AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS md_z1,
-                 CAST((CAST(xor(md_z1, md_z1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS md_z2,
-                 CAST((CAST(xor(md_z2, md_z2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS md_z3,
-                 xor(md_z3, md_z3 >> 31) AS md
+                 ${PageGen.mix64Sql("xor(CAST(42 AS UBIGINT), mc)", "md_")(_ + " AS md")}
                FROM mc),
              fam AS (
                SELECT id, cid, CAST(md >> 11 AS DOUBLE) / 9007199254740992.0 AS u,
@@ -654,22 +642,16 @@ object PipelineOps {
                sum(col("height").cast("long")).as("sum_h"))
           .orderBy("format")
       },
-      Some("""WITH ids AS MATERIALIZED (SELECT unnest(range(0, 500)) AS id),
+      Some(s"""WITH ids AS MATERIALIZED (SELECT unnest(range(0, 500)) AS id),
              -- splitmix64 finalizer (PageGen.mix64) of id^0x77 → width
              w1 AS MATERIALIZED (
                SELECT *,
-                 CAST((CAST(CAST(xor(id, 119) AS UBIGINT) AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS wz1,
-                 CAST((CAST(xor(wz1, wz1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS wz2,
-                 CAST((CAST(xor(wz2, wz2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS wz3,
-                 CAST((xor(wz3, wz3 >> 31) & 1023) + 16 AS INT) AS w
+                 ${PageGen.mix64Sql("CAST(xor(id, 119) AS UBIGINT)", "w")(x => s"CAST(($x & 1023) + 16 AS INT) AS w")}
                FROM ids),
              -- and of id^0x68 → height
              h1 AS MATERIALIZED (
                SELECT *,
-                 CAST((CAST(CAST(xor(id, 104) AS UBIGINT) AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS hz1,
-                 CAST((CAST(xor(hz1, hz1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS hz2,
-                 CAST((CAST(xor(hz2, hz2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS hz3,
-                 CAST((xor(hz3, hz3 >> 31) & 1023) + 16 AS INT) AS h
+                 ${PageGen.mix64Sql("CAST(xor(id, 104) AS UBIGINT)", "h")(x => s"CAST(($x & 1023) + 16 AS INT) AS h")}
                FROM w1),
              img AS (
                SELECT
@@ -729,29 +711,20 @@ object PipelineOps {
                max("idx").as("max_idx"))
           .orderBy("kind")
       },
-      Some("""WITH ids AS MATERIALIZED (SELECT unnest(range(0, 200)) AS id),
+      Some(s"""WITH ids AS MATERIALIZED (SELECT unnest(range(0, 200)) AS id),
              -- mix64(id^0xa1) → sample-rate pick, mix64(id^0xb2) →
              -- channels, mix64(id^0xc3) → requested duration (wavFor)
              ra AS MATERIALIZED (
                SELECT *,
-                 CAST((CAST(CAST(xor(id, 161) AS UBIGINT) AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS az1,
-                 CAST((CAST(xor(az1, az1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS az2,
-                 CAST((CAST(xor(az2, az2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS az3,
-                 xor(az3, az3 >> 31) & 3 AS rate_idx
+                 ${PageGen.mix64Sql("CAST(xor(id, 161) AS UBIGINT)", "a")(_ + " & 3 AS rate_idx")}
                FROM ids),
              rb AS MATERIALIZED (
                SELECT *,
-                 CAST((CAST(CAST(xor(id, 178) AS UBIGINT) AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS bz1,
-                 CAST((CAST(xor(bz1, bz1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS bz2,
-                 CAST((CAST(xor(bz2, bz2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS bz3,
-                 1 + CAST(xor(bz3, bz3 >> 31) & 1 AS BIGINT) AS channels
+                 ${PageGen.mix64Sql("CAST(xor(id, 178) AS UBIGINT)", "b")(x => s"1 + CAST($x & 1 AS BIGINT) AS channels")}
                FROM ra),
              rc AS MATERIALIZED (
                SELECT *,
-                 CAST((CAST(CAST(xor(id, 195) AS UBIGINT) AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS cz1,
-                 CAST((CAST(xor(cz1, cz1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS cz2,
-                 CAST((CAST(xor(cz2, cz2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS cz3,
-                 200 + CAST(xor(cz3, cz3 >> 31) & 2047 AS BIGINT) AS req_ms
+                 ${PageGen.mix64Sql("CAST(xor(id, 195) AS UBIGINT)", "c")(x => s"200 + CAST($x & 2047 AS BIGINT) AS req_ms")}
                FROM rb),
              au AS (
                SELECT id, channels, req_ms,
@@ -772,10 +745,7 @@ object PipelineOps {
              -- every 4th frame starting at 0
              vd AS MATERIALIZED (
                SELECT *,
-                 CAST((CAST(CAST(xor(id, 212) AS UBIGINT) AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS dz1,
-                 CAST((CAST(xor(dz1, dz1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS dz2,
-                 CAST((CAST(xor(dz2, dz2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS dz3,
-                 1 + CAST(xor(dz3, dz3 >> 31) & 31 AS BIGINT) AS frames
+                 ${PageGen.mix64Sql("CAST(xor(id, 212) AS UBIGINT)", "d")(x => s"1 + CAST($x & 31 AS BIGINT) AS frames")}
                FROM ids)
              SELECT 'audio_chunk' AS kind,
                     CAST(count(*) AS BIGINT) AS n_docs,

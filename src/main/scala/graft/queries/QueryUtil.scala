@@ -80,12 +80,13 @@ object QueryUtil {
     * type); both directions are derived here. Output: (node, label)
     * where label = min node id of the component. Plan depth stays O(1)
     * across rounds via localCheckpoint. A label moves one hop per round,
-    * so convergence takes O(component diameter) rounds, each a join plus
-    * a `count`; the `maxIters = 1000` cap is a runaway guard that fails
-    * LOUDLY through the `require` below. An O(log n)-round form is
-    * ROADMAP direction 3.
+    * so convergence takes O(component diameter) rounds, each one join
+    * and a `count` of the rows whose label moved (`nbr_label < label`,
+    * carried in the round's own frame); the `MaxIters` cap is a runaway
+    * guard that fails LOUDLY through the `require` below. An
+    * O(log n)-round form is ROADMAP direction 3.
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 1000): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val Seq(srcCol, dstCol) = pairs.columns.toSeq.take(2).map(col)
     val edges = pairs.select(srcCol.as("src"), dstCol.as("dst"))
       .union(pairs.select(dstCol.as("src"), srcCol.as("dst"))).persist()
@@ -93,24 +94,26 @@ object QueryUtil {
       .withColumn("label", col("node")).persist()
     var changed = 1L
     var iters = 0
-    while (changed > 0 && iters < maxIters) {
+    while (changed > 0 && iters < MaxIters) {
       val nbrMin = edges.join(labels, col("src") === col("node"))
         .groupBy(col("dst")).agg(min("label").as("nbr_label"))
       val next = labels.join(nbrMin, col("node") === col("dst"), "left")
         .select(col("node"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-      val nextCp = next.localCheckpoint()
-      changed = nextCp.join(labels.withColumnRenamed("label", "old"), Seq("node"))
-        .where(col("label") =!= col("old")).count()
+          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
+          coalesce(col("nbr_label") < col("label"), lit(false)).as("moved"))
+        .localCheckpoint()
+      changed = next.where(col("moved")).count()
       labels.unpersist()
-      labels = nextCp
+      labels = next
       iters += 1
     }
     require(changed == 0,
-      s"label propagation did not converge in $maxIters rounds")
+      s"label propagation did not converge in $MaxIters rounds")
     edges.unpersist()
-    labels
+    labels.select("node", "label")
   }
+
+  private val MaxIters = 1000
 
   /** Lower-cased, www-/default-port-stripped host of a url — the same
     * normalization as the q54 canonicalizer (WebOps), extracted as the

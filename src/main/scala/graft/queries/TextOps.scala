@@ -407,7 +407,7 @@ object TextOps {
     // generation → exact-Jaccard verification (only on candidates — the
     // O(n²) compare never happens) → connected-components clustering by
     // iterative smallest-label propagation (QueryUtil.connectedComponents:
-    // O(cluster diameter) rounds, capped at maxIters = 1000 by a
+    // O(cluster diameter) rounds, capped at MaxIters = 1000 by a
     // require; an O(log n)-round form is ROADMAP direction 3).
     // cluster_id = min doc_id of the component = the canonical
     // document to keep.

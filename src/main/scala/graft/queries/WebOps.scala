@@ -458,10 +458,10 @@ object WebOps {
     // hosts share a base rule set, even hosts add a /tmp disallow,
     // every third host adds the CLASSIC override case — '/private/'
     // Allow shadowing the shorter '/private' Disallow. Scale shape:
-    // robots rule sets are KB per host, so the rules table broadcasts
-    // and the filter is a map-only prefix-match + per-url local argmax
-    // — no shuffle touches the url table; at 10^8 hosts the rules side
-    // is still the small side (bucket/bloom it by host if not).
+    // robots rule sets are KB per host, so a small rules table falls
+    // under the broadcast threshold and the filter is a map-only
+    // prefix-match + per-url local argmax — no shuffle touches the url
+    // table; no hint forces that, so a crawl-scale rules table shuffles.
     ("q90_robots_filter",
       (s, d) => {
         val hosts = s.range(5)
@@ -482,18 +482,18 @@ object WebOps {
             .when(col("doc_id") % 4 === 1, concat(lit("/private/"), col("doc_id")))
             .when(col("doc_id") % 4 === 2, concat(lit("/public/docs/"), col("doc_id")))
             .otherwise(concat(lit("/tmp/"), col("doc_id"))).as("path"))
-        // Genuinely map-only: the rule SETS broadcast (one array per
-        // host), each url filters its host's rules by prefix and takes
+        // Map-only when the rule SETS broadcast (one array per
+        // host): each url filters its host's rules by prefix and takes
         // the argmax per row via array_max over (len, is_allow, path)
         // structs — lexicographic struct order IS the REP precedence
         // (longest first, Allow beats Disallow on equal length; a full
         // (len, action) tie forces identical rule strings, since a
         // prefix of a given length is unique). No window, no second
-        // join: the url table is never shuffled (the final orderBy is
+        // join: broadcast, the url table is never shuffled (the orderBy is
         // presentation, dropped at production scale).
         val rulesByHost = rules.groupBy("host")
           .agg(collect_list(struct(col("rule_path"), col("action"))).as("rs"))
-        urls.join(broadcast(rulesByHost), Seq("host"), "left")
+        urls.join(rulesByHost, Seq("host"), "left")
           .withColumn("w", array_max(transform(
             filter(col("rs"), r => startswith(col("path"), r.getField("rule_path"))),
             r => struct(length(r.getField("rule_path")).as("l"),

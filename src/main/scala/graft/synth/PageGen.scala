@@ -41,6 +41,17 @@ object PageGen {
     z ^ (z >>> 31)
   }
 
+  /** [[mix64]] as DuckDB select items over the UBIGINT expression `in`:
+    * the `<p>z1`..`<p>z3` steps (wrapped to 64 bits through HUGEINT),
+    * one per line, then `wrap` of the final `xor(<p>z3, <p>z3 >> 31)`.
+    * The oracle SQL of q43, q46 and q52 re-derives PageGen's draws with it.
+    */
+  def mix64Sql(in: String, p: String)(wrap: String => String): String =
+    s"""CAST((CAST($in AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS ${p}z1,
+       |CAST((CAST(xor(${p}z1, ${p}z1 >> 30) AS UHUGEINT) * 13787848793156543929) % 18446744073709551616 AS UBIGINT) AS ${p}z2,
+       |CAST((CAST(xor(${p}z2, ${p}z2 >> 27) AS UHUGEINT) * 10723151780598845931) % 18446744073709551616 AS UBIGINT) AS ${p}z3,
+       |${wrap(s"xor(${p}z3, ${p}z3 >> 31)")}""".stripMargin
+
   private def unitDouble(h: Long): Double = ((h >>> 11).toDouble / (1L << 53).toDouble)
 
   def hostFor(seed: Long, id: Long): Int = {

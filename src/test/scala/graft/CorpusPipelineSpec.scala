@@ -373,4 +373,17 @@ class CorpusPipelineSpec extends SparkSuite {
     assert(!new java.io.File(s"$out/provenance").exists(),
       "stale provenance sidecar survived a run without --provenance")
   }
+
+  test("a run that throws releases every frame it cached") {
+    // An eval table without a `text` column fails the decontamination
+    // stage after the extract, quality and dedup stages have been cached.
+    val evalDir = tmpDir("cp_bad_eval")
+    spark.range(3).toDF("id").write.mode("overwrite").parquet(evalDir)
+    spark.catalog.clearCache()
+    intercept[org.apache.spark.sql.AnalysisException](CorpusPipeline.run(spark,
+      Args(rows = 200, out = tmpDir("cp_bad"), evalPath = evalDir)))
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cache.isEmpty, "a failed run left frames in the session's cache")
+  }
 }

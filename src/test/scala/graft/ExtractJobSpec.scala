@@ -117,6 +117,50 @@ class ExtractJobSpec extends SparkSuite {
     }
   }
 
+  test("a hybrid page: accurate OCRs it, balanced reads it direct, two-pass keeps accurate") {
+    import spark.implicits._
+    // src/test/resources/hybrid_page.html: one page with two text blocks
+    // and an <img alt>, the mixed page neither PageGen nor Fixtures
+    // plants (they feed the goldens and the benchmark inputs).
+    val html = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(getClass.getResource("/hybrid_page.html").toURI))
+    val url = "https://news.example/harbour.html"
+    val input = tmpDir("xjob-hybrid-in")
+    PageGen.generate(spark, 24)
+      .union(Seq(graft.model.Page(url, new java.sql.Timestamp(0L), html, "", "en")).toDS())
+      .write.mode("overwrite").parquet(input)
+    def job(a: Args): Map[String, org.apache.spark.sql.Row] = {
+      val out = tmpDir("xjob-hybrid")
+      ExtractJob.run(spark, a.copy(input = input, out = out, buckets = 2))
+      spark.read.parquet(out).drop("bucket").collect()
+        .map(r => r.getAs[String]("url") -> r).toMap
+    }
+    val balanced = job(Args(quality = "balanced"))
+    val accurate = job(Args(quality = "accurate"))
+    val twoPass = job(Args(twoPass = true))
+
+    val (b, a) = (balanced(url), accurate(url))
+    assert(b.getAs[scala.collection.Seq[Int]]("hybrid_pages").toSeq == Seq(1), b)
+    assert(b.getAs[String]("extraction_method") == "direct", b)
+    assert(b.getAs[Int]("attempted_pages") == 0, b)
+    assert(a.getAs[String]("extraction_method") == "hybrid (direct + llm_ocr)", a)
+    assert(a.getAs[Int]("attempted_pages") == 1, a)
+    assert(a.getAs[String]("text").contains("(OCR: llm_ocr)"), a)
+
+    // Every other url reads the same under both qualities.
+    def without(r: org.apache.spark.sql.Row, column: String): Seq[String] =
+      r.schema.fieldNames.toSeq.filter(_ != column).map(f => String.valueOf(r.getAs[Any](f)))
+    assert(balanced.keySet == accurate.keySet && balanced.size == 25)
+    (balanced.keySet - url).foreach { u =>
+      assert(without(balanced(u), "quality") == without(accurate(u), "quality"), u)
+    }
+
+    // The cascade flags the page and keeps its accurate record.
+    val t = twoPass(url)
+    assert(t.getAs[Int]("pass") == 2, t)
+    assert(without(t, "pass") == without(a, "pass"), t)
+  }
+
   test("a run whose waves match no row returns one zero lineage row per bucket") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._

@@ -197,4 +197,26 @@ class WebOpsSpec extends SparkSuite {
     // Both verdicts occur — the filter actually partitions the crawl.
     assert(rows.exists(_._4) && rows.exists(!_._4))
   }
+
+  test("q90 with broadcast joins off: no BroadcastExchange, same rows as the default plan") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
+    val want = rows(SparkEntry.queries("q90_robots_filter")(spark, sf))
+    val conf = spark.conf
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    try {
+      keys.foreach(conf.set(_, "-1"))
+      // No hint forces the rules side to broadcast: the size thresholds
+      // decide, so a crawl-scale rules table shuffles.
+      val df = SparkEntry.queries("q90_robots_filter")(spark, sf)
+      val got = rows(df)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastExchange"), plan)
+      assert(got.nonEmpty && got == want)
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }
