@@ -35,12 +35,12 @@ import org.apache.spark.sql.functions._
   * Each stage is one call to `run`'s local `stage` step, the one owner of
   * the protocol: cache the kept frame, count it, write its drops to
   * provenance (`recordDrops`, the one writer), release the frame it
-  * replaced. Each sidecar output is one `sidecar` call: write, then count
-  * by reading back. A `finally` releases whatever the run cached, also
-  * when a stage throws. The order of the run's Spark actions is a
-  * contract: perfbench's `corpus_pipeline` maps the non-provenance
-  * actions to stages by position and spots provenance writes by the
-  * `recordDrops` frame on their call stack.
+  * replaced. The sidecar outputs go through one `sidecar` step: write,
+  * then count by reading back. A `finally` releases whatever the run
+  * cached, also when a stage throws. The order of the run's Spark
+  * actions is a contract: perfbench's `corpus_pipeline` maps the
+  * non-provenance actions to stages by position and spots provenance
+  * writes by the `recordDrops` frame on their call stack.
   */
 object CorpusPipeline {
 
@@ -130,10 +130,12 @@ object CorpusPipeline {
       kept
     }
 
-    // One sidecar output: write `df` under $out/`dir`, count it back.
-    def sidecar(name: String, df: DataFrame, dir: String): Unit = {
-      df.write.mode("overwrite").parquet(s"${a.out}/$dir")
-      stages += name -> spark.read.parquet(s"${a.out}/$dir").count()
+    // Sidecar outputs (name, df, dir): write every `df` under $out/`dir`,
+    // then count each by reading it back (--stats writes both tables
+    // before either read-back).
+    def sidecar(outs: (String, DataFrame, String)*): Unit = {
+      for ((_, df, dir) <- outs) df.write.mode("overwrite").parquet(s"${a.out}/$dir")
+      for ((name, _, dir) <- outs) stages += name -> spark.read.parquet(s"${a.out}/$dir").count()
     }
 
     try {
@@ -148,7 +150,7 @@ object CorpusPipeline {
       // 0.5. Link-record sidecar (optional, --links): the WAT analog, over
       // EVERY page before any filtering — the crawl graph (q89's PageRank,
       // frontier scheduling) wants the pages quality/dedup will drop too.
-      if (a.links) sidecar("links", PipelineOps.linkRecords(pagesDf), "links")
+      if (a.links) sidecar(("links", PipelineOps.linkRecords(pagesDf), "links"))
 
       // Every run clears the provenance sidecar first, flag or no flag, so
       // an earlier run's rows never read as this run's drops.
@@ -270,10 +272,11 @@ object CorpusPipeline {
         val sh = clean
           .select(col("lang"), explode_outer(shingles3(col("toks"))).as("g"))
           .where(col("g").isNotNull)
-        sidecar("stats_hll_registers", SketchStats.hllRegisters(sh, "g", "lang"),
-          "stats/hll_registers")
-        sidecar("stats_cms_cells", SketchStats.cmsCounters(
-          clean.select(explode(col("toks")).as("term")), "term"), "stats/cms_counters")
+        sidecar(
+          ("stats_hll_registers", SketchStats.hllRegisters(sh, "g", "lang"),
+            "stats/hll_registers"),
+          ("stats_cms_cells", SketchStats.cmsCounters(
+            clean.select(explode(col("toks")).as("term")), "term"), "stats/cms_counters"))
       }
 
       // 7. Token-window chunking (q57's windows). Drops nothing, so
@@ -286,8 +289,8 @@ object CorpusPipeline {
 
       // 8. Stratified sampling (q58's rates: en 80% / de 50% / * 20%),
       // keyed on (url, win_id) so the sample is reproducible.
-      sidecar("sampled", windows.where(TrainOps.sampleKept(col("lang"),
-        concat(col("url"), lit("#"), col("win_id")))), "training_windows")
+      sidecar(("sampled", windows.where(TrainOps.sampleKept(col("lang"),
+        concat(col("url"), lit("#"), col("win_id")))), "training_windows"))
 
       // 9. Sequence PACKING (optional, q75's prefix sum): cleaned docs
       // concatenated in md5(url) order and chopped into --window-token
@@ -301,7 +304,7 @@ object CorpusPipeline {
           .withColumn("okey", md5(col("url")))
           .withColumn("bucket", conv(substring(col("okey"), 1, 4), 16, 10).cast("long"))
           .withColumn("n_toks", size(col("toks")))
-        sidecar("packed", TrainOps.prefixOffsets(t, col("okey"), col("url"))
+        sidecar(("packed", TrainOps.prefixOffsets(t, col("okey"), col("url"))
           .select(col("tok_offset"), posexplode(col("toks")).as(Seq("tidx", "tok")))
           .withColumn("seq_id", expr(s"(tok_offset + tidx) div $L"))
           .withColumn("gpos", col("tok_offset") + col("tidx"))
@@ -309,7 +312,7 @@ object CorpusPipeline {
           .agg(count(lit(1)).cast("int").as("n_toks"),
             concat_ws(" ", transform(
               array_sort(collect_list(struct(col("gpos"), col("tok")))),
-              x => x.getField("tok"))).as("sequence_text")), "packed_sequences")
+              x => x.getField("tok"))).as("sequence_text")), "packed_sequences"))
       }
 
       // Explicit schema: a run that dropped nothing appends no part
@@ -318,7 +321,11 @@ object CorpusPipeline {
         spark.read.schema("url STRING, stage STRING, detail STRING").parquet(provPath).count()
 
       stages.result()
-    } finally cached.foreach(_.unpersist())
+    } finally {
+      // Newest first: no frame is uncached while a cached frame built on
+      // it remains (Spark re-checks such dependents on every uncache).
+      cached.reverseIterator.foreach(_.unpersist())
+    }
   }
 
   def main(argv: Array[String]): Unit = {

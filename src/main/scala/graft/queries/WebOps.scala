@@ -489,8 +489,8 @@ object WebOps {
         // (longest first, Allow beats Disallow on equal length; a full
         // (len, action) tie forces identical rule strings, since a
         // prefix of a given length is unique). No window, no second
-        // join: broadcast, the url table is never shuffled (the orderBy is
-        // presentation, dropped at production scale).
+        // join: with the rules broadcast, the url table is never shuffled
+        // (the orderBy is presentation, dropped at production scale).
         val rulesByHost = rules.groupBy("host")
           .agg(collect_list(struct(col("rule_path"), col("action"))).as("rs"))
         urls.join(rulesByHost, Seq("host"), "left")
