@@ -1,9 +1,10 @@
 package graft.app
 
+import graft.model.ExtractionRecord
 import graft.queries.QueryUtil._
 import graft.queries.{PipelineOps, Sketch, TextOps, TrainOps}
 import graft.synth.PageGen
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The full training-data pipeline as ONE spark-submit command — the
@@ -157,10 +158,13 @@ object CorpusPipeline {
       val provDir = new org.apache.hadoop.fs.Path(provPath)
       provDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(provDir, true)
 
-      // 1. Extraction (slim schema — the corpus path).
+      // 1. Extraction. The typed filter runs on the kernel's records
+      // before they are encoded, so the select sits right on the encoder
+      // and Spark encodes only its four columns. A column filter would
+      // sit between them and keep the nested per-page columns encoded.
       val extracted = stage("extracted", pagesDf,
-        ExtractJob.extractKernel(pagesDf, a.quality, slim = true)
-          .where(col("success") && length(col("text")) > 0)
+        ExtractJob.extractKernel(pagesDf, a.quality).as(Encoders.product[ExtractionRecord])
+          .filter(r => r.success && r.text.nonEmpty)
           .select("url", "lang", "text", "word_count"), lost = "extract")
 
       // 2. Quality filter, deliberately LOOSER than q56: mean_word_len in

@@ -3,7 +3,7 @@ package graft.app
 import graft.extract.{PayloadMemo, Processor}
 import graft.jobs.{Checkpoint, LineageRow}
 import graft.json.PyJson
-import graft.model.{ExtractionRecord, KernelPage, Page}
+import graft.model.{ExtractionRecord, KernelPage}
 import graft.route.Router
 import graft.synth.PageGen
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, SparkSession}
@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
 /** The extraction pipeline as a spark-submit batch job (SURVEY.md §3.1's
   * Spark lifecycle + §4.4 physical plan of record):
   *
-  *   scan(pages, pushed filters) → project → [map-only] ExtractKernel
+  *   scan(pages, pushed filters) → project(url, html, lang)
+  *     → [map-only] ExtractKernel → [--slim: project flat columns]
   *     → exchange(bucket) → observe(lineage) → write results
   *       partitionBy(bucket) → append lineage rows
   *
@@ -24,6 +25,10 @@ import org.apache.spark.sql.functions._
   *    — the scan's input splits are the parallelism. The only exchange is
   *    of compact post-kernel records, clustering output files by bucket:
   *    each wave writes exactly one file per bucket.
+  *  - **One record type, projected.** The kernel stage always emits
+  *    model.ExtractionRecord; `--slim` is one `select` of its flat
+  *    per-document columns (`slim`), and Spark prunes the nested per-page
+  *    serializers out of the stage's generated code (SlimCodegenSpec).
   *  - **Explicit bucket partitioning** for lineage/resume: bucket =
   *    pmod(xxhash64(url), B). xxhash64 spreads Zipfian hosts uniformly,
   *    so bucket sizes are balanced regardless of host skew; skew in
@@ -70,9 +75,9 @@ object ExtractJob {
       buckets: Int = 64,
       waveSize: Int = 0, // 0 → all remaining buckets in one wave
       inputFormat: String = "table", // table (parquet/iceberg via TableIO) | warc
-      // Corpus-scale output schema: flat per-document columns only
-      // (model.SlimRecord) — drops the nested per-page structs whose
-      // encoding is pure lineage-debug detail at 10^12 rows.
+      // Corpus-scale output schema: a projection of the kernel's record
+      // to its flat per-document columns (`slim`), dropping the nested
+      // per-page structs that only lineage-debug runs need.
       slim: Boolean = false,
       // I4 completion notification (reference service/jobs.py:231-247
       // fire-and-forget webhook): on job completion a one-line JSON
@@ -153,13 +158,14 @@ object ExtractJob {
     * columns (model.KernelPage) before the stage, so a parquet scan's
     * ReadSchema never includes the unused golden `text` or `warc_ts`.
     * The stage is opaque to Catalyst: every other pruning or filtering
-    * must happen before this call (SURVEY.md §4.2 obligation 1).
+    * must happen before this call (SURVEY.md §4.2 obligation 1). Its
+    * output columns are model.ExtractionRecord's; a `select` above it
+    * prunes the serializers of the columns it drops.
     * The kernel normalizes `quality` (route.Router), so every caller's
     * rows carry a valid quality.
     */
-  def extractKernel(pages: Dataset[_], quality: String,
-      slim: Boolean = false): DataFrame =
-    kernelStage(pages, Processor.default.extract(_, quality), slim)
+  def extractKernel(pages: Dataset[_], quality: String): DataFrame =
+    kernelStage(pages, Processor.default.extract(_, quality))
 
   /** The stage itself, running `kernel` once per row: one extraction at
     * a fixed quality (extractKernel) or the two-pass cascade
@@ -167,26 +173,33 @@ object ExtractJob {
     * `url` and `lang` it copies from the row (extract.PayloadMemo).
     */
   private[app] def kernelStage(pages: Dataset[_],
-      kernel: KernelPage => ExtractionRecord, slim: Boolean): DataFrame = {
+      kernel: KernelPage => ExtractionRecord): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val in = pages.select("url", "html", "lang").as[KernelPage]
     // One payload memo per task (extract.PayloadMemo): a repeated
     // payload is extracted once, and the memo is dropped with the task.
-    if (slim)
-      in.mapPartitions { it =>
-        val memo = new PayloadMemo(kernel)
-        it.map(p => memo.extract(p).toSlim)
-      }.toDF()
-    else
-      in.mapPartitions { it =>
-        val memo = new PayloadMemo(kernel)
-        it.map(memo.extract)
-      }.toDF()
+    pages.select("url", "html", "lang").as[KernelPage].mapPartitions { it =>
+      val memo = new PayloadMemo(kernel)
+      it.map(memo.extract)
+    }.toDF()
   }
 
-  def loadPages(spark: SparkSession, a: Args): Dataset[Page] = {
-    import spark.implicits._
+  /** The `--slim` output: the kernel's flat per-document columns, with
+    * `error` as "" where the record has none, then `pass` on a two-pass
+    * run. The nested per-page columns are never encoded. `error` stays a
+    * nullable column (a `when`, not a `coalesce`), as the flat schema
+    * has always written it.
+    */
+  def slim(recs: DataFrame): DataFrame =
+    recs.select(Seq("url", "success", "pdf_type", "total_pages", "text", "word_count",
+      "confidence", "extraction_method", "quality", "lang").map(col) ++
+      Seq(when(col("error").isNull, "").otherwise(col("error")).as("error")) ++
+      recs.columns.filter(_ == "pass").map(col): _*)
+
+  /** The job's input: the kernel's url/html/lang columns, after the
+    * `--lang` filter, so the filter and the projection reach the scan.
+    */
+  def loadPages(spark: SparkSession, a: Args): DataFrame = {
     val df =
       if (a.inputFormat == "warc")
         // Raw crawl archives: one task per archive file (WARC is the
@@ -195,9 +208,8 @@ object ExtractJob {
         graft.sources.Warc.readPages(spark, a.input).toDF()
       else if (a.input.nonEmpty) TableIO.read(spark, a.input)
       else PageGen.generate(spark, a.rows, a.seed).toDF()
-    // Pushed-down predicates + projection BEFORE the opaque kernel.
     val filtered = if (a.lang.nonEmpty) df.where(col("lang") === a.lang) else df
-    filtered.select("url", "warc_ts", "html", "text", "lang").as[Page]
+    filtered.select("url", "html", "lang")
   }
 
   /** Run the job; returns per-wave lineage rows (also appended to the
@@ -238,9 +250,7 @@ object ExtractJob {
         // One directory per run, beside the output: the finally below
         // removes all of it, and never another run's staging.
         val dir = s"${a.out}_staging_${a.runId}"
-        pages.toDF()
-          .select(col("url"), col("html"), col("lang"))
-          .withColumn("bucket", bucketExpr(a.buckets))
+        pages.withColumn("bucket", bucketExpr(a.buckets))
           // Cluster rows by bucket before the partitionBy write so file
           // count ≈ B, not tasks × B.
           .repartition(col("bucket"))
@@ -255,15 +265,15 @@ object ExtractJob {
           spark.read.parquet(dir)
             .where(col("bucket").isin(wave.map(Integer.valueOf): _*))
         case None =>
-          pages.toDF().where(
+          pages.where(
             if (waveSet.size == a.buckets) lit(true)
             else bucketExpr(a.buckets).isin(wave.map(Integer.valueOf): _*))
       }
       // --two-pass is the fast→accurate cascade the Args doc promises:
       // pass 2 always runs `accurate`. --quality governs the single-pass
       // path only.
-      val recs0 = (if (a.twoPass) TwoPass.extract(sub, slim = a.slim)
-                   else extractKernel(sub, a.quality, a.slim))
+      val kernelOut = if (a.twoPass) TwoPass.extract(sub) else extractKernel(sub, a.quality)
+      val recs0 = (if (a.slim) slim(kernelOut) else kernelOut)
         .withColumn("bucket", bucketExpr(a.buckets))
       // Cluster output files by bucket: one exchange of the COMPACT
       // post-kernel records (raw html never shuffles — it's dropped by

@@ -57,7 +57,7 @@ object TwoPass {
   /** The kernel stage with `cascade` per row, plus `pass`: every pass-2
     * record carries quality `accurate` and every pass-1 record `fast`.
     */
-  def extract(pages: Dataset[_], slim: Boolean = false): DataFrame =
-    ExtractJob.kernelStage(pages, cascade, slim)
+  def extract(pages: Dataset[_]): DataFrame =
+    ExtractJob.kernelStage(pages, cascade)
       .withColumn("pass", when(col("quality") === Enums.Accurate, 2).otherwise(1))
 }

@@ -116,7 +116,9 @@ case class ProcessorConfig(
 
 /** Whole-document extraction output — the results-table row
   * (models.py:56-78 minus wall-clock fields, which go to the metrics
-  * table instead so golden outputs stay deterministic).
+  * table instead so golden outputs stay deterministic). The kernel stage
+  * emits only this type; `ExtractJob --slim` writes a projection of its
+  * flat per-document columns (ExtractJob.slim).
   */
 case class ExtractionRecord(
     url: String,
@@ -137,30 +139,4 @@ case class ExtractionRecord(
     attempted_pages: Int,
     successful_pages: Int,
     failed_pages: Int,
-    error: Option[String]) {
-
-  /** Project to the scale-path row (drops nested per-page structs). */
-  def toSlim: SlimRecord = SlimRecord(
-    url, success, pdf_type, total_pages, text, word_count,
-    confidence, extraction_method, quality, lang,
-    error.getOrElse(""))
-}
-
-/** Scale-path output row: the per-document columns a 10^12-row results
-  * table actually keeps. Encoding ExtractionRecord's nested per-page
-  * structs/error arrays costs comparable CPU to the extraction kernel
-  * itself at full throughput; production corpus runs write this flat
-  * schema and keep full records for lineage-debug runs only.
-  */
-case class SlimRecord(
-    url: String,
-    success: Boolean,
-    pdf_type: String,
-    total_pages: Int,
-    text: String,
-    word_count: Int,
-    confidence: Double,
-    extraction_method: String,
-    quality: String,
-    lang: String,
-    error: String)
+    error: Option[String])

@@ -344,7 +344,7 @@ object Warc {
       }
     val files = roots
       .flatMap(r => if (fs.isDirectory(r)) leafFiles(r) else Seq(r))
-      .filterNot { p => val n = p.getName; n.startsWith(".") || n.startsWith("_") }
+      .filterNot(p => isHiddenName(p.getName))
       .map(_.toString).sorted
     require(files.nonEmpty, s"no WARC archives found under: $path")
     val confBc = spark.sparkContext.broadcast(

@@ -4,8 +4,9 @@ import graft.app.ExtractJob
 import graft.app.ExtractJob.Args
 import graft.extract.{PayloadMemo, Processor}
 import graft.jobs.Checkpoint
-import graft.model.{ExtractionRecord, KernelPage, SlimRecord}
+import graft.model.{ExtractionRecord, KernelPage}
 import graft.synth.{Fixtures, PageGen}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Pipeline-level specs: generator determinism, end-to-end extraction,
@@ -247,6 +248,21 @@ class ExtractJobSpec extends SparkSuite {
     assert(a == b)
   }
 
+  test("a table with only url, html and lang gives the same rows as the full table") {
+    val full = tmpDir("pages_full")
+    val narrow = tmpDir("pages_narrow")
+    PageGen.generate(spark, 200).toDF().write.mode("overwrite").parquet(full)
+    spark.read.parquet(full).select("url", "html", "lang").write.mode("overwrite").parquet(narrow)
+    def rows(input: String): Seq[Row] = {
+      val out = tmpDir("xjob-cols")
+      ExtractJob.run(spark, Args(input = input, out = out, buckets = 4))
+      spark.read.parquet(out).collect().sortBy(_.getString(0)).toSeq
+    }
+    val a = rows(full)
+    assert(a.length == 200)
+    assert(rows(narrow) == a)
+  }
+
   test("--notify writes an atomic completion summary (I4 seam)") {
     val out = tmpDir("xjob-notify")
     val notifyPath = tmpDir("xjob-notify-dir") + "/done.json"
@@ -369,9 +385,9 @@ class ExtractJobSpec extends SparkSuite {
       ExtractJob.extractKernel(pages, q).as[ExtractionRecord].collect().sortBy(_.url).toSeq)
     assert(full(0) == full(1))
     val slim = Seq("bogus", "balanced").map(q =>
-      ExtractJob.extractKernel(pages, q, slim = true).as[SlimRecord].collect().sortBy(_.url).toSeq)
+      ExtractJob.slim(ExtractJob.extractKernel(pages, q)).collect().sortBy(_.getString(0)).toSeq)
     assert(slim(0) == slim(1))
-    assert(slim(0).forall(_.quality == "balanced"))
+    assert(slim(0).forall(_.getAs[String]("quality") == "balanced"))
   }
 
   test("payload memo in the kernel stage: repeats under many urls/langs, past the cap, == direct calls") {
@@ -389,9 +405,10 @@ class ExtractJobSpec extends SparkSuite {
       .sortBy(_.url)
     val full = ExtractJob.extractKernel(rows, "balanced").as[ExtractionRecord].collect().sortBy(_.url)
     assert(full.toSeq == direct)
-    val slim = ExtractJob.extractKernel(rows, "balanced", slim = true).as[SlimRecord]
-      .collect().sortBy(_.url)
-    assert(slim.toSeq == direct.map(_.toSlim))
+    val slim = ExtractJob.slim(ExtractJob.extractKernel(rows, "balanced"))
+      .collect().sortBy(_.getString(0))
+    assert(slim.toSeq == direct.map(r => Row(r.url, r.success, r.pdf_type, r.total_pages, r.text,
+      r.word_count, r.confidence, r.extraction_method, r.quality, r.lang, r.error.getOrElse(""))))
   }
 
   test("payload memo: a hit reuses the record, the cap stops admission, results == direct calls") {

@@ -14,6 +14,14 @@ class PyTextSpec extends AnyFunSuite {
     assert(PyText.pySplit("a\tb\nc\rd\fe") == Vector("a", "b", "c", "d", "e"))
   }
 
+  test("isPySpace equals Python's str.isspace() on every code point") {
+    // Python 3.11: [c for c in range(0x110000) if chr(c).isspace()]
+    val python = (0x09 to 0x0D) ++ (0x1C to 0x20) ++ Seq(0x85, 0xA0, 0x1680) ++
+      (0x2000 to 0x200A) ++ Seq(0x2028, 0x2029, 0x202F, 0x205F, 0x3000)
+    assert(python.length == 29)
+    assert((0 to 0x10FFFF).filter(PyText.isPySpace) == python)
+  }
+
   test("NBSP (U+00A0) is Python whitespace (unlike Java's \\s)") {
     assert(PyText.pySplit("a b") == Vector("a", "b"))
     assert(PyText.pyStrip(" x ") == "x")

@@ -12,7 +12,7 @@ class LineagePlacementSpec extends SparkSuite {
       if r.partitionExpressions.exists(_.references.exists(_.name == "bucket")) => r }
 
   test("lineage observation sits above the bucket exchange, in the write's result stage") {
-    val recs = ExtractJob.extractKernel(PageGen.generate(spark, 20), "fast", slim = true)
+    val recs = ExtractJob.slim(ExtractJob.extractKernel(PageGen.generate(spark, 20), "fast"))
       .withColumn("bucket", ExtractJob.bucketExpr(4))
     val plan = ExtractJob.observeLineage(recs, 4)._1.queryExecution.analyzed
     val observed = plan.collect { case c: CollectMetrics => c }
